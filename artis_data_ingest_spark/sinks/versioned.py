@@ -53,32 +53,28 @@ Semantics:
     writer's data out from under it);
   * ``expire`` drops old manifests (retention), after which ``vacuum``
     reclaims the segments only the expired versions referenced;
-  * r12 surface: commit times in every manifest enable TIMESTAMP
-    travel (:func:`version_at`, ``read_version(as_of=)``,
-    ``change_feed(since_ts=)``); ``cluster_by``/``bloom_cols`` are
-    TABLE PROPERTIES that survive every rewrite (compact/merge
-    rebuild them; cluster_by entries are SQL expressions, so the
-    Morton key gives OPTIMIZE-ZORDER 2-D skipping);
-    ``compact(small_file_bytes=)`` bin-packs only the micro-batch
-    tail; :func:`restore` rolls back as a zero-copy commit;
-    :func:`clone_table` forks a table at O(manifest) cost; and
-    streaming/source.py exposes the change feed as a Structured
-    Streaming source with engine-checkpointed version offsets;
-  * r13 surface: manifest-log CHECKPOINTING (:func:`write_checkpoint`
-    every :data:`CHECKPOINT_INTERVAL` commits — history/version_at/
-    earliest_feed_version open O(1) + O(since-checkpoint) files);
-    plain appends INHERIT the recorded layout properties; and
-    row-level DELETE via DELETION VECTORS (:func:`delete_where`:
-    ``mode="delete"`` manifests carry ``dv_files`` — KB-scale
-    (file, row position) sidecars applied as a broadcast anti-join on
-    ``_metadata`` columns; zero rewrite, exact time travel, appends
-    carry them, :func:`compact` materializes them); row-level UPDATE
-    (:func:`update_where`: ``mode="update"`` = DV over the old images
-    + a post-image ``delta_files`` segment, Delta's DV-backed UPDATE);
-    and the unified CDC view (:func:`cdc_feed`: every change after a
-    cursor tagged ``_change_type`` ∈ {insert, delete, update_preimage,
-    update_postimage} — Delta's ``table_changes`` contract, each
-    version recovered at O(its changed rows)).
+  * ``cluster_by``/``bloom_cols`` are table properties
+    (``table_props``) that every later write re-applies to the
+    segment it writes.
+
+Deletion vectors.  Row-level operations (:func:`delete_where`,
+:func:`update_where`, :func:`replace_where`, :func:`merge_dv`) never
+rewrite a data file.  Each writes a sidecar parquet segment with the
+schema ``(_dv_file string, _dv_pos bigint)`` — the absolute path of a
+data file and the position of a masked row in it — and publishes the
+parent's ``dv_files`` plus that segment.  Reads tag every scanned row
+with its file path and row index from Spark's ``_metadata`` column and
+drop the sidecar rows with a broadcast anti-join; a version with no
+``dv_files`` reads as a plain scan.  The rows a version masked are its
+``dv_files`` beyond its parent's, joined back on the same two columns.
+Appends carry the vectors forward and :func:`compact` materializes
+them.
+
+Bloom bitmaps.  ``blooms`` maps data file → physical column → a
+base64 bitmap.  A value sets K = 4 bits, ``md5(f"{i}|{value}")`` (the
+first 15 hex digits) modulo the bit count for i in 0..3.  The bit
+count is eight times the bitmap's length in bytes, so a probe reads
+any size; writers size each file's bitmap at about 10 bits per row.
 
 At 100 TB the manifest is the only driver-side object (a file list —
 thousands of entries, not data), reads prune to exactly the listed
@@ -354,6 +350,25 @@ def _cluster_exprs(cluster_by: Sequence[str]):
     return [F.expr(c) for c in cluster_by]
 
 
+def _layout(
+    df: DataFrame,
+    cluster_by: Sequence[str] | None,
+    n_files: int | None,
+    coalesce_default: int | None = None,
+) -> DataFrame:
+    """Lay a segment out before writing it.  With ``cluster_by``,
+    range-partition into ``n_files`` partitions (default: the
+    session's parallelism) and sort within each, so every file covers
+    a narrow key slice.  Without it, coalesce to ``n_files`` (or
+    ``coalesce_default``); with neither, leave ``df`` as it is."""
+    if cluster_by:
+        keys = _cluster_exprs(cluster_by)
+        n = n_files or df.sparkSession.sparkContext.defaultParallelism
+        return df.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
+    n = n_files or coalesce_default
+    return df.coalesce(n) if n else df
+
+
 def _file_stats(files: list[str]) -> dict:
     """Per-file column min/max/null-count from the parquet FOOTERS —
     a driver-side metadata read (no data pages), recorded in the
@@ -433,6 +448,24 @@ def _footer_schema(files: list[str]) -> dict[str, str]:
         for field in pq.read_schema(f):
             out.setdefault(field.name, str(field.type))
     return out
+
+
+def _segment_meta(
+    spark: SparkSession,
+    files: list[str],
+    props: dict,
+    bloom_cols: Sequence[str] | None,
+) -> tuple[dict, dict]:
+    """(footer stats, Bloom bitmaps) of freshly written segment files.
+    ``bloom_cols`` are logical names; the bitmaps are keyed by the
+    physical names ``props``' column mapping gives them."""
+    stats = _file_stats(files)
+    if not bloom_cols:
+        return stats, {}
+    cmap = _mapping(props)
+    return stats, _segment_blooms(
+        spark, files, [cmap.get(c, c) for c in bloom_cols]
+    )
 
 
 def _merged_read(spark: SparkSession, *files: str) -> DataFrame:
@@ -900,12 +933,7 @@ def _enforce_constraints(
     }
     if not bad:
         return
-    import shutil
-
-    for d in {os.path.dirname(os.path.abspath(f)) for f in seg_files}:
-        shutil.rmtree(d, ignore_errors=True)
-    for d in cleanup_dirs:
-        shutil.rmtree(d, ignore_errors=True)
+    _drop_segments(seg_files, cleanup_dirs)
     detail = "; ".join(
         f"{n} [{constraints[n]}]: {c} rows" for n, c in sorted(bad.items())
     )
@@ -932,8 +960,6 @@ def _quarantine_split(
     counts = _violation_counts(spark, seg_files, constraints, props)
     if not any(counts.values()):
         return seg_files, []
-    import shutil
-
     staged = _to_logical(
         _merged_read(spark, *seg_files),
         props,
@@ -947,12 +973,7 @@ def _quarantine_split(
     ok = staged.filter(~bad_cond)
     if padded:
         ok = ok.drop(*padded)
-    if cluster_by:
-        ok = ok.repartitionByRange(
-            max(1, len(seg_files)), *_cluster_exprs(cluster_by)
-        ).sortWithinPartitions(*_cluster_exprs(cluster_by))
-    else:
-        ok = ok.coalesce(max(1, len(seg_files)))
+    ok = _layout(ok, cluster_by, max(1, len(seg_files)))
     valid_seg = _write_segment(
         _to_physical(ok, props), table_dir, version
     )
@@ -964,8 +985,7 @@ def _quarantine_split(
         table_dir,
         version,
     )
-    for d in {os.path.dirname(os.path.abspath(f)) for f in seg_files}:
-        shutil.rmtree(d, ignore_errors=True)
+    _drop_segments(seg_files)
     return valid_seg, quarantine_seg
 
 
@@ -1009,10 +1029,10 @@ def add_constraint(
         if cur is not None:
             m = _read_manifest(table_dir, cur)
             if m["files"]:
-                live = _dv_scan(
-                    spark, m["files"], m.get("dv_files", [])
+                live = _dv_read(
+                    spark, m["files"], m.get("dv_files", []),
+                    m.get("table_props", {}),
                 )
-                live = _to_logical(live, m.get("table_props", {}))
                 from pyspark.sql import functions as F
 
                 n = live.filter(
@@ -1193,13 +1213,7 @@ def commit(
         bloom_cols = props.get("bloom_cols")
     else:
         props["bloom_cols"] = list(bloom_cols)
-    if cluster_by:
-        parts = n_files or df.sparkSession.sparkContext.defaultParallelism
-        df = df.repartitionByRange(
-            parts, *_cluster_exprs(cluster_by)
-        ).sortWithinPartitions(*_cluster_exprs(cluster_by))
-    elif n_files:
-        df = df.coalesce(n_files)
+    df = _layout(df, cluster_by, n_files)
     new_version = (cur if cur is not None else -1) + 1
     # snapshot the ENTRY-time mapping state before _resolve_physical
     # may mint fresh physical names: the blind-append rebase must (a)
@@ -1248,23 +1262,10 @@ def commit(
         try:
             _check_schema_compatible(_table_schema(parent), seg_schema)
         except SchemaMismatch:
-            import shutil
-
-            for d in {
-                os.path.dirname(os.path.abspath(f)) for f in seg_files
-            }:
-                shutil.rmtree(d, ignore_errors=True)
+            _drop_segments(seg_files)
             raise
-    seg_stats = _file_stats(seg_files)
-    mapping = _mapping(props)
-    seg_blooms = (
-        _segment_blooms(
-            df.sparkSession,
-            seg_files,
-            [mapping.get(c, c) for c in bloom_cols],
-        )
-        if bloom_cols
-        else {}
+    seg_stats, seg_blooms = _segment_meta(
+        df.sparkSession, seg_files, props, bloom_cols
     )
 
     def _build(cur_v, parent_m):
@@ -1350,13 +1351,7 @@ def commit(
                     _table_schema(parent), seg_schema
                 )
             except SchemaMismatch:
-                import shutil
-
-                for d in {
-                    os.path.dirname(os.path.abspath(f))
-                    for f in seg_files
-                }:
-                    shutil.rmtree(d, ignore_errors=True)
+                _drop_segments(seg_files)
                 raise
         if explicit_cluster is not None:
             new_props["cluster_by"] = list(explicit_cluster)
@@ -1540,15 +1535,15 @@ def compact(
     # cluster on the LOGICAL view (cluster_by expressions use logical
     # names) and write back under PHYSICAL names; dropped columns are
     # physically PURGED from whatever compaction rewrites
-    compacted = _to_logical(_dv_scan(spark, rewrite, dv_files), props)
-    if cluster_by:
-        compacted = compacted.repartitionByRange(
-            max(1, n_files), *_cluster_exprs(cluster_by)
-        ).sortWithinPartitions(*_cluster_exprs(cluster_by))
-    else:
-        compacted = compacted.coalesce(max(1, n_files))
+    compacted = _layout(
+        _dv_read(spark, rewrite, dv_files, props), cluster_by,
+        max(1, n_files),
+    )
     seg_files = _write_segment(
         _to_physical(compacted, props), table_dir, cur + 1
+    )
+    seg_stats, seg_blooms = _segment_meta(
+        spark, seg_files, props, bloom_cols
     )
     kept_paths = {os.path.abspath(f) for f in keep}
     manifest = {
@@ -1564,19 +1559,13 @@ def compact(
                 for k, v in m.get("stats", {}).items()
                 if k in kept_paths
             },
-            **_file_stats(seg_files),
+            **seg_stats,
         },
     }
     blooms = {
         k: v for k, v in m.get("blooms", {}).items() if k in kept_paths
     }
-    if bloom_cols:
-        cmap = _mapping(props)
-        blooms.update(
-            _segment_blooms(
-                spark, seg_files, [cmap.get(c, c) for c in bloom_cols]
-            )
-        )
+    blooms.update(seg_blooms)
     if blooms:
         manifest["blooms"] = blooms
     manifest["schema"] = {
@@ -1594,9 +1583,7 @@ def compact(
             .filter(F.col("_dv_file").isin(sorted(kept_paths)))
         )
         dv_seg = _write_segment(kept_dv.coalesce(1), table_dir, cur + 1)
-        import pyarrow.parquet as pq
-
-        if sum(pq.ParquetFile(f).metadata.num_rows for f in dv_seg):
+        if _num_rows(dv_seg):
             manifest["dv_files"] = dv_seg
         # an all-zero slice leaves dv_files absent; the orphan segment
         # is vacuumed later
@@ -1697,11 +1684,8 @@ def merge_commit(
     bloom_cols = props.get("bloom_cols")
     target = read_version(spark, table_dir, cur)
     merged = merge_upsert(target, source, keys, delete_col=delete_col)
-    if cluster_by:
-        n_out = max(1, len(m["files"]))
-        merged = merged.repartitionByRange(
-            n_out, *_cluster_exprs(cluster_by)
-        ).sortWithinPartitions(*_cluster_exprs(cluster_by))
+    if cluster_by:  # an unclustered rewrite keeps the merge's partitioning
+        merged = _layout(merged, cluster_by, max(1, len(m["files"])))
     new_version = cur + 1
     seg_files = _write_segment(
         _to_physical(merged, props), table_dir, new_version
@@ -1716,6 +1700,7 @@ def merge_commit(
     delta_files = _write_segment(
         _to_physical(source, props), table_dir, new_version
     )
+    stats, blooms = _segment_meta(spark, seg_files, props, bloom_cols)
     manifest = {
         "version": new_version,
         "parent": cur,
@@ -1724,14 +1709,11 @@ def merge_commit(
         "ts": timestamp if timestamp is not None else time.time(),
         "files": seg_files,
         "delta_files": delta_files,
-        "stats": _file_stats(seg_files),
+        "stats": stats,
         "schema": _footer_schema(seg_files + delta_files),
     }
     if bloom_cols:
-        cmap = _mapping(props)
-        manifest["blooms"] = _segment_blooms(
-            spark, seg_files, [cmap.get(c, c) for c in bloom_cols]
-        )
+        manifest["blooms"] = blooms
     if props:
         manifest["table_props"] = dict(props)
     return _publish(table_dir, manifest)
@@ -1779,27 +1761,14 @@ def merge_dv(
     props = dict(m.get("table_props", {}))
     keys = list(keys)
     src_keys = source.select(*keys).distinct()
-    live = _merged_read(spark, *m["files"])
-    logical = _to_logical(live, props)
-    tagged = live.select(
-        "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), _SCHEME_RE, ""
-        ).alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
-    )
-    prior_dv = list(m.get("dv_files", []))
-    if prior_dv:
-        dv = spark.read.parquet(*prior_dv).select("_dv_file", "_dv_pos")
-        tagged = tagged.join(
-            F.broadcast(dv), ["_dv_file", "_dv_pos"], "left_anti"
-        )
     # keys are LOGICAL names; files hold physical ones
-    tagged = _to_logical(tagged, props, keep=("_dv_file", "_dv_pos"))
+    tagged = _dv_read(
+        spark, m["files"], m.get("dv_files", []), props, keep_tags=True
+    )
     # the MERGE premise is a small delta against a big table: the key
     # set broadcasts, so masking costs ONE scan with no table shuffle
     hits = tagged.join(F.broadcast(src_keys), keys, "left_semi").select(
-        "_dv_file", "_dv_pos"
+        *_DV_COLS
     )
     new_version = cur + 1
     dv_seg = _write_segment(hits.coalesce(1), table_dir, new_version)
@@ -1810,31 +1779,19 @@ def merge_dv(
         ).drop(delete_col)
     # align order AND types with the table (a source built with e.g.
     # int literals against a bigint table must not fork the schema)
-    ltypes = dict(logical.dtypes)
-    post = post.select(
-        *[F.col(c).cast(ltypes[c]).alias(c) for c in logical.columns]
-    )
-    cluster_by = props.get("cluster_by")
-    bloom_cols = props.get("bloom_cols")
-    if cluster_by:
-        parts = n_files or spark.sparkContext.defaultParallelism
-        post = post.repartitionByRange(
-            parts, *_cluster_exprs(cluster_by)
-        ).sortWithinPartitions(*_cluster_exprs(cluster_by))
-    else:
-        post = post.coalesce(n_files or 1)
+    ltypes = dict(tagged.dtypes)
+    post = post.select(*[
+        F.col(c).cast(ltypes[c]).alias(c)
+        for c in tagged.columns if c not in _DV_COLS
+    ])
+    post = _layout(post, props.get("cluster_by"), n_files, 1)
     seg = _write_segment(_to_physical(post, props), table_dir, new_version)
     constraints = props.get("constraints") or {}
     if constraints:
         # surviving source rows are the only new table state — gate
         # them like any append before anything becomes visible
         _enforce_constraints(
-            spark,
-            seg,
-            constraints,
-            cleanup_dirs={
-                os.path.dirname(os.path.abspath(f)) for f in dv_seg
-            },
+            spark, seg, constraints, cleanup_dirs=_seg_dirs(dv_seg),
             props=props,
         )
     delta_files = _write_segment(
@@ -1842,32 +1799,14 @@ def merge_dv(
         table_dir,
         new_version,
     )
-    stats = {**m.get("stats", {}), **_file_stats(seg)}
-    blooms = dict(m.get("blooms", {}))
-    if bloom_cols:
-        cmap = _mapping(props)
-        blooms.update(
-            _segment_blooms(
-                spark, seg, [cmap.get(c, c) for c in bloom_cols]
-            )
-        )
-    manifest = {
-        "version": new_version,
-        "parent": cur,
-        "mode": "merge",
-        "note": note,
-        "ts": timestamp if timestamp is not None else time.time(),
-        "files": list(m["files"]) + seg,
-        "stats": stats,
-        "dv_files": prior_dv + dv_seg,
-        "delta_files": delta_files,
-        "schema": {**(m.get("schema") or {}), **_footer_schema(seg)},
-    }
-    if blooms:
-        manifest["blooms"] = blooms
-    if props:
-        manifest["table_props"] = props
-    return _publish(table_dir, manifest)
+    stats, blooms = _segment_meta(
+        spark, seg, props, props.get("bloom_cols")
+    )
+    return _publish(table_dir, _dv_manifest(
+        m, "merge", note,
+        timestamp if timestamp is not None else time.time(), props,
+        dv_seg, seg, delta_files, stats, blooms, _footer_schema(seg),
+    ))
 
 
 #: SQL regex stripping the scheme Spark's ``_metadata.file_path``
@@ -1875,41 +1814,141 @@ def merge_dv(
 #: absolute paths that match manifest entries.
 _SCHEME_RE = "^file:(//)?"
 
+#: The deletion-vector sidecar schema: data-file path, row position.
+_DV_COLS = ("_dv_file", "_dv_pos")
 
-def _dv_scan(spark: SparkSession, files: list[str],
-             dv_files: list[str]) -> DataFrame:
-    """mergeSchema read of ``files`` with the version's DELETION
-    VECTORS applied: each DV row is a (file path, row position) pair;
-    live rows are the LEFT ANTI join on (``_metadata.file_path``,
-    ``_metadata.row_index``) — a broadcast of the (small) DV table
-    against the scan, no data rewrite anywhere.  With no DVs the
-    plain scan returns untouched (zero overhead for tables that never
-    deleted)."""
+
+def _dv_read(
+    spark: SparkSession,
+    files: list[str],
+    dv_files: list[str],
+    props: dict,
+    how: str = "left_anti",
+    keep_tags: bool = False,
+) -> DataFrame:
+    """Logical read of ``files`` joined against the deletion-vector
+    sidecars ``dv_files`` on (file path, row position): each scanned
+    row is tagged from Spark's ``_metadata`` column and the small
+    sidecar table broadcasts.  ``how="left_anti"`` serves the live
+    rows; ``how="inner"`` recovers exactly the rows the vectors mask.
+    ``keep_tags`` keeps the ``_dv_file``/``_dv_pos`` columns for
+    callers that write a new vector from the result.  A live read
+    with no vectors and no tags is the bare scan — zero overhead for
+    tables that never deleted."""
     from pyspark.sql import functions as F
 
     df = _merged_read(spark, *files)
-    if not dv_files:
-        return df
-    dv = spark.read.parquet(*dv_files).select("_dv_file", "_dv_pos")
-    tagged = df.select(
+    join = bool(dv_files) or how != "left_anti"
+    if not (join or keep_tags):
+        return _to_logical(df, props)
+    df = df.select(
         "*",
         F.regexp_replace(
             F.col("_metadata.file_path"), _SCHEME_RE, ""
         ).alias("_dv_file"),
         F.col("_metadata.row_index").alias("_dv_pos"),
     )
-    return tagged.join(
-        F.broadcast(dv), ["_dv_file", "_dv_pos"], "left_anti"
-    ).drop("_dv_file", "_dv_pos")
+    if join:
+        dv = spark.read.parquet(*dv_files).select(*_DV_COLS)
+        df = df.join(F.broadcast(dv), list(_DV_COLS), how)
+    if not keep_tags:
+        df = df.drop(*_DV_COLS)
+    return _to_logical(df, props, keep=_DV_COLS)
+
+
+def _dv_positions(dv_files: list[str]) -> dict[str, list[int]]:
+    """{data file: masked row positions} from deletion-vector
+    sidecars — KB-scale files, read driver-side with pyarrow."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, list[int]] = {}
+    for dvf in dv_files:
+        t = pq.read_table(dvf, columns=list(_DV_COLS))
+        for f, p in zip(
+            t.column("_dv_file").to_pylist(),
+            t.column("_dv_pos").to_pylist(),
+        ):
+            out.setdefault(f, []).append(p)
+    return out
+
+
+def _added_dv_files(table_dir: str, m: dict) -> tuple[dict, list[str]]:
+    """(parent manifest, the deletion-vector segments manifest ``m``
+    added beyond its parent's).  Raises FileNotFoundError when the
+    parent manifest was expired; each caller maps that to its own
+    error."""
+    parent = _read_manifest(table_dir, m["parent"])
+    parent_dv = set(parent.get("dv_files", []))
+    return parent, [f for f in m.get("dv_files", []) if f not in parent_dv]
+
+
+def _num_rows(files: list[str]) -> int:
+    """Total row count from parquet footers (metadata only)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def _seg_dirs(files: list[str]) -> set[str]:
+    """The segment directories holding ``files``."""
+    return {os.path.dirname(os.path.abspath(f)) for f in files}
+
+
+def _drop_segments(files: list[str], extra_dirs=()) -> None:
+    """Remove the segment directories of a staged write that will not
+    be published: those holding ``files``, plus ``extra_dirs``."""
+    import shutil
+
+    for d in _seg_dirs(files) | set(extra_dirs):
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _dv_manifest(
+    parent: dict,
+    mode: str,
+    note: str,
+    ts: float,
+    props: dict,
+    dv_seg: list[str],
+    seg: Sequence[str] = (),
+    delta: list[str] | None = None,
+    stats: dict | None = None,
+    blooms: dict | None = None,
+    schema: dict | None = None,
+) -> dict:
+    """The manifest of a deletion-vector row operation on top of
+    ``parent``: the parent's files plus the new segment ``seg`` (with
+    its ``stats``/``blooms``/``schema``), the parent's vectors plus
+    ``dv_seg``, and ``delta`` as the version's recorded adds (None for
+    a delete, which adds no rows).  ``delta_files`` describe one
+    commit, so the parent's are never carried."""
+    mf = {
+        "version": parent["version"] + 1,
+        "parent": parent["version"],
+        "mode": mode,
+        "note": note,
+        "ts": ts,
+        "files": list(parent["files"]) + list(seg),
+        "stats": {**parent.get("stats", {}), **(stats or {})},
+        "dv_files": list(parent.get("dv_files", [])) + dv_seg,
+    }
+    if delta is not None:
+        mf["delta_files"] = list(delta)
+    optional = {
+        "schema": {**(parent.get("schema") or {}), **(schema or {})},
+        "blooms": {**parent.get("blooms", {}), **(blooms or {})},
+        "table_props": dict(props),
+    }
+    mf.update({k: v for k, v in optional.items() if v})
+    return mf
 
 
 def _publish_dv_op(
     table_dir: str,
-    build,
     entry_manifest: dict,
-    dv_seg: list[str],
     retry_conflicts: int,
     can_retry: bool,
+    **op,
 ) -> int:
     """Publish a DV-backed row operation (delete/update/replace) with
     DISJOINT-WRITER conflict retry (r14, VERDICT r13 task 6 — Delta's
@@ -1931,28 +1970,20 @@ def _publish_dv_op(
 
     Concurrent blind APPENDS always commute (the WriteSerializable
     contract: rows appended after our predicate scan are not affected
-    by it).  ``build(cur, parent_manifest)`` rebuilds the operation's
-    manifest against the new head, reusing the already-written
-    segments untouched — a retry is driver-side JSON plus KB-scale
-    sidecar reads, never a recompute."""
-    import pyarrow.parquet as pq
-
-    def _dv_targets(paths) -> set:
-        out: set = set()
-        for f in paths:
-            t = pq.read_table(f, columns=["_dv_file"])
-            out.update(t.column("_dv_file").to_pylist())
-        return out
-
-    manifest = build(entry_manifest["version"], entry_manifest)
+    by it).  ``op`` holds :func:`_dv_manifest`'s arguments after the
+    parent; each retry rebuilds the manifest against the new head,
+    reusing the already-written segments untouched — a retry is
+    driver-side JSON plus KB-scale sidecar reads, never a
+    recompute."""
+    dv_seg = op["dv_seg"]
+    manifest = _dv_manifest(entry_manifest, **op)
     for attempt in range(max(0, retry_conflicts) + 1):
         try:
             return _publish(table_dir, manifest)
         except VersionConflict:
             if attempt >= retry_conflicts or not can_retry:
                 raise
-        cur = latest_version(table_dir)
-        head = _read_manifest(table_dir, cur)
+        head = _read_manifest(table_dir, latest_version(table_dir))
         if head.get("table_props", {}) != entry_manifest.get(
             "table_props", {}
         ):
@@ -1961,7 +1992,7 @@ def _publish_dv_op(
                 "column mapping/layout); this row operation was "
                 "computed under the entry-time properties — re-run"
             )
-        reads = _dv_targets(dv_seg)
+        reads = set(_dv_positions(dv_seg))
         head_files = {os.path.abspath(f) for f in head["files"]}
         missing = sorted(
             f for f in reads if os.path.abspath(f) not in head_files
@@ -1979,14 +2010,14 @@ def _publish_dv_op(
             for f in head.get("dv_files", [])
             if f not in entry_dv and f not in dv_seg
         ]
-        overlap = sorted(reads & _dv_targets(since))
+        overlap = sorted(reads & set(_dv_positions(since)))
         if overlap:
             raise VersionConflict(
                 f"a concurrent row operation touched "
                 f"{len(overlap)} of the same data file(s) "
                 f"(e.g. {overlap[0]}) — re-run"
             )
-        manifest = build(cur, head)
+        manifest = _dv_manifest(head, **op)
     raise AssertionError("unreachable")  # pragma: no cover
 
 
@@ -2036,49 +2067,20 @@ def replace_where(
     props = dict(m.get("table_props", {}))
     # --- deletion vector over the matched live rows (predicate is in
     # LOGICAL names; files hold physical ones)
-    live = _merged_read(spark, *m["files"])
-    tagged = live.select(
-        "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), _SCHEME_RE, ""
-        ).alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
+    tagged = _dv_read(
+        spark, m["files"], m.get("dv_files", []), props, keep_tags=True
     )
-    prior_dv = list(m.get("dv_files", []))
-    if prior_dv:
-        dv = spark.read.parquet(*prior_dv).select("_dv_file", "_dv_pos")
-        tagged = tagged.join(
-            F.broadcast(dv), ["_dv_file", "_dv_pos"], "left_anti"
-        )
-    tagged = _to_logical(
-        tagged, props, keep=("_dv_file", "_dv_pos")
-    )
-    hits = tagged.filter(F.expr(predicate)).select(
-        "_dv_file", "_dv_pos"
-    )
+    hits = tagged.filter(F.expr(predicate)).select(*_DV_COLS)
     new_version = cur + 1
     dv_seg = _write_segment(hits.coalesce(1), table_dir, new_version)
-    dv_dirs = {os.path.dirname(os.path.abspath(f)) for f in dv_seg}
+    dv_dirs = _seg_dirs(dv_seg)
     # --- replacement segment (layout + physical names like commit)
-    cluster_by = props.get("cluster_by")
-    bloom_cols = props.get("bloom_cols")
-    if cluster_by:
-        parts = n_files or spark.sparkContext.defaultParallelism
-        df = df.repartitionByRange(
-            parts, *_cluster_exprs(cluster_by)
-        ).sortWithinPartitions(*_cluster_exprs(cluster_by))
-    elif n_files:
-        df = df.coalesce(n_files)
+    df = _layout(df, props.get("cluster_by"), n_files)
     props = _resolve_physical(props, df.columns, new_version)
     seg = _write_segment(_to_physical(df, props), table_dir, new_version)
 
     def _discard(msg_exc):
-        import shutil
-
-        for d in dv_dirs | {
-            os.path.dirname(os.path.abspath(f)) for f in seg
-        }:
-            shutil.rmtree(d, ignore_errors=True)
+        _drop_segments(seg, dv_dirs)
         raise msg_exc
 
     seg_schema = _footer_schema(seg)
@@ -2106,38 +2108,15 @@ def replace_where(
         _enforce_constraints(
             spark, seg, constraints, cleanup_dirs=dv_dirs, props=props
         )
-    seg_stats = _file_stats(seg)
-    seg_blooms: dict = {}
-    if bloom_cols:
-        cmap = _mapping(props)
-        seg_blooms = _segment_blooms(
-            spark, seg, [cmap.get(c, c) for c in bloom_cols]
-        )
-    ts = timestamp if timestamp is not None else time.time()
-
-    def _build(cur2: int, m2: dict) -> dict:
-        mf = {
-            "version": cur2 + 1,
-            "parent": cur2,
-            "mode": "replace",
-            "note": note,
-            "ts": ts,
-            "files": list(m2["files"]) + seg,
-            "stats": {**m2.get("stats", {}), **seg_stats},
-            "dv_files": list(m2.get("dv_files", [])) + dv_seg,
-            "delta_files": seg,
-            "schema": {**(m2.get("schema") or {}), **seg_schema},
-        }
-        blooms = {**m2.get("blooms", {}), **seg_blooms}
-        if blooms:
-            mf["blooms"] = blooms
-        if props:
-            mf["table_props"] = props
-        return mf
-
+    seg_stats, seg_blooms = _segment_meta(
+        spark, seg, props, props.get("bloom_cols")
+    )
     return _publish_dv_op(
-        table_dir, _build, m, dv_seg, retry_conflicts,
-        can_retry=expect_version is ANY,
+        table_dir, m, retry_conflicts, expect_version is ANY,
+        mode="replace", note=note,
+        ts=timestamp if timestamp is not None else time.time(),
+        props=props, dv_seg=dv_seg, seg=seg, delta=seg,
+        stats=seg_stats, blooms=seg_blooms, schema=seg_schema,
     )
 
 
@@ -2157,8 +2136,8 @@ def delete_where(
     the table's columns).  Zero data rewrite — at 100 TB deleting a
     few thousand rows costs one filtered scan and a KB-scale sidecar,
     not a copy-on-write of every touched file; reads apply the
-    vectors as a broadcast anti-join on (``_metadata.file_path``,
-    ``_metadata.row_index``).  DV segments accumulate per delete and
+    vectors as a broadcast anti-join on (file path, row position)
+    (see :func:`_dv_read`).  DV segments accumulate per delete and
     :func:`compact` MATERIALIZES them (the rewritten files carry no
     vectors), exactly Delta's OPTIMIZE behavior.  Time travel is
     exact: version N still serves the pre-delete rows.  The change
@@ -2173,54 +2152,18 @@ def delete_where(
         raise FileNotFoundError(f"no versions in {table_dir}")
     _check_expected(cur, expect_version)
     m = _read_manifest(table_dir, cur)
-    live = _merged_read(spark, *m["files"])
-    tagged = live.select(
-        "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), _SCHEME_RE, ""
-        ).alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
-    )
-    prior_dv = list(m.get("dv_files", []))
-    if prior_dv:
-        dv = spark.read.parquet(*prior_dv).select("_dv_file", "_dv_pos")
-        tagged = tagged.join(
-            F.broadcast(dv), ["_dv_file", "_dv_pos"], "left_anti"
-        )
+    props = m.get("table_props", {})
     # the predicate references LOGICAL names; files hold physical ones
-    tagged = _to_logical(
-        tagged, m.get("table_props", {}), keep=("_dv_file", "_dv_pos")
+    tagged = _dv_read(
+        spark, m["files"], m.get("dv_files", []), props, keep_tags=True
     )
-    hits = tagged.filter(F.expr(predicate)).select(
-        "_dv_file", "_dv_pos"
-    )
-    new_version = cur + 1
-    seg = _write_segment(hits.coalesce(1), table_dir, new_version)
-    ts = timestamp if timestamp is not None else time.time()
-
-    def _build(cur2: int, m2: dict) -> dict:
-        mf = {
-            "version": cur2 + 1,
-            "parent": cur2,
-            "mode": "delete",
-            "note": note,
-            "ts": ts,
-            "files": list(m2["files"]),
-            "stats": dict(m2.get("stats", {})),
-            "dv_files": list(m2.get("dv_files", [])) + seg,
-        }
-        if m2.get("blooms"):
-            mf["blooms"] = dict(m2["blooms"])
-        if m2.get("schema"):
-            mf["schema"] = dict(m2["schema"])
-        if m2.get("table_props"):
-            mf["table_props"] = dict(m2["table_props"])
-        # (delta_files describe the PARENT's own commit — not carried)
-        return mf
-
+    hits = tagged.filter(F.expr(predicate)).select(*_DV_COLS)
+    seg = _write_segment(hits.coalesce(1), table_dir, cur + 1)
     return _publish_dv_op(
-        table_dir, _build, m, seg, retry_conflicts,
-        can_retry=expect_version is ANY,
+        table_dir, m, retry_conflicts, expect_version is ANY,
+        mode="delete", note=note,
+        ts=timestamp if timestamp is not None else time.time(),
+        props=props, dv_seg=seg,
     )
 
 
@@ -2235,49 +2178,26 @@ def deleted_rows(
     a table diff.  Raises ValueError for non-delete versions and
     RetentionError when the parent manifest needed to isolate the new
     vectors was expired."""
-    from pyspark.sql import functions as F
-
     m = _read_manifest(table_dir, version)
     if m["mode"] not in ("delete", "replace", "merge"):
         raise ValueError(
             f"v{version} is {m['mode']!r}, not a delete/replace/merge"
         )
     try:
-        parent_dv = set(
-            _read_manifest(table_dir, m["parent"]).get("dv_files", [])
-        )
+        _, new_dv = _added_dv_files(table_dir, m)
     except FileNotFoundError:
         raise RetentionError(
             f"v{version}'s parent manifest was expired; its deleted "
             f"rows are no longer isolatable"
         ) from None
-    new_dv = [
-        f for f in m.get("dv_files", []) if f not in parent_dv
-    ]
+    props = m.get("table_props", {})
     if not new_dv:
         # a full-rewrite merge (merge_commit) masks nothing — its
         # retractions are not DV-recoverable; empty result
         return _to_logical(
-            _merged_read(spark, *m["files"]).filter("1 = 0"),
-            m.get("table_props", {}),
+            _merged_read(spark, *m["files"]).filter("1 = 0"), props
         )
-    dv = spark.read.parquet(*new_dv).select("_dv_file", "_dv_pos")
-    base = _merged_read(spark, 
-        *m["files"]
-    )
-    tagged = base.select(
-        "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), _SCHEME_RE, ""
-        ).alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
-    )
-    return _to_logical(
-        tagged.join(
-            F.broadcast(dv), ["_dv_file", "_dv_pos"], "inner"
-        ).drop("_dv_file", "_dv_pos"),
-        m.get("table_props", {}),
-    )
+    return _dv_read(spark, m["files"], new_dv, props, how="inner")
 
 
 def deletion_feed(
@@ -2359,35 +2279,23 @@ def update_where(
         raise FileNotFoundError(f"no versions in {table_dir}")
     _check_expected(cur, expect_version)
     m = _read_manifest(table_dir, cur)
-    u_props = m.get("table_props", {})
-    live = _merged_read(spark, *m["files"])
-    logical = _to_logical(live, u_props)
-    cols = logical.columns
+    props = dict(m.get("table_props", {}))
+    # SET/WHERE reference LOGICAL names; files hold physical ones
+    tagged = _dv_read(
+        spark, m["files"], m.get("dv_files", []), props, keep_tags=True
+    )
+    ltypes = dict(tagged.dtypes)
+    cols = [c for c in tagged.columns if c not in _DV_COLS]
     unknown = sorted(set(set_exprs) - set(cols))
     if unknown:
         raise ValueError(f"SET targets not in table: {unknown}")
-    tagged = live.select(
-        "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), _SCHEME_RE, ""
-        ).alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
-    )
-    prior_dv = list(m.get("dv_files", []))
-    if prior_dv:
-        dv = spark.read.parquet(*prior_dv).select("_dv_file", "_dv_pos")
-        tagged = tagged.join(
-            F.broadcast(dv), ["_dv_file", "_dv_pos"], "left_anti"
-        )
-    # SET/WHERE reference LOGICAL names; files hold physical ones
-    tagged = _to_logical(tagged, u_props, keep=("_dv_file", "_dv_pos"))
     matched = tagged.filter(F.expr(predicate))
     # one filtered scan feeds both the vector and the post-image;
     # localCheckpoint would break _metadata, so cache the small match
     matched = matched.cache()
     new_version = cur + 1
     dv_seg = _write_segment(
-        matched.select("_dv_file", "_dv_pos").coalesce(1),
+        matched.select(*_DV_COLS).coalesce(1),
         table_dir,
         new_version,
     )
@@ -2395,22 +2303,13 @@ def update_where(
     # UPDATE), untouched columns carry through; column order preserved
     post = matched.select(
         *[
-            F.expr(set_exprs[c]).cast(dict(logical.dtypes)[c]).alias(c)
+            F.expr(set_exprs[c]).cast(ltypes[c]).alias(c)
             if c in set_exprs
             else F.col(c)
             for c in cols
         ]
     )
-    props = dict(u_props)
-    cluster_by = props.get("cluster_by")
-    bloom_cols = props.get("bloom_cols")
-    if cluster_by:
-        parts = n_files or spark.sparkContext.defaultParallelism
-        post = post.repartitionByRange(
-            parts, *_cluster_exprs(cluster_by)
-        ).sortWithinPartitions(*_cluster_exprs(cluster_by))
-    else:
-        post = post.coalesce(n_files or 1)
+    post = _layout(post, props.get("cluster_by"), n_files, 1)
     seg = _write_segment(_to_physical(post, props), table_dir, new_version)
     matched.unpersist()
     constraints = props.get("constraints") or {}
@@ -2418,47 +2317,18 @@ def update_where(
         # the post-image must honor the table's CHECK gate: a SET that
         # rewrites rows into violation is rejected before publication
         _enforce_constraints(
-            spark,
-            seg,
-            constraints,
-            cleanup_dirs={
-                os.path.dirname(os.path.abspath(f)) for f in dv_seg
-            },
+            spark, seg, constraints, cleanup_dirs=_seg_dirs(dv_seg),
             props=props,
         )
-    seg_stats = _file_stats(seg)
-    seg_blooms: dict = {}
-    if bloom_cols:
-        cmap = _mapping(props)
-        seg_blooms = _segment_blooms(
-            spark, seg, [cmap.get(c, c) for c in bloom_cols]
-        )
-    seg_schema = _footer_schema(seg)
-    ts = timestamp if timestamp is not None else time.time()
-
-    def _build(cur2: int, m2: dict) -> dict:
-        mf = {
-            "version": cur2 + 1,
-            "parent": cur2,
-            "mode": "update",
-            "note": note,
-            "ts": ts,
-            "files": list(m2["files"]) + seg,
-            "stats": {**m2.get("stats", {}), **seg_stats},
-            "dv_files": list(m2.get("dv_files", [])) + dv_seg,
-            "delta_files": seg,
-            "schema": {**(m2.get("schema") or {}), **seg_schema},
-        }
-        blooms = {**m2.get("blooms", {}), **seg_blooms}
-        if blooms:
-            mf["blooms"] = blooms
-        if props:
-            mf["table_props"] = props
-        return mf
-
+    seg_stats, seg_blooms = _segment_meta(
+        spark, seg, props, props.get("bloom_cols")
+    )
     return _publish_dv_op(
-        table_dir, _build, m, dv_seg, retry_conflicts,
-        can_retry=expect_version is ANY,
+        table_dir, m, retry_conflicts, expect_version is ANY,
+        mode="update", note=note,
+        ts=timestamp if timestamp is not None else time.time(),
+        props=props, dv_seg=dv_seg, seg=seg, delta=seg,
+        stats=seg_stats, blooms=seg_blooms, schema=_footer_schema(seg),
     )
 
 
@@ -2476,46 +2346,22 @@ def updated_rows(
     :func:`deleted_rows`.  Raises ValueError for non-update versions
     and RetentionError when the parent manifest needed to isolate the
     pre-images was expired."""
-    from pyspark.sql import functions as F
-
     if image not in ("pre", "post"):
         raise ValueError(f"image must be 'pre' or 'post', not {image!r}")
     m = _read_manifest(table_dir, version)
     if m["mode"] != "update":
         raise ValueError(f"v{version} is {m['mode']!r}, not an update")
+    props = m.get("table_props", {})
     if image == "post":
-        return _to_logical(
-            _merged_read(spark, 
-                *m["delta_files"]
-            ),
-            m.get("table_props", {}),
-        )
+        return _to_logical(_merged_read(spark, *m["delta_files"]), props)
     try:
-        parent = _read_manifest(table_dir, m["parent"])
+        parent, new_dv = _added_dv_files(table_dir, m)
     except FileNotFoundError:
         raise RetentionError(
             f"v{version}'s parent manifest was expired; its pre-update "
             f"images are no longer isolatable"
         ) from None
-    parent_dv = set(parent.get("dv_files", []))
-    new_dv = [f for f in m["dv_files"] if f not in parent_dv]
-    dv = spark.read.parquet(*new_dv).select("_dv_file", "_dv_pos")
-    base = _merged_read(spark, 
-        *parent["files"]
-    )
-    tagged = base.select(
-        "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), _SCHEME_RE, ""
-        ).alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
-    )
-    return _to_logical(
-        tagged.join(
-            F.broadcast(dv), ["_dv_file", "_dv_pos"], "inner"
-        ).drop("_dv_file", "_dv_pos"),
-        m.get("table_props", {}),
-    )
+    return _dv_read(spark, parent["files"], new_dv, props, how="inner")
 
 
 def _new_dv_files(table_dir: str, version: int) -> list[str]:
@@ -2526,12 +2372,9 @@ def _new_dv_files(table_dir: str, version: int) -> list[str]:
     if not m.get("dv_files"):
         return []
     try:
-        parent_dv = set(
-            _read_manifest(table_dir, m["parent"]).get("dv_files", [])
-        )
+        return _added_dv_files(table_dir, m)[1]
     except FileNotFoundError:
         return []
-    return [f for f in m["dv_files"] if f not in parent_dv]
 
 
 def _align_columns(
@@ -2886,17 +2729,18 @@ def read_version(
     m = _read_manifest(table_dir, version)
     if not m["files"]:
         raise FileNotFoundError(f"v{version} has no files")
-    return _to_logical(
-        _dv_scan(spark, m["files"], m.get("dv_files", [])),
-        m.get("table_props", {}),
+    return _dv_read(
+        spark, m["files"], m.get("dv_files", []), m.get("table_props", {})
     )
 
 
-_BLOOM_BITS = 8192
 _BLOOM_K = 4
+#: Bits per row when sizing a file's bitmap: at K = 4 the false
+#: positive rate for a file of distinct keys is about 1%.
+_BLOOM_BITS_PER_ROW = 10
 
 
-def _bloom_positions(v: str, bits: int = _BLOOM_BITS, k: int = _BLOOM_K):
+def _bloom_positions(v: str, bits: int, k: int = _BLOOM_K):
     import hashlib
 
     for i in range(k):
@@ -2912,12 +2756,14 @@ def _segment_blooms(
     segments has file spans covering the whole domain, so range stats
     prune nothing; a bloom still answers "definitely not in this
     file").  Built with ONE distributed pass over the new segment
-    (mapInPandas partial bitmaps, OR-merged driver-side — each partial
-    is bits/8 bytes, so the collect is partitions x files x 1 KiB of
-    metadata).  Hashing is Python md5 over the column's string cast on
-    BOTH build and probe, so there is no cross-engine hash parity to
-    maintain.  Columns are cast to string in Spark; restrict to
-    int/string/date keys (float string forms are not stable)."""
+    (mapInPandas partial bitmaps, OR-merged driver-side).  Each file's
+    bitmap is sized from its footer row count at
+    :data:`_BLOOM_BITS_PER_ROW` bits per row, rounded up to whole
+    bytes, so the false-positive rate does not grow with the file.
+    Hashing is Python md5 over the column's string cast on BOTH build
+    and probe, so there is no cross-engine hash parity to maintain.
+    Columns are cast to string in Spark; restrict to int/string/date
+    keys (float string forms are not stable)."""
     import base64
     from urllib.parse import unquote, urlparse
 
@@ -2929,12 +2775,19 @@ def _segment_blooms(
     except ImportError:
         return {}
 
+    def _path(uri: str) -> str:
+        return os.path.abspath(unquote(urlparse(uri).path))
+
+    nbytes = {
+        os.path.abspath(f): max(
+            1, (_num_rows([f]) * _BLOOM_BITS_PER_ROW + 7) // 8
+        )
+        for f in files
+    }
     df = spark.read.parquet(*files).select(
         F.input_file_name().alias("_f"),
         *[F.col(c).cast("string").alias(c) for c in cols],
     )
-
-    nbytes = _BLOOM_BITS // 8
 
     def _build(batches):
         acc: dict = {}
@@ -2943,10 +2796,13 @@ def _segment_blooms(
                 for f, v in zip(pdf["_f"], pdf[c]):
                     if v is None:
                         continue
-                    bm = acc.setdefault(
-                        (f, c), np.zeros(nbytes, dtype=np.uint8)
-                    )
-                    for pos in _bloom_positions(str(v)):
+                    bm = acc.get((f, c))
+                    if bm is None:
+                        bm = acc[(f, c)] = np.zeros(
+                            nbytes[_path(f)], dtype=np.uint8
+                        )
+                    bits = len(bm) * 8
+                    for pos in _bloom_positions(str(v), bits):
                         bm[pos >> 3] |= 1 << (pos & 7)
         yield pd.DataFrame(
             {
@@ -2958,25 +2814,23 @@ def _segment_blooms(
 
     out: dict = {}
     for r in df.mapInPandas(_build, "f string, c string, bm binary").collect():
-        path = os.path.abspath(unquote(urlparse(r["f"]).path))
-        cur = out.setdefault(path, {})
-        merged = (
-            np.frombuffer(
+        cur = out.setdefault(_path(r["f"]), {})
+        merged = np.frombuffer(bytes(r["bm"]), dtype=np.uint8)
+        if r["c"] in cur:
+            merged = merged | np.frombuffer(
                 base64.b64decode(cur[r["c"]]), dtype=np.uint8
-            ).copy()
-            if r["c"] in cur
-            else np.zeros(nbytes, dtype=np.uint8)
-        )
-        merged |= np.frombuffer(bytes(r["bm"]), dtype=np.uint8)
+            )
         cur[r["c"]] = base64.b64encode(merged.tobytes()).decode("ascii")
     return out
 
 
 def _bloom_may_contain(b64: str, val) -> bool:
+    """Probe a manifest bitmap of any size: its bit count is eight
+    times its byte length."""
     import base64
 
     bm = base64.b64decode(b64)
-    for pos in _bloom_positions(str(val)):
+    for pos in _bloom_positions(str(val), len(bm) * 8):
         if not (bm[pos >> 3] >> (pos & 7)) & 1:
             return False
     return True
@@ -3100,7 +2954,7 @@ def scan(
             _merged_read(spark, *kept).filter(F.lit(False)),
             scan_props,
         )
-    df = _to_logical(_dv_scan(spark, kept, dv_files), scan_props)
+    df = _dv_read(spark, kept, dv_files, scan_props)
     ops = {
         "=": lambda c, v: c == v,
         "<": lambda c, v: c < v,
@@ -3129,8 +2983,6 @@ def row_count(
     Exact across the whole DML surface: appends add, deletes/updates/
     replaces mask via DVs, compaction materializes, restore/clone
     reference."""
-    import pyarrow.parquet as pq
-
     if as_of is not None:
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
@@ -3145,13 +2997,9 @@ def row_count(
     for f in m["files"]:
         n = stats.get(os.path.abspath(f), {}).get("__rows")
         if n is None:  # pre-r13 manifest: footer fallback
-            n = pq.ParquetFile(f).metadata.num_rows
+            n = _num_rows([f])
         total += int(n)
-    deleted = sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in m.get("dv_files", [])
-    )
-    return total - deleted
+    return total - _num_rows(m.get("dv_files", []))
 
 
 def table_detail(table_dir: str, version: int | None = None) -> dict:
@@ -3166,8 +3014,6 @@ def table_detail(table_dir: str, version: int | None = None) -> dict:
         version = latest_version(table_dir)
         if version is None:
             raise FileNotFoundError(f"no versions in {table_dir}")
-    import pyarrow.parquet as pq
-
     m = _read_manifest(table_dir, version)
     props = m.get("table_props", {})
     mapping, dropped = _mapping(props), _dropped(props)
@@ -3183,10 +3029,7 @@ def table_detail(table_dir: str, version: int | None = None) -> dict:
             size += os.path.getsize(f)
         except OSError:
             pass  # concurrently vacuumed orphan: size best-effort
-    dv_rows = sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in m.get("dv_files", [])
-    )
+    dv_rows = _num_rows(m.get("dv_files", []))
     out = {
         "version": version,
         "ts": m.get("ts"),

@@ -52,18 +52,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # harmless either way — the dtype dispatch below handles both
             # the bigint (conf took effect) and timestamp outcomes.
             pass
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif ts_type == "timestamp_ntz":
-            # pyspark 4.x may infer parquet timestamps as TIMESTAMP_NTZ,
-            # which unix_micros() and streaming watermarks reject. Session
-            # tz is pinned UTC, so the cast is value-identical and the
-            # DuckDB oracle (naive timestamps) still matches.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    df = spark.read.parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    # A session with spark.sql.parquet.inferTimestampNTZ.enabled reads
+    # naive parquet timestamps as TIMESTAMP_NTZ, which unix_micros(),
+    # streaming watermarks and the lake/stream readers reject.  Session
+    # tz is pinned UTC, so the cast is value-identical and the DuckDB
+    # oracle (naive timestamps) still matches.  Tables without such a
+    # column keep the bare scan.
+    ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+    if ntz:
+        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -282,6 +282,8 @@ def _cdc_plan(
     from ..sinks.versioned import (
         CDCDecompositionError,
         RetentionError,
+        _added_dv_files,
+        _dv_positions,
         _read_manifest,
         list_versions,
         version_delta_files,
@@ -333,32 +335,16 @@ def _cdc_plan(
         if mode not in ("delete", "update", "replace", "merge"):
             continue
         try:
-            parent = _read_manifest(table_dir, m["parent"])
+            _, new_dv = _added_dv_files(table_dir, m)
         except FileNotFoundError:
             raise RetentionError(
                 f"v{v}'s parent manifest was expired; its CDC "
                 f"retractions are no longer recoverable"
             ) from None
-        parent_dv = set(parent.get("dv_files", []))
-        new_dv = [
-            f for f in m.get("dv_files", []) if f not in parent_dv
-        ]
-        if not new_dv:
-            continue
-        import pyarrow.parquet as pq
-
         kind_del = (
             "update_preimage" if mode == "update" else "delete"
         )
-        pos: dict[str, list[int]] = {}
-        for dvf in new_dv:
-            t = pq.read_table(dvf)
-            for f, p in zip(
-                t.column("_dv_file").to_pylist(),
-                t.column("_dv_pos").to_pylist(),
-            ):
-                pos.setdefault(f, []).append(p)
-        for f, plist in sorted(pos.items()):
+        for f, plist in sorted(_dv_positions(new_dv).items()):
             plan.append((f, v, plist, kind_del))
     return plan
 
@@ -939,25 +925,14 @@ def _make_datasource_class():
         def partitions(self):
             import os as _p_os
 
-            from ..sinks.versioned import _read_manifest
+            from ..sinks.versioned import _dv_positions, _read_manifest
 
             v = self._version()
             m = _read_manifest(self._dir, v)
-            drops: dict[str, list[int]] = {}
-            if m.get("dv_files"):
-                # deletion vectors are KB-scale: resolve them to
-                # per-file position lists driver-side so each input
-                # partition masks its own rows (sinks/versioned.py
-                # delete_where semantics)
-                import pyarrow.parquet as pq
-
-                for dvf in m["dv_files"]:
-                    t = pq.read_table(dvf)
-                    for f, p in zip(
-                        t.column("_dv_file").to_pylist(),
-                        t.column("_dv_pos").to_pylist(),
-                    ):
-                        drops.setdefault(f, []).append(p)
+            # deletion vectors are KB-scale: resolve them to per-file
+            # position lists driver-side so each input partition masks
+            # its own rows
+            drops = _dv_positions(m.get("dv_files", []))
             return [
                 _Part(
                     f, v,

@@ -1259,6 +1259,114 @@ def test_versioned_bloom_skipping(spark, tmp_path):
     assert len(kept_r) == 4
 
 
+def test_versioned_bloom_sizing_and_legacy_bitmaps(spark, tmp_path):
+    """Bloom bitmaps are sized per file from the footer row count (10
+    bits per row, whole bytes), and probes take the bit count from the
+    bitmap's length — so a manifest written with the older fixed
+    8192-bit bitmaps still answers membership with no false
+    negatives."""
+    import base64
+    import hashlib
+
+    from artis_data_ingest_spark.sinks.versioned import (
+        _bloom_may_contain,
+        _read_manifest,
+        commit,
+    )
+
+    tdir = str(tmp_path / "tbl")
+    commit(
+        spark.range(0, 3000).select(
+            F.concat(F.lit("u"), F.col("id")).alias("tag")
+        ).repartition(3),
+        tdir, mode="overwrite", expect_version=None, bloom_cols=["tag"],
+    )
+    m = _read_manifest(tdir, 0)
+    for path, cols in m["blooms"].items():
+        rows = m["stats"][path]["__rows"]
+        assert len(base64.b64decode(cols["tag"])) == (rows * 10 + 7) // 8
+
+    # a fixed 8192-bit bitmap, built the way older manifests were
+    bits = 8192
+    bm = bytearray(bits // 8)
+    present = [f"u{i}" for i in range(0, 6000, 3)]
+    for v in present:
+        for i in range(4):
+            h = hashlib.md5(f"{i}|{v}".encode()).hexdigest()[:15]
+            pos = int(h, 16) % bits
+            bm[pos >> 3] |= 1 << (pos & 7)
+    legacy = base64.b64encode(bytes(bm)).decode("ascii")
+    assert all(_bloom_may_contain(legacy, v) for v in present)
+    absent = [f"x{i}" for i in range(500)]
+    assert sum(_bloom_may_contain(legacy, v) for v in absent) < 500
+
+
+def test_versioned_read_plan_has_no_dv_join_until_a_delete(spark, tmp_path):
+    """A table that never deleted reads as the bare parquet scan — no
+    join and no _metadata column in the executed plan.  Once a delete
+    adds a deletion vector, the read applies it as a broadcast
+    anti-join."""
+    from artis_data_ingest_spark.sinks.versioned import (
+        commit,
+        delete_where,
+        read_version,
+    )
+
+    def executed_plan(df):
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    tdir = str(tmp_path / "tbl")
+    commit(spark.range(0, 100).select(F.col("id").alias("k")), tdir,
+           mode="overwrite", expect_version=None)
+    plain = executed_plan(read_version(spark, tdir))
+    assert "Join" not in plain and "_metadata" not in plain
+
+    delete_where(spark, tdir, "k < 10")
+    df = read_version(spark, tdir)
+    masked = executed_plan(df)
+    assert "BroadcastHashJoin" in masked and "LeftAnti" in masked
+    assert df.count() == 90
+
+
+def test_load_table_casts_timestamp_ntz(spark, tmp_path):
+    """load_table serves naive parquet timestamps as TIMESTAMP for
+    every table, even when the session infers them as TIMESTAMP_NTZ."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from artis_data_ingest_spark.sources.tables import load_table
+
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2], pa.int64()),
+            "at": pa.array(
+                [datetime.datetime(2024, 1, 1, 12),
+                 datetime.datetime(2024, 6, 30, 8, 15)],
+                pa.timestamp("us"),
+            ),
+        }),
+        str(tmp_path / "stamps.parquet"),
+    )
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        assert dict(spark.read.parquet(
+            str(tmp_path / "stamps.parquet")
+        ).dtypes)["at"] == "timestamp_ntz"
+        df = load_table(spark, str(tmp_path), "stamps")
+        assert dict(df.dtypes) == {"id": "bigint", "at": "timestamp"}
+        assert [r.at for r in df.orderBy("id").collect()] == [
+            datetime.datetime(2024, 1, 1, 12),
+            datetime.datetime(2024, 6, 30, 8, 15),
+        ]
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_pdf_malformed_structures_never_raise():
     """r12 ADVICE fix: wild malformations in the 1.5 parse paths (odd
     CMap hex, junk /Index tokens, corrupt ObjStm headers) degrade to
