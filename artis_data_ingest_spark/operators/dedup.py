@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.textstats import fingerprint
-from .scale import spread_cpu_bound
+from .scale import LOCAL_EDGE_LIMIT, checkpoint_gate, spread_cpu_bound
 
 
 def char_shingles(col: str | Column, k: int = 3) -> Column:
@@ -1000,7 +1000,7 @@ def _cc_union_find(sym0: DataFrame) -> DataFrame:
     which equals Spark's UTF8 byte order because UTF-8 is
     order-preserving over code points).
 
-    The caller guards size (``spark.graft.cc.localEdgeLimit``): this
+    The caller guards size (``operators.scale.checkpoint_gate``): this
     runs only when the whole edge list fits one Python worker, where a
     dict union-find is ~1µs/edge — microseconds-to-seconds versus the
     ~5 sequential AQE stages *per propagation round* the distributed
@@ -1061,24 +1061,13 @@ def _cc_union_find(sym0: DataFrame) -> DataFrame:
     )
 
 
-#: default edge-count bound for the single-task union-find CC path; a
-#: symmetrized edge list at or below this runs as ONE task instead of
-#: O(log diameter) distributed rounds.  Override per session with
-#: ``spark.graft.cc.localEdgeLimit`` (set 0 to force the distributed
-#: path).  Sizing: 2M (node, node) rows is tens of MB in one Python
-#: worker and ~2s of union-find — far below the multi-second per-round
-#: AQE stage latency the distributed path pays on graphs this small,
-#: while anything larger falls through to the O(log d) rounds.
-_CC_LOCAL_EDGE_LIMIT = 2_000_000
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
     strict: bool = True,
-    local_edge_limit: int | None = None,
+    local_edge_limit: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Connected components over an undirected edge list — the step
     that turns near-dup candidate *pairs* into duplicate *clusters*
@@ -1124,21 +1113,10 @@ def connected_components(
     that only need *a* canonical representative per round, e.g.
     incremental re-clustering, can opt in).
 
-    r16 — size-adaptive strategy (guide §1.2: fix the distributed
-    algorithm first; §8: decide over the lightweight proxy): the
-    candidate graphs this operator closes are tiny relative to the
-    corpus that produced them (signature CLASSES, distinct part names —
-    at 100x the sf0.1 corpus, ~14k nodes / ~100k edges), yet each
-    distributed round costs ~5 sequential AQE stages of fixed latency —
-    the driver-measured 100x wall where 4x the cores bought 14%.  When
-    the symmetrized edge count (observed for free on the checkpoint
-    job) is at or below ``local_edge_limit`` (default
-    ``spark.graft.cc.localEdgeLimit`` = 2M), the closure runs as ONE
-    single-task union-find pass in ``mapInPandas`` — same (node, min
-    label) output, proven by parity tests on both paths and the
-    unchanged oracle.  Larger graphs use the distributed rounds
-    unchanged; ``max_iter``/``strict`` bind only that path (union-find
-    is exact, never partial).
+    A symmetrized edge list of at most ``local_edge_limit`` rows
+    (``operators.scale.checkpoint_gate``) is closed by one single-task
+    union-find pass instead; ``max_iter``/``strict`` bind only the
+    distributed rounds.
     """
     from pyspark.sql import Observation
 
@@ -1153,21 +1131,14 @@ def connected_components(
         F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
         F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
     )
-    obs_edges = Observation("cc_n_sym_edges")
-    sym0 = (
+    sym0, fits = checkpoint_gate(
         edges.select(F.explode(both).alias("e"))
         .select("e.a", "e.b")
-        .distinct()
-        .observe(obs_edges, F.count(F.lit(1)).alias("n"))
-    ).localCheckpoint()
-    n_sym = obs_edges.get["n"] or 0
-    if local_edge_limit is None:
-        local_edge_limit = int(
-            edges.sparkSession.conf.get(
-                "spark.graft.cc.localEdgeLimit", str(_CC_LOCAL_EDGE_LIMIT)
-            )
-        )
-    if n_sym <= local_edge_limit:
+        .distinct(),
+        local_edge_limit,
+        "connected_components",
+    )
+    if fits:
         return _cc_union_find(sym0)
     labels = (
         sym0.select(F.col("a").alias("node"))

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scale import LOCAL_EDGE_LIMIT, checkpoint_gate
+
 PR_SCALE = 10**12
 
 
@@ -82,7 +84,7 @@ def pagerank(
     damping_pct: int = 85,
     checkpoint_every: int = 8,
     init_pr: DataFrame | None = None,
-    local_edge_limit: int | None = None,
+    local_edge_limit: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Weighted PageRank over ``edges`` (columns src, dst, w) →
     (node, pr) with pr in fixed-point units of 1/PR_SCALE.
@@ -94,16 +96,10 @@ def pagerank(
     every ``checkpoint_every`` rounds to keep the plan shallow at
     large ``n_iter`` (the connected_components lineage pattern).
 
-    r16 size-adaptive strategy (the connected_components pattern):
-    uniform-start rank over a weighted edge list at or below
-    ``local_edge_limit`` rows (default ``spark.graft.cc.localEdgeLimit``
-    = 2M, observed for free on the ew checkpoint job) runs the whole
-    unrolled iteration as ONE single-task numpy pass — bit-identical
-    integers, parity-pinned by tests and the oracle hashes.  Warm
-    starts (``init_pr``) and larger graphs keep the distributed loop.
+    A uniform-start rank over at most ``local_edge_limit`` weighted
+    edges (``operators.scale.checkpoint_gate``) runs as one single-task
+    numpy pass instead; warm starts (``init_pr``) stay distributed.
     """
-    from pyspark.sql import Observation
-
     keep_pct = 100 - damping_pct
     edges = (
         edges.groupBy("src", "dst")
@@ -111,19 +107,13 @@ def pagerank(
         .localCheckpoint()
     )
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    obs_edges = Observation()
-    ew = edges.join(outw, "src").observe(
-        obs_edges, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint()
-    if local_edge_limit is None:
-        from .dedup import _CC_LOCAL_EDGE_LIMIT
-
-        local_edge_limit = int(
-            edges.sparkSession.conf.get(
-                "spark.graft.cc.localEdgeLimit", str(_CC_LOCAL_EDGE_LIMIT)
-            )
-        )
-    if init_pr is None and (obs_edges.get["n"] or 0) <= local_edge_limit:
+    # a warm start never fits: its limit of -1 records the distributed path
+    ew, fits = checkpoint_gate(
+        edges.join(outw, "src"),
+        local_edge_limit if init_pr is None else -1,
+        "pagerank",
+    )
+    if fits:
         return _pagerank_local(ew, n_iter, damping_pct)
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -320,10 +310,10 @@ def kcore(
     edges: DataFrame,
     k: int,
     rounds: int | None = None,
-    local_edge_limit: int | None = None,
-    dedup: bool = False,
+    local_edge_limit: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
-    """k-core of an undirected edge set ``(x, y)`` (distinct, x != y):
+    """k-core of an undirected edge set ``(x, y)`` (x != y; duplicate
+    pairs are allowed):
     the maximal subgraph where every node has degree >= k — the
     standard density filter for spam/bot subgraph mining and for
     trimming low-support nodes before community detection.
@@ -347,46 +337,22 @@ def kcore(
 
     Returns (node, deg) — surviving nodes with their core degree.
 
-    r16 size-adaptive strategy (the connected_components pattern,
-    guide §1.2): when the symmetrized edge list is at or below
-    ``local_edge_limit`` rows (default ``spark.graft.cc.localEdgeLimit``
-    = 2M — the count is observed for free on the checkpoint job), the
-    whole peel runs as ONE single-task numpy pass with identical
-    round-synchronous semantics (parity-pinned by tests on both
-    paths); larger graphs take the distributed rounds below unchanged.
-
-    ``dedup=True`` accepts an edge list with duplicate (x, y) rows:
-    the local kernel dedups in numpy (an integer pair-pack + one
-    np.unique), and only the distributed fallback pays a distinct
-    exchange.  This lets callers drop their own pre-``distinct()`` —
-    measured at sf0.1 it removes one full shuffle of the edge stream
-    from q_kcore.  The checkpoint now carries the ONE-directional
-    list (half the former symmetrized rows; the local gate compares
-    2x the observed count, an overestimate under duplicates, so it
-    only ever falls back conservatively); the distributed path builds
-    the symmetric union lazily from the checkpoint, a map-side
-    concatenation that costs no exchange.
+    A one-directional edge list of at most ``local_edge_limit // 2``
+    rows, i.e. at most ``local_edge_limit`` symmetrized rows
+    (``operators.scale.checkpoint_gate``), is peeled by one single-task
+    numpy pass that deduplicates in-kernel; only the distributed
+    rounds pay a ``distinct`` exchange.
     """
     from pyspark.sql import Observation
 
-    from .dedup import _CC_LOCAL_EDGE_LIMIT
-
-    obs_edges = Observation("kcore_n_edges")
-    e0 = edges.select("x", "y").observe(
-        obs_edges, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint()
-    if local_edge_limit is None:
-        local_edge_limit = int(
-            edges.sparkSession.conf.get(
-                "spark.graft.cc.localEdgeLimit", str(_CC_LOCAL_EDGE_LIMIT)
-            )
-        )
-    if 2 * (obs_edges.get["n"] or 0) <= local_edge_limit:
+    e0, fits = checkpoint_gate(
+        edges.select("x", "y"), local_edge_limit // 2, "kcore"
+    )
+    if fits:
         return _kcore_local(e0, k, rounds)
-    if dedup:
-        # materialized: every peel round reads sym, and an un-pinned
-        # distinct would re-shuffle per round
-        e0 = e0.distinct().localCheckpoint()
+    # materialized: every peel round reads sym, and an un-pinned
+    # distinct would re-shuffle per round
+    e0 = e0.distinct().localCheckpoint()
     sym = e0.unionAll(
         e0.select(F.col("y").alias("x"), F.col("x").alias("y"))
     )

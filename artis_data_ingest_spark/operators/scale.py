@@ -16,13 +16,53 @@ Patterns that keep plans healthy at 100 TB:
     per-key ordered window carrying the last left-side value forward —
     one shuffle on the key, no range explosion, works at any scale
     (the naive inequality-join alternative is O(n·m) per key).
+
+  * ``checkpoint_gate`` — the one local-vs-distributed size gate of the
+    graph operators (``connected_components``, ``pagerank``,
+    ``kcore``).  It and ``spread_cpu_bound`` record every decision as
+    one INFO line on this module's logger.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import logging
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+_log = logging.getLogger(__name__)
+
+#: default row bound for the graph operators' single-task kernels; an
+#: input at or below it runs as ONE task instead of distributed rounds.
+#: Sizing: 2M (node, node) rows is tens of MB in one Python worker and
+#: ~2s of union-find — far below the multi-second per-round AQE stage
+#: latency the distributed path pays on graphs this small, while
+#: anything larger falls through to the O(log d) rounds.
+LOCAL_EDGE_LIMIT = 2_000_000
+
+
+def _record_gate(op: str, unit: str, observed: int, limit: int, path: str) -> None:
+    _log.info(
+        "gate op=%s %s=%d limit=%d path=%s", op, unit, observed, limit, path
+    )
+
+
+def checkpoint_gate(
+    df: DataFrame, limit: int, op: str
+) -> tuple[DataFrame, bool]:
+    """Checkpoint ``df`` and decide whether it fits a single-task
+    kernel: returns ``(checkpointed_df, n_rows <= limit)``.
+
+    The row count is an ``observe`` metric of the checkpoint job itself,
+    so the decision costs no extra Spark job.  The decision is logged
+    (operator, observed rows, limit, chosen path)."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    n = obs.get["n"] or 0
+    fits = n <= limit
+    _record_gate(op, "rows", n, limit, "local" if fits else "distributed")
+    return out, fits
 
 
 def spread_cpu_bound(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -50,9 +90,16 @@ def spread_cpu_bound(df: DataFrame, min_partitions: int | None = None) -> DataFr
     """
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(1, target // 2):
-        return df
-    return df.repartition(target)
+    n_parts = df.rdd.getNumPartitions()
+    keep = n_parts >= max(1, target // 2)
+    _record_gate(
+        "spread_cpu_bound",
+        "partitions",
+        n_parts,
+        target,
+        "keep" if keep else "repartition",
+    )
+    return df if keep else df.repartition(target)
 
 
 def salted_agg(

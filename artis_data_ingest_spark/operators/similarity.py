@@ -152,6 +152,26 @@ def lsh_topk(
     )
 
 
+def _lloyd_update(assign: DataFrame, quant: int) -> DataFrame:
+    """Lloyd's update step: ``assign`` (cid, emb) → (cid, cemb), each
+    centroid the element-wise mean of its vectors in fixed point —
+    elements floored to ``quant`` units and summed as BIGINT (exact and
+    order-independent), then one double division per element."""
+    flat = assign.select("cid", F.posexplode("emb").alias("pos", "val"))
+    upd = flat.groupBy("cid", "pos").agg(
+        (
+            F.sum(F.floor(F.col("val") * quant).cast("bigint")).cast("double")
+            / (F.lit(float(quant)) * F.count(F.lit(1)))
+        ).alias("val")
+    )
+    return upd.groupBy("cid").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "val"))),
+            lambda s: s["val"],
+        ).alias("cemb")
+    )
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     k: int = 4,
@@ -210,23 +230,7 @@ def kmeans_centroids(
             .filter(F.col("rn") == 1)
             .select("vec_id", "cid", "emb")
         )
-        flat = assign.select(
-            "cid", F.posexplode("emb").alias("pos", "val")
-        )
-        upd = flat.groupBy("cid", "pos").agg(
-            (
-                F.sum(F.floor(F.col("val") * quant).cast("bigint")).cast(
-                    "double"
-                )
-                / (F.lit(float(quant)) * F.count(F.lit(1)))
-            ).alias("val")
-        )
-        cent = upd.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                lambda s: s["val"],
-            ).alias("cemb")
-        )
+        cent = _lloyd_update(assign, quant)
     return cent
 
 
@@ -470,23 +474,7 @@ def pq_codebooks(
                 .filter(F.col("rn") == 1)
                 .select("vec_id", "cid", "emb")
             )
-            flat = assign.select(
-                "cid", F.posexplode("emb").alias("pos", "val")
-            )
-            upd = flat.groupBy("cid", "pos").agg(
-                (
-                    F.sum(
-                        F.floor(F.col("val") * quant).cast("bigint")
-                    ).cast("double")
-                    / (F.lit(float(quant)) * F.count(F.lit(1)))
-                ).alias("val")
-            )
-            cent = upd.groupBy("cid").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                    lambda s: s["val"],
-                ).alias("cemb")
-            )
+            cent = _lloyd_update(assign, quant)
         out_j = cent.select(F.lit(j).alias("subspace"), "cid", "cemb")
         out = out_j if out is None else out.unionByName(out_j)
     return out

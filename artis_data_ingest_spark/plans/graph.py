@@ -308,11 +308,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") + _KCORE_OFF).cast("bigint").alias("y"),
         )
     )
-    # r16: the multi-edge dedup moved INTO kcore (dedup=True) — the
-    # local path dedups in-kernel (one np.unique), which removes the
-    # distinct exchange of the raw edge stream from this query's plan
-    # entirely (measured same-process at sf0.1: 2.74 -> 1.50 s floor).
-    core = kcore(edges, _KCORE_K, rounds=_KCORE_ROUNDS, dedup=True)
+    core = kcore(edges, _KCORE_K, rounds=_KCORE_ROUNDS)
     label = F.when(
         F.col("node") >= _KCORE_OFF,
         F.concat(F.lit("s:"), (F.col("node") - _KCORE_OFF).cast("string")),

@@ -533,10 +533,13 @@ def test_connected_components_stress_path_and_megastar(spark):
     assert uf == labels
 
 
-def test_connected_components_union_find_parity(spark):
+def test_connected_components_union_find_parity(spark, caplog):
     """r16: the size-adaptive single-task union-find path must agree
     with the distributed min-label/pointer-jump rounds on random
-    graphs, for bigint AND string node labels."""
+    graphs, for bigint AND string node labels.  The limit sits at the
+    gate's boundary: ``local_edge_limit == rows`` takes the local path,
+    ``rows - 1`` the distributed one, and each decision is logged."""
+    import logging
     import random
 
     from artis_data_ingest_spark.operators.dedup import connected_components
@@ -553,8 +556,21 @@ def test_connected_components_union_find_parity(spark):
     ]
     for rows in (int_edges, str_edges):
         edges = spark.createDataFrame(rows, ["src", "dst"])
-        uf_df = connected_components(edges)
-        dist_df = connected_components(edges, local_edge_limit=0)
+        n_sym = len({e for a, b in rows for e in ((a, b), (b, a))})
+        caplog.clear()
+        with caplog.at_level(
+            logging.INFO, logger="artis_data_ingest_spark.operators.scale"
+        ):
+            uf_df = connected_components(edges, local_edge_limit=n_sym)
+            dist_df = connected_components(
+                edges, local_edge_limit=n_sym - 1
+            )
+        assert [r.getMessage() for r in caplog.records] == [
+            f"gate op=connected_components rows={n_sym} limit={n_sym} "
+            "path=local",
+            f"gate op=connected_components rows={n_sym} "
+            f"limit={n_sym - 1} path=distributed",
+        ]
         # schema parity: same column names and types on both paths
         # (nullability is writer metadata and may differ)
         assert [(f.name, f.dataType) for f in uf_df.schema] == [
@@ -1213,7 +1229,12 @@ def test_kcore_local_distributed_parity(spark):
     iedges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (1, 4), (4, 5), (5, 6)], ["x", "y"]
     )
-    for e in (edges, iedges):
+    # repeated (x, y) rows: the local kernel dedups in numpy, the
+    # distributed rounds with a distinct; neither may count them twice
+    dups = spark.createDataFrame(
+        tri + path + tri[:2] + path[-1:], "x string, y string"
+    )
+    for e in (edges, iedges, dups):
         for rounds in (None, 1, 2, 8):
             loc = kcore(e, 2, rounds=rounds)
             dist = kcore(e, 2, rounds=rounds, local_edge_limit=0)

@@ -233,8 +233,20 @@ def test_aqe_splits_skewed_join(spark):
             F.when(F.col("id") % 20 != 0, F.lit(7)).otherwise(F.col("id")).alias("k"),
             (F.col("id") * 2).alias("w"),
         )
-        joined = left.join(right, on="k").groupBy().count()
-        joined.collect()
+        # aggregate the payload so it rides the join's shuffle: a bare
+        # count() prunes ``v`` and the hot partition shrinks to a few KB
+        # of the constant key, under AQE's skew factor
+        joined = left.join(right, on="k").groupBy().agg(
+            F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
+        )
+        row = joined.collect()[0]
+        # key 7: 190,000 left x 1,900 right rows; keys 0, 20, ..., 1980
+        # match once each
+        hot = sum(range(200_000)) - 20 * sum(range(10_000))
+        assert (row.n, row.s) == (
+            190_000 * 1_900 + 100,
+            1_900 * hot + 20 * sum(range(100)),
+        )
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan
     finally:
@@ -267,14 +279,26 @@ def test_asof_forward_known_values(spark):
     assert out[(2, t(5))] is None     # right row is before, not after
 
 
-def test_spread_cpu_bound_noop_when_partitioned(spark):
+def test_spread_cpu_bound_noop_when_partitioned(spark, caplog):
+    import logging
+
     from artis_data_ingest_spark.operators.scale import spread_cpu_bound
 
     df = spark.range(1000).repartition(64)
-    out = spread_cpu_bound(df)
-    assert out is df  # already >= defaultParallelism: no extra exchange
-    small = spark.range(10).coalesce(1)
-    spread = spread_cpu_bound(small)
+    target = spark.sparkContext.defaultParallelism
+    with caplog.at_level(
+        logging.INFO, logger="artis_data_ingest_spark.operators.scale"
+    ):
+        out = spread_cpu_bound(df)
+        assert out is df  # already >= defaultParallelism: no extra exchange
+        small = spark.range(10).coalesce(1)
+        spread = spread_cpu_bound(small)
+    one_split = "keep" if target < 4 else "repartition"
+    assert [r.getMessage() for r in caplog.records] == [
+        f"gate op=spread_cpu_bound partitions=64 limit={target} path=keep",
+        f"gate op=spread_cpu_bound partitions=1 limit={target} "
+        f"path={one_split}",
+    ]
     assert spread.rdd.getNumPartitions() >= min(
         32, spark.sparkContext.defaultParallelism
     )
