@@ -1,6 +1,5 @@
 """Similarity search over embeddings (SURVEY.md §2.11).
 
-Two paths:
   * ``brute_force_topk`` — exact cosine top-k: broadcast the (small)
     query set against the corpus, rank per query. O(N·Q) but embarrass-
     ingly parallel and shuffle-light (one window shuffle on query_id).
@@ -10,6 +9,11 @@ Two paths:
     query's bucket. At 100 TB the bucket join replaces the cross join,
     cutting candidates by ~2^n_bits, at a recall cost measured by
     comparing against the brute-force path.
+  * centroid operators — ``kmeans_centroids``, ``ivf_assign`` /
+    ``ivf_topk``, ``pq_codebooks`` and ``semantic_dedup`` make every
+    nearest-centroid choice through ``_assign_nearest``: the k-row
+    centroid table is broadcast as one row and each vector picks its
+    centroid in place, so the corpus is never shuffled to assign it.
 """
 
 from __future__ import annotations
@@ -172,6 +176,60 @@ def _lloyd_update(assign: DataFrame, quant: int) -> DataFrame:
     )
 
 
+def _assign_nearest(
+    df: DataFrame,
+    emb: str,
+    cent: DataFrame,
+    round_digits: int,
+    metric: str = "cosine",
+    n: int = 1,
+) -> DataFrame:
+    """Every row of ``df`` with its ``n`` nearest centroids of ``cent``
+    (cid, cemb), one output row per chosen centroid: ``df``'s columns
+    plus ``cid`` and ``score``, the rounded cosine (``metric="cosine"``,
+    highest first; also adds the row norm ``vnorm``) or squared L2
+    (``"l2"``, lowest first).  Ties go to the lowest cid.
+
+    The k-row centroid table is aggregated into one broadcast row of
+    (cid, cemb, cnorm) structs, so the big side stays where it is: each
+    row sorts its k (score, ±cid) candidates in place.  Spark's struct
+    ordering (NaN above every number, a null score below) ranks them as
+    a (score, cid) window would.  An empty centroid table yields no
+    rows."""
+    cosine = metric == "cosine"
+    ref = cent.agg(
+        F.collect_list(
+            F.struct(
+                "cid",
+                "cemb",
+                F.sqrt(dot(F.col("cemb"), F.col("cemb"))).alias("cnorm"),
+            )
+        ).alias("_cents")
+    )
+    v = F.col(emb)
+    if cosine:
+        df = df.withColumn("vnorm", F.sqrt(dot(v, v)))
+
+    def candidate(c):
+        score = (
+            dot(v, c["cemb"]) / (F.col("vnorm") * c["cnorm"])
+            if cosine
+            else _l2sq(v, c["cemb"])
+        )
+        return F.struct(
+            F.round(score, round_digits).alias("score"),
+            (-c["cid"] if cosine else c["cid"]).alias("tie"),
+            c["cid"].alias("cid"),
+        )
+
+    ranked = F.sort_array(F.transform("_cents", candidate), asc=not cosine)
+    return (
+        df.crossJoin(F.broadcast(ref))
+        .select(*df.columns, F.inline(F.slice(ranked, 1, n)))
+        .drop("tie")
+    )
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     k: int = 4,
@@ -185,7 +243,8 @@ def kmeans_centroids(
     * init — the ``k`` lowest-vec_id vectors (no RNG; kmeans++ would
       need a seeded sampler that DuckDB can't mirror).
     * assign — every vector to its max-cosine centroid (tie → lowest
-      cid); centroids broadcast, so each iteration is one corpus scan.
+      cid) by ``_assign_nearest``, so each iteration is one corpus
+      scan.
     * update — element-wise mean via FIXED-POINT arithmetic: elements
       are floored to ``quant`` units and summed as BIGINT (exact,
       associative, order-independent — float sums are not), then one
@@ -209,27 +268,7 @@ def kmeans_centroids(
         .select(F.col("vec_id").alias("cid"), F.col("emb").alias("cemb"))
     )
     for _ in range(n_iter):
-        c = cent.withColumn(
-            "cnorm", F.sqrt(dot(F.col("cemb"), F.col("cemb")))
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("ccos").desc(), F.col("cid")
-        )
-        assign = (
-            e.withColumn("vnorm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
-            .crossJoin(F.broadcast(c))
-            .withColumn(
-                "ccos",
-                F.round(
-                    dot(F.col("emb"), F.col("cemb"))
-                    / (F.col("vnorm") * F.col("cnorm")),
-                    round_digits,
-                ),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cid", "emb")
-        )
+        assign = _assign_nearest(e, "emb", cent, round_digits)
         cent = _lloyd_update(assign, quant)
     return cent
 
@@ -296,8 +335,9 @@ def ivf_assign(
     corpus vectors (the zero-training baseline). Returns
     ``(centroids, assignment)`` where assignment is (vec_id, cid).
 
-    Scale shape: centroids broadcast (K rows), corpus never self-joins;
-    the only shuffle is the per-vector argmax window on vec_id.
+    Scale shape: the K centroid rows are broadcast as one row and each
+    vector picks its cell in place (``_assign_nearest``), so the
+    assignment neither self-joins nor shuffles the corpus.
     """
     if centroids is not None:
         cent = centroids.select(
@@ -315,26 +355,9 @@ def ivf_assign(
                 norm("embedding").alias("cnorm"),
             )
         )
-    corp = corpus.select(
-        "vec_id", "embedding", norm("embedding").alias("vnorm")
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("cid")
-    )
-    assign = (
-        corp.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "ccos",
-            F.round(
-                dot(F.col("embedding"), F.col("cemb"))
-                / (F.col("vnorm") * F.col("cnorm")),
-                round_digits,
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
+    assign = _assign_nearest(
+        corpus.select("vec_id", "embedding"), "embedding", cent, round_digits
+    ).select("vec_id", "cid")
     return cent, assign
 
 
@@ -355,26 +378,10 @@ def ivf_topk(
     (see ``kmeans_centroids``)."""
     cent, assign = ivf_assign(corpus, n_centroids, round_digits, centroids)
     q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm("embedding").alias("q_norm"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cid")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "qcos",
-            F.round(
-                dot(F.col("q_emb"), F.col("cemb"))
-                / (F.col("q_norm") * F.col("cnorm")),
-                round_digits,
-            ),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "q_emb", "q_norm", "cid")
+    probed = _assign_nearest(q, "q_emb", cent, round_digits, n=nprobe).select(
+        "query_id", "q_emb", F.col("vnorm").alias("q_norm"), "cid"
     )
     corp = corpus.select(
         "vec_id", "embedding", norm("embedding").alias("c_norm")
@@ -459,21 +466,7 @@ def pq_codebooks(
             .select(F.col("vec_id").alias("cid"), F.col("emb").alias("cemb"))
         )
         for _ in range(n_iter):
-            w = Window.partitionBy("vec_id").orderBy(
-                F.col("dd").asc(), F.col("cid")
-            )
-            assign = (
-                sub.crossJoin(F.broadcast(cent))
-                .withColumn(
-                    "dd",
-                    F.round(
-                        _l2sq(F.col("emb"), F.col("cemb")), round_digits
-                    ),
-                )
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("vec_id", "cid", "emb")
-            )
+            assign = _assign_nearest(sub, "emb", cent, round_digits, "l2")
             cent = _lloyd_update(assign, quant)
         out_j = cent.select(F.lit(j).alias("subspace"), "cid", "cemb")
         out = out_j if out is None else out.unionByName(out_j)
@@ -579,57 +572,17 @@ def semantic_dedup(
     cent = centroids if centroids is not None else kmeans_centroids(
         corpus, k=k, n_iter=n_iter
     )
-    # r16 (guide §2.4): the assignment used to be a broadcast cross
-    # join against the k-row centroid table followed by a row_number()
-    # window — one full exchange of k copies of every embedding, run
-    # THREE times because assign feeds the pair join twice and the
-    # final labeling.  The centroid table is k rows by contract (the
-    # SemDeDup scaling knob), so collect it like a broadcast and fold
-    # the argmax into a literal-array expression: zero exchanges, and
-    # one localCheckpoint pins assign for its three consumers.  The
-    # (ccos DESC, cid ASC) tie-break becomes array_max over
-    # (ccos, -cid) structs — the same Spark type ordering (NaN
-    # greatest) the window used.  Measured same-process at sf0.1:
-    # 2.02 -> 1.70 s floor, identical output.
-    import math
-
-    cid_t = cent.schema["cid"].dataType
-    crows = sorted(
-        cent.select("cid", "cemb").collect(), key=lambda r: r["cid"]
-    )
-    clits = [
-        F.struct(
-            F.lit(r["cid"]).cast(cid_t).alias("cid"),
-            F.array(*[F.lit(float(v)) for v in r["cemb"]]).alias("cemb"),
-            F.lit(
-                math.sqrt(sum(float(v) * float(v) for v in r["cemb"]))
-            ).alias("cnorm"),
-        )
-        for r in crows
-    ]
     e = corpus.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    ).withColumn("vnorm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
-    cand = F.transform(
-        F.array(*clits),
-        lambda c: F.struct(
-            F.round(
-                dot(F.col("emb"), c["cemb"])
-                / (F.col("vnorm") * c["cnorm"]),
-                round_digits,
-            ).alias("ccos"),
-            (-c["cid"]).alias("ncid"),
-        ),
     )
-    best = F.array_max(cand)
-    assign = e.select(
-        "vec_id",
-        "emb",
-        "vnorm",
-        (-best["ncid"]).cast(cid_t).alias("cid"),
-        best["ccos"].alias("ccos"),
-    ).localCheckpoint()
+    # one checkpoint pins the assignment for its three consumers: both
+    # sides of the pair join and the final labelling
+    assign = (
+        _assign_nearest(e, "emb", cent, round_digits)
+        .withColumnRenamed("score", "ccos")
+        .localCheckpoint()
+    )
     # the within-cluster pair join fans out ~|cluster|^2/2 dot products
     # from a byte-small assignment table: AQE would coalesce it to ~1
     # partition and serialize the verify on one core (the

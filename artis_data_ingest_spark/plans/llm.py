@@ -1393,8 +1393,10 @@ def _d2_sql(a: str, b: str) -> str:
 
 def _pq_code_sql(sub: str, cents: list[tuple[int, list]]) -> str:
     """Nearest-centroid code for one subspace: array_min over
-    (round(d², 6), cid) structs — min distance, then lowest cid, the
-    same tie-break as every quantizer stage and oracle."""
+    (round(d², 6), cid) structs — min distance, then lowest cid.  The
+    rule is owned by ``operators.similarity._assign_nearest``, which
+    makes every other nearest-centroid choice (and trains the
+    codebooks); this literal-SQL twin must stay in step with it."""
     cands = ", ".join(
         f"named_struct('d', round({_d2_sql(sub, _arr_sql(v))}, 6), "
         f"'cid', {cid}L)"

@@ -145,6 +145,7 @@ def test_lsh_and_ivf_recall_vs_brute_force(spark):
     # recall@3 of sign-bucket LSH and IVF against brute force
     from artis_data_ingest_spark.operators.similarity import (
         brute_force_topk,
+        ivf_assign,
         ivf_topk,
         lsh_topk,
     )
@@ -175,6 +176,27 @@ def test_lsh_and_ivf_recall_vs_brute_force(spark):
     r4 = recall(lsh_topk(emb, queries, k=3, n_bits=4))
     assert r1 >= 0.5
     assert r1 >= r4
+
+    # a vector equally close (by cosine) to two centroids goes to the
+    # lower cid, for its own cell and at the nprobe boundary; an empty
+    # codebook assigns and probes nothing
+    cent = spark.createDataFrame(
+        [(7, [1.0, 0.0]), (3, [0.0, 1.0]), (9, [-1.0, -1.0])],
+        "cid bigint, cemb array<double>",
+    )
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 1.0]), (1, [1.0, 0.1]), (2, [0.1, 1.0]), (3, [-1.0, -0.9])],
+        "vec_id bigint, embedding array<float>",
+    )
+    tied = vecs.filter(F.col("vec_id") == 0)
+    _, assign = ivf_assign(vecs, centroids=cent)
+    assert dict(assign.collect()) == {0: 3, 1: 7, 2: 3, 3: 9}
+    for nprobe, want in ((1, {2}), (2, {1, 2}), (3, {1, 2, 3})):
+        got = ivf_topk(vecs, tied, k=3, nprobe=nprobe, centroids=cent)
+        assert {r.vec_id for r in got.collect()} == want, nprobe
+    _, assign = ivf_assign(vecs, centroids=cent.limit(0))
+    assert assign.count() == 0
+    assert ivf_topk(vecs, tied, centroids=cent.limit(0)).count() == 0
 
 
 def test_connected_components_known_graph(spark):
@@ -1085,6 +1107,19 @@ def test_semantic_dedup_collapses_paraphrase_families(spark):
     for fam in ({0, 1, 2}, {10, 11}):
         cids = {out[v].cid for v in fam}
         assert len(cids) == 1
+
+    # a vector equally close to two given centroids joins the lower
+    # cid; an empty codebook assigns nothing
+    cent = spark.createDataFrame(
+        [(7, [1.0, 0.0, 0.0, 0.0]), (3, [0.0, 1.0, 0.0, 0.0])],
+        "cid bigint, cemb array<double>",
+    )
+    tied = spark.createDataFrame(
+        [(30, [1.0, 1.0, 0.0, 0.0])], "vec_id bigint, embedding array<float>"
+    )
+    got = semantic_dedup(tied, centroids=cent).collect()
+    assert [(r.vec_id, r.cid, r.kept) for r in got] == [(30, 3, True)]
+    assert semantic_dedup(tied, centroids=cent.limit(0)).count() == 0
 
 
 def test_ppjoin_complete_recall_vs_bruteforce(spark):

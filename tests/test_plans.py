@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -164,6 +165,23 @@ def test_ivf_no_corpus_self_join(spark):
     assert "CartesianProduct" not in p
     # the two centroid cross joins are broadcast nested loops over K=4
     assert p.count("BroadcastNestedLoopJoin") >= 1
+    # every nearest-centroid choice is made in place against the
+    # broadcast centroid row, never by a window over the vectors: the
+    # final top-k is the query's only window, and the trainers and the
+    # assignment frame have none
+    from artis_data_ingest_spark.operators.similarity import (
+        ivf_assign,
+        kmeans_centroids,
+        pq_codebooks,
+    )
+
+    def windows(plan: str) -> int:
+        return len(re.findall(r"^\(\d+\) Window$", plan, re.M))
+
+    assert windows(p) == 1
+    emb = load_table(spark, SF_DIR, "embeddings")
+    built = (kmeans_centroids(emb), pq_codebooks(emb), ivf_assign(emb)[1])
+    assert [windows(plan_str(df)) for df in built] == [0, 0, 0]
 
 
 def test_approx_distinct_error_bound(spark):

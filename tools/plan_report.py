@@ -106,6 +106,10 @@ _ONE_PART_CLASS = {
     "q_dq_report": "group-bounded",
     "q_funnel": "scalar",
     "q_heavy_hitters": "k-bounded",
+    # similarity._assign_nearest folds a trained k-row centroid table
+    # into the one broadcast row every vector is scored against
+    "q_ann_ivf_kmeans": "k-bounded",
+    "q_kmeans_centroids": "k-bounded",
     "q_hybrid_rrf": "k-bounded",
     "q_kwic_snippets": "k-bounded",
     "q_lm_perplexity_buckets": "group-bounded",
@@ -226,7 +230,8 @@ def main() -> None:
     print("**1-part** counts `Exchange SinglePartition`, annotated (r8)")
     print("with its boundedness class IN the cell: `scalar` merges")
     print("1-row-per-partition partials of a global aggregate;")
-    print("`k-bounded` sorts a fixed-k candidate pool; `group-bounded`")
+    print("`k-bounded` gathers a fixed-k pool (top-k candidates or k")
+    print("centroids); `group-bounded`")
     print("windows an already-aggregated per-group/distinct-value")
     print("table; `vocab-bounded` windows a trained vocabulary")
     print("artifact; `FULL` means the full data crosses one task — the")
@@ -291,13 +296,15 @@ def main() -> None:
   fixture (`tests/test_scale_ops.py::test_pit_join_hot_key_skew_split_parity`).
 - **Non-equi joins broadcast the small side.** `q_range_join` and
   `q_cosine_topk` are BroadcastNestedLoopJoin with 3-row / 3-row build
-  sides — linear in the fact, never quadratic.
+  sides — linear in the fact, never quadratic. The IVF queries score
+  every vector and query against one broadcast row holding all K
+  centroids (`similarity._assign_nearest`), so `q_ann_ivf`'s only hash
+  shuffle is its final top-k.
 - **Multi-shuffle queries are multi-stage by semantics**, not waste:
   `q_daily_rollup` (two shuffles from the exact count-distinct
   two-phase rewrite), `q_salted_agg`
-  (salted partial + combine — the point of the operator), `q_ann_ivf`
-  (assignment argmax, probe ranking, final top-k), `q_corpus_pipeline`
-  (dedup window + final stats).
+  (salted partial + combine — the point of the operator),
+  `q_corpus_pipeline` (dedup window + final stats).
 - **Pushdown column**: `—` means the query reads all rows by design
   (whole-table aggregations); every query with a row predicate shows
   non-empty `PushedFilters`.
