@@ -8,24 +8,23 @@ Stages (mirroring qmd chunk order):
   3. full-outer align old vs new with existence flags + size deltas
      (J1, assess_changes.qmd:97-114)
   4. pair filter: both present + same data format (P4/P5, qmd:117-123)
-  5. deep diff each pair: counts / schema / types (U1, qmd:127-185) —
-     driver-orchestrated sub-plans, results unioned into one DataFrame
+  5. deep diff each pair: counts / schema / types (U1, qmd:127-185)
 
-Stages 1-4 are one lazy plan; stage 5 is a driver loop creating a
-sub-plan per file pair (the reference's ``map2(compare_files)``), which
-is the right shape because each row *names two datasets* — see
-SURVEY.md §7.3 #3.
+Stages 1-4 are one lazy plan.  Stage 5 (the reference's
+``map2(compare_files)``) collects the comparable pairs, opens each side
+with the reader (each row *names two datasets* — see SURVEY.md §7.3
+#3), and diffs all pairs as one more lazy plan: schema facts are
+driver-side literals and every row count comes from one aggregate, so
+the Spark jobs the diff costs do not grow with the number of pairs.
 """
 
 from __future__ import annotations
-
-import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.files import file_inventory, read_csv_inferred
-from .diff import dataset_diff, size_delta, snapshot_align
+from .diff import _diff_pairs, size_delta, snapshot_align
 
 
 def file_level_log(
@@ -102,14 +101,6 @@ def assess_changes(
     log = file_level_log(spark, old_dir, new_dir, name_regex)
     pairs = comparable_pairs(log).select("files_std", "old", "new").collect()
 
-    diffs = []
-    for row in pairs:
-        d = dataset_diff(spark, reader(row.old), reader(row.new))
-        diffs.append(d.withColumn("files_std", F.lit(row.files_std)))
-    if not diffs:
-        empty = dataset_diff(
-            spark, spark.range(0), spark.range(0)
-        ).withColumn("files_std", F.lit(""))
-        return log, empty.limit(0)
-    pair_diffs = functools.reduce(DataFrame.unionByName, diffs)
-    return log, pair_diffs.select("files_std", *[c for c in pair_diffs.columns if c != "files_std"])
+    return log, _diff_pairs(
+        spark, [(r.files_std, reader(r.old), reader(r.new)) for r in pairs]
+    )

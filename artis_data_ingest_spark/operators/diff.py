@@ -9,22 +9,26 @@ diffs each aligned pair at row-count/schema/type level
   * ``snapshot_align``   — J1: full-outer join on the standardized key
                            (the reference spells it ``pivot_wider``)
   * ``pivot_align``      — J1 literal form: groupBy().pivot().agg(first)
-  * ``dataset_diff``     — U1: driver-orchestrated metadata diff of two
-                           DataFrames (counts, added/removed columns,
-                           per-column type changes) emitted as a 1-row
-                           DataFrame with array/struct columns
+  * ``dataset_diff``     — U1: metadata diff of two DataFrames (counts,
+                           added/removed columns, per-column type
+                           changes) as a lazy 1-row DataFrame with
+                           array/struct columns
 
 Scale notes: `snapshot_align` joins two *file-listing* tables — small
 even when the data they point at is 100 TB — so Catalyst broadcast
-handles them. ``dataset_diff`` triggers two ``count()`` jobs (full
-scans); everything else it reads is schema metadata, free at any scale.
+handles them. ``dataset_diff`` is the one-pair case of ``_diff_pairs``,
+which diffs any number of pairs as one plan: schema facts are driver-
+side literals, and every side's row count comes from one grouped
+aggregate over the union of all sides, computed when the result is
+materialized, so the Spark jobs do not grow with the number of pairs.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def union_tag(
@@ -96,69 +100,102 @@ def size_delta(aligned: DataFrame, size_old: str, size_new: str) -> DataFrame:
     )
 
 
-_DATASET_DIFF_SCHEMA = T.StructType(
-    [
-        T.StructField("nrow_old", T.LongType()),
-        T.StructField("nrow_new", T.LongType()),
-        T.StructField("row_diff", T.LongType()),
-        T.StructField("ncol_old", T.IntegerType()),
-        T.StructField("ncol_new", T.IntegerType()),
-        T.StructField("added_cols", T.ArrayType(T.StringType())),
-        T.StructField("removed_cols", T.ArrayType(T.StringType())),
-        T.StructField(
-            "type_changes",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("column", T.StringType()),
-                        T.StructField("old_type", T.StringType()),
-                        T.StructField("new_type", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
+# Per-pair schema facts, known on the driver before any data is read.
+_PAIR_FACTS = (
+    "array<struct<files_std:string, ncol_old:int, ncol_new:int,"
+    " added_cols:array<string>, removed_cols:array<string>,"
+    " type_changes:array<struct<column:string, old_type:string,"
+    " new_type:string>>>>"
 )
+
+
+def _diff_pairs(
+    spark: SparkSession, pairs: list[tuple[str, DataFrame, DataFrame]]
+) -> DataFrame:
+    """Diff every ``(key, old_df, new_df)`` pair as one lazy plan, one
+    row per pair in input order: ``files_std`` (the key), row counts
+    and their difference, column counts, added/removed column names and
+    the per-column type changes.
+
+    Column facts come from each side's ``dtypes`` on the driver and
+    enter the plan as literals. Row counts come from one aggregate:
+    every side becomes ``(pair, is_old)`` rows, plus one marker row per
+    pair so an empty side still counts 0, grouped by pair index (two
+    pairs may share a key).
+    """
+    facts, sides = [], []
+    for i, (key, old_df, new_df) in enumerate(pairs):
+        old_types = dict(old_df.dtypes)
+        new_types = dict(new_df.dtypes)
+        common = sorted(set(old_types) & set(new_types))
+        type_changes = [
+            F.struct(F.lit(c), F.lit(old_types[c]), F.lit(new_types[c]))
+            for c in common
+            if old_types[c] != new_types[c]
+        ]
+        facts.append(
+            F.struct(
+                F.lit(key),
+                F.lit(len(old_types)),
+                F.lit(len(new_types)),
+                F.lit(sorted(set(new_types) - set(old_types))),
+                F.lit(sorted(set(old_types) - set(new_types))),
+                F.array(*type_changes),
+            )
+        )
+        sides += [
+            old_df.select(F.lit(i).alias("pair"), F.lit(True).alias("is_old")),
+            new_df.select(F.lit(i).alias("pair"), F.lit(False).alias("is_old")),
+        ]
+    markers = spark.range(0, len(pairs), 1, 1).select(
+        F.col("id").cast("int").alias("pair"),
+        F.lit(None).cast("boolean").alias("is_old"),
+    )
+    counts = (
+        functools.reduce(DataFrame.union, sides, markers)
+        .groupBy("pair")
+        .agg(
+            F.count_if(F.col("is_old")).alias("nrow_old"),
+            F.count_if(~F.col("is_old")).alias("nrow_new"),
+        )
+    )
+    fact = F.array(*facts).cast(_PAIR_FACTS)[F.col("pair")]
+    # one partition: a local sort restores input order without the
+    # sampling job a global orderBy would add
+    return (
+        counts.coalesce(1)
+        .sortWithinPartitions("pair")
+        .select(
+            fact["files_std"].alias("files_std"),
+            "nrow_old",
+            "nrow_new",
+            (F.col("nrow_new") - F.col("nrow_old")).alias("row_diff"),
+            *[
+                fact[c].alias(c)
+                for c in ("ncol_old", "ncol_new", "added_cols",
+                          "removed_cols", "type_changes")
+            ],
+        )
+    )
 
 
 def dataset_diff(
     spark: SparkSession, old_df: DataFrame, new_df: DataFrame
 ) -> DataFrame:
     """U1 — ``compare_files`` (assess_changes.qmd:127-176) as a
-    driver-orchestrated metadata op, NOT a UDF (SURVEY.md §7.3 #3):
-    each comparison names two *datasets*, so schema introspection is
-    driver-side metadata and only the row counts touch data.
+    metadata op, NOT a UDF (SURVEY.md §7.3 #3): each comparison names
+    two *datasets*, so schema introspection is driver-side metadata and
+    only the row counts touch data.
 
-    Returns a 1-row DataFrame mirroring the reference's named list:
-    row counts/diff (qmd:145-147), added/removed columns via set
+    Returns a lazy 1-row DataFrame mirroring the reference's named
+    list: row counts/diff (qmd:145-147), added/removed columns via set
     difference of names (qmd:151-158), and the nested per-column
-    type-change table (qmd:160-174) as ``array<struct>``.
+    type-change table (qmd:160-174) as ``array<struct>``. Building it
+    runs no Spark job; both row counts are computed, in one aggregate,
+    when the result is materialized. Each side is scanned with no
+    columns, as ``count()`` would.
     """
-    old_types = dict(old_df.dtypes)
-    new_types = dict(new_df.dtypes)
-    added = sorted(set(new_types) - set(old_types))
-    removed = sorted(set(old_types) - set(new_types))
-    common = sorted(set(old_types) & set(new_types))
-    type_changes = [
-        {"column": c, "old_type": old_types[c], "new_type": new_types[c]}
-        for c in common
-        if old_types[c] != new_types[c]
-    ]
-    # The two counts are the only data-touching actions; at 100 TB both
-    # are metadata-only for Parquet (row-group counts), which Spark
-    # serves without reading data pages.
-    nrow_old, nrow_new = old_df.count(), new_df.count()
-    row = {
-        "nrow_old": nrow_old,
-        "nrow_new": nrow_new,
-        "row_diff": nrow_new - nrow_old,
-        "ncol_old": len(old_types),
-        "ncol_new": len(new_types),
-        "added_cols": added,
-        "removed_cols": removed,
-        "type_changes": type_changes,
-    }
-    return spark.createDataFrame([row], schema=_DATASET_DIFF_SCHEMA)
+    return _diff_pairs(spark, [("", old_df, new_df)]).drop("files_std")
 
 
 def column_set_diff(

@@ -9,8 +9,9 @@ a .xlsx file is a zip holding ``xl/worksheets/sheet1.xml`` (cell grid),
 the reference's tabular snapshots.
 
 Scale shape: xlsx files are small config-like inputs in the reference's
-world, so a driver-side parse feeding ``createDataFrame``
-(``read_excel``) is the right trade-off for one workbook; for
+world, so ``read_excel`` parses one workbook on the driver and hands
+Spark the typed columns as one Arrow table, which becomes a
+``LocalTableScan`` (no Python worker touches it downstream); for
 directories of many workbooks, ``read_excel_fleet`` lists them with the
 binaryFile source and moves ``parse_xlsx_bytes`` into a ``mapInPandas``
 decode so each workbook parses inside an executor task (same pattern as
@@ -26,8 +27,10 @@ import zipfile
 from collections.abc import Iterator
 from xml.etree import ElementTree as ET
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -238,10 +241,17 @@ def read_excel(
         raw = f.read()
     header, rows = parse_xlsx_bytes(raw, skip_rows=skip_rows, sheet=sheet)
     schema, types = _typed_schema(header, rows)
-    data = [
-        tuple(_coerce(v, t) for v, t in zip(r, types)) for r in rows
-    ]
-    return spark.createDataFrame(data, schema=schema)
+    # typed Arrow arrays straight from the coerced Python scalars: exact
+    # for every long (no float64 detour through a pandas column) and
+    # valid for a header-only sheet
+    table = pa.Table.from_arrays(
+        [
+            pa.array([_coerce(r[j], t) for r in rows], type=to_arrow_type(t))
+            for j, t in enumerate(types)
+        ],
+        names=header,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def read_excel_fleet(

@@ -110,3 +110,120 @@ def test_assess_changes_e2e_fixture_tree(spark):
     assert set(by_key) == {"trade_flows", "species_map"}
     assert by_key["species_map"].removed_cols == ["species_major_group"]
     assert by_key["trade_flows"].added_cols == ["flag"]
+
+
+_DIFF_DTYPES = [
+    ("files_std", "string"),
+    ("nrow_old", "bigint"),
+    ("nrow_new", "bigint"),
+    ("row_diff", "bigint"),
+    ("ncol_old", "int"),
+    ("ncol_new", "int"),
+    ("added_cols", "array<string>"),
+    ("removed_cols", "array<string>"),
+    ("type_changes", "array<struct<column:string,old_type:string,new_type:string>>"),
+]
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, #jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _csv_pairs(tmp_path, n):
+    old = tmp_path / f"old{n}"
+    new = tmp_path / f"new{n}"
+    old.mkdir()
+    new.mkdir()
+    for i in range(n):
+        (old / f"Table_{i}_V202301a.csv").write_text("a,b\n" + "1,2\n" * (i + 1))
+        (new / f"Table_{i}_V202401a.csv").write_text("a,c\n" + "1,x\n" * (i + 2))
+    return old, new
+
+
+def test_assess_changes_jobs_independent_of_pair_count(spark, tmp_path):
+    # the diff is one plan: its Spark jobs must not grow with the pairs
+    from artis_data_ingest_spark.sources.files import read_csv_inferred
+
+    jobs = {}
+    for n in (1, 3):
+        old, new = _csv_pairs(tmp_path, n)
+        # pre-built readers keep CSV schema inference out of the count
+        built = {
+            p.name: read_csv_inferred(spark, str(p))
+            for d in (old, new) for p in d.iterdir()
+        }
+
+        def run():
+            _, diffs = assess_changes(
+                spark, str(old), str(new),
+                reader=lambda p: built[p.rsplit("/", 1)[-1]],
+            )
+            return diffs.collect()
+
+        rows, jobs[n] = _jobs_in(spark, f"changelog-jobs-{n}", run)
+        assert sorted((r.nrow_old, r.nrow_new) for r in rows) == [
+            (i + 1, i + 2) for i in range(n)
+        ]
+    assert jobs[1] == jobs[3]
+
+
+def test_assess_changes_duplicate_keys_keep_separate_counts(spark, tmp_path):
+    # two old files standardize to one key: one diff row per aligned
+    # pair, each with its own old-side count
+    old = tmp_path / "old"
+    new = tmp_path / "new"
+    old.mkdir()
+    new.mkdir()
+    (old / "filtered_Stock_V202301a.csv").write_text("a\n1\n")
+    (old / "Stock_V202302a.csv").write_text("a\n1\n2\n")
+    (new / "Stock_V202401a.csv").write_text("a\n1\n2\n3\n")
+    _, diffs = assess_changes(spark, str(old), str(new))
+    rows = diffs.collect()
+    assert [r.files_std for r in rows] == ["stock", "stock"]
+    assert sorted((r.nrow_old, r.nrow_new, r.row_diff) for r in rows) == [
+        (1, 3, 2), (2, 3, 1),
+    ]
+
+
+def test_assess_changes_zero_pairs_is_lazy_and_typed(spark, tmp_path):
+    old = tmp_path / "old"
+    new = tmp_path / "new"
+    old.mkdir()
+    new.mkdir()
+    (old / "Gone_V202301a.csv").write_text("a\n1\n")
+    (new / "Fresh_V202401a.csv").write_text("a\n1\n")
+
+    def pairs_only():
+        log = file_level_log(spark, str(old), str(new))
+        return comparable_pairs(log).select("files_std", "old", "new").collect()
+
+    _, listing_jobs = _jobs_in(spark, "zero-pairs-listing", pairs_only)
+    (_, diffs), jobs = _jobs_in(
+        spark, "zero-pairs-assess", lambda: assess_changes(spark, str(old), str(new))
+    )
+    assert jobs == listing_jobs  # building the diff itself runs no job
+    assert diffs.dtypes == _DIFF_DTYPES
+    assert diffs.collect() == []
+
+
+def test_assess_changes_header_only_side_counts_zero(spark, tmp_path):
+    old = tmp_path / "old"
+    new = tmp_path / "new"
+    old.mkdir()
+    new.mkdir()
+    (old / "Catch_V202301a.csv").write_text("a,b\n")
+    (new / "Catch_V202401a.csv").write_text("a,b\n1,2\n3,4\n")
+    _, diffs = assess_changes(spark, str(old), str(new))
+    rows = diffs.collect()
+    assert len(rows) == 1
+    d = rows[0]
+    assert d.files_std == "catch"
+    assert d.nrow_old == 0 and d.nrow_new == 2 and d.row_diff == 2
+    assert diffs.dtypes == _DIFF_DTYPES

@@ -157,6 +157,36 @@ def test_excel_bool_int_mix_promotes_numeric(spark, tmp_path):
     assert vals == [(1.0, "true"), (1.0, "x"), (3.5, "z")]
 
 
+def test_excel_arrow_exact_local_scan(spark, tmp_path):
+    # values must survive the Arrow hand-off exactly: a long beyond
+    # float64 precision beside an empty cell, gaps in double and boolean
+    # columns, a {bool, int} column promoted to long; and the frame must
+    # be a local relation, not a Python-pickled RDD scan
+    from artis_data_ingest_spark.sources.excel import _coerce, _typed_schema
+
+    path = tmp_path / "exact.xlsx"
+    write_minimal_xlsx(
+        str(path),
+        [
+            ["big", "ratio", "ok", "mixed"],
+            [2**53 + 1, 0.1, True, True],
+            [None, None, None, 7],
+            [-(2**62), 2.5, False, False],
+        ],
+    )
+    header, rows = parse_xlsx_bytes(path.read_bytes())
+    _, types = _typed_schema(header, rows)
+    df = read_excel(spark, str(path), skip_rows=0)
+    assert dict(df.dtypes) == {
+        "big": "bigint", "ratio": "double", "ok": "boolean", "mixed": "bigint",
+    }
+    want = [tuple(_coerce(v, t) for v, t in zip(r, types)) for r in rows]
+    assert [tuple(r) for r in df.collect()] == want
+    assert want[0][0] == 2**53 + 1 and want[0][3] == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
 def test_excel_fleet_reader(spark, tmp_path):
     fleet = tmp_path / "fleet"
     fleet.mkdir()
