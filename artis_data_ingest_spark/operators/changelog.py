@@ -10,21 +10,37 @@ Stages (mirroring qmd chunk order):
   4. pair filter: both present + same data format (P4/P5, qmd:117-123)
   5. deep diff each pair: counts / schema / types (U1, qmd:127-185)
 
-Stages 1-4 are one lazy plan.  Stage 5 (the reference's
-``map2(compare_files)``) collects the comparable pairs, opens each side
-with the reader (each row *names two datasets* — see SURVEY.md §7.3
-#3), and diffs all pairs as one more lazy plan: schema facts are
-driver-side literals and every row count comes from one aggregate, so
-the Spark jobs the diff costs do not grow with the number of pairs.
+Stages 1-3 list both roots in one Spark job and align the listings on
+the driver into a local table (one row per file); stage 4 filters that
+table without a job.  Stage 5 (the reference's ``map2(compare_files)``)
+opens each side of every comparable pair with the reader (each row
+*names two datasets* — see SURVEY.md §7.3 #3), and diffs all pairs as
+one lazy plan: schema facts are driver-side literals and every row
+count comes from one aggregate, so the Spark jobs the diff costs do not
+grow with the number of pairs.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.files import file_inventory, read_csv_inferred
-from .diff import _diff_pairs, size_delta, snapshot_align
+from .diff import _diff_pairs
+
+
+#: the file-level log (FIXTURES.md B2 schema)
+_LOG_SCHEMA = pa.schema([
+    ("files_std", pa.string()),
+    ("new", pa.string()),
+    ("old", pa.string()),
+    pa.field("exists_in_old", pa.bool_(), nullable=False),
+    pa.field("exists_in_new", pa.bool_(), nullable=False),
+    ("size_old_mb", pa.float64()),
+    ("size_new_mb", pa.float64()),
+    ("size_change_mb", pa.float64()),
+])
 
 
 def file_level_log(
@@ -34,22 +50,42 @@ def file_level_log(
     name_regex: str | None = None,
 ) -> DataFrame:
     """Stages 1-3: the aligned file-level changelog
-    (FIXTURES.md B2 schema)."""
-    old = file_inventory(spark, old_dir, name_regex)
-    new = file_inventory(spark, new_dir, name_regex)
-    aligned = snapshot_align(
-        old, new, key="files_std", value_cols=["full_path", "size_mb"]
+    (FIXTURES.md B2 schema), listed when called and returned as a local
+    table ordered by ``files_std``.
+
+    Both inventories come back in one Spark job.  A listing holds one
+    row per file, so the full-outer alignment on the standardized key
+    (J1: every old x new file sharing a key, and NULLs for a side that
+    lacks it) and the size deltas run on the driver; as a Spark join
+    they would cost three more jobs each time the log is read.
+    """
+    listing = (
+        file_inventory(spark, old_dir, name_regex)
+        .select("files_std", "full_path", "size_mb", F.lit("old").alias("side"))
+        .union(
+            file_inventory(spark, new_dir, name_regex)
+            .select("files_std", "full_path", "size_mb", F.lit("new").alias("side"))
+        )
+        .collect()
     )
-    return size_delta(aligned, "size_mb_old", "size_mb_new").select(
-        "files_std",
-        F.col("full_path_new").alias("new"),
-        F.col("full_path_old").alias("old"),
-        "exists_in_old",
-        "exists_in_new",
-        F.col("size_mb_old").alias("size_old_mb"),
-        F.col("size_mb_new").alias("size_new_mb"),
-        "size_change_mb",
-    )
+    by_key: dict[str, dict[str, list]] = {}
+    for r in listing:
+        by_key.setdefault(r.files_std, {"old": [], "new": []})[r.side].append(r)
+    rows = []
+    for key in sorted(by_key):
+        for o in by_key[key]["old"] or [None]:
+            for n in by_key[key]["new"] or [None]:
+                rows.append({
+                    "files_std": key,
+                    "new": n.full_path if n else None,
+                    "old": o.full_path if o else None,
+                    "exists_in_old": o is not None,
+                    "exists_in_new": n is not None,
+                    "size_old_mb": o.size_mb if o else None,
+                    "size_new_mb": n.size_mb if n else None,
+                    "size_change_mb": n.size_mb - o.size_mb if o and n else None,
+                })
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=_LOG_SCHEMA))
 
 
 def comparable_pairs(log: DataFrame) -> DataFrame:
@@ -93,9 +129,10 @@ def assess_changes(
 ) -> tuple[DataFrame, DataFrame]:
     """Full pipeline: returns (file_level_log, pair_diffs).
 
-    ``pair_diffs`` has one row per comparable pair with the full
-    dataset_diff struct columns flattened beside the key (the
-    reference's ``unnest_wider(comparison)``, qmd:182-185).
+    ``pair_diffs`` is lazy, in the log's row order: one row per
+    comparable pair with the full dataset_diff struct columns flattened
+    beside the key (the reference's ``unnest_wider(comparison)``,
+    qmd:182-185).
     """
     reader = reader or (lambda p: default_pair_reader(spark, p))
     log = file_level_log(spark, old_dir, new_dir, name_regex)

@@ -26,6 +26,7 @@ materialized, so the Spark jobs do not grow with the number of pairs.
 from __future__ import annotations
 
 import functools
+import json
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,7 +119,7 @@ def _diff_pairs(
     the per-column type changes.
 
     Column facts come from each side's ``dtypes`` on the driver and
-    enter the plan as literals. Row counts come from one aggregate:
+    enter the plan as one JSON literal. Row counts come from one aggregate:
     every side becomes ``(pair, is_old)`` rows, plus one marker row per
     pair so an empty side still counts 0, grouped by pair index (two
     pairs may share a key).
@@ -127,22 +128,18 @@ def _diff_pairs(
     for i, (key, old_df, new_df) in enumerate(pairs):
         old_types = dict(old_df.dtypes)
         new_types = dict(new_df.dtypes)
-        common = sorted(set(old_types) & set(new_types))
-        type_changes = [
-            F.struct(F.lit(c), F.lit(old_types[c]), F.lit(new_types[c]))
-            for c in common
-            if old_types[c] != new_types[c]
-        ]
-        facts.append(
-            F.struct(
-                F.lit(key),
-                F.lit(len(old_types)),
-                F.lit(len(new_types)),
-                F.lit(sorted(set(new_types) - set(old_types))),
-                F.lit(sorted(set(old_types) - set(new_types))),
-                F.array(*type_changes),
-            )
-        )
+        facts.append({
+            "files_std": key,
+            "ncol_old": len(old_types),
+            "ncol_new": len(new_types),
+            "added_cols": sorted(set(new_types) - set(old_types)),
+            "removed_cols": sorted(set(old_types) - set(new_types)),
+            "type_changes": [
+                {"column": c, "old_type": old_types[c], "new_type": new_types[c]}
+                for c in sorted(set(old_types) & set(new_types))
+                if old_types[c] != new_types[c]
+            ],
+        })
         sides += [
             old_df.select(F.lit(i).alias("pair"), F.lit(True).alias("is_old")),
             new_df.select(F.lit(i).alias("pair"), F.lit(False).alias("is_old")),
@@ -159,7 +156,8 @@ def _diff_pairs(
             F.count_if(~F.col("is_old")).alias("nrow_new"),
         )
     )
-    fact = F.array(*facts).cast(_PAIR_FACTS)[F.col("pair")]
+    # constant folding turns the JSON into an array literal once
+    fact = F.from_json(F.lit(json.dumps(facts)), _PAIR_FACTS)[F.col("pair")]
     # one partition: a local sort restores input order without the
     # sampling job a global orderBy would add
     return (
