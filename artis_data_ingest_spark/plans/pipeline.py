@@ -6452,11 +6452,12 @@ SELECT CAST(version AS BIGINT) AS version,
 FROM v ORDER BY version
 """,
     doc="MERGE at O(delta) via deletion vectors (r13, "
-    "sinks/versioned.py:merge_dv — Delta's DV-backed MERGE): matched "
+    "sinks/versioned.py:merge_dv, the same function as merge_commit "
+    "— Delta's DV-backed MERGE): matched "
     "live target rows mask behind a (file, row position) sidecar and "
     "the surviving source rows (source-wins updates + inserts; "
     "delete-flagged keys mask only) append as ONE small segment — "
-    "never merge_commit's full-state rewrite.  At 100 TB a merge "
+    "no data file is rewritten.  At 100 TB a merge "
     "touching a few thousand keys costs one scan semi-joined against "
     "the BROADCAST key set (no table shuffle), a KB sidecar, and a "
     "small segment.  The hashed result pins the update/insert/delete "
@@ -7021,21 +7022,22 @@ SELECT CAST((SELECT COUNT(*) FROM t) AS BIGINT) AS v0_rows,
        CAST((SELECT COUNT(*) FROM d WHERE del) AS BIGINT) AS feed_deleted
 """,
     doc="MERGE INTO a versioned table (r10, sinks/versioned.py "
-    "merge_commit wiring operators/merge.py into the snapshot layer): "
-    "version 1 = merge_upsert(version 0, delta) — matched keys "
-    "updated (cents+1), new keys inserted, flagged keys deleted — "
-    "committed as mode='merge' with the source delta preserved in a "
-    "side segment, so change_feed surfaces EXACTLY the delta rows "
-    "(feed_rows/feed_deleted), never the rewritten table.  Time "
+    "merge_commit): version 1 = merge_upsert(version 0, delta) — "
+    "matched keys updated (cents+1), new keys inserted, flagged keys "
+    "deleted — committed as mode='merge': matched rows mask behind a "
+    "deletion vector, surviving source rows append as one segment, "
+    "and the source delta is preserved in a side segment, so "
+    "change_feed surfaces EXACTLY the delta rows "
+    "(feed_rows/feed_deleted), never the table state.  Time "
     "travel across the merge is pinned by v0's aggregates staying "
     "recomputable after the commit; the oracle derives both states "
     "and the feed straight from orders, so a merge that loses an "
     "unmatched target row, skips a delete, or double-counts an "
     "update hash-mismatches.  Optimistic-conflict behavior is pinned "
     "in tests (a commit landing between merge-read and publish "
-    "loses atomically).  At scale the merge is one full-outer join "
-    "on the key (the same shuffle any MERGE pays) and the feed read "
-    "is O(delta files).",
+    "loses atomically).  At scale the merge is one scan semi-joined "
+    "against the broadcast source key set (no table shuffle) and the "
+    "feed read is O(delta files).",
 )
 def q_version_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil

@@ -413,8 +413,8 @@ def q_index_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(doc_id % 4 != 0) commits as v0 of a versioned table and gets "
     "indexed; the arriving slice lands via MERGE (merge_commit, all "
     "inserts), the CDC consumer reads change_feed(since=0) — which "
-    "surfaces exactly the merge's delta_files, never the rewritten "
-    "table — builds the delta's partial index from THOSE rows alone, "
+    "surfaces exactly the merge's delta_files, never the table "
+    "state — builds the delta's partial index from THOSE rows alone, "
     "and merges it algebraically into the base index (additive "
     "df/total_tf, disjoint postings union).  No base-text rescan, no "
     "full-table read after v0: the indexed bytes are O(base) + "

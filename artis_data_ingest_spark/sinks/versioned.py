@@ -36,10 +36,13 @@ Semantics:
     duplication; ``mode="compact"`` (via :func:`compact`) rewrites the
     parent's file set into fewer segments with IDENTICAL content — a
     physical reorganisation, not a logical change, so the change feed
-    skips it; ``mode="merge"`` (via :func:`merge_commit`) publishes an
-    upserted full state plus a ``delta_files`` side segment holding
-    exactly the source delta, so the change feed surfaces the delta
-    and never the rewritten table;
+    skips it; ``mode="merge"`` (via :func:`merge_commit`) masks the
+    matched rows with a deletion vector, appends the surviving source
+    rows as one segment and records the source delta as given in
+    ``delta_files``, so the change feed surfaces the delta and never
+    the table (manifests written before merges used deletion vectors
+    hold a rewritten full state and no new vector; readers still
+    accept them);
   * optimistic concurrency: the caller states which version it built
     on (``expect_version``); if another commit got there first the
     manifest for N+1 already exists and the commit RAISES instead of
@@ -58,9 +61,9 @@ Semantics:
     segment it writes.
 
 Deletion vectors.  Row-level operations (:func:`delete_where`,
-:func:`update_where`, :func:`replace_where`, :func:`merge_dv`) never
-rewrite a data file.  Each writes a sidecar parquet segment with the
-schema ``(_dv_file string, _dv_pos bigint)`` — the absolute path of a
+:func:`update_where`, :func:`replace_where`, :func:`merge_commit`)
+never rewrite a data file.  Each writes a sidecar parquet segment with
+the schema ``(_dv_file string, _dv_pos bigint)`` — the absolute path of a
 data file and the position of a masked row in it — and publishes the
 parent's ``dv_files`` plus that segment.  Reads tag every scanned row
 with its file path and row index from Spark's ``_metadata`` column and
@@ -117,8 +120,9 @@ class VersionConflict(RuntimeError):
 
 class CDCDecompositionError(RuntimeError):
     """The streaming change feed's cursor range crosses a FULL-STATE
-    REWRITE version (a DV-less :func:`merge_commit`, a restore, or an
-    overwrite of a non-empty table) whose exact delete+insert
+    REWRITE version (a restore, an overwrite of a non-empty table, or
+    a merge version without a new deletion vector, which only tables
+    written before merges used vectors hold) whose exact delete+insert
     decomposition needs a distributed bag-difference between two whole
     versions — work a per-file stream partition cannot do.  Batch
     :func:`cdc_feed` decomposes these versions exactly; re-seed the
@@ -343,7 +347,7 @@ def _cluster_exprs(cluster_by: Sequence[str]):
     OPTIMIZE ZORDER at write time — multi-dimensional locality, so the
     per-file min/max recorded for EACH plain column is narrow and 2-D
     box filters prune.  Strings keep the manifest's table_props
-    JSON-serializable, so compact()/merge_commit() rebuild the same
+    JSON-serializable, so every later write rebuilds the same
     layout."""
     from pyspark.sql import functions as F
 
@@ -1002,7 +1006,7 @@ def add_constraint(
     """ALTER TABLE ADD CONSTRAINT (r13): record a named CHECK
     constraint (a SQL boolean expression over the table's columns) as
     a table property; every later write — :func:`commit`,
-    :func:`merge_dv`, :func:`merge_commit`'s source,
+    :func:`merge_commit`'s surviving source rows,
     :func:`update_where`'s post-image — is gated on it, raising
     :class:`ConstraintViolation` (or quarantining, see
     ``commit(on_violation="quarantine")``) before anything becomes
@@ -1179,8 +1183,8 @@ def commit(
     PROPERTIES (``table_props``) and every later write re-applies
     them automatically: plain appends cluster their new segment and
     build its blooms from the recorded props (r13), and
-    :func:`compact` / :func:`merge_commit` rebuild them for their
-    rewritten segments — pruning survives the table lifecycle instead
+    :func:`compact` / :func:`merge_commit` rebuild them for the
+    segments they write — pruning survives the table lifecycle instead
     of silently degrading at the first layout-less write (Delta keeps
     its layout/bloom config in table metadata for the same reason).
     Pass an explicit EMPTY sequence to clear a recorded property.
@@ -1245,14 +1249,9 @@ def commit(
                 cluster_by,
                 props,
             )
-        elif on_violation == "error":
+        else:
             _enforce_constraints(
                 df.sparkSession, seg_files, constraints, props=props
-            )
-        else:
-            raise ValueError(
-                f"on_violation must be 'error' or 'quarantine', "
-                f"got {on_violation!r}"
             )
     seg_schema = _footer_schema(seg_files)
     if mode == "append" and cur is not None:
@@ -1579,7 +1578,7 @@ def compact(
         from pyspark.sql import functions as F
 
         kept_dv = (
-            spark.read.parquet(*dv_files)
+            spark.read.schema(_DV_SCHEMA).parquet(*dv_files)
             .filter(F.col("_dv_file").isin(sorted(kept_paths)))
         )
         dv_seg = _write_segment(kept_dv.coalesce(1), table_dir, cur + 1)
@@ -1652,104 +1651,30 @@ def merge_commit(
     note: str = "merge",
     timestamp: float | None = None,
 ) -> int:
-    """MERGE ``source`` INTO the versioned table (update matched keys,
-    insert new ones, optionally delete flagged ones — semantics of
-    operators/merge.py:merge_upsert) and commit the result as version
-    N+1, closing the loop between the merge operator and the snapshot
-    layer: upserts become time-travel-able history.
+    """MERGE ``source`` INTO the versioned table (update matched keys
+    with source-wins semantics, insert new ones, delete
+    ``delete_col``-flagged ones — the logical result of
+    operators/merge.py:merge_upsert, which the tests pin) and commit
+    it as version N+1 at O(delta) cost, the deletion-vector form Delta
+    uses on DV-enabled tables: the live target rows whose keys appear
+    in ``source`` mask behind a (file, row position) sidecar, and the
+    surviving source rows append as one small segment.  No data file
+    is rewritten: at 100 TB a merge touching a few thousand keys costs
+    one scan semi-joined against the broadcast key set, a KB-scale
+    sidecar, and a small segment.
 
-    The manifest records TWO file sets: ``files`` (the merged full
-    state, what readers see) and ``delta_files`` (the source rows as
-    given, delete flags included) — so :func:`change_feed` surfaces
-    exactly the delta instead of the rewritten table, keeping the
-    O(changed data) consumer contract across merges.  Conflict safety:
-    the merge is computed against the version observed at entry; if
+    Manifest: ``mode="merge"`` with the parent's files plus the new
+    segment, the parent's ``dv_files`` plus the new sidecar, and
+    ``delta_files`` — the source AS GIVEN, delete flags included — so
+    :func:`change_feed` surfaces exactly the delta and
+    :func:`cdc_feed` decomposes the version into its masked old rows
+    (deletes) and its new segment (inserts).  Conflict safety: the
+    merge is computed against the version observed at entry; if
     another commit lands first, publication raises VersionConflict
-    and nothing becomes visible.
-
-    Like :func:`compact`, the rewritten full state keeps the table's
-    recorded layout properties: ``cluster_by`` re-range-clusters the
-    merged segment and ``bloom_cols`` rebuilds its per-file Bloom
-    bitmaps (delta files carry neither — the feed reads them whole)."""
-    from ..operators.merge import merge_upsert
-
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no versions in {table_dir}; commit() the base state first"
-        )
-    m = _read_manifest(table_dir, cur)
-    props = m.get("table_props", {})
-    cluster_by = props.get("cluster_by")
-    bloom_cols = props.get("bloom_cols")
-    target = read_version(spark, table_dir, cur)
-    merged = merge_upsert(target, source, keys, delete_col=delete_col)
-    if cluster_by:  # an unclustered rewrite keeps the merge's partitioning
-        merged = _layout(merged, cluster_by, max(1, len(m["files"])))
-    new_version = cur + 1
-    seg_files = _write_segment(
-        _to_physical(merged, props), table_dir, new_version
-    )
-    constraints = props.get("constraints") or {}
-    if constraints:
-        # merge_commit rewrites the full state anyway, so gating the
-        # rewritten files adds one scan of what was just written
-        _enforce_constraints(
-            spark, seg_files, constraints, props=dict(props)
-        )
-    delta_files = _write_segment(
-        _to_physical(source, props), table_dir, new_version
-    )
-    stats, blooms = _segment_meta(spark, seg_files, props, bloom_cols)
-    manifest = {
-        "version": new_version,
-        "parent": cur,
-        "mode": "merge",
-        "note": note,
-        "ts": timestamp if timestamp is not None else time.time(),
-        "files": seg_files,
-        "delta_files": delta_files,
-        "stats": stats,
-        "schema": _footer_schema(seg_files + delta_files),
-    }
-    if bloom_cols:
-        manifest["blooms"] = blooms
-    if props:
-        manifest["table_props"] = dict(props)
-    return _publish(table_dir, manifest)
-
-
-def merge_dv(
-    spark: SparkSession,
-    table_dir: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    delete_col: str | None = None,
-    note: str = "merge-dv",
-    timestamp: float | None = None,
-    n_files: int | None = None,
-) -> int:
-    """MERGE at O(delta) cost — the deletion-vector form Delta uses on
-    DV-enabled tables (r13): instead of rewriting the merged full
-    state like :func:`merge_commit`, the live target rows whose keys
-    appear in ``source`` mask behind a (file, row position) sidecar
-    and the surviving source rows (matched updates with source-wins
-    semantics, brand-new inserts; ``delete_col``-flagged rows mask
-    only) append as one small segment.  At 100 TB a merge touching a
-    few thousand keys costs one key-semi-joined scan, a KB-scale
-    sidecar, and a small segment — never the full-table rewrite
-    :func:`merge_commit` pays (keep that form for mostly-replaced
-    tables or when the rewrite doubles as re-clustering; the logical
-    result is identical to operators/merge.py:merge_upsert either
-    way, which the tests pin).
-
-    Manifest: ``mode="merge"`` with ``dv_files`` — the feed contract
-    is unchanged (``delta_files`` records the source AS GIVEN, flags
-    included, so :func:`change_feed` surfaces exactly the delta), and
-    every downstream consumer (compact materialization, restore,
-    clone, retention guards) already handles the DV + merge pieces.
-    Layout table properties apply to the appended segment.  Standard
-    MERGE contract: non-null keys, at most one source row per key."""
+    and nothing becomes visible.  The table's ``cluster_by`` and
+    ``bloom_cols`` apply to the appended segment, and CHECK
+    constraints gate it before publication.  Standard MERGE contract:
+    non-null keys, at most one source row per key."""
     from pyspark.sql import functions as F
 
     cur = latest_version(table_dir)
@@ -1760,7 +1685,7 @@ def merge_dv(
     m = _read_manifest(table_dir, cur)
     props = dict(m.get("table_props", {}))
     keys = list(keys)
-    src_keys = source.select(*keys).distinct()
+    src_keys = source.select(*keys)
     # keys are LOGICAL names; files hold physical ones
     tagged = _dv_read(
         spark, m["files"], m.get("dv_files", []), props, keep_tags=True
@@ -1784,7 +1709,7 @@ def merge_dv(
         F.col(c).cast(ltypes[c]).alias(c)
         for c in tagged.columns if c not in _DV_COLS
     ])
-    post = _layout(post, props.get("cluster_by"), n_files, 1)
+    post = _layout(post, props.get("cluster_by"), None, 1)
     seg = _write_segment(_to_physical(post, props), table_dir, new_version)
     constraints = props.get("constraints") or {}
     if constraints:
@@ -1795,9 +1720,7 @@ def merge_dv(
             props=props,
         )
     delta_files = _write_segment(
-        _to_physical(source, props).coalesce(n_files or 1),
-        table_dir,
-        new_version,
+        _to_physical(source, props).coalesce(1), table_dir, new_version
     )
     stats, blooms = _segment_meta(
         spark, seg, props, props.get("bloom_cols")
@@ -1809,13 +1732,19 @@ def merge_dv(
     ))
 
 
+#: The deletion-vector merge's original name, bound to the one MERGE.
+merge_dv = merge_commit
+
+
 #: SQL regex stripping the scheme Spark's ``_metadata.file_path``
 #: carries (``file:/abs`` or ``file:///abs``) so DV rows store plain
 #: absolute paths that match manifest entries.
 _SCHEME_RE = "^file:(//)?"
 
 #: The deletion-vector sidecar schema: data-file path, row position.
+#: Reads pass it explicitly, so no schema-inference job runs.
 _DV_COLS = ("_dv_file", "_dv_pos")
+_DV_SCHEMA = "_dv_file string, _dv_pos bigint"
 
 
 def _dv_read(
@@ -1849,7 +1778,7 @@ def _dv_read(
         F.col("_metadata.row_index").alias("_dv_pos"),
     )
     if join:
-        dv = spark.read.parquet(*dv_files).select(*_DV_COLS)
+        dv = spark.read.schema(_DV_SCHEMA).parquet(*dv_files)
         df = df.join(F.broadcast(dv), list(_DV_COLS), how)
     if not keep_tags:
         df = df.drop(*_DV_COLS)
@@ -2192,8 +2121,8 @@ def deleted_rows(
         ) from None
     props = m.get("table_props", {})
     if not new_dv:
-        # a full-rewrite merge (merge_commit) masks nothing — its
-        # retractions are not DV-recoverable; empty result
+        # a merge version from before merges used deletion vectors
+        # rewrote the full state and masks nothing; empty result
         return _to_logical(
             _merged_read(spark, *m["files"]).filter("1 = 0"), props
         )
@@ -2224,7 +2153,7 @@ def deletion_feed(
         if summaries[v]["mode"] == "merge" and not _new_dv_files(
             table_dir, v
         ):
-            continue  # full-rewrite merge: no DV-recoverable deletes
+            continue  # pre-DV full-rewrite merge: nothing masked
         part = deleted_rows(spark, table_dir, v).withColumn(
             "_version", F.lit(v).cast("bigint")
         )
@@ -2411,9 +2340,11 @@ def cdc_feed(
     :func:`deleted_rows`, :func:`updated_rows`) so DV-backed versions
     cost O(their changed rows): append deltas read as inserts, delete
     versions join their new vectors back for the removed rows, update
-    versions emit both images.  FULL-STATE REWRITES — a DV-less
-    :func:`merge_commit`, a restore, an overwrite of a non-empty
-    table — decompose EXACTLY (r14) as the bag difference between the
+    versions emit both images, and a :func:`merge_commit` version
+    emits its masked old rows as deletes and its new segment as
+    inserts.  FULL-STATE REWRITES — a restore, an overwrite of a
+    non-empty table, or a merge version with no new vector (written
+    before merges used deletion vectors) — decompose EXACTLY (r14) as the bag difference between the
     two adjacent states: parent ∖ child as deletes, child ∖ parent as
     inserts, O(two versions); unchanged rows cancel and emit nothing.
     A key-matched rewrite therefore surfaces as delete+insert (not an
@@ -2457,6 +2388,8 @@ def cdc_feed(
             parts.append(_tag(deleted_rows(spark, table_dir, v), v,
                               "delete"))
         elif (
+            # merge versions written before merge_commit used deletion
+            # vectors rewrote the full state; old tables still hold them
             (mode == "merge" and not _new_dv_files(table_dir, v))
             or mode == "restore"
             or (
@@ -2464,8 +2397,8 @@ def cdc_feed(
                 and summaries[v].get("parent") is not None
             )
         ):
-            # FULL-STATE REWRITES — a DV-less merge (merge_commit), a
-            # restore, or an overwrite of an existing table — get an
+            # FULL-STATE REWRITES — a pre-DV merge, a restore, or an
+            # overwrite of an existing table — get an
             # EXACT decomposition (r14, closes the r13 insert-only
             # caveat): the row-level change set of a full rewrite IS
             # the bag difference between the two adjacent states —
@@ -2505,15 +2438,13 @@ def cdc_feed(
                 parts.append(_tag(new_a.exceptAll(old_a), v,
                                   "insert"))
         elif mode == "merge":
-            # a DV MERGE (merge_dv) decomposes exactly into its masked
-            # old images (deletes) + its POST-IMAGE segment (inserts —
-            # the file-set difference against the parent, NOT
+            # a merge decomposes exactly into its masked old images
+            # (deletes) + its POST-IMAGE segment (inserts — the
+            # file-set difference against the parent, NOT
             # delta_files: those record the source verbatim, DELETE
             # FLAGS INCLUDED, and a flagged row must never surface as
             # an insert) — so retraction-aware consumers (matview)
-            # stay exact across merges.  (Full-rewrite merge_commit
-            # versions — no DVs — take the bag-difference branch
-            # above, r14.)
+            # stay exact across merges.
             parts.append(_tag(deleted_rows(spark, table_dir, v), v,
                               "delete"))
             m_v = _read_manifest(table_dir, v)
@@ -3241,7 +3172,7 @@ def change_feed(
     append → the file-set difference against the parent manifest;
     overwrite → the full new file set (a rewrite IS its own delta);
     merge → the manifest's recorded ``delta_files`` (exactly the
-    source rows, never the rewritten table); compact → skipped (bytes
+    source rows, never the table state); compact → skipped (bytes
     moved, no rows changed); restore → the restored full state (the
     delta a consumer must apply to converge).
 

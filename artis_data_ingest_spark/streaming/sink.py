@@ -156,8 +156,12 @@ def versioned_merge_writer(
     :func:`versioned_batch_writer` (which can only append).  The first
     batch bootstraps the table (an overwrite of the batch's upsert
     rows, delete-flagged rows dropped); every later batch is one
-    merge_commit, so ``change_feed`` surfaces exactly each batch's
-    delta and ``read_version`` reconstructs any intermediate state.
+    merge_commit: its matched rows mask behind a deletion vector and
+    its surviving rows append as one segment, so a batch costs
+    O(batch), ``change_feed`` surfaces exactly each batch's delta,
+    ``read_version`` reconstructs any intermediate state, and the
+    streaming ``readChangeFeed`` decomposes every merged batch into
+    delete + insert events.
 
     Exactly-once via the same retention-proof ``_batch_commits/``
     markers as the append writer: a replayed batch re-merging would

@@ -268,11 +268,12 @@ def _cdc_plan(
     KB-scale, so resolving positions here is driver metadata work;
     the row recovery is one Arrow ``take`` per file, executor-side.
     Parity contract with the batch :func:`~artis_data_ingest_spark.
-    sinks.versioned.cdc_feed`: a DV MERGE (merge_dv) decomposes into
-    its masked old images (``delete``) plus its surviving source rows
-    (``insert``), so retraction-aware consumers stay exact across
-    merges.  FULL-STATE REWRITES (DV-less ``merge_commit``, restore,
-    overwrite of a non-empty table) need a distributed bag-difference
+    sinks.versioned.cdc_feed`: a MERGE (``merge_commit``) decomposes
+    into its masked old images (``delete``) plus its surviving source
+    rows (``insert``), so retraction-aware consumers stay exact across
+    merges.  FULL-STATE REWRITES (restore, overwrite of a non-empty
+    table, and the DV-less merge versions of tables written before
+    merges used deletion vectors) need a distributed bag-difference
     the per-file stream partition model cannot express — batch
     ``cdc_feed`` decomposes them exactly; here they raise
     :class:`CDCDecompositionError` (r14) unless
@@ -299,6 +300,8 @@ def _cdc_plan(
             continue
         has_dv = bool(m.get("dv_files"))
         if not allow_full_rewrites and (
+            # merge versions written before merge_commit used deletion
+            # vectors rewrote the full state; old tables still hold them
             (mode == "merge" and not has_dv)
             or mode == "restore"
             or (mode == "overwrite" and m["parent"] is not None)
@@ -314,7 +317,7 @@ def _cdc_plan(
             )
         kind_add = "update_postimage" if mode == "update" else "insert"
         if mode == "merge" and has_dv:
-            # DV merge: inserts are the POST-IMAGE segment (file-set
+            # merge: inserts are the POST-IMAGE segment (file-set
             # diff vs parent), never delta_files — those record the
             # source verbatim, delete flags included (see cdc_feed)
             try:

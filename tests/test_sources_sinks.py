@@ -820,9 +820,15 @@ def test_versioned_compact_expire_vacuum_cycle(spark, tmp_path):
 def test_versioned_merge_commit_and_change_feed(spark, tmp_path):
     """merge_commit: version N+1 = merge_upsert(N, delta) — updates,
     inserts, and flagged deletes — while change_feed surfaces exactly
-    the delta rows (never the rewritten table), and a conflicting
-    concurrent commit loses atomically."""
+    the delta rows (never the table state), and a conflicting
+    concurrent commit loses atomically.  No data file is rewritten:
+    the merge keeps every parent file and adds one data segment and
+    one deletion vector."""
+    import os
+
+    from artis_data_ingest_spark.operators.merge import merge_upsert
     from artis_data_ingest_spark.sinks.versioned import (
+        _read_manifest,
         change_feed,
         commit,
         merge_commit,
@@ -845,6 +851,16 @@ def test_versioned_merge_commit_and_change_feed(spark, tmp_path):
         (r.k, r.s, r.v) for r in read_version(spark, tdir, 1).collect()
     )
     assert got == [(1, "a", 10), (2, "B", 99), (4, "d", 40)]
+    want = merge_upsert(
+        read_version(spark, tdir, 0), delta, ["k"], delete_col="_deleted"
+    )
+    assert got == sorted((r.k, r.s, r.v) for r in want.collect())
+    # zero rewrite: v0's files carry over, plus one segment and one DV
+    m0, m1 = _read_manifest(tdir, 0), _read_manifest(tdir, 1)
+    assert set(m0["files"]) <= set(m1["files"])
+    added = [f for f in m1["files"] if f not in m0["files"]]
+    assert len({os.path.dirname(f) for f in added}) == 1
+    assert len(m1["dv_files"]) == 1
     # base state untouched (time travel across the merge)
     assert sorted(r.k for r in read_version(spark, tdir, 0).collect()) \
         == [1, 2, 3]
@@ -3640,10 +3656,11 @@ def test_matview_retraction_and_group_vanish(spark, tmp_path):
 
 def test_cdc_exact_across_full_state_rewrites(spark, tmp_path):
     """r14 (VERDICT r13 task 3): cdc_feed decomposes FULL-STATE
-    REWRITES exactly — a DV-less merge_commit, an overwrite of a
-    non-empty table, and a restore each surface as the bag difference
-    between adjacent states (parent ∖ child deletes, child ∖ parent
-    inserts; untouched rows emit NOTHING) — so a retraction-aware
+    REWRITES exactly — an overwrite of a non-empty table and a restore
+    each surface as the bag difference between adjacent states
+    (parent ∖ child deletes, child ∖ parent inserts; untouched rows
+    emit NOTHING), and a merge_commit as its masked old rows plus its
+    new segment — so a retraction-aware
     materialized view refreshed across a history that mixes
     merge_commit with other DML hash-equals a from-scratch
     re-aggregate.  The r13 behavior (rewrites surface insert-only)
@@ -3737,14 +3754,18 @@ def test_cdc_stream_refuses_full_rewrites(spark, tmp_path):
     difference), so crossing one raises CDCDecompositionError at plan
     time instead of silently feeding insert-only events to a
     retraction-aware consumer; .option('allowFullRewrites','true')
-    restores the r13 insert-only behavior explicitly."""
+    restores the r13 insert-only behavior explicitly.  A merge_commit
+    version is no rewrite: the stream decomposes it into the same
+    delete + insert rows as the batch cdc_feed."""
+    import pyarrow.parquet as pq
     import pytest
-    from pyspark.sql import functions as F
 
     from artis_data_ingest_spark.sinks.versioned import (
         CDCDecompositionError,
+        cdc_feed,
         commit,
         merge_commit,
+        restore,
     )
     from artis_data_ingest_spark.streaming.source import _cdc_plan
 
@@ -3760,19 +3781,84 @@ def test_cdc_stream_refuses_full_rewrites(spark, tmp_path):
         keys=["k"],
         timestamp=200.0,
     )
+    units = []
+    for path, _, take, kind in _cdc_plan(d, 0, 1):
+        t = pq.read_table(path, columns=["k", "v"])
+        t = t if take is None else t.take(take)
+        units += [(kind, r["k"], r["v"]) for r in t.to_pylist()]
+    batch = [
+        (r["_change_type"], r["k"], r["v"])
+        for r in cdc_feed(spark, d, since=0).collect()
+    ]
+    assert sorted(units) == sorted(batch) == [
+        ("delete", 2, 20), ("insert", 2, 25), ("insert", 3, 30),
+    ]
+    # a restore rewrites the full state: the stream refuses it
+    restore(spark, d, 0, timestamp=300.0)
     with pytest.raises(CDCDecompositionError):
-        _cdc_plan(d, 0, 1)
+        _cdc_plan(d, 1, 2)
     # explicit opt-in: the rewrite surfaces as insert-only work units
-    plan = _cdc_plan(d, 0, 1, allow_full_rewrites=True)
+    plan = _cdc_plan(d, 1, 2, allow_full_rewrites=True)
     assert plan and all(kind == "insert" for _, _, _, kind in plan)
     # an overwrite of a NON-EMPTY table refuses too; the base
     # overwrite (v0, no parent) never does
     commit(
         spark.createDataFrame([(8, 80)], "k long, v long"),
-        d, mode="overwrite", timestamp=300.0,
+        d, mode="overwrite", timestamp=400.0,
     )
     with pytest.raises(CDCDecompositionError):
-        _cdc_plan(d, 1, 2)
+        _cdc_plan(d, 2, 3)
+
+
+def test_cdc_reads_full_rewrite_merge_manifests(spark, tmp_path):
+    """Tables written before merge_commit used deletion vectors hold
+    DV-less mode="merge" versions (a rewritten full state plus
+    delta_files).  The feeds still read them: batch cdc_feed as the
+    bag difference of adjacent states, deletion_feed as nothing
+    masked, and the stream refuses them as full rewrites."""
+    import json
+
+    import pytest
+
+    from artis_data_ingest_spark.sinks.versioned import (
+        CDCDecompositionError,
+        _manifest_path,
+        cdc_feed,
+        change_feed,
+        commit,
+        deletion_feed,
+    )
+    from artis_data_ingest_spark.streaming.source import _cdc_plan
+
+    d = str(tmp_path / "tbl")
+    commit(
+        spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"),
+        d, mode="overwrite", timestamp=100.0,
+    )
+    commit(
+        spark.createDataFrame([(1, 10), (2, 25), (3, 30)],
+                              "k long, v long"),
+        d, mode="overwrite", timestamp=200.0,
+    )
+    # rewrite v1 into the manifest shape the full-rewrite merge wrote
+    path = _manifest_path(d, 1)
+    with open(path) as fh:
+        m = json.load(fh)
+    m.update(mode="merge", delta_files=list(m["files"]))
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    events = sorted(
+        (r["_change_type"], r["k"], r["v"])
+        for r in cdc_feed(spark, d, since=0).collect()
+    )
+    assert events == [
+        ("delete", 2, 20), ("insert", 2, 25), ("insert", 3, 30),
+    ]
+    assert change_feed(spark, d, since=0).count() == 3
+    with pytest.raises(FileNotFoundError):
+        deletion_feed(spark, d, since=0)
+    with pytest.raises(CDCDecompositionError):
+        _cdc_plan(d, 0, 1)
 
 
 def test_sql_view_lifecycle(spark, tmp_path):
