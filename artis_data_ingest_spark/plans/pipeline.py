@@ -7107,17 +7107,18 @@ FROM o
     doc="Versioned-table SCHEMA EVOLUTION on read (r11, the verdict's "
     "ask #7; sinks/versioned.py read_version): an append whose batch "
     "ADDS a column (prio) keeps the table readable — read_version "
-    "merges parquet footers (mergeSchema), so pre-evolution segments "
-    "surface the new column as null, matching change_feed's "
-    "allowMissingColumns tolerance; time travel to the pre-evolution "
+    "reads under the version's manifest-recorded schema, so "
+    "pre-evolution segments surface the new column as null, matching "
+    "change_feed's allowMissingColumns tolerance; time travel to the pre-evolution "
     "version still returns the OLD two-column schema.  This is the "
     "reference's whole subject — schema *change* tracking across "
     "snapshots (assess_changes.qmd:148-174) — as a lakehouse read "
     "property.  The oracle derives every aggregate (total rows/cents "
     "across both schemas, non-null + summed values of the added "
     "column, old-version row count and column count) straight from "
-    "orders.  mergeSchema cost is one footer read per file — "
-    "metadata, not data — so the read path scales with file count.",
+    "orders.  The schema is O(1) manifest JSON — no footer read and "
+    "no Spark job — so building the read does not grow with file "
+    "count.",
 )
 def q_version_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil

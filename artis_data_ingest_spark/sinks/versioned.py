@@ -94,6 +94,7 @@ import uuid
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class ConstraintViolation(RuntimeError):
@@ -107,8 +108,8 @@ class SchemaMismatch(ValueError):
     """A write's column types conflict with the table's recorded
     schema (r13).  Raised at WRITE time — before publication — instead
     of letting an incompatible segment poison the table until some
-    later mergeSchema read explodes with CANNOT_MERGE_SCHEMAS (Delta's
-    write-time schema enforcement).  Adding NEW columns and omitting
+    later read fails to convert its column to the recorded type
+    (Delta's write-time schema enforcement).  Adding NEW columns and omitting
     existing ones remain legal (schema evolution); only a TYPE
     conflict on an existing physical column refuses."""
 
@@ -442,16 +443,78 @@ def _file_stats(files: list[str]) -> dict:
     return out
 
 
-def _footer_schema(files: list[str]) -> dict[str, str]:
-    """{physical column: arrow type string} unified across the files'
-    parquet footers — metadata reads only, no data pages."""
+def _footer_types(files: Sequence[str]) -> dict:
+    """{physical column: arrow type} unified across the files' parquet
+    footers (first file wins) — metadata reads only, no data pages."""
     import pyarrow.parquet as pq
 
-    out: dict[str, str] = {}
+    out: dict = {}
     for f in files:
         for field in pq.read_schema(f):
-            out.setdefault(field.name, str(field.type))
+            out.setdefault(field.name, field.type)
     return out
+
+
+def _footer_schema(files: Sequence[str]) -> dict[str, str]:
+    """:func:`_footer_types` as the arrow type strings a manifest's
+    ``schema`` records."""
+    return {n: str(t) for n, t in _footer_types(files).items()}
+
+
+#: Recorded arrow type string → Spark type, for the flat types table
+#: segments hold.  pyarrow spells DATE ``date32[day]``.
+_SPARK_TYPES = {
+    "int8": T.ByteType,
+    "int16": T.ShortType,
+    "int32": T.IntegerType,
+    "int64": T.LongType,
+    "float": T.FloatType,
+    "double": T.DoubleType,
+    "string": T.StringType,
+    "large_string": T.StringType,
+    "bool": T.BooleanType,
+    "date32[day]": T.DateType,
+    "binary": T.BinaryType,
+    "large_binary": T.BinaryType,
+}
+
+
+def _spark_type(arrow: str):
+    """The Spark type of one recorded arrow type string, or None for a
+    type :data:`_SPARK_TYPES` does not name (a nested type).  Every
+    ``timestamp…`` spelling (INT96 reads as ``timestamp[ns]``, an
+    NTZ-annotated column as ``timestamp[us]``) is TIMESTAMP, the type
+    parquet inference gives them with ``inferTimestampNTZ`` off."""
+    if arrow.startswith("timestamp"):
+        return T.TimestampType()
+    if arrow.startswith("decimal128("):
+        p, s = arrow[len("decimal128("):-1].split(",")
+        return T.DecimalType(int(p), int(s))
+    t = _SPARK_TYPES.get(arrow)
+    return t() if t else None
+
+
+def _spark_schema(m: dict) -> T.StructType:
+    """THE Spark schema of a table version's data files: the manifest's
+    recorded physical schema (:func:`_table_schema`) through
+    :func:`_spark_type`, in recorded order.  ``m`` may also be
+    ``{"files": seg}`` for a staged segment, which has no record yet.
+    Footers are read only where the record is missing or names a type
+    the map does not; such a field takes pyarrow's conversion of its
+    footer type (a field no file holds is left out)."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    fields, footer = [], None
+    for name, arrow in _table_schema(m).items():
+        st = _spark_type(arrow)
+        if st is None:
+            if footer is None:
+                footer = _footer_types(m.get("files", []))
+            if name not in footer:
+                continue
+            st = from_arrow_type(footer[name])
+        fields.append(T.StructField(name, st, True))
+    return T.StructType(fields)
 
 
 def _segment_meta(
@@ -472,39 +535,15 @@ def _segment_meta(
     )
 
 
-def _merged_read(spark: SparkSession, *files: str) -> DataFrame:
-    """Schema-evolution-tolerant parquet read of a manifest file set —
-    the drop-in replacement for ``.option("mergeSchema", "true")``
-    (r16, guide §1.2/§6; VERDICT r15 task 8's "versioned-feed fixed
-    overhead"): mergeSchema runs a DISTRIBUTED footer-union job at
-    plan-build time — measured 0.3-0.5 s of fixed latency per call on
-    a 32-file demo table — while the identical union over parquet
-    footers is a ~2 ms driver-side pyarrow metadata read.  Field order
-    matches mergeSchema's (first file's fields in file order, later
-    files append new names); a file missing a column surfaces nulls
-    exactly as before (standard explicit-schema evolution).  Tables
-    with TIMESTAMP columns keep the mergeSchema read: Spark's
-    INT96/NTZ inference carries logical-type detail pyarrow's schema
-    string does not, so only the (overwhelmingly common here)
-    non-timestamp tables take the fast path."""
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        fields: dict = {}
-        order: list[str] = []
-        for f in files:
-            for fld in pq.read_schema(f):
-                if fld.name not in fields:
-                    fields[fld.name] = fld
-                    order.append(fld.name)
-        if any(pa.types.is_timestamp(fields[n].type) for n in order):
-            raise ValueError("timestamp column: defer to Spark")
-        st = from_arrow_schema(pa.schema([fields[n] for n in order]))
-    except Exception:  # noqa: BLE001 — any doubt → Spark's own union
-        return spark.read.option("mergeSchema", "true").parquet(*files)
-    return spark.read.schema(st).parquet(*files)
+def _merged_read(
+    spark: SparkSession, files: Sequence[str], schema: T.StructType
+) -> DataFrame:
+    """Parquet read of table data ``files`` under the Spark ``schema``
+    of their version (:func:`_spark_schema`): no schema-inference job
+    and no footer read at plan time.  A file that lacks a column (one
+    written before an append added it) surfaces nulls there, so the
+    columns never depend on which files are read."""
+    return spark.read.schema(schema).parquet(*files)
 
 
 def _table_schema(m: dict) -> dict[str, str]:
@@ -523,9 +562,9 @@ def _check_schema_compatible(
 ) -> None:
     """WRITE-TIME schema enforcement (Delta's): a segment whose column
     types conflict with the table refuses BEFORE publication — an
-    incompatible append would otherwise poison every later mergeSchema
-    read (CANNOT_MERGE_SCHEMAS at read time, long after the writer is
-    gone).  New columns and omitted columns pass (schema evolution);
+    incompatible append would otherwise poison every later read (a
+    column its recorded type cannot be read as, long after the writer
+    is gone).  New columns and omitted columns pass (schema evolution);
     only same-name type conflicts raise."""
     def _norm(t: str) -> str:
         # writer-equivalence classes: Spark's parquet writer and
@@ -604,34 +643,36 @@ def _dropped(props: dict) -> set[str]:
     return set(props.get("dropped_columns", []))
 
 
+def _logical_names(props: dict, physical: Sequence[str]) -> dict:
+    """{physical name: logical name} of the ``physical`` columns that
+    ``props``' column mapping keeps, in their order: dropped physicals
+    are left out, renamed ones map to their current logical name.  The
+    one projection every logical schema (reads, DDL checks,
+    :func:`table_detail`, the ``versioned_feed`` source) goes
+    through."""
+    rev = {p: l for l, p in _mapping(props).items()}
+    dropped = _dropped(props)
+    return {n: rev.get(n, n) for n in physical if n not in dropped}
+
+
 def _to_logical(
     df: DataFrame, props: dict, keep: Sequence[str] = ()
 ) -> DataFrame:
-    """Physical→logical view of a raw file scan: dropped physical
-    columns disappear, renamed ones surface under their current
-    logical names.  ``keep`` columns (reader bookkeeping like the DV
-    join keys) pass through untouched.  Identity when the table never
-    renamed/dropped — zero plan overhead for ordinary tables."""
-    mapping, dropped = _mapping(props), _dropped(props)
-    if not mapping and not dropped:
+    """Physical→logical view of a raw file scan (:func:`_logical_names`).
+    ``keep`` columns (reader bookkeeping like the DV join keys) pass
+    through untouched.  Identity when the table never renamed/dropped
+    — zero plan overhead for ordinary tables."""
+    if not _mapping(props) and not _dropped(props):
         return df
     from pyspark.sql import functions as F
 
-    rev = {p: l for l, p in mapping.items()}
-    keep_set = set(keep)
-    cols = []
-    for f in df.schema.fields:
-        n = f.name
-        if n in keep_set:
-            cols.append(F.col(n))
-            continue
-        if n in dropped:
-            continue
-        logical = rev.get(n, n)
-        cols.append(
-            F.col(n).alias(logical) if logical != n else F.col(n)
-        )
-    return df.select(*cols)
+    names = _logical_names(props, df.columns)
+    return df.select(*[
+        F.col(n) if n in keep or names[n] == n
+        else F.col(n).alias(names[n])
+        for n in df.columns
+        if n in keep or n in names
+    ])
 
 
 def _to_physical(df: DataFrame, props: dict) -> DataFrame:
@@ -701,7 +742,10 @@ def rename_column(
     cur = latest_version(table_dir)
     if cur is None:
         raise FileNotFoundError(f"no versions in {table_dir}")
-    logical = _logical_schema_names(table_dir, cur)
+    m = _read_manifest(table_dir, cur)
+    logical = list(_logical_names(
+        m.get("table_props", {}), _table_schema(m)
+    ).values())
 
     def _mut(props: dict) -> None:
         if old not in logical:
@@ -766,7 +810,10 @@ def drop_column(
     cur = latest_version(table_dir)
     if cur is None:
         raise FileNotFoundError(f"no versions in {table_dir}")
-    logical = _logical_schema_names(table_dir, cur)
+    m = _read_manifest(table_dir, cur)
+    logical = list(_logical_names(
+        m.get("table_props", {}), _table_schema(m)
+    ).values())
 
     def _mut(props: dict) -> None:
         if col not in logical:
@@ -795,22 +842,6 @@ def drop_column(
         expect_version=expect_version,
         timestamp=timestamp,
     )
-
-
-def _logical_schema_names(table_dir: str, version: int) -> list[str]:
-    """The LOGICAL column names of ``version`` — the manifest's
-    recorded physical schema (O(1) JSON; footer walk only for
-    manifests predating the record) passed through that version's
-    column mapping."""
-    m = _read_manifest(table_dir, version)
-    props = m.get("table_props", {})
-    mapping, dropped = _mapping(props), _dropped(props)
-    rev = {p: l for l, p in mapping.items()}
-    return [
-        rev.get(n, n)
-        for n in _table_schema(m)
-        if n not in dropped
-    ]
 
 
 def _alter_commit(
@@ -902,7 +933,7 @@ def _violation_counts(
     :func:`_null_fill_for_constraints`."""
     from pyspark.sql import functions as F
 
-    df = _merged_read(spark, *files)
+    df = _merged_read(spark, files, _spark_schema({"files": files}))
     df = _to_logical(df, props or {})
     df, _ = _null_fill_for_constraints(df, constraints)
     aggs = [
@@ -965,7 +996,7 @@ def _quarantine_split(
     if not any(counts.values()):
         return seg_files, []
     staged = _to_logical(
-        _merged_read(spark, *seg_files),
+        _merged_read(spark, seg_files, _spark_schema({"files": seg_files})),
         props,
     )
     # omitted constrained columns evaluate as NULL (pass); the padded
@@ -1033,10 +1064,7 @@ def add_constraint(
         if cur is not None:
             m = _read_manifest(table_dir, cur)
             if m["files"]:
-                live = _dv_read(
-                    spark, m["files"], m.get("dv_files", []),
-                    m.get("table_props", {}),
-                )
+                live = _dv_read(spark, m)
                 from pyspark.sql import functions as F
 
                 n = live.filter(
@@ -1107,7 +1135,7 @@ def quarantined_rows(
             f"v{version} has no quarantined rows"
         )
     return _to_logical(
-        _merged_read(spark, *qf),
+        _merged_read(spark, qf, _spark_schema(m)),
         m.get("table_props", {}),
     )
 
@@ -1256,7 +1284,7 @@ def commit(
     seg_schema = _footer_schema(seg_files)
     if mode == "append" and cur is not None:
         # write-time schema enforcement: refuse a type conflict NOW,
-        # not at some later reader's mergeSchema (footer-vs-manifest
+        # not at some later read (footer-vs-manifest
         # comparison — driver-side metadata, no data read)
         try:
             _check_schema_compatible(_table_schema(parent), seg_schema)
@@ -1493,9 +1521,10 @@ def compact(
     to the table properties the original :func:`commit` recorded, so
     the compacted segment is re-range-clustered and its per-file Bloom
     bitmaps rebuilt — equality/range pruning keeps working after
-    compaction instead of silently losing its metadata.  Reads with
-    ``mergeSchema`` so a table that evolved its schema compacts to the
-    merged shape (exactly what :func:`read_version` serves)."""
+    compaction instead of silently losing its metadata.  Reads under
+    the version's recorded schema, so a table that evolved its schema
+    compacts to that shape (exactly what :func:`read_version`
+    serves)."""
     cur = latest_version(table_dir)
     if cur is None:
         raise FileNotFoundError(f"no versions in {table_dir}")
@@ -1535,7 +1564,7 @@ def compact(
     # names) and write back under PHYSICAL names; dropped columns are
     # physically PURGED from whatever compaction rewrites
     compacted = _layout(
-        _dv_read(spark, rewrite, dv_files, props), cluster_by,
+        _dv_read(spark, m, rewrite), cluster_by,
         max(1, n_files),
     )
     seg_files = _write_segment(
@@ -1665,7 +1694,9 @@ def merge_commit(
 
     Manifest: ``mode="merge"`` with the parent's files plus the new
     segment, the parent's ``dv_files`` plus the new sidecar, and
-    ``delta_files`` — the source AS GIVEN, delete flags included — so
+    ``delta_files`` — the source AS GIVEN, delete flags included (the
+    post-image segment itself when the source has no delete column and
+    already has the table's columns and types) — so
     :func:`change_feed` surfaces exactly the delta and
     :func:`cdc_feed` decomposes the version into its masked old rows
     (deletes) and its new segment (inserts).  Conflict safety: the
@@ -1687,9 +1718,7 @@ def merge_commit(
     keys = list(keys)
     src_keys = source.select(*keys)
     # keys are LOGICAL names; files hold physical ones
-    tagged = _dv_read(
-        spark, m["files"], m.get("dv_files", []), props, keep_tags=True
-    )
+    tagged = _dv_read(spark, m, keep_tags=True)
     # the MERGE premise is a small delta against a big table: the key
     # set broadcasts, so masking costs ONE scan with no table shuffle
     hits = tagged.join(F.broadcast(src_keys), keys, "left_semi").select(
@@ -1704,11 +1733,8 @@ def merge_commit(
         ).drop(delete_col)
     # align order AND types with the table (a source built with e.g.
     # int literals against a bigint table must not fork the schema)
-    ltypes = dict(tagged.dtypes)
-    post = post.select(*[
-        F.col(c).cast(ltypes[c]).alias(c)
-        for c in tagged.columns if c not in _DV_COLS
-    ])
+    table_types = [(c, t) for c, t in tagged.dtypes if c not in _DV_COLS]
+    post = post.select(*[F.col(c).cast(t).alias(c) for c, t in table_types])
     post = _layout(post, props.get("cluster_by"), None, 1)
     seg = _write_segment(_to_physical(post, props), table_dir, new_version)
     constraints = props.get("constraints") or {}
@@ -1719,9 +1745,14 @@ def merge_commit(
             spark, seg, constraints, cleanup_dirs=_seg_dirs(dv_seg),
             props=props,
         )
-    delta_files = _write_segment(
-        _to_physical(source, props).coalesce(1), table_dir, new_version
-    )
+    if delete_col is None and source.dtypes == table_types:
+        # nothing to flag and nothing to cast: the post-image segment
+        # holds exactly the source rows, so it is the delta as well
+        delta_files = seg
+    else:
+        delta_files = _write_segment(
+            _to_physical(source, props).coalesce(1), table_dir, new_version
+        )
     stats, blooms = _segment_meta(
         spark, seg, props, props.get("bloom_cols")
     )
@@ -1749,24 +1780,29 @@ _DV_SCHEMA = "_dv_file string, _dv_pos bigint"
 
 def _dv_read(
     spark: SparkSession,
-    files: list[str],
-    dv_files: list[str],
-    props: dict,
+    m: dict,
+    files: Sequence[str] | None = None,
+    dv_files: Sequence[str] | None = None,
     how: str = "left_anti",
     keep_tags: bool = False,
 ) -> DataFrame:
-    """Logical read of ``files`` joined against the deletion-vector
-    sidecars ``dv_files`` on (file path, row position): each scanned
-    row is tagged from Spark's ``_metadata`` column and the small
-    sidecar table broadcasts.  ``how="left_anti"`` serves the live
-    rows; ``how="inner"`` recovers exactly the rows the vectors mask.
-    ``keep_tags`` keeps the ``_dv_file``/``_dv_pos`` columns for
-    callers that write a new vector from the result.  A live read
+    """Logical read of version manifest ``m``'s data ``files``
+    (default: all it lists) under its schema (:func:`_spark_schema`)
+    and column mapping, joined against the deletion-vector sidecars
+    ``dv_files`` (default: ``m``'s) on (file path, row position): each
+    scanned row is tagged from Spark's ``_metadata`` column and the
+    small sidecar table broadcasts.  ``how="left_anti"`` serves the
+    live rows; ``how="inner"`` recovers exactly the rows the vectors
+    mask.  ``keep_tags`` keeps the ``_dv_file``/``_dv_pos`` columns
+    for callers that write a new vector from the result.  A live read
     with no vectors and no tags is the bare scan — zero overhead for
     tables that never deleted."""
     from pyspark.sql import functions as F
 
-    df = _merged_read(spark, *files)
+    files = m["files"] if files is None else files
+    dv_files = m.get("dv_files", []) if dv_files is None else dv_files
+    props = m.get("table_props", {})
+    df = _merged_read(spark, files, _spark_schema(m))
     join = bool(dv_files) or how != "left_anti"
     if not (join or keep_tags):
         return _to_logical(df, props)
@@ -1996,9 +2032,7 @@ def replace_where(
     props = dict(m.get("table_props", {}))
     # --- deletion vector over the matched live rows (predicate is in
     # LOGICAL names; files hold physical ones)
-    tagged = _dv_read(
-        spark, m["files"], m.get("dv_files", []), props, keep_tags=True
-    )
+    tagged = _dv_read(spark, m, keep_tags=True)
     hits = tagged.filter(F.expr(predicate)).select(*_DV_COLS)
     new_version = cur + 1
     dv_seg = _write_segment(hits.coalesce(1), table_dir, new_version)
@@ -2019,7 +2053,9 @@ def replace_where(
         _discard(e)
     if validate:
         staged = _to_logical(
-            _merged_read(spark, *seg),
+            _merged_read(
+                spark, seg, _spark_schema({"schema": seg_schema, "files": seg})
+            ),
             props,
         )
         n_outside = staged.filter(
@@ -2083,9 +2119,7 @@ def delete_where(
     m = _read_manifest(table_dir, cur)
     props = m.get("table_props", {})
     # the predicate references LOGICAL names; files hold physical ones
-    tagged = _dv_read(
-        spark, m["files"], m.get("dv_files", []), props, keep_tags=True
-    )
+    tagged = _dv_read(spark, m, keep_tags=True)
     hits = tagged.filter(F.expr(predicate)).select(*_DV_COLS)
     seg = _write_segment(hits.coalesce(1), table_dir, cur + 1)
     return _publish_dv_op(
@@ -2123,10 +2157,8 @@ def deleted_rows(
     if not new_dv:
         # a merge version from before merges used deletion vectors
         # rewrote the full state and masks nothing; empty result
-        return _to_logical(
-            _merged_read(spark, *m["files"]).filter("1 = 0"), props
-        )
-    return _dv_read(spark, m["files"], new_dv, props, how="inner")
+        return _dv_read(spark, m, dv_files=[]).filter("1 = 0")
+    return _dv_read(spark, m, dv_files=new_dv, how="inner")
 
 
 def deletion_feed(
@@ -2210,9 +2242,7 @@ def update_where(
     m = _read_manifest(table_dir, cur)
     props = dict(m.get("table_props", {}))
     # SET/WHERE reference LOGICAL names; files hold physical ones
-    tagged = _dv_read(
-        spark, m["files"], m.get("dv_files", []), props, keep_tags=True
-    )
+    tagged = _dv_read(spark, m, keep_tags=True)
     ltypes = dict(tagged.dtypes)
     cols = [c for c in tagged.columns if c not in _DV_COLS]
     unknown = sorted(set(set_exprs) - set(cols))
@@ -2282,7 +2312,9 @@ def updated_rows(
         raise ValueError(f"v{version} is {m['mode']!r}, not an update")
     props = m.get("table_props", {})
     if image == "post":
-        return _to_logical(_merged_read(spark, *m["delta_files"]), props)
+        return _to_logical(
+            _merged_read(spark, m["delta_files"], _spark_schema(m)), props
+        )
     try:
         parent, new_dv = _added_dv_files(table_dir, m)
     except FileNotFoundError:
@@ -2290,7 +2322,7 @@ def updated_rows(
             f"v{version}'s parent manifest was expired; its pre-update "
             f"images are no longer isolatable"
         ) from None
-    return _dv_read(spark, parent["files"], new_dv, props, how="inner")
+    return _dv_read(spark, m, parent["files"], new_dv, how="inner")
 
 
 def _new_dv_files(table_dir: str, version: int) -> list[str]:
@@ -2455,7 +2487,8 @@ def cdc_feed(
             if post:
                 parts.append(_tag(
                     _to_logical(
-                        spark.read.parquet(*post), feed_props
+                        _merged_read(spark, post, _spark_schema(m_v)),
+                        feed_props,
                     ),
                     v, "insert"))
         elif mode == "replace":
@@ -2463,12 +2496,7 @@ def cdc_feed(
             parts.append(_tag(deleted_rows(spark, table_dir, v), v,
                               "delete"))
             parts.append(_tag(
-                _to_logical(
-                    spark.read.parquet(
-                        *version_delta_files(table_dir, v)
-                    ),
-                    feed_props,
-                ),
+                _to_logical(_delta_read(spark, table_dir, v), feed_props),
                 v, "insert"))
         elif mode == "update":
             parts.append(_tag(
@@ -2478,13 +2506,10 @@ def cdc_feed(
                 updated_rows(spark, table_dir, v, "post"), v,
                 "update_postimage"))
         else:  # append / overwrite / restore
-            delta = version_delta_files(table_dir, v)
-            if delta:
+            delta = _delta_read(spark, table_dir, v)
+            if delta is not None:
                 parts.append(_tag(
-                    _to_logical(
-                        spark.read.parquet(*delta), feed_props
-                    ),
-                    v, "insert"))
+                    _to_logical(delta, feed_props), v, "insert"))
     if not parts:
         raise FileNotFoundError(
             f"no row changes after v{since} in {table_dir}"
@@ -2641,14 +2666,15 @@ def read_version(
     committed at or before that timestamp (see :func:`version_at`).
     ``version`` and ``as_of`` are mutually exclusive.
 
-    Reads with ``mergeSchema`` so an append whose batch ADDED a column
+    Reads under the version's schema as its manifest records it
+    (:func:`_spark_schema`), so an append whose batch ADDED a column
     stays readable across the schema change (older segments surface the
     new column as null) — matching :func:`change_feed`'s
     ``allowMissingColumns`` tolerance, and the reference's whole point
     of tracking schema *change* across snapshots
-    (assess_changes.qmd:148-174).  mergeSchema unions footers at plan
-    time (one footer read per file — metadata, not data), so the cost
-    is bounded by file count, not table size."""
+    (assess_changes.qmd:148-174).  Building the frame is O(1) JSON on
+    the driver: no footer read and no Spark job, whatever the file
+    count."""
     if as_of is not None:
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
@@ -2660,9 +2686,7 @@ def read_version(
     m = _read_manifest(table_dir, version)
     if not m["files"]:
         raise FileNotFoundError(f"v{version} has no files")
-    return _dv_read(
-        spark, m["files"], m.get("dv_files", []), m.get("table_props", {})
-    )
+    return _dv_read(spark, m)
 
 
 _BLOOM_K = 4
@@ -2715,7 +2739,7 @@ def _segment_blooms(
         )
         for f in files
     }
-    df = spark.read.parquet(*files).select(
+    df = _merged_read(spark, files, _spark_schema({"files": files})).select(
         F.input_file_name().alias("_f"),
         *[F.col(c).cast("string").alias(c) for c in cols],
     )
@@ -2858,9 +2882,8 @@ def scan(
     """Stats-pruned time-travel read: only files whose manifest stats
     may satisfy ``filters`` are opened; the filters are then applied
     row-level too (stats pruning is file-granular, the residual
-    predicate is exact).  With no prunable file left, one file is
-    still read so the result keeps the table schema (the residual
-    filter drops every row)."""
+    predicate is exact).  The columns are the version's whichever
+    files survive: a column the kept files lack reads as null."""
     from pyspark.sql import functions as F
 
     m_version = version if version is not None else latest_version(
@@ -2869,23 +2892,14 @@ def scan(
     if m_version is None:
         raise FileNotFoundError(f"no versions in {table_dir}")
     m_scan = _read_manifest(table_dir, m_version)
-    dv_files = m_scan.get("dv_files", [])
-    scan_props = m_scan.get("table_props", {})
     kept, total = prune_files(table_dir, filters, version)
     if not kept:
-        # every file pruned: return an EMPTY frame that still carries
-        # the full table schema.  Reading one file would be cheaper but
-        # wrong after schema evolution — the chosen file's footer may
-        # predate a filter column, and the residual predicate on the
-        # missing column would raise instead of matching nothing.  The
-        # mergeSchema read unions footers only (metadata, not data);
-        # lit(False) prunes every row group at scan time.
-        kept = m_scan["files"]
-        return _to_logical(
-            _merged_read(spark, *kept).filter(F.lit(False)),
-            scan_props,
-        )
-    df = _dv_read(spark, kept, dv_files, scan_props)
+        # every file pruned: an EMPTY frame under the version's schema
+        # (which every read carries, whichever files survive); the
+        # optimizer turns the false filter into an empty relation, so
+        # no file is opened
+        return _dv_read(spark, m_scan, dv_files=[]).filter(F.lit(False))
+    df = _dv_read(spark, m_scan, kept)
     ops = {
         "=": lambda c, v: c == v,
         "<": lambda c, v: c < v,
@@ -2947,12 +2961,9 @@ def table_detail(table_dir: str, version: int | None = None) -> dict:
             raise FileNotFoundError(f"no versions in {table_dir}")
     m = _read_manifest(table_dir, version)
     props = m.get("table_props", {})
-    mapping, dropped = _mapping(props), _dropped(props)
-    rev = {p: l for l, p in mapping.items()}
+    physical = _table_schema(m)
     schema = {
-        rev.get(n, n): t
-        for n, t in _table_schema(m).items()
-        if n not in dropped
+        l: physical[p] for p, l in _logical_names(props, physical).items()
     }
     size = 0
     for f in m["files"]:
@@ -3159,6 +3170,24 @@ def version_delta_files(table_dir: str, version: int) -> list[str]:
     return [f for f in m["files"] if f not in parent_files]
 
 
+def _delta_read(
+    spark: SparkSession, table_dir: str, version: int
+) -> DataFrame | None:
+    """Physical read of :func:`version_delta_files` (None when the
+    version added no rows).  Files the version lists read under its
+    schema; a merge's ``delta_files`` that are not its post-image
+    segment hold the source as given (delete flag included) and read
+    under their own footers'."""
+    delta = version_delta_files(table_dir, version)
+    if not delta:
+        return None
+    m = _read_manifest(table_dir, version)
+    listed = set(delta) <= set(m["files"])
+    return _merged_read(
+        spark, delta, _spark_schema(m if listed else {"files": delta})
+    )
+
+
 def change_feed(
     spark: SparkSession,
     table_dir: str,
@@ -3223,12 +3252,12 @@ def change_feed(
     for v in versions:
         if v < lo:
             continue
-        delta = version_delta_files(table_dir, v)
-        if not delta:
+        delta = _delta_read(spark, table_dir, v)
+        if delta is None:
             continue
-        part = _to_logical(
-            spark.read.parquet(*delta), feed_props
-        ).withColumn("_version", F.lit(v).cast("bigint"))
+        part = _to_logical(delta, feed_props).withColumn(
+            "_version", F.lit(v).cast("bigint")
+        )
         out = part if out is None else out.unionByName(
             part, allowMissingColumns=True
         )

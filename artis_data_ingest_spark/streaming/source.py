@@ -25,8 +25,8 @@ Design (scale-shaped, not driver-shaped):
   * ``read(partition)`` runs executor-side and yields
     ``pyarrow.RecordBatch`` objects (r13): pyarrow reads the one
     parquet file, every column is cast to the DECLARED Arrow schema
-    (columns a pre-evolution file lacks become null arrays —
-    mergeSchema tolerance), ``_version`` is appended as a constant
+    (columns a pre-evolution file lacks become null arrays, as in
+    every versioned-table read), ``_version`` is appended as a constant
     int64 column, and the whole file flows to Spark as Arrow batches —
     zero per-row Python object construction, the same vectorized
     transfer Spark's own parquet source uses;
@@ -49,9 +49,12 @@ Design (scale-shaped, not driver-shaped):
     silently skipping — a CDC consumer must never believe it caught
     up across a hole.
 
-The schema comes from the manifest's recorded physical schema (r13;
-footer-walk fallback for old manifests) passed through the version's
-COLUMN MAPPING, so renames/drops surface correctly.  A BATCH reader
+The schema is the one every versioned-table read uses,
+``sinks.versioned._spark_schema`` (the manifest's recorded physical
+schema; footers only for manifests without one), passed through the
+version's COLUMN MAPPING, so renames/drops surface correctly; the
+readers cast to its Arrow form (``to_arrow_schema``, no session
+needed).  A BATCH reader
 is registered too (``spark.read.format("versioned_feed")``): the
 current full state, or ``version``/``asOfTimestamp`` time travel,
 one Arrow-batched partition per file, deletion vectors masked per
@@ -77,105 +80,6 @@ from __future__ import annotations
 
 import json as _json
 import os as _os
-
-#: pyarrow type name prefixes → Spark SQL DDL types (the common
-#: subset our segments actually contain; anything else errors loudly
-#: at schema time rather than corrupting rows at read time).
-_TYPE_MAP = {
-    "int8": "tinyint",
-    "int16": "smallint",
-    "int32": "int",
-    "int64": "bigint",
-    "float": "float",
-    "double": "double",
-    "string": "string",
-    "large_string": "string",
-    "bool": "boolean",
-    "date32": "date",
-    "binary": "binary",
-    "large_binary": "binary",
-}
-
-
-def _spark_type(arrow_type) -> str:
-    name = str(arrow_type)
-    if name.startswith("timestamp"):
-        return "timestamp"
-    if name.startswith("decimal"):
-        # pyarrow spells the width: 'decimal128(p, s)' / 'decimal256(
-        # p, s)'.  Spark DDL wants plain 'decimal(p, s)' — strip the
-        # width, keep the (precision, scale) suffix.
-        return "decimal" + name[name.index("("):]
-    try:
-        return _TYPE_MAP[name]
-    except KeyError:
-        raise ValueError(
-            f"versioned_feed: unsupported parquet type {name!r}"
-        ) from None
-
-
-def _unified_schema(files: list[str]) -> list[tuple[str, str]]:
-    """(name, spark_ddl_type) unified across the files' footers in
-    first-appearance order — footer reads only, no data pages."""
-    import pyarrow.parquet as pq
-
-    fields: list[tuple[str, str]] = []
-    seen: set[str] = set()
-    for f in files:
-        for field in pq.read_schema(f):
-            if field.name not in seen:
-                seen.add(field.name)
-                fields.append((field.name, _spark_type(field.type)))
-    return fields
-
-
-def _schema_ddl(fields: list[tuple[str, str]], cdc: bool = False) -> str:
-    cols = ", ".join(f"`{n}` {t}" for n, t in fields)
-    ddl = f"{cols}, `_version` bigint"
-    if cdc:
-        ddl += ", `_change_type` string"
-    return ddl
-
-
-def _arrow_schema(fields: list[tuple[str, str]], cdc: bool = False):
-    """The pyarrow schema Spark expects for the DECLARED source schema
-    (fields + ``_version``).  The DDL names are OUR closed set
-    (:func:`_spark_type` emits them), so the Spark-type→Arrow mapping
-    is spelled inline — matching ``pyspark.sql.pandas.types.
-    to_arrow_schema`` exactly (timestamp[us, tz=UTC], decimal128) —
-    instead of round-tripping through ``StructType.fromDDL``, which
-    needs an active session the data source worker process does not
-    have.  ``read()`` casts every file to these types, so the engine
-    deserializes exactly what it declared."""
-    import pyarrow as pa
-
-    ddl_to_arrow = {
-        "tinyint": pa.int8(),
-        "smallint": pa.int16(),
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-        "float": pa.float32(),
-        "double": pa.float64(),
-        "string": pa.string(),
-        "boolean": pa.bool_(),
-        "date": pa.date32(),
-        "binary": pa.binary(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-    }
-
-    def _to_arrow(ddl: str):
-        if ddl.startswith("decimal("):
-            p, s = ddl[len("decimal("):-1].split(",")
-            return pa.decimal128(int(p), int(s))
-        return ddl_to_arrow[ddl]
-
-    extra = [pa.field("_version", pa.int64())]
-    if cdc:
-        extra.append(pa.field("_change_type", pa.string()))
-    return pa.schema(
-        [pa.field(n, _to_arrow(t)) for n, t in fields] + extra
-    )
-
 
 def _read_file_batches(path: str, pa_schema, version: int,
                        drop_positions=None, phys_map=None,
@@ -644,17 +548,17 @@ def _make_datasource_class():
             the floor — no duplicate rows ever leave this process.
         """
 
-        def __init__(self, table_dir: str, fields, options,
-                     phys_map=None):
+        def __init__(self, table_dir: str, schema, phys_map, options):
             import re
 
+            from pyspark.sql.pandas.types import to_arrow_schema
+
             self._dir = table_dir
-            self._fields = fields
             self._cdc = str(
                 options.get("readChangeFeed", "false")
             ).lower() == "true"
-            self._pa_schema = _arrow_schema(fields, cdc=self._cdc)
-            self._phys_map = phys_map or {}
+            self._pa_schema = to_arrow_schema(schema)
+            self._phys_map = phys_map
             self._options = options
             self._cursor: int | None = None
             self._floor: int | None = None
@@ -878,12 +782,12 @@ def _make_datasource_class():
         works on any session, and only the explicit opt-in requires
         the conf to be on."""
 
-        def __init__(self, table_dir: str, fields, options,
-                     phys_map=None):
+        def __init__(self, table_dir: str, schema, phys_map, options):
+            from pyspark.sql.pandas.types import to_arrow_schema
+
             self._dir = table_dir
-            self._fields = fields
-            self._pa_schema = _arrow_schema(fields)
-            self._phys_map = phys_map or {}
+            self._pa_schema = to_arrow_schema(schema)
+            self._phys_map = phys_map
             self._options = options
             self._conj: list = []    # [(col, op, value)] conjuncts
             self._in: list = []      # [(col, [values])]
@@ -1076,45 +980,52 @@ def _make_datasource_class():
                     raise FileNotFoundError(f"no versions in {d}")
             return _read_manifest(d, ver)
 
-        def _fields(self):
-            """(logical fields, logical→physical map): unified parquet
-            footers passed through the addressed version's COLUMN
+        def _declared(self):
+            """(declared schema, logical→physical map) of the addressed
+            version: its recorded schema
+            (``sinks.versioned._spark_schema``) under its COLUMN
             MAPPING — dropped physicals excluded, renamed columns
             surfaced under their logical names (time-travel batch
-            reads see the schema as of that version)."""
+            reads see the schema as of that version) — plus
+            ``_version`` and, for ``readChangeFeed``,
+            ``_change_type``."""
+            from pyspark.sql.types import (
+                LongType,
+                StringType,
+                StructField,
+                StructType,
+            )
+
+            from ..sinks.versioned import (
+                _logical_names,
+                _mapping,
+                _spark_schema,
+            )
+
             m = self._schema_manifest()
             props = m.get("table_props", {})
-            mapping = dict(props.get("column_mapping") or {})
-            dropped = set(props.get("dropped_columns") or [])
-            rev = {p: l for l, p in mapping.items()}
-            rec = m.get("schema")
-            pairs = (
-                # r13: manifests record the physical schema at commit
-                # time — O(1) JSON instead of one footer read per file
-                [(n, _spark_type(t)) for n, t in rec.items()]
-                if rec
-                else _unified_schema(m["files"])
-            )
-            fields = [
-                (rev.get(n, n), t)
-                for n, t in pairs
-                if n not in dropped
-            ]
-            return fields, mapping
+            physical = _spark_schema(m)
+            names = _logical_names(props, physical.names)
+            st = StructType([
+                StructField(names[f.name], f.dataType, True)
+                for f in physical.fields
+                if f.name in names
+            ]).add("_version", LongType())
+            if self._is_cdc():
+                st = st.add("_change_type", StringType())
+            return st, _mapping(props)
 
         def _is_cdc(self) -> bool:
             return str(
                 self.options.get("readChangeFeed", "false")
             ).lower() == "true"
 
-        def schema(self) -> str:
-            return _schema_ddl(self._fields()[0], cdc=self._is_cdc())
+        def schema(self):
+            return self._declared()[0]
 
         def streamReader(self, schema):
-            fields, mapping = self._fields()
             return _FeedStreamReader(
-                self._table_dir(), fields, self.options,
-                phys_map=mapping,
+                self._table_dir(), *self._declared(), self.options
             )
 
         def reader(self, schema):
@@ -1124,7 +1035,6 @@ def _make_datasource_class():
                     "(spark.readStream); for a batch slice of the "
                     "change feed use sinks.versioned.cdc_feed()"
                 )
-            fields, mapping = self._fields()
             # the pushdown hook lives on a subclass selected ONLY by
             # explicit opt-in: a reader that defines pushFilters makes
             # PySpark 4.1 raise DATA_SOURCE_PUSHDOWN_DISABLED on any
@@ -1137,10 +1047,7 @@ def _make_datasource_class():
                 ).lower() == "true"
                 else _SnapshotReader
             )
-            return cls(
-                self._table_dir(), fields, self.options,
-                phys_map=mapping,
-            )
+            return cls(self._table_dir(), *self._declared(), self.options)
 
         def writer(self, schema, overwrite: bool):
             return _VersionedBatchWriter(

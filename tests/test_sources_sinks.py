@@ -829,6 +829,7 @@ def test_versioned_merge_commit_and_change_feed(spark, tmp_path):
     from artis_data_ingest_spark.operators.merge import merge_upsert
     from artis_data_ingest_spark.sinks.versioned import (
         _read_manifest,
+        cdc_feed,
         change_feed,
         commit,
         merge_commit,
@@ -869,6 +870,26 @@ def test_versioned_merge_commit_and_change_feed(spark, tmp_path):
     feed = change_feed(spark, tdir, since=0)
     assert sorted((r.k, r["_deleted"]) for r in feed.collect()) \
         == [(2, False), (3, True), (4, False)]
+    # a source with no delete column and the table's own columns and
+    # types: its post-image segment is recorded as delta_files too, so
+    # the rows are written once and both feeds read the same rows
+    delta2 = spark.createDataFrame(
+        [(1, "A", 11), (5, "e", 50)], "k int, s string, v int"
+    )
+    assert merge_commit(spark, tdir, delta2, keys=["k"],
+                        note="merge-2") == 2
+    m2 = _read_manifest(tdir, 2)
+    assert m2["delta_files"] == [
+        f for f in m2["files"] if f not in m1["files"]
+    ]
+    feed2 = change_feed(spark, tdir, since=1)
+    assert sorted((r.k, r.s, r.v, r._version) for r in feed2.collect()) \
+        == [(1, "A", 11, 2), (5, "e", 50, 2)]
+    cdc2 = cdc_feed(spark, tdir, since=1)
+    assert sorted(
+        (r._change_type, r.k, r.s, r.v) for r in cdc2.collect()
+    ) == [("delete", 1, "a", 10), ("insert", 1, "A", 11),
+          ("insert", 5, "e", 50)]
 
 
 def test_change_feed_after_retention(spark, tmp_path):
@@ -944,8 +965,8 @@ def test_change_feed_after_expire_compact_boundary(spark, tmp_path):
 
 def test_read_version_schema_evolution(spark, tmp_path):
     """An append whose batch ADDS a column keeps the table readable:
-    read_version merges parquet footers (mergeSchema), so old segments
-    surface the new column as null — matching change_feed's
+    read_version reads under the version's recorded schema, so old
+    segments surface the new column as null — matching change_feed's
     allowMissingColumns tolerance (the reference's schema-change
     tracking, assess_changes.qmd:148-174)."""
     from artis_data_ingest_spark.sinks.versioned import (
@@ -1498,6 +1519,102 @@ def test_versioned_scan_all_pruned_after_schema_evolution(spark, tmp_path):
     out = scan(spark, d, filters=[("id", "=", -1), ("x", "=", 5)])
     assert out.columns == ["id", "x"]
     assert out.count() == 0
+
+
+def test_versioned_scan_columns_do_not_depend_on_pruning(spark, tmp_path):
+    """scan() serves the version's columns whichever files survive
+    stats pruning: a range that keeps only the file written before an
+    append added ``x`` still carries ``x``, as null."""
+    from artis_data_ingest_spark.sinks.versioned import (
+        commit,
+        prune_files,
+        scan,
+    )
+
+    d = str(tmp_path / "tbl")
+    commit(
+        spark.createDataFrame(
+            [(i, f"s{i}") for i in range(10)], "k bigint, s string"
+        ).coalesce(1),
+        d, mode="overwrite", expect_version=None,
+    )
+    commit(
+        spark.createDataFrame(
+            [(i, f"s{i}", 2 * i) for i in range(10, 15)],
+            "k bigint, s string, x bigint",
+        ).coalesce(1),
+        d, mode="append",
+    )
+    assert len(prune_files(d, [("k", "<", 5)])[0]) == 1
+    assert len(prune_files(d, [("k", ">=", 10)])[0]) == 1
+    low = scan(spark, d, filters=[("k", "<", 5)])
+    high = scan(spark, d, filters=[("k", ">=", 10)])
+    assert low.columns == high.columns == ["k", "s", "x"]
+    assert sorted((r.k, r.x) for r in low.collect()) \
+        == [(i, None) for i in range(5)]
+    assert sorted((r.k, r.x) for r in high.collect()) \
+        == [(i, 2 * i) for i in range(10, 15)]
+
+
+def test_versioned_reads_build_without_spark_jobs(spark, tmp_path):
+    """change_feed, cdc_feed, read_version and scan take every
+    version's schema from its manifest, so building the DataFrame runs
+    no Spark job (a parquet read without a schema runs one to infer
+    it)."""
+    from artis_data_ingest_spark.sinks.versioned import (
+        cdc_feed,
+        change_feed,
+        commit,
+        delete_where,
+        merge_commit,
+        read_version,
+        scan,
+    )
+
+    d = str(tmp_path / "tbl")
+    commit(
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "c")], "k bigint, s string"
+        ),
+        d, mode="overwrite", expect_version=None,
+    )
+    commit(
+        spark.createDataFrame([(4, "d", 40)], "k bigint, s string, v bigint"),
+        d, mode="append",
+    )
+    merge_commit(
+        spark, d,
+        spark.createDataFrame(
+            [(2, "B", 20), (5, "e", 50)], "k bigint, s string, v bigint"
+        ),
+        keys=["k"],
+    )
+    delete_where(spark, d, "k = 1")
+    sc = spark.sparkContext
+    builds = {
+        "change_feed": lambda: change_feed(spark, d, since=0),
+        "cdc_feed": lambda: cdc_feed(spark, d, since=0),
+        "read_version": lambda: read_version(spark, d, 2),
+        "scan": lambda: scan(spark, d, filters=[("k", ">=", 4)]),
+    }
+    jobs = {}
+    for name, build in builds.items():
+        group = f"plan-build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert "v" in df.columns
+    assert jobs == dict.fromkeys(builds, 0)
+    # the frames are the versions' rows
+    assert sorted(r.k for r in read_version(spark, d, 2).collect()) \
+        == [1, 2, 3, 4, 5]
+    assert sorted(
+        (r._change_type, r.k) for r in cdc_feed(spark, d, since=0).collect()
+    ) == [("delete", 1), ("delete", 2), ("insert", 2), ("insert", 4),
+          ("insert", 5)]
 
 
 def test_versioned_layout_survives_compact_and_merge(spark, tmp_path):

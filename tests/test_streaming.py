@@ -986,6 +986,49 @@ def test_versioned_merge_stream_cdc_upserts(spark, tmp_path):
     ) == final
 
 
+def test_versioned_feed_date_column(spark, tmp_path):
+    """A DATE column, which manifests record as pyarrow's
+    ``date32[day]``, reads through the versioned_feed source as DATE in
+    a batch read and in a stream micro-batch."""
+    import datetime
+
+    from artis_data_ingest_spark.sinks.versioned import commit
+    from artis_data_ingest_spark.streaming.source import (
+        register_versioned_feed,
+    )
+
+    register_versioned_feed(spark)
+    d = str(tmp_path / "tbl")
+    commit(
+        spark.range(3).select(
+            F.col("id").alias("k"),
+            F.expr("date_add(DATE'2024-01-30', CAST(id AS INT))")
+            .alias("day"),
+        ),
+        d, mode="overwrite", expect_version=None,
+    )
+    want = [
+        (0, datetime.date(2024, 1, 30)),
+        (1, datetime.date(2024, 1, 31)),
+        (2, datetime.date(2024, 2, 1)),
+    ]
+    snap = spark.read.format("versioned_feed").option("path", d).load()
+    assert snap.dtypes == [("k", "bigint"), ("day", "date"),
+                           ("_version", "bigint")]
+    assert sorted((r.k, r.day) for r in snap.collect()) == want
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("versioned_feed").option("path", d).load()
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    got = spark.read.parquet(out)
+    assert dict(got.dtypes)["day"] == "date"
+    assert sorted((r.k, r.day) for r in got.collect()) == want
+
+
 def test_versioned_feed_datasource_stream_and_batch(spark, tmp_path):
     """r12, streaming/source.py: the versioned change feed as a real
     Structured Streaming SOURCE (PySpark Python Data Source API) —
