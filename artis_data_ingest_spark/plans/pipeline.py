@@ -6007,15 +6007,17 @@ FROM v ORDER BY addr
 """,
     doc="Versioned table as a PYTHON DATA SOURCE (r12, "
     "streaming/source.py — PySpark 4 DataSource API): "
-    "spark.read.format('versioned_feed') scans a snapshot with ONE "
-    "INPUT PARTITION PER MANIFEST FILE (executors read parquet via "
-    "pyarrow in parallel; the driver touches manifests only), "
+    "spark.read.format('versioned_feed') scans a snapshot with its "
+    "manifest files PACKED INTO BYTE-SIZED INPUT PARTITIONS (Spark's "
+    "file-scan split size: a small table is one Python task, a large "
+    "one reads in parallel; the driver touches manifests and file "
+    "sizes only), "
     "addressed as latest, version=N, or asOfTimestamp=ts (resolved "
     "through version_at).  The hashed result pins all three "
     "addressing modes against states recomputed straight from "
     "orders, plus the _version tag column.  The STREAMING half of "
     "the same source — offsets are versions checkpointed by the "
-    "engine, one partition per delta file, exactly-once across "
+    "engine, delta files packed the same way, exactly-once across "
     "restarts, RetentionError on expired cursors — is pinned in "
     "tests/test_streaming.py (streaming sinks are side-effecting, "
     "so the batch half carries the oracle).",

@@ -462,12 +462,17 @@ def _footer_schema(files: Sequence[str]) -> dict[str, str]:
 
 
 #: Recorded arrow type string → Spark type, for the flat types table
-#: segments hold.  pyarrow spells DATE ``date32[day]``.
+#: segments hold.  pyarrow spells DATE ``date32[day]``.  Unsigned
+#: integers widen as Spark's parquet reader widens them.
 _SPARK_TYPES = {
     "int8": T.ByteType,
     "int16": T.ShortType,
     "int32": T.IntegerType,
     "int64": T.LongType,
+    "uint8": T.ShortType,
+    "uint16": T.IntegerType,
+    "uint32": T.LongType,
+    "uint64": lambda: T.DecimalType(20, 0),
     "float": T.FloatType,
     "double": T.DoubleType,
     "string": T.StringType,

@@ -9,10 +9,12 @@ two optimizations the reference's read-everything ``fread`` lacks
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,8 +30,34 @@ TABLES = (
 )
 
 
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, built on the
+    driver from one footer by Spark's own converter under the session's
+    conf (``nanosAsLong``, ``inferTimestampNTZ``, ...) — the inference
+    without its one-task Spark job.  A directory is read by its first
+    data file, as Spark does without ``mergeSchema``."""
+    if os.path.isdir(path):
+        path = os.path.join(path, min(
+            f for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ))
+    jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hadoop = jvm.org.apache.parquet.hadoop
+    footer = hadoop.Footer(
+        hpath, hadoop.ParquetFileReader.readFooter(state.newHadoopConf(), hpath)
+    )
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        footer, parquet.ParquetToSparkSchemaConverter(state.conf())
+    )
+    return StructType.fromJson(json.loads(schema.json()))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy scan of one fixture table.
+    """Lazy scan of one fixture table, its schema read from the file's
+    footer on the driver (:func:`_footer_schema`), so building the
+    frame runs no Spark job.
 
     At 100 TB these would be partitioned/bucketed datasets; a plain
     ``spark.read.parquet`` still scales because file listing and split
@@ -52,7 +80,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # harmless either way — the dtype dispatch below handles both
             # the bigint (conf took effect) and timestamp outcomes.
             pass
-    df = spark.read.parquet(path)
+    df = spark.read.schema(_footer_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     # A session with spark.sql.parquet.inferTimestampNTZ.enabled reads

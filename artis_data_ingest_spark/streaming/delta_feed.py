@@ -25,9 +25,10 @@ batches are Arrow RecordBatches cast to the declared schema, the
 same zero-copy path as the versioned_feed source.
 
 Scale: ``latestOffset`` is one log listing; ``partitions`` reads the
-JSON commits in the range (driver metadata); each input partition is
-ONE data file, so read parallelism = files per trigger, and
-``maxFilesPerTrigger`` bounds a catch-up burst.
+JSON commits in the range (driver metadata) and packs the added files
+into byte-sized input partitions (``source._pack_units``, Spark's file
+scan split size), so a small trigger is one Python task and a large
+one reads in parallel; ``maxFilesPerTrigger`` bounds a catch-up burst.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ from ..sources.delta import (
     _read_commit,
     _snapshot_state,
 )
+from .source import _pack_units, _split_conf
 
 # DataType.simpleString() already speaks DDL — this is the closed
 # set of scalar types the stream's Arrow cast path handles
@@ -87,18 +89,10 @@ def _arrow_type(ddl: str):
     raise DeltaProtocolError(f"no arrow mapping for {ddl!r}")
 
 
-def _make_delta_feed_class():
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    class _DeltaFile(InputPartition):
-        def __init__(self, path, version, pvals):
-            self.path = path
-            self.version = version
-            self.pvals = pvals  # [(col, ddl_type, raw_string)]
+def _make_delta_feed_class(split):
+    """Build the DataSource class; its reader packs files with
+    ``split``, the registering session's :func:`~.source._split_conf`."""
+    from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 
     class _DeltaFeedStreamReader(DataSourceStreamReader):
         def __init__(self, table_dir, fields, part_cols, options):
@@ -219,32 +213,33 @@ def _make_delta_feed_class():
                         self._dir, rel
                     )
                     pv = a.get("partitionValues") or {}
-                    out.append(_DeltaFile(
+                    # (path, version, [(col, ddl_type, raw_string)])
+                    out.append((
                         path, v,
                         [(c, t, pv.get(c)) for c, t in self._part_cols],
                     ))
-            return out
+            return _pack_units(out, split)
 
         def read(self, partition):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            tbl = pq.read_table(partition.path)
-            n = len(tbl)
-            for col, ddl, raw in partition.pvals:
-                at = _arrow_type(ddl)
-                arr = pa.array([raw] * n, pa.string()).cast(at)
-                tbl = tbl.append_column(col, arr)
-            tbl = tbl.append_column(
-                "_commit_version",
-                pa.array([partition.version] * n, pa.int64()),
-            )
             target = pa.schema(
                 [pa.field(nm, _arrow_type(t)) for nm, t in self._fields]
                 + [pa.field("_commit_version", pa.int64())]
             )
-            tbl = tbl.select(target.names).cast(target)
-            yield from tbl.to_batches()
+            for path, version, pvals in partition.value:
+                tbl = pq.read_table(path)
+                n = len(tbl)
+                for col, ddl, raw in pvals:
+                    at = _arrow_type(ddl)
+                    arr = pa.array([raw] * n, pa.string()).cast(at)
+                    tbl = tbl.append_column(col, arr)
+                tbl = tbl.append_column(
+                    "_commit_version", pa.array([version] * n, pa.int64())
+                )
+                tbl = tbl.select(target.names).cast(target)
+                yield from tbl.to_batches()
 
         def commit(self, end: dict) -> None:
             self._committed = int(end["version"])
@@ -297,7 +292,7 @@ def _make_delta_feed_class():
 def register_delta_feed(spark) -> None:
     """Register ``delta_feed`` on this session (idempotent)."""
     try:
-        spark.dataSource.register(_make_delta_feed_class())
+        spark.dataSource.register(_make_delta_feed_class(_split_conf(spark)))
     except Exception as e:  # noqa: BLE001
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
             raise

@@ -36,8 +36,8 @@ one; default replay from the beginning), ``maxFilesPerTrigger``.
 
 Scale: ``latestOffset`` is one timeline listing; ``partitions``
 walks file names plus log-block HEADERS (framing only, content not
-decoded) on the driver; each input partition is one base or log
-file read by one worker task.
+decoded) on the driver and packs the base and log files into
+byte-sized input partitions (``source._pack_units``).
 """
 
 from __future__ import annotations
@@ -50,6 +50,7 @@ from ..sources.hudi import (
     _LOG_RE,
     _completed_instants,
 )
+from .source import _pack_units, _split_conf
 
 _ARROW_DDL = {
     "int8": "tinyint", "int16": "smallint", "int32": "int",
@@ -137,18 +138,10 @@ def _instant_files(table_dir: str, instant: str) -> list[tuple]:
     return out
 
 
-def _make_hudi_feed_class():
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    class _HudiFile(InputPartition):
-        def __init__(self, kind, path, instant):
-            self.kind = kind
-            self.path = path
-            self.instant = instant
+def _make_hudi_feed_class(split):
+    """Build the DataSource class; its reader packs files with
+    ``split``, the registering session's :func:`~.source._split_conf`."""
+    from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 
     class _HudiFeedStreamReader(DataSourceStreamReader):
         def __init__(self, table_dir, fields, options):
@@ -213,8 +206,8 @@ def _make_hudi_feed_class():
             for i in range(int(start["index"]) + 1,
                            int(end["index"]) + 1):
                 for kind, path in _instant_files(self._dir, log[i]):
-                    out.append(_HudiFile(kind, path, log[i]))
-            return out
+                    out.append((path, kind, log[i]))
+            return _pack_units(out, split)
 
         def read(self, partition):
             import pyarrow as pa
@@ -228,30 +221,29 @@ def _make_hudi_feed_class():
                 [pa.field(n, _arrow_type(t))
                  for n, t in self._fields]
             )
-            if partition.kind == "base":
-                tbl = pq.read_table(partition.path)
-                tbl = tbl.filter(
-                    pc.equal(tbl["_hoodie_commit_time"],
-                             partition.instant)
-                )
-                tbl = tbl.select(names).cast(target)
-            else:
-                with open(partition.path, "rb") as fh:
-                    data = fh.read()
-                recs = [
-                    rec
-                    for _inst, _seq, is_del, rec in log_records(
-                        data, {partition.instant}, partition.instant
+            for path, kind, instant in partition.value:
+                if kind == "base":
+                    tbl = pq.read_table(path)
+                    tbl = tbl.filter(
+                        pc.equal(tbl["_hoodie_commit_time"], instant)
                     )
-                    if not is_del
-                    and rec.get("_hoodie_commit_time")
-                    == partition.instant
-                ]
-                tbl = pa.table(
-                    {n: [r.get(n) for r in recs] for n in names},
-                    schema=target,
-                )
-            yield from tbl.to_batches()
+                    tbl = tbl.select(names).cast(target)
+                else:
+                    with open(path, "rb") as fh:
+                        data = fh.read()
+                    recs = [
+                        rec
+                        for _inst, _seq, is_del, rec in log_records(
+                            data, {instant}, instant
+                        )
+                        if not is_del
+                        and rec.get("_hoodie_commit_time") == instant
+                    ]
+                    tbl = pa.table(
+                        {n: [r.get(n) for r in recs] for n in names},
+                        schema=target,
+                    )
+                yield from tbl.to_batches()
 
         def commit(self, end: dict) -> None:
             self._committed = int(end["index"])
@@ -309,7 +301,9 @@ def _arrow_type(ddl: str):
 def register_hudi_feed(spark) -> None:
     """Register ``hudi_feed`` on this session (idempotent)."""
     try:
-        spark.dataSource.register(_make_hudi_feed_class())
+        spark.dataSource.register(
+            _make_hudi_feed_class(_split_conf(spark))
+        )
     except Exception as e:  # noqa: BLE001
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
             raise

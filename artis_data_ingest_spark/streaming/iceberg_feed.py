@@ -23,8 +23,8 @@ stream's clock.
 
 Scale: ``latestOffset`` is one metadata-JSON read; ``partitions``
 decodes the two manifest lists of the hop (driver metadata, our own
-Avro codec — no session needed); each input partition is one data
-file.
+Avro codec — no session needed) and packs the appended data files
+into byte-sized input partitions (``source._pack_units``).
 """
 
 from __future__ import annotations
@@ -37,6 +37,7 @@ from ..sources.iceberg import (
     _norm_path,
     _snapshot_files,
 )
+from .source import _pack_units, _split_conf
 
 _DDL_SCALARS = {
     "bigint", "int", "smallint", "tinyint", "string", "double",
@@ -82,17 +83,10 @@ def _arrow_type(ddl: str):
     raise IcebergProtocolError(f"no arrow mapping for {ddl!r}")
 
 
-def _make_iceberg_feed_class():
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    class _IcebergFile(InputPartition):
-        def __init__(self, path, snapshot_id):
-            self.path = path
-            self.snapshot_id = snapshot_id
+def _make_iceberg_feed_class(split):
+    """Build the DataSource class; its reader packs files with
+    ``split``, the registering session's :func:`~.source._split_conf`."""
+    from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 
     class _IcebergFeedStreamReader(DataSourceStreamReader):
         def __init__(self, table_dir, fields, options):
@@ -185,26 +179,26 @@ def _make_iceberg_feed_class():
             for i in range(int(start["index"]) + 1,
                            int(end["index"]) + 1):
                 for p in self._appended(log, i):
-                    out.append(_IcebergFile(p, log[i]))
-            return out
+                    out.append((p, log[i]))
+            return _pack_units(out, split)
 
         def read(self, partition):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            tbl = pq.read_table(partition.path)
-            tbl = tbl.append_column(
-                "_snapshot_id",
-                pa.array([partition.snapshot_id] * len(tbl),
-                         pa.int64()),
-            )
             target = pa.schema(
                 [pa.field(nm, _arrow_type(t))
                  for nm, t in self._fields]
                 + [pa.field("_snapshot_id", pa.int64())]
             )
-            tbl = tbl.select(target.names).cast(target)
-            yield from tbl.to_batches()
+            for path, snapshot_id in partition.value:
+                tbl = pq.read_table(path)
+                tbl = tbl.append_column(
+                    "_snapshot_id",
+                    pa.array([snapshot_id] * len(tbl), pa.int64()),
+                )
+                tbl = tbl.select(target.names).cast(target)
+                yield from tbl.to_batches()
 
         def commit(self, end: dict) -> None:
             self._committed = int(end["index"])
@@ -245,7 +239,9 @@ def _make_iceberg_feed_class():
 def register_iceberg_feed(spark) -> None:
     """Register ``iceberg_feed`` on this session (idempotent)."""
     try:
-        spark.dataSource.register(_make_iceberg_feed_class())
+        spark.dataSource.register(
+            _make_iceberg_feed_class(_split_conf(spark))
+        )
     except Exception as e:  # noqa: BLE001
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
             raise

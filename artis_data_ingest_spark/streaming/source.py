@@ -17,19 +17,22 @@ Design (scale-shaped, not driver-shaped):
     ``startingTimestamp`` (resolved via :func:`version_at` — the
     timestamp cursor, r12);
   * each micro-batch covers the versions committed since the last
-    offset; ``partitions(start, end)`` expands them into ONE INPUT
-    PARTITION PER DELTA FILE (``version_delta_files`` — the same
+    offset; ``partitions(start, end)`` expands them into their delta
+    files (``version_delta_files`` — the same
     append/overwrite/merge/restore/compact semantics as
-    ``change_feed``), so executors read files in parallel exactly like
-    a parquet scan: the driver touches manifests only, never data;
+    ``change_feed``) and PACKS them into byte-sized input partitions
+    (:func:`_pack_units`, Spark's own file-scan split size), so a
+    small commit is one Python task and a large one splits like a
+    parquet scan: the driver touches manifests and file sizes only,
+    never data;
   * ``read(partition)`` runs executor-side and yields
-    ``pyarrow.RecordBatch`` objects (r13): pyarrow reads the one
-    parquet file, every column is cast to the DECLARED Arrow schema
-    (columns a pre-evolution file lacks become null arrays, as in
-    every versioned-table read), ``_version`` is appended as a constant
-    int64 column, and the whole file flows to Spark as Arrow batches —
-    zero per-row Python object construction, the same vectorized
-    transfer Spark's own parquet source uses;
+    ``pyarrow.RecordBatch`` objects (r13): for each file of the
+    partition, pyarrow reads the parquet file, every column is cast to
+    the DECLARED Arrow schema (columns a pre-evolution file lacks
+    become null arrays, as in every versioned-table read), ``_version``
+    is appended as a constant int64 column, and the file flows to
+    Spark as Arrow batches — zero per-row Python object construction,
+    the same vectorized transfer Spark's own parquet source uses;
   * ADMISSION CONTROL (r13): ``maxVersionsPerTrigger`` /
     ``maxFilesPerTrigger`` bound each micro-batch the way Delta's
     maxFilesPerTrigger / Kafka's maxOffsetsPerTrigger do — a consumer
@@ -57,9 +60,10 @@ readers cast to its Arrow form (``to_arrow_schema``, no session
 needed).  A BATCH reader
 is registered too (``spark.read.format("versioned_feed")``): the
 current full state, or ``version``/``asOfTimestamp`` time travel,
-one Arrow-batched partition per file, deletion vectors masked per
-partition, and OPT-IN filter pushdown (``filterPushdown`` — manifest
-stats + Bloom pruning from Spark's own pushed predicates).
+the surviving files packed into byte-sized Arrow-batched partitions
+like the stream's, deletion vectors masked per file, and OPT-IN filter
+pushdown (``filterPushdown`` — manifest stats + Bloom pruning from
+Spark's own pushed predicates).
 
 r13 additions beyond the reader:
 
@@ -100,7 +104,7 @@ def _read_file_batches(path: str, pa_schema, version: int,
 
     table = pq.read_table(path)
     if take_positions is not None:
-        # CDC recovery (r13 readChangeFeed): this partition carries
+        # CDC recovery (r13 readChangeFeed): this unit carries
         # exactly the rows a deletion vector named — the INVERSE of
         # the snapshot reader's mask
         table = table.take(
@@ -135,25 +139,66 @@ def _read_file_batches(path: str, pa_schema, version: int,
     yield from out.to_batches(max_chunksize=1 << 16)
 
 
-class _FilePartition:
-    """One delta file of one version — the parallelism unit."""
-
-    def __init__(self, path: str, version: int):
-        self.path = path
-        self.version = version
+#: Spark's defaults for ``spark.sql.files.maxPartitionBytes`` and
+#: ``spark.sql.files.openCostInBytes``
+_MAX_PARTITION_BYTES = 128 << 20
+_OPEN_COST_BYTES = 4 << 20
 
 
-def _delta_partitions(
-    table_dir: str, after: int, upto: int
-) -> list[_FilePartition]:
-    from ..sinks.versioned import list_versions, version_delta_files
+def _split_conf(spark=None) -> tuple[int, int, int]:
+    """(maxPartitionBytes, openCostInBytes, defaultParallelism) of the
+    session; without one, Spark's defaults and ``os.cpu_count()``."""
+    if spark is None:
+        return _MAX_PARTITION_BYTES, _OPEN_COST_BYTES, _os.cpu_count() or 1
+    conf = spark._jsparkSession.sessionState().conf()
+    return (
+        conf.filesMaxPartitionBytes(),
+        conf.filesOpenCostInBytes(),
+        spark.sparkContext.defaultParallelism,
+    )
 
-    parts: list[_FilePartition] = []
-    for v in list_versions(table_dir):
-        if after < v <= upto:
-            for f in version_delta_files(table_dir, v):
-                parts.append(_FilePartition(f, v))
-    return parts
+
+def _pack_units(units, split):
+    """Group a read's file units (tuples whose first field is the
+    file's path) into input partitions, each carrying its list of
+    units as ``partition.value``.
+
+    The split size is Spark's file scan's
+    (``FilePartition.maxSplitBytes``): ``min(maxPartitionBytes,
+    max(openCostInBytes, totalBytes / defaultParallelism))``.  Files
+    go largest first, a file joins the open partition while its bytes
+    stay within the split, and a file is never cut.  Unlike Spark's,
+    the open cost is not charged once per file: what a Python
+    partition costs is its task (a forked interpreter and one
+    JVM-Python round trip), so a small read is one task however many
+    files it holds.  Within a partition units keep their given order,
+    and partitions are ordered by their first unit."""
+    from pyspark.sql.datasource import InputPartition
+
+    max_bytes, open_cost, parallelism = split
+    sizes = [_os.path.getsize(u[0]) for u in units]
+    cap = min(max_bytes, max(open_cost, sum(sizes) // parallelism))
+    parts: list[list[int]] = []
+    held = 0
+    for i in sorted(range(len(units)), key=lambda i: -sizes[i]):
+        if not parts or held + sizes[i] > cap:
+            parts.append([])
+            held = 0
+        parts[-1].append(i)
+        held += sizes[i]
+    return [
+        InputPartition([units[i] for i in p])
+        for p in sorted(sorted(p) for p in parts)
+    ]
+
+
+def _read_units(units, pa_schema, phys_map):
+    """Executor-side: the Arrow batches of one packed partition's
+    ``(path, version, drop, take, kind)`` units, file by file."""
+    for path, version, drop, take, kind in units:
+        yield from _read_file_batches(
+            path, pa_schema, version, drop, phys_map, take, kind
+        )
 
 
 def _cdc_plan(
@@ -178,7 +223,7 @@ def _cdc_plan(
     merges.  FULL-STATE REWRITES (restore, overwrite of a non-empty
     table, and the DV-less merge versions of tables written before
     merges used deletion vectors) need a distributed bag-difference
-    the per-file stream partition model cannot express — batch
+    the stream's per-file units cannot express — batch
     ``cdc_feed`` decomposes them exactly; here they raise
     :class:`CDCDecompositionError` (r14) unless
     ``allowFullRewrites`` opts into surfacing the rewritten state as
@@ -256,17 +301,19 @@ def _cdc_plan(
     return plan
 
 
-def _make_datasource_class():
+def _make_datasource_class(split=None):
     """Build the DataSource class lazily: pyspark.sql.datasource is a
     PySpark-4-only module, and constructing the class at import time
-    would make this module un-importable on older runtimes."""
+    would make this module un-importable on older runtimes.  ``split``
+    is the :func:`_split_conf` its readers pack files with (Spark's
+    defaults when None)."""
+    split = split or _split_conf()
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceArrowWriter,
         DataSourceReader,
         DataSourceStreamArrowWriter,
         DataSourceStreamReader,
-        InputPartition,
         WriterCommitMessage,
     )
 
@@ -505,15 +552,6 @@ def _make_datasource_class():
         def abort(self, messages, batchId: int) -> None:
             _drop_staged(self._staging)
 
-    class _Part(InputPartition):
-        def __init__(self, path: str, version: int, drop=None,
-                     take=None, kind=None):
-            self.path = path
-            self.version = version
-            self.drop = drop  # deletion-vector row positions, if any
-            self.take = take  # CDC: positions to RECOVER (not mask)
-            self.kind = kind  # CDC: _change_type for this partition
-
     class _FeedStreamReader(DataSourceStreamReader):
         """Admission-control design notes (r13).  The Python
         stream-reader API never passes the start offset to
@@ -708,6 +746,8 @@ def _make_datasource_class():
             from ..sinks.versioned import (
                 RetentionError,
                 earliest_feed_version,
+                list_versions,
+                version_delta_files,
             )
 
             lo = int(start["version"])
@@ -735,28 +775,25 @@ def _make_datasource_class():
                 allow_rw = str(
                     self._options.get("allowFullRewrites", "false")
                 ).lower() == "true"
-                return [
-                    _Part(path, v, take=take, kind=kind)
+                units = [
+                    (path, v, None, take, kind)
                     for path, v, take, kind in _cdc_plan(
                         self._dir, lo, hi,
                         allow_full_rewrites=allow_rw,
                     )
                 ]
-            return [
-                _Part(p.path, p.version)
-                for p in _delta_partitions(self._dir, lo, hi)
-            ]
+            else:
+                units = [
+                    (f, v, None, None, None)
+                    for v in list_versions(self._dir)
+                    if lo < v <= hi
+                    for f in version_delta_files(self._dir, v)
+                ]
+            return _pack_units(units, split)
 
         def read(self, partition):
-            yield from _read_file_batches(
-                partition.path,
-                self._pa_schema,
-                partition.version,
-                phys_map=self._phys_map,
-                take_positions=getattr(partition, "take", None),
-                change_type=getattr(partition, "kind", None)
-                if self._cdc
-                else None,
+            yield from _read_units(
+                partition.value, self._pa_schema, self._phys_map
             )
 
         def commit(self, end: dict) -> None:
@@ -830,31 +867,22 @@ def _make_datasource_class():
             return cur
 
         def partitions(self):
-            import os as _p_os
-
             from ..sinks.versioned import _dv_positions, _read_manifest
 
             v = self._version()
             m = _read_manifest(self._dir, v)
             # deletion vectors are KB-scale: resolve them to per-file
-            # position lists driver-side so each input partition masks
-            # its own rows
+            # position lists driver-side so each file unit masks its
+            # own rows
             drops = _dv_positions(m.get("dv_files", []))
-            return [
-                _Part(
-                    f, v,
-                    drops.get(_p_os.path.abspath(f)) or None,
-                )
+            return _pack_units([
+                (f, v, drops.get(_os.path.abspath(f)) or None, None, None)
                 for f in self._pruned_files(v, m["files"])
-            ]
+            ], split)
 
         def read(self, partition):
-            yield from _read_file_batches(
-                partition.path,
-                self._pa_schema,
-                partition.version,
-                getattr(partition, "drop", None),
-                phys_map=self._phys_map,
+            yield from _read_units(
+                partition.value, self._pa_schema, self._phys_map
             )
 
     class _PushdownSnapshotReader(_SnapshotReader):
@@ -1076,7 +1104,9 @@ def register_versioned_feed(spark) -> None:
     that half-registered state and raise a clear error instead of
     leaving a session that claims the source but cannot read it."""
     try:
-        spark.dataSource.register(_make_datasource_class())
+        spark.dataSource.register(
+            _make_datasource_class(_split_conf(spark))
+        )
     except Exception as e:  # noqa: BLE001 — narrowed on the error code
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
             raise

@@ -118,7 +118,12 @@ aggregate through the DataSource, min-of-3 warm (local[8]): 4M rows x
 tie (~2.7 s) because worker startup + plan overhead dominates — the
 per-row path is O(rows) Python object construction, so the gap widens
 with scale.  Existing stream/resume/retention hashes unchanged
-(tests/test_streaming.py:989,1120).
+(tests/test_streaming.py:989,1120).  That A/B planned one partition per
+file.  Every feed reader now packs files into byte-sized partitions
+(streaming/source.py:_pack_units, Spark's file-scan split size): a
+table whose files sum to under openCostInBytes (4 MB) reads in one
+Python task, a larger one splits across workers.  The figures above
+were not re-measured under packing.
 
 r13 HARDWARE VARIANCE (read before comparing BENCH_r13 to earlier
 rounds): round 13 spanned several container boots, and the boots

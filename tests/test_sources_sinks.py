@@ -1434,6 +1434,63 @@ def test_load_table_casts_timestamp_ntz(spark, tmp_path):
         spark.conf.set(key, old)
 
 
+def test_load_table_schema_from_footer(spark, tmp_path):
+    """load_table gives the bare parquet read's columns and types (its
+    naive timestamps as TIMESTAMP) for every fixture table, with
+    inferTimestampNTZ on and off, and building the frames runs no
+    Spark job: the schema comes from each file's footer on the
+    driver."""
+    import datetime
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from conftest import SF_DIR
+
+    from artis_data_ingest_spark.sources.tables import TABLES, load_table
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_DIR, sf)
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2], pa.int64()),
+            "naive": pa.array([datetime.datetime(2024, 1, 1)] * 2,
+                              pa.timestamp("us")),
+            "aware": pa.array([datetime.datetime(2024, 1, 1)] * 2,
+                              pa.timestamp("us", tz="UTC")),
+            "day": pa.array([datetime.date(2024, 1, 1)] * 2),
+            "amount": pa.array([1, 2], pa.decimal128(12, 2)),
+            "small": pa.array([1, 2], pa.int16()),
+        }),
+        f"{sf}/stamps.parquet",
+    )
+    names = [*TABLES, "stamps"]
+    sc = spark.sparkContext
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    try:
+        for ntz in ("true", "false"):
+            spark.conf.set(key, ntz)
+            group = f"load-table-ntz-{ntz}"
+            sc.setJobGroup(group, group)
+            try:
+                frames = {n: load_table(spark, sf, n) for n in names}
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+            for n, df in frames.items():
+                bare = spark.read.parquet(f"{sf}/{n}.parquet")
+                assert df.dtypes == [
+                    (c, "timestamp" if t == "timestamp_ntz" else t)
+                    for c, t in bare.dtypes
+                ], n
+            assert dict(frames["stamps"].dtypes)["naive"] == "timestamp"
+            assert frames["stamps"].count() == 2
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_pdf_malformed_structures_never_raise():
     """r12 ADVICE fix: wild malformations in the 1.5 parse paths (odd
     CMap hex, junk /Index tokens, corrupt ObjStm headers) degrade to
@@ -4083,6 +4140,54 @@ def test_convert_to_versioned_lifecycle(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         convert_to_versioned(str(tmp_path / "empty"),
                              str(tmp_path / "t2"))
+
+
+def test_convert_to_versioned_unsigned_columns(spark, tmp_path):
+    """A table adopted from pyarrow-written files with unsigned integer
+    columns reads with the types Spark's parquet reader gives them
+    (uint8 → smallint, uint16 → int, uint32 → bigint, uint64 →
+    decimal(20,0)), through read_version and a batch versioned_feed
+    read alike."""
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from artis_data_ingest_spark.sinks.versioned import (
+        convert_to_versioned,
+        read_version,
+    )
+    from artis_data_ingest_spark.streaming.source import (
+        register_versioned_feed,
+    )
+
+    plain = tmp_path / "plain"
+    plain.mkdir()
+    pq.write_table(
+        pa.table({
+            "a": pa.array([1, 255], pa.uint8()),
+            "b": pa.array([2, 65535], pa.uint16()),
+            "c": pa.array([3, 2**32 - 1], pa.uint32()),
+            "d": pa.array([4, 2**64 - 1], pa.uint64()),
+        }),
+        str(plain / "u.parquet"),
+    )
+    bare = spark.read.parquet(str(plain / "u.parquet"))
+    want_types = {
+        "a": "smallint", "b": "int", "c": "bigint", "d": "decimal(20,0)",
+    }
+    assert dict(bare.dtypes) == want_types
+    want = [
+        (1, 2, 3, decimal.Decimal(4)),
+        (255, 65535, 2**32 - 1, decimal.Decimal(2**64 - 1)),
+    ]
+    d = str(tmp_path / "tbl")
+    convert_to_versioned(str(plain), d, timestamp=100.0)
+    register_versioned_feed(spark)
+    feed = spark.read.format("versioned_feed").load(d).drop("_version")
+    for df in (read_version(spark, d), feed):
+        assert dict(df.dtypes) == want_types
+        assert sorted(tuple(r) for r in df.collect()) == want
 
 
 def test_versioned_table_detail(spark, tmp_path):

@@ -1462,15 +1462,19 @@ def test_versioned_feed_filter_pushdown(spark, tmp_path):
     assert load().filter("tag = 'u123'").count() == 1
     assert load().count() == 100000
 
-    # the reader actually prunes partitions (stats for =/range/IN,
-    # blooms for equality on the unsorted high-cardinality key)
+    # the reader actually prunes files (stats for =/range/IN, blooms
+    # for equality on the unsorted high-cardinality key); files are
+    # packed into partitions, so count the file units they carry
     klass = S._make_datasource_class()
     inst = klass(options={"path": d, "filterPushdown": "true"})
+
+    def files(rd):
+        return sum(len(p.value) for p in rd.partitions())
 
     def parts(*filters):
         rd = inst.reader(None)
         list(rd.pushFilters(list(filters)))
-        return len(rd.partitions())
+        return files(rd)
 
     assert parts() == 8
     assert parts(EqualTo(("k",), 77)) == 1
@@ -1479,8 +1483,8 @@ def test_versioned_feed_filter_pushdown(spark, tmp_path):
     # state never leaks into the next filterless plan
     rd = inst.reader(None)
     list(rd.pushFilters([EqualTo(("k",), 77)]))
-    assert len(rd.partitions()) == 1
-    assert len(rd.partitions()) == 8
+    assert files(rd) == 1
+    assert files(rd) == 8
 
     # default (no option): mixed reuse of ONE DataFrame stays exact
     df = spark.read.format("versioned_feed").option("path", d).load()
@@ -1502,7 +1506,211 @@ def test_versioned_feed_filter_pushdown(spark, tmp_path):
             for k in base.__dict__
         }
     )
-    assert len(rd2.partitions()) == 8
+    assert files(rd2) == 8
+
+
+def test_versioned_feed_packs_small_table_into_one_partition(
+    spark, tmp_path
+):
+    """Files are packed into byte-sized partitions with Spark's file
+    scan split size, so a multi-file table far under the split is one
+    partition, for the batch reader and the stream reader alike."""
+    from pyspark.sql import functions as F
+
+    from artis_data_ingest_spark.sinks.versioned import _read_manifest, commit
+    from artis_data_ingest_spark.streaming import source as S
+
+    d = str(tmp_path / "tbl")
+    commit(
+        spark.range(4000).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        ),
+        d, mode="overwrite", n_files=6, timestamp=100.0,
+    )
+    commit(
+        spark.range(4000, 4100).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        ),
+        d, mode="append", n_files=2, timestamp=200.0,
+    )
+    files = _read_manifest(d, 1)["files"]
+    assert len(files) >= 4
+    ds = S._make_datasource_class()(options={"path": d})
+    parts = ds.reader(None).partitions()
+    assert len(parts) == 1
+    assert sorted(u[0] for u in parts[0].value) == sorted(files)
+    stream = ds.streamReader(None).partitions(
+        {"version": -1}, {"version": 1}
+    )
+    assert len(stream) == 1 and len(stream[0].value) == len(files)
+    # the session's conf is what registration packs with
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1m")
+    try:
+        assert S._split_conf(spark) == (
+            1 << 20, 4 << 20, spark.sparkContext.defaultParallelism
+        )
+    finally:
+        spark.conf.set(key, old)
+    S.register_versioned_feed(spark)
+    got = spark.read.format("versioned_feed").load(d)
+    assert got.rdd.getNumPartitions() == 1
+    assert got.count() == 4100
+
+
+def test_versioned_feed_splits_at_max_partition_bytes(spark, tmp_path):
+    """Files larger in sum than maxPartitionBytes split into several
+    partitions, largest first; no partition holds more than the split
+    unless it holds one file, and no file is cut or read twice."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from artis_data_ingest_spark.sinks.versioned import (
+        _read_manifest,
+        commit,
+        read_version,
+    )
+    from artis_data_ingest_spark.streaming import source as S
+
+    d = str(tmp_path / "tbl")
+    commit(
+        spark.range(20000).select(
+            F.col("id").alias("k"), F.sha2(F.col("id").cast("string"), 256)
+            .alias("h"),
+        ),
+        d, mode="overwrite", n_files=6, timestamp=100.0,
+    )
+    files = _read_manifest(d, 0)["files"]
+    sizes = {f: os.path.getsize(f) for f in files}
+    split = max(sizes.values()) * 2 + 1
+    parts = S._pack_units([(f,) for f in files], (split, 1, 1))
+    assert len(parts) > 1
+    packed = [u[0] for p in parts for u in p.value]
+    assert sorted(packed) == sorted(files)
+    for p in parts:
+        held = sum(sizes[u[0]] for u in p.value)
+        assert held <= split or len(p.value) == 1
+    # one file over the split is still one whole partition
+    tiny = S._pack_units([(f,) for f in files], (1, 1, 1))
+    assert [len(p.value) for p in tiny] == [1] * len(files)
+    # a reader built with that split returns the table's rows
+    ds = S._make_datasource_class((split, 1, 1))(options={"path": d})
+    rd = ds.reader(None)
+    planned = rd.partitions()
+    assert len(planned) == len(parts)
+    rows = sorted(
+        r for p in planned for b in rd.read(p)
+        for r in zip(*b.to_pydict().values())
+    )
+    want = sorted(
+        (r.k, r.h, 0) for r in read_version(spark, d, 0).collect()
+    )
+    assert rows == want
+
+
+def test_versioned_feed_packed_deletion_vectors(spark, tmp_path):
+    """One packed partition mixing deletion-vector-masked and unmasked
+    files returns read_version's rows."""
+    from pyspark.sql import functions as F
+
+    from artis_data_ingest_spark.sinks.versioned import (
+        commit,
+        delete_where,
+        read_version,
+    )
+    from artis_data_ingest_spark.streaming import source as S
+
+    d = str(tmp_path / "tbl")
+    commit(
+        spark.range(1000).select(
+            F.col("id").alias("k"), (F.col("id") % 5).alias("v")
+        ).repartitionByRange(4, "k"),
+        d, mode="overwrite", n_files=4, cluster_by=["k"], timestamp=100.0,
+    )
+    delete_where(spark, d, "k < 100 or k between 600 and 650",
+                 timestamp=200.0)
+    parts = S._make_datasource_class()(options={"path": d}) \
+        .reader(None).partitions()
+    assert len(parts) == 1
+    units = parts[0].value
+    assert len(units) == 4
+    masked = [u for u in units if u[2]]
+    assert 0 < len(masked) < len(units)
+    S.register_versioned_feed(spark)
+    got = spark.read.format("versioned_feed").load(d).drop("_version")
+    want = read_version(spark, d)
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in want.collect()
+    )
+    assert got.count() == 849
+
+
+def test_versioned_feed_cdc_stream_packed_matches_batch(spark, tmp_path):
+    """The CDC stream over a delete, an update and a merge packs every
+    insert and retraction unit into one partition and returns batch
+    cdc_feed's rows, row for row."""
+    from pyspark.sql import functions as F
+
+    from artis_data_ingest_spark.sinks.versioned import (
+        cdc_feed,
+        commit,
+        delete_where,
+        merge_commit,
+        update_where,
+    )
+    from artis_data_ingest_spark.streaming import source as S
+
+    d = str(tmp_path / "tbl")
+    commit(
+        spark.range(100).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        ),
+        d, mode="overwrite", n_files=3, timestamp=100.0,
+    )
+    delete_where(spark, d, "k % 7 = 0", timestamp=200.0)
+    update_where(spark, d, {"v": "v + 1"}, "k between 20 and 40",
+                 timestamp=300.0)
+    merge_commit(
+        spark, d,
+        spark.createDataFrame(
+            [(30, 999), (55, 555), (500, 5000)], "k long, v long"
+        ),
+        keys=["k"], timestamp=400.0,
+    )
+    ds = S._make_datasource_class()(
+        options={"path": d, "readChangeFeed": "true"}
+    )
+    parts = ds.streamReader(None).partitions(
+        {"version": 0}, {"version": 3}
+    )
+    assert len(parts) == 1
+    assert {u[4] for u in parts[0].value} == {
+        "delete", "update_preimage", "update_postimage", "insert",
+    }
+    S.register_versioned_feed(spark)
+    rows = []
+    q = (
+        spark.readStream.format("versioned_feed")
+        .option("path", d).option("readChangeFeed", "true")
+        .option("startingVersion", "0").load()
+        .writeStream.foreachBatch(
+            lambda df, _: rows.extend(
+                tuple(r) for r in
+                df.select("k", "v", "_version", "_change_type").collect()
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    want = [
+        tuple(r) for r in cdc_feed(spark, d, since=0)
+        .select("k", "v", "_version", "_change_type").collect()
+    ]
+    assert len(want) > 0
+    assert sorted(rows) == sorted(want)
 
 
 def test_stream_writer_complete_mode_overwrites(spark, tmp_path):
