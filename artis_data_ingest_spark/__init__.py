@@ -12,4 +12,8 @@ Design stance (see SURVEY.md §7.0):
   * Builtins > Pandas UDFs > mapPartitions, in that order.
 """
 
+from artis_data_ingest_spark import _zipimport
+
 __version__ = "0.1.0"
+
+_zipimport.install()

@@ -4405,3 +4405,36 @@ def test_parquet_footers_stats_columns(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="empty path list"):
         parquet_footers(spark, [])
+
+
+def test_reused_python_worker_has_lazy_zip_invalidation(spark):
+    """A task in a reused Python worker runs with the lazy zip-directory
+    invalidation (``artis_data_ingest_spark/_zipimport.py``) that an
+    earlier task's import of the package installed, so its
+    ``importlib.invalidate_caches()`` re-read no archive directory."""
+
+    def probe(batches):
+        import os
+        import zipimport
+
+        import pandas as pd
+
+        lazy = hasattr(zipimport.zipimporter, "_get_files")
+        import artis_data_ingest_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "lazy": [lazy]})
+
+    seen: dict[int, bool] = {}
+    reused: list[bool] = []
+    # one-task jobs cycle through the idle workers (at most one per core)
+    for _ in range(12):
+        row = spark.range(1, numPartitions=1).mapInPandas(
+            probe, "pid long, lazy boolean").collect()[0]
+        if row.pid in seen:
+            reused.append(row.lazy)
+        seen[row.pid] = row.lazy
+        if len(reused) == 2:
+            break
+    assert reused and all(reused), (seen, reused)
