@@ -14,15 +14,21 @@ Stages 1-3 list both roots in one Spark job and align the listings on
 the driver into a local table (one row per file); stage 4 filters that
 table without a job.  Stage 5 (the reference's ``map2(compare_files)``)
 opens each side of every comparable pair with the reader (each row
-*names two datasets* — see SURVEY.md §7.3 #3), and diffs all pairs as
-one lazy plan: schema facts are driver-side literals and every row
-count comes from one aggregate, so the Spark jobs the diff costs do not
-grow with the number of pairs.
+*names two datasets* — see SURVEY.md §7.3 #3).  The sides are opened
+concurrently from a thread pool: each open is mostly driver planning
+and py4j waits around one or two small Spark jobs (a CSV side's header
+and schema-inference passes), so overlapping them keeps the cores busy.
+All pairs are then diffed as one lazy plan: schema facts are
+driver-side literals and every row count comes from one aggregate, so
+the Spark jobs the diff costs do not grow with the number of pairs.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,7 +96,7 @@ def file_level_log(
 
 def comparable_pairs(log: DataFrame) -> DataFrame:
     """Stage 4 (qmd:117-123): both sides present and format-matched
-    (csv-csv or xlsx-xlsx), the P4 compound predicate."""
+    (csv-csv, or xlsx/xls on both sides), the P4 compound predicate."""
     csv = lambda c: F.col(c).rlike(r"(?i)\.csv$")  # noqa: E731
     xlsx = lambda c: F.col(c).rlike(r"(?i)\.xlsx?$")  # noqa: E731
     return log.filter(
@@ -103,9 +109,10 @@ def comparable_pairs(log: DataFrame) -> DataFrame:
 def default_pair_reader(spark: SparkSession, path: str) -> DataFrame:
     """Per-extension dispatch mirroring the reference's ``compare_files``
     reader choice (assess_changes.qmd:127-139): ``fread`` for csv,
-    ``read_xlsx(skip = 1)`` for xlsx.  Anything else is a loud error —
-    ``comparable_pairs`` only admits csv-csv / xlsx-xlsx pairs, so an
-    unknown extension here means a caller bug, not data."""
+    ``read_xlsx(skip = 1)`` for xlsx, and the same skip for a legacy
+    binary ``.xls`` (BIFF8).  Anything else is a loud error —
+    ``comparable_pairs`` only admits csv-csv / spreadsheet-spreadsheet
+    pairs, so an unknown extension here means a caller bug, not data."""
     lower = path.lower()
     if lower.endswith(".csv"):
         return read_csv_inferred(spark, path)
@@ -114,9 +121,9 @@ def default_pair_reader(spark: SparkSession, path: str) -> DataFrame:
 
         return read_excel(spark, path, skip_rows=1)
     if lower.endswith(".xls"):
-        raise ValueError(
-            f"legacy binary .xls is not supported (OOXML .xlsx only): {path!r}"
-        )
+        from ..sources.xls import read_xls
+
+        return read_xls(spark, path, skip_rows=1)
     raise ValueError(f"no reader for file extension of {path!r}")
 
 
@@ -133,11 +140,25 @@ def assess_changes(
     comparable pair with the full dataset_diff struct columns flattened
     beside the key (the reference's ``unnest_wider(comparison)``,
     qmd:182-185).
+
+    ``reader(path)`` is called once per side of every comparable pair,
+    concurrently from a thread pool, so it must be thread-safe.  Each
+    call runs under a copy of the caller's local properties (job group,
+    description, scheduler pool) and session tags, so whoever groups,
+    traces or cancels the caller's jobs also owns the reader's; a
+    reader that sets a property changes only its own call's copy.
     """
     reader = reader or (lambda p: default_pair_reader(spark, p))
     log = file_level_log(spark, old_dir, new_dir, name_regex)
     pairs = comparable_pairs(log).select("files_std", "old", "new").collect()
 
-    return log, _diff_pairs(
-        spark, [(r.files_std, reader(r.old), reader(r.new)) for r in pairs]
-    )
+    with ThreadPoolExecutor() as pool:
+        # wrapped once per side, in this thread: a wrapper captures one
+        # properties object and installs that same object wherever it runs
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(reader), path)
+            for r in pairs for path in (r.old, r.new)
+        ]
+        frames = [f.result() for f in futures]
+    sides = zip(pairs, frames[::2], frames[1::2])
+    return log, _diff_pairs(spark, [(r.files_std, o, n) for r, o, n in sides])

@@ -223,6 +223,25 @@ def _typed_schema(
     return schema, types
 
 
+def _local_frame(
+    spark: SparkSession, header: list[str], rows: list[list]
+) -> DataFrame:
+    """One parsed sheet as a typed local relation (``LocalTableScan``,
+    no Python-pickled RDD scan); shared by the xlsx and xls readers."""
+    schema, types = _typed_schema(header, rows)
+    # typed Arrow arrays straight from the coerced Python scalars: exact
+    # for every long (no float64 detour through a pandas column) and
+    # valid for a header-only sheet
+    table = pa.Table.from_arrays(
+        [
+            pa.array([_coerce(r[j], t) for r in rows], type=to_arrow_type(t))
+            for j, t in enumerate(types)
+        ],
+        names=header,
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def read_excel(
     spark: SparkSession, path: str, skip_rows: int = 1,
     sheet: int | str = 0,
@@ -239,19 +258,9 @@ def read_excel(
         path = re.sub("^file:/+", "/", path)
     with open(path, "rb") as f:
         raw = f.read()
-    header, rows = parse_xlsx_bytes(raw, skip_rows=skip_rows, sheet=sheet)
-    schema, types = _typed_schema(header, rows)
-    # typed Arrow arrays straight from the coerced Python scalars: exact
-    # for every long (no float64 detour through a pandas column) and
-    # valid for a header-only sheet
-    table = pa.Table.from_arrays(
-        [
-            pa.array([_coerce(r[j], t) for r in rows], type=to_arrow_type(t))
-            for j, t in enumerate(types)
-        ],
-        names=header,
+    return _local_frame(
+        spark, *parse_xlsx_bytes(raw, skip_rows=skip_rows, sheet=sheet)
     )
-    return spark.createDataFrame(table, schema=schema)
 
 
 def read_excel_fleet(

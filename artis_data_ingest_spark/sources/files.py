@@ -76,7 +76,8 @@ def read_csv_inferred(
     """S8 — CSV with header + schema inference (``fread``,
     assess_changes.qmd:128-129).
 
-    Inference costs an extra pass; at 100 TB, pass an explicit schema
+    Inference costs two one-task jobs per file at read time (the header
+    line, then the inference pass); at 100 TB, pass an explicit schema
     or point this at a small sample first. Kept inference-on to match
     the reference's schema-tolerant behavior (SURVEY.md §1.3)."""
     return spark.read.csv(path, header=True, inferSchema=True, **options)

@@ -419,21 +419,18 @@ def read_xls(
 ) -> DataFrame:
     """``read_xlsx(file, skip = 1)`` semantics for the binary format:
     skip, header, per-column long/double/boolean/string inference —
-    type logic shared with the xlsx reader."""
+    type logic and the local-frame build shared with the xlsx reader."""
     import re
 
-    from .excel import _coerce, _typed_schema
+    from .excel import _local_frame
 
     if path.startswith("file:"):
         path = re.sub("^file:/+", "/", path)
     with open(path, "rb") as f:
         raw = f.read()
-    header, rows = parse_xls_bytes(raw, skip_rows=skip_rows, sheet=sheet)
-    schema, types = _typed_schema(header, rows)
-    data = [
-        tuple(_coerce(v, t) for v, t in zip(r, types)) for r in rows
-    ]
-    return spark.createDataFrame(data, schema=schema)
+    return _local_frame(
+        spark, *parse_xls_bytes(raw, skip_rows=skip_rows, sheet=sheet)
+    )
 
 
 def read_xls_fleet(

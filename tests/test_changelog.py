@@ -4,11 +4,14 @@ added/removed/renamed/retyped files → assert the exact diff tables."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from artis_data_ingest_spark.operators.changelog import (
     assess_changes,
     comparable_pairs,
+    default_pair_reader,
     file_level_log,
 )
 
@@ -227,3 +230,104 @@ def test_assess_changes_header_only_side_counts_zero(spark, tmp_path):
     assert d.files_std == "catch"
     assert d.nrow_old == 0 and d.nrow_new == 2 and d.row_diff == 2
     assert diffs.dtypes == _DIFF_DTYPES
+
+
+def test_assess_changes_xls_pair_dispatch(spark, tmp_path):
+    # a legacy binary .xls pair is read like an xlsx pair: banner row
+    # skipped, next row the header, per-column types inferred
+    from artis_data_ingest_spark.sources.xls import write_minimal_xls
+
+    old = tmp_path / "old"
+    new = tmp_path / "new"
+    old.mkdir()
+    new.mkdir()
+    write_minimal_xls(
+        str(old / "Species_map_V202301.xls"),
+        [["banner"], ["code", "name", "qty"], [1, "cod", 2.5], [2, None, 1.5]],
+    )
+    write_minimal_xls(
+        str(new / "Species_map_V202401.xls"),
+        [
+            ["banner"], ["code", "name", "qty"],
+            [1, "cod", "n/a"], [2, None, "1.5"], [3, "hake", "2"],
+        ],
+    )
+    _, diffs = assess_changes(spark, str(old), str(new))
+    rows = diffs.collect()
+    assert len(rows) == 1
+    d = rows[0]
+    assert d.files_std == "species_map"
+    assert (d.nrow_old, d.nrow_new, d.row_diff) == (2, 3, 1)
+    assert (d.ncol_old, d.ncol_new) == (3, 3)
+    assert d.added_cols == [] and d.removed_cols == []
+    assert [tuple(t) for t in d.type_changes] == [("qty", "double", "string")]
+
+
+def test_assess_changes_opens_sides_concurrently(spark, tmp_path):
+    # every side of every pair is opened at once: two readers meet at a
+    # barrier, which a one-at-a-time loop would never reach
+    old, new = _csv_pairs(tmp_path, 2)
+    barrier = threading.Barrier(2, timeout=60)
+
+    def meeting(path):
+        barrier.wait()
+        return default_pair_reader(spark, path)
+
+    lock = threading.Lock()
+
+    def one_at_a_time(path):
+        with lock:
+            return default_pair_reader(spark, path)
+
+    _, got = assess_changes(spark, str(old), str(new), reader=meeting)
+    _, want = assess_changes(spark, str(old), str(new), reader=one_at_a_time)
+    assert got.collect() == want.collect()
+    assert [r.files_std for r in got.collect()] == ["table_0", "table_1"]
+
+
+def test_assess_changes_reader_inherits_group_and_tags(spark, tmp_path):
+    # the reader's jobs belong to the caller's job group and carry the
+    # caller's session tags; a property one reader sets stays its own
+    old, new = _csv_pairs(tmp_path, 1)
+    sc = spark.sparkContext
+    seen = {}
+    barrier = threading.Barrier(2, timeout=60)
+
+    def reader(path):
+        seen[path] = (sc.getLocalProperty("spark.jobGroup.id"), spark.getTags())
+        sc.setLocalProperty("spark.job.description", path)
+        barrier.wait()  # both sides have set their description
+        seen[path] += (sc.getLocalProperty("spark.job.description"),)
+        return default_pair_reader(spark, path)
+
+    sc.setJobGroup("changelog-caller", "caller")
+    spark.addTag("changelog-caller-tag")
+    try:
+        _, diffs = assess_changes(spark, str(old), str(new), reader=reader)
+        caller_description = sc.getLocalProperty("spark.job.description")
+        caller_tags = spark.getTags()
+    finally:
+        spark.removeTag("changelog-caller-tag")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(seen) == 2
+    for path, (group, tags, description) in seen.items():
+        assert group == "changelog-caller"
+        assert tags == caller_tags == {"changelog-caller-tag"}
+        assert description == path
+    assert caller_description == "caller"
+    assert len(diffs.collect()) == 1
+
+
+def test_assess_changes_reader_error_propagates(spark, tmp_path):
+    old, new = _csv_pairs(tmp_path, 2)
+    boom = OSError("side unreadable")
+
+    def reader(path):
+        if path.endswith("Table_1_V202401a.csv"):
+            raise boom
+        return default_pair_reader(spark, path)
+
+    with pytest.raises(OSError) as excinfo:
+        assess_changes(spark, str(old), str(new), reader=reader)
+    assert excinfo.value is boom

@@ -161,30 +161,40 @@ def test_excel_arrow_exact_local_scan(spark, tmp_path):
     # values must survive the Arrow hand-off exactly: a long beyond
     # float64 precision beside an empty cell, gaps in double and boolean
     # columns, a {bool, int} column promoted to long; and the frame must
-    # be a local relation, not a Python-pickled RDD scan
+    # be a local relation, not a Python-pickled RDD scan — for the xlsx
+    # reader and the binary .xls reader, which share the frame builder
     from artis_data_ingest_spark.sources.excel import _coerce, _typed_schema
-
-    path = tmp_path / "exact.xlsx"
-    write_minimal_xlsx(
-        str(path),
-        [
-            ["big", "ratio", "ok", "mixed"],
-            [2**53 + 1, 0.1, True, True],
-            [None, None, None, 7],
-            [-(2**62), 2.5, False, False],
-        ],
+    from artis_data_ingest_spark.sources.xls import (
+        parse_xls_bytes,
+        read_xls,
+        write_minimal_xls,
     )
-    header, rows = parse_xlsx_bytes(path.read_bytes())
-    _, types = _typed_schema(header, rows)
-    df = read_excel(spark, str(path), skip_rows=0)
-    assert dict(df.dtypes) == {
-        "big": "bigint", "ratio": "double", "ok": "boolean", "mixed": "bigint",
+
+    sheet = [
+        ["big", "ratio", "ok", "mixed"],
+        [2**53 + 1, 0.1, True, True],
+        [None, None, None, 7],
+        [-(2**62), 2.5, False, False],
+    ]
+    formats = {
+        # BIFF8 stores a number beyond 30 bits as a float64 NUMBER cell
+        "xlsx": (write_minimal_xlsx, parse_xlsx_bytes, read_excel, "bigint", 2**53 + 1),
+        "xls": (write_minimal_xls, parse_xls_bytes, read_xls, "double", float(2**53)),
     }
-    want = [tuple(_coerce(v, t) for v, t in zip(r, types)) for r in rows]
-    assert [tuple(r) for r in df.collect()] == want
-    assert want[0][0] == 2**53 + 1 and want[0][3] == 1
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    for ext, (write, parse, read, big_type, big) in formats.items():
+        path = tmp_path / f"exact.{ext}"
+        write(str(path), sheet)
+        header, rows = parse(path.read_bytes(), skip_rows=0)
+        _, types = _typed_schema(header, rows)
+        df = read(spark, str(path), skip_rows=0)
+        assert dict(df.dtypes) == {
+            "big": big_type, "ratio": "double", "ok": "boolean", "mixed": "bigint",
+        }, ext
+        want = [tuple(_coerce(v, t) for v, t in zip(r, types)) for r in rows]
+        assert [tuple(r) for r in df.collect()] == want, ext
+        assert want[0][0] == big and want[0][3] == 1, ext
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, ext
 
 
 def test_excel_fleet_reader(spark, tmp_path):
