@@ -10,12 +10,15 @@ Layout under ``table_dir``:
     data/<version>-<token>/part-*.parquet   immutable data segments
     _manifests/v{N}.json                    {"version", "parent",
                                              "files", "mode", "note",
-                                             "ts", "stats", "blooms"?,
+                                             "ts", "stats", "schema"?,
+                                             "blooms"?,
                                              "table_props"?,
                                              "delta_files"?,
                                              "dv_files"?,
+                                             "quarantine_files"?,
                                              "restored_from"?,
-                                             "cloned_from"?}
+                                             "cloned_from"?,
+                                             "converted_from"?}
     _manifests/checkpoint-{N}.json          per-version summaries up
                                             to N (r13 manifest-log
                                             checkpoint; see
@@ -59,6 +62,16 @@ Semantics:
   * ``cluster_by``/``bloom_cols`` are table properties
     (``table_props``) that every later write re-applies to the
     segment it writes.
+
+Publication.  Every version's manifest comes from one constructor,
+:func:`_next_manifest`: it carries the parent's (or a restored or
+cloned version's) files, stats, blooms, deletion vectors and schema,
+adds the operation's own segment and extras, defaults ``ts`` to now
+and leaves empty optional keys out.  The operations that may rebase
+onto a concurrent head — :func:`commit`, :func:`commit_staged` and the
+deletion-vector row operations — publish through one loop,
+:func:`_publish_rebased`, each passing the check that decides whether
+its already-written segments may land on the new head.
 
 Deletion vectors.  Row-level operations (:func:`delete_where`,
 :func:`update_where`, :func:`replace_where`, :func:`merge_commit`)
@@ -329,10 +342,32 @@ def _check_expected(cur: int | None, expect_version) -> None:
         raise VersionConflict(f"{base}, table is at v{cur}")
 
 
-def _write_segment(df: DataFrame, table_dir: str, version: int) -> list[str]:
-    seg = os.path.join(
-        table_dir, "data", f"{version:06d}-{uuid.uuid4().hex[:8]}"
+def _head(
+    table_dir: str, expect_version=ANY, required: bool = True
+) -> dict | None:
+    """The latest version's manifest, after the optimistic-concurrency
+    check against ``expect_version`` (:func:`_check_expected`).  A
+    table without versions raises FileNotFoundError, or with
+    ``required=False`` gives None."""
+    cur = latest_version(table_dir)
+    if cur is None and required:
+        raise FileNotFoundError(f"no versions in {table_dir}")
+    _check_expected(cur, expect_version)
+    return _read_manifest(table_dir, cur) if cur is not None else None
+
+
+def _segment_dir(table_dir: str, version: int | None = None) -> str:
+    """A fresh directory name under ``table_dir/data``: the segment of
+    ``version`` (``data/<version:06d>-<token>``), or with no version a
+    DataSource writer's staging directory (``data/w-<token>``)."""
+    name = "w" if version is None else f"{version:06d}"
+    return os.path.join(
+        table_dir, "data", f"{name}-{uuid.uuid4().hex[:8]}"
     )
+
+
+def _write_segment(df: DataFrame, table_dir: str, version: int) -> list[str]:
+    seg = _segment_dir(table_dir, version)
     df.write.mode("errorifexists").parquet(seg)
     return sorted(
         os.path.join(seg, f)
@@ -744,10 +779,7 @@ def rename_column(
     logical column under the ORIGINAL physical name, keeping the
     on-disk schema uniform.  At 100 TB this is the difference between
     a metadata commit and a full-table rewrite."""
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    m = _read_manifest(table_dir, cur)
+    m = _head(table_dir)
     logical = list(_logical_names(
         m.get("table_props", {}), _table_schema(m)
     ).values())
@@ -812,10 +844,7 @@ def drop_column(
     Re-adding a column with the same name later is safe — the new
     column gets a FRESH physical name (see :func:`_resolve_physical`),
     so the tombstoned bytes never resurface."""
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    m = _read_manifest(table_dir, cur)
+    m = _head(table_dir)
     logical = list(_logical_names(
         m.get("table_props", {}), _table_schema(m)
     ).values())
@@ -863,31 +892,12 @@ def _alter_commit(
     versions: zero data movement, atomic publication, time travel sees
     each version under the properties it was committed with, and the
     change feed treats an alter like a compact (no rows added)."""
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    _check_expected(cur, expect_version)
-    m = _read_manifest(table_dir, cur)
+    m = _head(table_dir, expect_version)
     props = dict(m.get("table_props", {}))
     mutate_props(props)
-    manifest = {
-        "version": cur + 1,
-        "parent": cur,
-        "mode": "alter",
-        "note": note,
-        "ts": timestamp if timestamp is not None else time.time(),
-        "files": list(m["files"]),
-        "stats": dict(m.get("stats", {})),
-    }
-    if m.get("blooms"):
-        manifest["blooms"] = dict(m["blooms"])
-    if m.get("dv_files"):
-        manifest["dv_files"] = list(m["dv_files"])
-    if m.get("schema"):
-        manifest["schema"] = dict(m["schema"])
-    if props:
-        manifest["table_props"] = props
-    return _publish(table_dir, manifest)
+    return _publish(
+        table_dir, _next_manifest(m, "alter", note, timestamp, props)
+    )
 
 
 def _null_fill_for_constraints(
@@ -1054,32 +1064,23 @@ def add_constraint(
     metadata-only ``mode="alter"`` commit, so it is itself versioned:
     time travel before the alter reads an unconstrained table, and
     the change feed skips it (no rows changed)."""
-    cur0 = latest_version(table_dir)
-    if cur0 is not None:
-        existing = _read_manifest(table_dir, cur0).get(
-            "table_props", {}
-        ).get("constraints", {})
-        if name in existing:
-            # duplicate names refuse BEFORE the validation scan (the
-            # in-_mut check below stays as the concurrency-safe final
-            # word at publication time)
-            raise ValueError(f"constraint {name!r} already exists")
-    if validate:
-        cur = latest_version(table_dir)
-        if cur is not None:
-            m = _read_manifest(table_dir, cur)
-            if m["files"]:
-                live = _dv_read(spark, m)
-                from pyspark.sql import functions as F
+    head = _head(table_dir, required=False) or {}
+    if name in head.get("table_props", {}).get("constraints", {}):
+        # duplicate names refuse BEFORE the validation scan (the
+        # in-_mut check below stays as the concurrency-safe final
+        # word at publication time)
+        raise ValueError(f"constraint {name!r} already exists")
+    if validate and head.get("files"):
+        from pyspark.sql import functions as F
 
-                n = live.filter(
-                    ~F.coalesce(F.expr(expr), F.lit(True))
-                ).count()
-                if n:
-                    raise ConstraintViolation(
-                        f"cannot add {name} [{expr}]: {n} existing "
-                        f"rows violate it"
-                    )
+        n = _dv_read(spark, head).filter(
+            ~F.coalesce(F.expr(expr), F.lit(True))
+        ).count()
+        if n:
+            raise ConstraintViolation(
+                f"cannot add {name} [{expr}]: {n} existing "
+                f"rows violate it"
+            )
 
     def _mut(props: dict) -> None:
         cons = dict(props.get("constraints", {}))
@@ -1231,37 +1232,35 @@ def commit(
             f"on_violation must be 'error' or 'quarantine', "
             f"got {on_violation!r}"
         )
-    cur = latest_version(table_dir)
-    _check_expected(cur, expect_version)
-    parent = _read_manifest(table_dir, cur) if cur is not None else {}
-    props = dict(parent.get("table_props", {}))
-    # layout is a TABLE property, not a per-call argument: a plain
-    # append to a clustered/bloom table inherits the recorded layout
-    # (r13 — previously only compact/merge re-derived it, so appends
-    # silently wrote unclustered, bloom-less segments and pruning
-    # degraded across the table lifecycle).  Passing an explicit value
-    # updates the property; an explicit EMPTY sequence clears it.
-    explicit_cluster, explicit_blooms = cluster_by, bloom_cols
-    if cluster_by is None:
-        cluster_by = props.get("cluster_by")
-    else:
-        props["cluster_by"] = list(cluster_by)
-    if bloom_cols is None:
-        bloom_cols = props.get("bloom_cols")
-    else:
-        props["bloom_cols"] = list(bloom_cols)
-    df = _layout(df, cluster_by, n_files)
-    new_version = (cur if cur is not None else -1) + 1
+    head = _head(table_dir, expect_version, required=False)
+
+    def props_for(head: dict | None) -> dict:
+        # layout is a TABLE property, not a per-call argument: a plain
+        # append to a clustered/bloom table inherits the recorded
+        # layout (r13 — previously only compact/merge re-derived it, so
+        # appends silently wrote unclustered, bloom-less segments and
+        # pruning degraded across the table lifecycle).  Passing an
+        # explicit value updates the property; an explicit EMPTY
+        # sequence clears it.
+        props = dict((head or {}).get("table_props", {}))
+        if cluster_by is not None:
+            props["cluster_by"] = list(cluster_by)
+        if bloom_cols is not None:
+            props["bloom_cols"] = list(bloom_cols)
+        return props
+
+    props = props_for(head)
+    df = _layout(df, props.get("cluster_by"), n_files)
+    new_version = head["version"] + 1 if head else 0
     # snapshot the ENTRY-time mapping state before _resolve_physical
-    # may mint fresh physical names: the blind-append rebase must (a)
-    # refuse if a CONCURRENT writer changed the mapping and (b)
-    # re-merge OUR OWN additions into the rebased props (ADVICE r13
-    # #2 — previously a re-added column's fresh physical name was
-    # silently dropped on rebase and the logical column vanished)
-    entry_mapping = _mapping(props)
-    entry_dropped = _dropped(props)
+    # may mint fresh physical names: a rebase must (a) refuse if a
+    # CONCURRENT writer changed the mapping and (b) re-merge OUR OWN
+    # additions into the rebased props (ADVICE r13 #2 — previously a
+    # re-added column's fresh physical name was silently dropped on
+    # rebase and the logical column vanished)
+    entry_mapping, entry_dropped = _mapping(props), _dropped(props)
     props = _resolve_physical(props, df.columns, new_version)
-    own_mapping_additions = {
+    minted = {
         log: phys
         for log, phys in _mapping(props).items()
         if entry_mapping.get(log) != phys
@@ -1279,7 +1278,7 @@ def commit(
                 constraints,
                 table_dir,
                 new_version,
-                cluster_by,
+                props.get("cluster_by"),
                 props,
             )
         else:
@@ -1287,113 +1286,66 @@ def commit(
                 df.sparkSession, seg_files, constraints, props=props
             )
     seg_schema = _footer_schema(seg_files)
-    if mode == "append" and cur is not None:
-        # write-time schema enforcement: refuse a type conflict NOW,
-        # not at some later read (footer-vs-manifest
-        # comparison — driver-side metadata, no data read)
-        try:
-            _check_schema_compatible(_table_schema(parent), seg_schema)
-        except SchemaMismatch:
-            _drop_segments(seg_files)
-            raise
-    seg_stats, seg_blooms = _segment_meta(
-        df.sparkSession, seg_files, props, bloom_cols
-    )
 
-    def _build(cur_v, parent_m):
-        if mode == "append" and cur_v is not None:
-            files = parent_m["files"] + seg_files
-            # carry the parent's file stats/blooms forward so a pruned
-            # scan of version N skips across ALL segments, not just the
-            # newest — and its DELETION VECTORS, else an append would
-            # resurrect previously deleted rows
-            stats = {**parent_m.get("stats", {}), **seg_stats}
-            blooms = {**parent_m.get("blooms", {}), **seg_blooms}
-            dv_files = list(parent_m.get("dv_files", []))
-            schema = {**_table_schema(parent_m), **seg_schema}
-        else:
-            files, stats = seg_files, dict(seg_stats)
-            blooms, dv_files = dict(seg_blooms), []
-            schema = dict(seg_schema)
-        manifest = {
-            "schema": schema,
-            "version": (cur_v if cur_v is not None else -1) + 1,
-            "parent": cur_v,
-            "mode": mode,
-            "note": note,
-            "ts": timestamp if timestamp is not None else time.time(),
-            "files": files,
-            "stats": stats,
-        }
-        if blooms:
-            manifest["blooms"] = blooms
-        if dv_files:
-            manifest["dv_files"] = dv_files
-        if quarantine_files:
-            manifest["quarantine_files"] = quarantine_files
-        return manifest
-
-    manifest = _build(cur, parent)
-    if props:
-        manifest["table_props"] = props
-    for attempt in range(max(0, retry_conflicts) + 1):
-        try:
-            return _publish(table_dir, manifest)
-        except VersionConflict:
-            if (
-                attempt >= retry_conflicts
-                or mode != "append"
-                or expect_version is not ANY
-            ):
-                raise
-        # blind-append rebase: a concurrent commit claimed our version
-        # number.  Appends never logically conflict (Delta's rule), so
-        # rebuild the manifest on the NEW head — the staged segment,
-        # its stats, and its blooms are reused untouched; only driver-
-        # side JSON merging happens per retry.  Table props re-derive
-        # from the new parent (it may have altered layout/constraints),
-        # with this caller's EXPLICIT overrides re-applied on top.
-        cur = latest_version(table_dir)
-        parent = _read_manifest(table_dir, cur) if cur is not None else {}
-        new_props = dict(parent.get("table_props", {}))
-        if (new_props.get("constraints") or {}) != constraints:
+    def check(head: dict | None) -> None:
+        # the segment was validated against the entry-time constraints
+        # and written under the entry-time physical names: a head that
+        # changed either cannot take it
+        head_props = (head or {}).get("table_props", {})
+        if (head_props.get("constraints") or {}) != constraints:
             raise VersionConflict(
                 "constraint set changed concurrently; segment was "
                 "validated against the entry-time constraints — "
                 "re-run the commit"
             )
         if (
-            _mapping(new_props) != entry_mapping
-            or _dropped(new_props) != entry_dropped
+            _mapping(head_props) != entry_mapping
+            or _dropped(head_props) != entry_dropped
         ):
             raise VersionConflict(
                 "column mapping changed concurrently; the staged "
                 "segment was written under the entry-time physical "
                 "names — re-run the commit"
             )
-        if own_mapping_additions:
-            # fresh physical names this commit minted (re-added
-            # columns) carry into the rebased manifest
-            merged = _mapping(new_props)
-            merged.update(own_mapping_additions)
-            new_props["column_mapping"] = merged
-        if cur is not None:
+        if mode == "append" and head is not None:
+            # write-time schema enforcement: refuse a type conflict
+            # NOW, not at some later read (footer-vs-manifest
+            # comparison — driver-side metadata, no data read)
             try:
-                _check_schema_compatible(
-                    _table_schema(parent), seg_schema
-                )
+                _check_schema_compatible(_table_schema(head), seg_schema)
             except SchemaMismatch:
                 _drop_segments(seg_files)
                 raise
-        if explicit_cluster is not None:
-            new_props["cluster_by"] = list(explicit_cluster)
-        if explicit_blooms is not None:
-            new_props["bloom_cols"] = list(explicit_blooms)
-        props = new_props
-        manifest = _build(cur, parent)
-        if props:
-            manifest["table_props"] = props
-    raise AssertionError("unreachable")  # pragma: no cover
+
+    check(head)
+    seg_stats, seg_blooms = _segment_meta(
+        df.sparkSession, seg_files, props, props.get("bloom_cols")
+    )
+
+    def build(head: dict | None) -> dict:
+        # table props re-derive from the head (it may have altered
+        # layout), with this caller's explicit overrides and the
+        # physical names it minted on top
+        head_props = props_for(head)
+        if minted:
+            head_props["column_mapping"] = {
+                **_mapping(head_props), **minted
+            }
+        return _next_manifest(
+            head, mode, note, timestamp, head_props, seg_files,
+            seg_stats, seg_blooms, seg_schema,
+            carry=None if mode == "append" else {},
+            quarantine_files=quarantine_files or None,
+        )
+
+    # blind-append rebase (Delta's rule: appends never logically
+    # conflict) — the staged segment, its stats and its blooms are
+    # reused untouched; only driver-side JSON merging happens per retry
+    return _publish_rebased(
+        table_dir, head, build, check,
+        retry_conflicts if mode == "append" and expect_version is ANY
+        else 0,
+    )
 
 
 def commit_staged(
@@ -1427,14 +1379,10 @@ def commit_staged(
         raise ValueError(f"unknown mode {mode!r}")
     seg_schema = _footer_schema(seg_files)
     seg_stats = _file_stats(seg_files)
+    head = _head(table_dir, expect_version, required=False)
 
-    def _prepare():
-        cur = latest_version(table_dir)
-        _check_expected(cur, expect_version)
-        parent = (
-            _read_manifest(table_dir, cur) if cur is not None else {}
-        )
-        props = dict(parent.get("table_props", {}))
+    def check(head: dict | None) -> None:
+        props = (head or {}).get("table_props", {})
         needy = [
             k
             for k in (
@@ -1453,47 +1401,22 @@ def commit_staged(
                 f"sinks.versioned.commit() instead of the DataSource "
                 f"writer"
             )
-        if mode == "append" and cur is not None:
-            _check_schema_compatible(_table_schema(parent), seg_schema)
-            files = parent["files"] + seg_files
-            stats = {**parent.get("stats", {}), **seg_stats}
-            dv_files = list(parent.get("dv_files", []))
-            schema = {**_table_schema(parent), **seg_schema}
-        else:
-            files = list(seg_files)
-            stats = dict(seg_stats)
-            dv_files = []
-            schema = dict(seg_schema)
-        manifest = {
-            "version": (cur if cur is not None else -1) + 1,
-            "parent": cur,
-            "mode": mode,
-            "note": note,
-            "ts": timestamp if timestamp is not None else time.time(),
-            "files": files,
-            "stats": stats,
-            "schema": schema,
-        }
-        if mode == "append" and parent.get("blooms"):
-            manifest["blooms"] = dict(parent["blooms"])
-        if dv_files:
-            manifest["dv_files"] = dv_files
-        if props:
-            manifest["table_props"] = props
-        return manifest
+        if mode == "append" and head is not None:
+            _check_schema_compatible(_table_schema(head), seg_schema)
 
-    retries = (
-        max(0, retry_conflicts)
-        if mode == "append" and expect_version is ANY
-        else 0
+    check(head)
+    return _publish_rebased(
+        table_dir,
+        head,
+        lambda head: _next_manifest(
+            head, mode, note, timestamp,
+            (head or {}).get("table_props", {}), seg_files, seg_stats,
+            schema=seg_schema, carry=None if mode == "append" else {},
+        ),
+        check,
+        retry_conflicts if mode == "append" and expect_version is ANY
+        else 0,
     )
-    for attempt in range(retries + 1):
-        try:
-            return _publish(table_dir, _prepare())
-        except VersionConflict:
-            if attempt >= retries:
-                raise
-    raise AssertionError("unreachable")  # pragma: no cover
 
 
 def compact(
@@ -1530,10 +1453,7 @@ def compact(
     the version's recorded schema, so a table that evolved its schema
     compacts to that shape (exactly what :func:`read_version`
     serves)."""
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    m = _read_manifest(table_dir, cur)
+    m = _head(table_dir)
     props = dict(m.get("table_props", {}))
     if cluster_by is None:
         cluster_by = props.get("cluster_by")
@@ -1573,54 +1493,43 @@ def compact(
         max(1, n_files),
     )
     seg_files = _write_segment(
-        _to_physical(compacted, props), table_dir, cur + 1
+        _to_physical(compacted, props), table_dir, m["version"] + 1
     )
     seg_stats, seg_blooms = _segment_meta(
         spark, seg_files, props, bloom_cols
     )
+    # the kept files carry with their stats and blooms, not their
+    # vectors: the rewritten files' deletions just materialized
     kept_paths = {os.path.abspath(f) for f in keep}
-    manifest = {
-        "version": cur + 1,
-        "parent": cur,
-        "mode": "compact",
-        "note": note,
-        "ts": timestamp if timestamp is not None else time.time(),
-        "files": keep + seg_files,
-        "stats": {
-            **{
-                k: v
-                for k, v in m.get("stats", {}).items()
-                if k in kept_paths
-            },
-            **seg_stats,
+    carry = {
+        "files": keep,
+        "schema": _table_schema(m),
+        **{
+            k: {f: v for f, v in m.get(k, {}).items() if f in kept_paths}
+            for k in ("stats", "blooms")
         },
     }
-    blooms = {
-        k: v for k, v in m.get("blooms", {}).items() if k in kept_paths
-    }
-    blooms.update(seg_blooms)
-    if blooms:
-        manifest["blooms"] = blooms
-    manifest["schema"] = {
-        **(m.get("schema") or {}), **_footer_schema(seg_files)
-    }
-    if props:
-        manifest["table_props"] = props
+    dv_seg: list[str] = []
     if dv_files and keep:
-        # re-slice the DV table to the kept files only (the rewritten
-        # files' deletions just materialized) — a tiny parquet write
+        # re-slice the DV table to the kept files only — a tiny
+        # parquet write
         from pyspark.sql import functions as F
 
         kept_dv = (
             spark.read.schema(_DV_SCHEMA).parquet(*dv_files)
             .filter(F.col("_dv_file").isin(sorted(kept_paths)))
         )
-        dv_seg = _write_segment(kept_dv.coalesce(1), table_dir, cur + 1)
-        if _num_rows(dv_seg):
-            manifest["dv_files"] = dv_seg
-        # an all-zero slice leaves dv_files absent; the orphan segment
-        # is vacuumed later
-    return _publish(table_dir, manifest)
+        dv_seg = _write_segment(
+            kept_dv.coalesce(1), table_dir, m["version"] + 1
+        )
+        if not _num_rows(dv_seg):
+            # an all-zero slice leaves dv_files absent; the orphan
+            # segment is vacuumed later
+            dv_seg = []
+    return _publish(table_dir, _next_manifest(
+        m, "compact", note, timestamp, props, seg_files, seg_stats,
+        seg_blooms, _footer_schema(seg_files), dv_seg, carry=carry,
+    ))
 
 
 def restore(
@@ -1647,33 +1556,15 @@ def restore(
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
         version = version_at(table_dir, as_of)
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no versions in {table_dir}")
+    parent = _head(table_dir)
     if version is None:
         raise ValueError("restore needs a target version or as_of")
     src = _read_manifest(table_dir, version)
-    parent = _read_manifest(table_dir, cur)
-    manifest = {
-        "version": cur + 1,
-        "parent": cur,
-        "mode": "restore",
-        "note": note,
-        "ts": timestamp if timestamp is not None else time.time(),
-        "restored_from": version,
-        "files": list(src["files"]),
-        "stats": dict(src.get("stats", {})),
-    }
-    if src.get("blooms"):
-        manifest["blooms"] = dict(src["blooms"])
-    if src.get("dv_files"):
-        manifest["dv_files"] = list(src["dv_files"])
-    if src.get("schema"):
-        manifest["schema"] = dict(src["schema"])
-    props = parent.get("table_props") or src.get("table_props")
-    if props:
-        manifest["table_props"] = dict(props)
-    return _publish(table_dir, manifest)
+    props = parent.get("table_props") or src.get("table_props") or {}
+    return _publish(table_dir, _next_manifest(
+        parent, "restore", note, timestamp, props, carry=src,
+        restored_from=version,
+    ))
 
 
 def merge_commit(
@@ -1729,7 +1620,7 @@ def merge_commit(
     hits = tagged.join(F.broadcast(src_keys), keys, "left_semi").select(
         *_DV_COLS
     )
-    new_version = cur + 1
+    new_version = m["version"] + 1
     dv_seg = _write_segment(hits.coalesce(1), table_dir, new_version)
     post = source
     if delete_col is not None:
@@ -1761,10 +1652,9 @@ def merge_commit(
     stats, blooms = _segment_meta(
         spark, seg, props, props.get("bloom_cols")
     )
-    return _publish(table_dir, _dv_manifest(
-        m, "merge", note,
-        timestamp if timestamp is not None else time.time(), props,
-        dv_seg, seg, delta_files, stats, blooms, _footer_schema(seg),
+    return _publish(table_dir, _next_manifest(
+        m, "merge", note, timestamp, props, seg, stats, blooms,
+        _footer_schema(seg), dv_seg, delta_files=delta_files,
     ))
 
 
@@ -1873,44 +1763,77 @@ def _drop_segments(files: list[str], extra_dirs=()) -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def _dv_manifest(
-    parent: dict,
+def _next_manifest(
+    head: dict | None,
     mode: str,
     note: str,
-    ts: float,
+    timestamp: float | None,
     props: dict,
-    dv_seg: list[str],
     seg: Sequence[str] = (),
-    delta: list[str] | None = None,
     stats: dict | None = None,
     blooms: dict | None = None,
     schema: dict | None = None,
+    dv_seg: Sequence[str] = (),
+    carry: dict | None = None,
+    **extra,
 ) -> dict:
-    """The manifest of a deletion-vector row operation on top of
-    ``parent``: the parent's files plus the new segment ``seg`` (with
-    its ``stats``/``blooms``/``schema``), the parent's vectors plus
-    ``dv_seg``, and ``delta`` as the version's recorded adds (None for
-    a delete, which adds no rows).  ``delta_files`` describe one
-    commit, so the parent's are never carried."""
+    """THE constructor of the manifest of the version after ``head``
+    (None: the table's first version).  The new version holds
+    ``carry``'s files plus the segment ``seg``, ``carry``'s stats,
+    blooms and schema merged with the segment's ``stats``/``blooms``/
+    ``schema``, and ``carry``'s deletion vectors plus ``dv_seg`` (so
+    a pruned scan skips across every segment, and an append never
+    resurrects deleted rows).  ``carry`` defaults to ``head``; pass
+    ``{}`` for a version that starts fresh (an overwrite) or another
+    version's manifest for one that adopts its state (restore,
+    clone).  A carried manifest without a recorded schema contributes
+    its footers' (see :func:`_table_schema`).  ``ts`` defaults to
+    now.  ``blooms``,
+    ``dv_files``, ``schema`` and ``table_props`` (``props``) are left
+    out when empty; ``extra`` keys (``delta_files``,
+    ``quarantine_files``, ``restored_from``, …) are the operation's
+    own and are recorded unless None — ``delta_files`` describe one
+    commit, so they are never carried."""
+    carry = (head or {}) if carry is None else carry
     mf = {
-        "version": parent["version"] + 1,
-        "parent": parent["version"],
+        "version": head["version"] + 1 if head else 0,
+        "parent": head["version"] if head else None,
         "mode": mode,
         "note": note,
-        "ts": ts,
-        "files": list(parent["files"]) + list(seg),
-        "stats": {**parent.get("stats", {}), **(stats or {})},
-        "dv_files": list(parent.get("dv_files", [])) + dv_seg,
+        "ts": time.time() if timestamp is None else timestamp,
+        "files": list(carry.get("files", [])) + list(seg),
+        "stats": {**carry.get("stats", {}), **(stats or {})},
     }
-    if delta is not None:
-        mf["delta_files"] = list(delta)
     optional = {
-        "schema": {**(parent.get("schema") or {}), **(schema or {})},
-        "blooms": {**parent.get("blooms", {}), **(blooms or {})},
+        "blooms": {**carry.get("blooms", {}), **(blooms or {})},
+        "dv_files": list(carry.get("dv_files", [])) + list(dv_seg),
+        "schema": {**_table_schema(carry), **(schema or {})},
         "table_props": dict(props),
     }
     mf.update({k: v for k, v in optional.items() if v})
+    mf.update({k: v for k, v in extra.items() if v is not None})
     return mf
+
+
+def _publish_rebased(
+    table_dir: str, head: dict | None, build, check, retries: int
+) -> int:
+    """THE publish loop of the versions that may rebase: publish
+    ``build(head)``; when a concurrent commit claimed that version
+    number, re-read the head, let ``check(head)`` raise
+    :class:`VersionConflict` if rebasing this operation onto it is
+    unsafe, and publish ``build(head)`` again — up to ``retries``
+    times.  ``build`` reuses the operation's already-written segments,
+    so a retry is driver-side JSON only."""
+    for attempt in range(max(0, retries) + 1):
+        try:
+            return _publish(table_dir, build(head))
+        except VersionConflict:
+            if attempt >= retries:
+                raise
+        head = _read_manifest(table_dir, latest_version(table_dir))
+        check(head)
+    raise AssertionError("unreachable")  # pragma: no cover
 
 
 def _publish_dv_op(
@@ -1940,20 +1863,14 @@ def _publish_dv_op(
 
     Concurrent blind APPENDS always commute (the WriteSerializable
     contract: rows appended after our predicate scan are not affected
-    by it).  ``op`` holds :func:`_dv_manifest`'s arguments after the
-    parent; each retry rebuilds the manifest against the new head,
+    by it).  ``op`` holds :func:`_next_manifest`'s arguments after the
+    head; each retry rebuilds the manifest against the new head,
     reusing the already-written segments untouched — a retry is
     driver-side JSON plus KB-scale sidecar reads, never a
     recompute."""
     dv_seg = op["dv_seg"]
-    manifest = _dv_manifest(entry_manifest, **op)
-    for attempt in range(max(0, retry_conflicts) + 1):
-        try:
-            return _publish(table_dir, manifest)
-        except VersionConflict:
-            if attempt >= retry_conflicts or not can_retry:
-                raise
-        head = _read_manifest(table_dir, latest_version(table_dir))
+
+    def check(head: dict) -> None:
         if head.get("table_props", {}) != entry_manifest.get(
             "table_props", {}
         ):
@@ -1987,8 +1904,12 @@ def _publish_dv_op(
                 f"{len(overlap)} of the same data file(s) "
                 f"(e.g. {overlap[0]}) — re-run"
             )
-        manifest = _dv_manifest(head, **op)
-    raise AssertionError("unreachable")  # pragma: no cover
+
+    return _publish_rebased(
+        table_dir, entry_manifest,
+        lambda head: _next_manifest(head, **op), check,
+        retry_conflicts if can_retry else 0,
+    )
 
 
 def replace_where(
@@ -2029,17 +1950,13 @@ def replace_where(
     exactly the CDC shape of a replace).  Returns the new version."""
     from pyspark.sql import functions as F
 
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    _check_expected(cur, expect_version)
-    m = _read_manifest(table_dir, cur)
+    m = _head(table_dir, expect_version)
     props = dict(m.get("table_props", {}))
     # --- deletion vector over the matched live rows (predicate is in
     # LOGICAL names; files hold physical ones)
     tagged = _dv_read(spark, m, keep_tags=True)
     hits = tagged.filter(F.expr(predicate)).select(*_DV_COLS)
-    new_version = cur + 1
+    new_version = m["version"] + 1
     dv_seg = _write_segment(hits.coalesce(1), table_dir, new_version)
     dv_dirs = _seg_dirs(dv_seg)
     # --- replacement segment (layout + physical names like commit)
@@ -2083,10 +2000,9 @@ def replace_where(
     )
     return _publish_dv_op(
         table_dir, m, retry_conflicts, expect_version is ANY,
-        mode="replace", note=note,
-        ts=timestamp if timestamp is not None else time.time(),
-        props=props, dv_seg=dv_seg, seg=seg, delta=seg,
-        stats=seg_stats, blooms=seg_blooms, schema=seg_schema,
+        mode="replace", note=note, timestamp=timestamp, props=props,
+        seg=seg, stats=seg_stats, blooms=seg_blooms, schema=seg_schema,
+        dv_seg=dv_seg, delta_files=seg,
     )
 
 
@@ -2117,21 +2033,16 @@ def delete_where(
     live rows).  Returns the new version number."""
     from pyspark.sql import functions as F
 
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    _check_expected(cur, expect_version)
-    m = _read_manifest(table_dir, cur)
+    m = _head(table_dir, expect_version)
     props = m.get("table_props", {})
     # the predicate references LOGICAL names; files hold physical ones
     tagged = _dv_read(spark, m, keep_tags=True)
     hits = tagged.filter(F.expr(predicate)).select(*_DV_COLS)
-    seg = _write_segment(hits.coalesce(1), table_dir, cur + 1)
+    seg = _write_segment(hits.coalesce(1), table_dir, m["version"] + 1)
     return _publish_dv_op(
         table_dir, m, retry_conflicts, expect_version is ANY,
-        mode="delete", note=note,
-        ts=timestamp if timestamp is not None else time.time(),
-        props=props, dv_seg=seg,
+        mode="delete", note=note, timestamp=timestamp, props=props,
+        dv_seg=seg,
     )
 
 
@@ -2240,11 +2151,7 @@ def update_where(
     Returns the new version number."""
     from pyspark.sql import functions as F
 
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    _check_expected(cur, expect_version)
-    m = _read_manifest(table_dir, cur)
+    m = _head(table_dir, expect_version)
     props = dict(m.get("table_props", {}))
     # SET/WHERE reference LOGICAL names; files hold physical ones
     tagged = _dv_read(spark, m, keep_tags=True)
@@ -2257,7 +2164,7 @@ def update_where(
     # one filtered scan feeds both the vector and the post-image;
     # localCheckpoint would break _metadata, so cache the small match
     matched = matched.cache()
-    new_version = cur + 1
+    new_version = m["version"] + 1
     dv_seg = _write_segment(
         matched.select(*_DV_COLS).coalesce(1),
         table_dir,
@@ -2289,10 +2196,9 @@ def update_where(
     )
     return _publish_dv_op(
         table_dir, m, retry_conflicts, expect_version is ANY,
-        mode="update", note=note,
-        ts=timestamp if timestamp is not None else time.time(),
-        props=props, dv_seg=dv_seg, seg=seg, delta=seg,
-        stats=seg_stats, blooms=seg_blooms, schema=_footer_schema(seg),
+        mode="update", note=note, timestamp=timestamp, props=props,
+        seg=seg, stats=seg_stats, blooms=seg_blooms,
+        schema=_footer_schema(seg), dv_seg=dv_seg, delta_files=seg,
     )
 
 
@@ -2587,18 +2493,11 @@ def convert_to_versioned(
         raise FileNotFoundError(
             f"no .parquet files under {parquet_dir}"
         )
-    manifest = {
-        "version": 0,
-        "parent": None,
-        "mode": "overwrite",
-        "note": note,
-        "ts": timestamp if timestamp is not None else time.time(),
-        "converted_from": os.path.abspath(parquet_dir),
-        "files": files,
-        "stats": _file_stats(files),
-        "schema": _footer_schema(files),
-    }
-    return _publish(table_dir, manifest)
+    return _publish(table_dir, _next_manifest(
+        None, "overwrite", note, timestamp, {}, files,
+        _file_stats(files), schema=_footer_schema(files),
+        converted_from=os.path.abspath(parquet_dir),
+    ))
 
 
 def clone_table(
@@ -2634,30 +2533,16 @@ def clone_table(
     if latest_version(dst_dir) is not None:
         raise VersionConflict(f"{dst_dir} already has versions")
     src = _read_manifest(src_dir, version)
-    manifest = {
-        "version": 0,
-        "parent": None,
-        "mode": "overwrite",
-        "note": note,
-        "ts": timestamp if timestamp is not None else time.time(),
-        "cloned_from": {
-            "dir": os.path.abspath(src_dir),
-            "version": version,
-        },
+    carry = {
+        **src,
         "files": [os.path.abspath(f) for f in src["files"]],
-        "stats": dict(src.get("stats", {})),
+        "dv_files": [os.path.abspath(f) for f in src.get("dv_files", [])],
     }
-    if src.get("blooms"):
-        manifest["blooms"] = dict(src["blooms"])
-    if src.get("dv_files"):
-        manifest["dv_files"] = [
-            os.path.abspath(f) for f in src["dv_files"]
-        ]
-    if src.get("schema"):
-        manifest["schema"] = dict(src["schema"])
-    if src.get("table_props"):
-        manifest["table_props"] = dict(src["table_props"])
-    return _publish(dst_dir, manifest)
+    return _publish(dst_dir, _next_manifest(
+        None, "overwrite", note, timestamp, src.get("table_props", {}),
+        carry=carry,
+        cloned_from={"dir": os.path.abspath(src_dir), "version": version},
+    ))
 
 
 def read_version(

@@ -42,62 +42,26 @@ from ..sources.delta import (
     _read_commit,
     _snapshot_state,
 )
-from .source import _pack_units, _split_conf
-
-# DataType.simpleString() already speaks DDL — this is the closed
-# set of scalar types the stream's Arrow cast path handles
-_DDL_SCALARS = {
-    "bigint", "int", "smallint", "tinyint", "string", "double",
-    "float", "boolean", "date", "timestamp", "binary",
-}
-
-
-def _delta_fields(spark_schema) -> list[tuple[str, str]]:
-    """Delta metaData schema → [(name, spark_ddl_type)]; complex types
-    refuse (the stream's Arrow cast path handles scalars)."""
-    out = []
-    for f in spark_schema.fields:
-        simple = f.dataType.simpleString()
-        if simple in _DDL_SCALARS:
-            out.append((f.name, simple))
-        elif simple.startswith("decimal("):
-            out.append((f.name, simple))
-        else:
-            raise DeltaProtocolError(
-                f"delta_feed: column {f.name!r} has unsupported type "
-                f"{simple!r} (scalar columns only)"
-            )
-    return out
-
-
-def _arrow_type(ddl: str):
-    import pyarrow as pa
-
-    table = {
-        "tinyint": pa.int8(), "smallint": pa.int16(),
-        "int": pa.int32(), "bigint": pa.int64(),
-        "float": pa.float32(), "double": pa.float64(),
-        "string": pa.string(), "boolean": pa.bool_(),
-        "date": pa.date32(), "binary": pa.binary(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-    }
-    if ddl in table:
-        return table[ddl]
-    if ddl.startswith("decimal("):
-        p, s = ddl[8:-1].split(",")
-        return pa.decimal128(int(p), int(s))
-    raise DeltaProtocolError(f"no arrow mapping for {ddl!r}")
+from .source import (
+    _pack_units,
+    _register_source,
+    _scalar_schema,
+    _split_conf,
+)
 
 
 def _make_delta_feed_class(split):
     """Build the DataSource class; its reader packs files with
     ``split``, the registering session's :func:`~.source._split_conf`."""
     from pyspark.sql.datasource import DataSource, DataSourceStreamReader
+    from pyspark.sql.types import LongType
 
     class _DeltaFeedStreamReader(DataSourceStreamReader):
-        def __init__(self, table_dir, fields, part_cols, options):
+        def __init__(self, table_dir, schema, part_cols, options):
+            from pyspark.sql.pandas.types import to_arrow_schema
+
             self._dir = table_dir
-            self._fields = fields
+            self._pa_schema = to_arrow_schema(schema)
             self._part_cols = part_cols
             self._start = int(options.get("startingVersion", 0))
             self._ignore_deletes = str(
@@ -117,11 +81,12 @@ def _make_delta_feed_class(split):
             if self._max_files:
                 # admission control: advance only as far as the file
                 # cap allows per trigger.  Paced off the offsets THIS
-                # instance already emitted — MEASURED (PySpark 4.1):
-                # the streaming runner never invokes ``commit`` on
-                # python stream readers, so the earlier committed-
-                # offset pacing pinned the stream at the first capped
-                # offset forever (r15 fix).  After a restart the
+                # instance already emitted, because Spark (PySpark
+                # 4.1) commits batch N to the reader only when it
+                # plans batch N+1 and never commits a run's last
+                # batch — pacing off committed offsets lags a batch
+                # behind and held an availableNow run at its first
+                # capped offset (r15 fix).  After a restart the
                 # counter resets and a few empty triggers re-sync;
                 # (start, end] in partitions() keeps every batch
                 # exactly-once regardless.
@@ -213,10 +178,9 @@ def _make_delta_feed_class(split):
                         self._dir, rel
                     )
                     pv = a.get("partitionValues") or {}
-                    # (path, version, [(col, ddl_type, raw_string)])
+                    # (path, version, [(col, raw_string)])
                     out.append((
-                        path, v,
-                        [(c, t, pv.get(c)) for c, t in self._part_cols],
+                        path, v, [(c, pv.get(c)) for c in self._part_cols],
                     ))
             return _pack_units(out, split)
 
@@ -224,25 +188,20 @@ def _make_delta_feed_class(split):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            target = pa.schema(
-                [pa.field(nm, _arrow_type(t)) for nm, t in self._fields]
-                + [pa.field("_commit_version", pa.int64())]
-            )
+            target = self._pa_schema
             for path, version, pvals in partition.value:
                 tbl = pq.read_table(path)
                 n = len(tbl)
-                for col, ddl, raw in pvals:
-                    at = _arrow_type(ddl)
-                    arr = pa.array([raw] * n, pa.string()).cast(at)
+                for col, raw in pvals:
+                    arr = pa.array([raw] * n, pa.string()).cast(
+                        target.field(col).type
+                    )
                     tbl = tbl.append_column(col, arr)
                 tbl = tbl.append_column(
                     "_commit_version", pa.array([version] * n, pa.int64())
                 )
                 tbl = tbl.select(target.names).cast(target)
                 yield from tbl.to_batches()
-
-        def commit(self, end: dict) -> None:
-            self._committed = int(end["version"])
 
     class DeltaFeedDataSource(DataSource):
         """``format("delta_feed")``: stream an external Delta table."""
@@ -270,29 +229,24 @@ def _make_delta_feed_class(split):
                     "delta_feed does not support column-mapping "
                     "tables; read snapshots via read_delta instead"
                 )
-            fields = _delta_fields(schema)
-            pcols = list(meta.get("partitionColumns") or [])
-            part_cols = [(c, t) for c, t in fields if c in pcols]
-            return fields, part_cols
+            schema = _scalar_schema(
+                schema, DeltaProtocolError, "delta_feed"
+            ).add("_commit_version", LongType())
+            pcols = set(meta.get("partitionColumns") or [])
+            return schema, [c for c in schema.names if c in pcols]
 
-        def schema(self) -> str:
-            fields, _ = self._resolved()
-            cols = ", ".join(f"`{n}` {t}" for n, t in fields)
-            return f"{cols}, `_commit_version` bigint"
+        def schema(self):
+            return self._resolved()[0]
 
         def streamReader(self, schema):
-            fields, part_cols = self._resolved()
             return _DeltaFeedStreamReader(
-                self._table_dir(), fields, part_cols, self.options
+                self._table_dir(), *self._resolved(), self.options
             )
 
     return DeltaFeedDataSource
 
 
 def register_delta_feed(spark) -> None:
-    """Register ``delta_feed`` on this session (idempotent)."""
-    try:
-        spark.dataSource.register(_make_delta_feed_class(_split_conf(spark)))
-    except Exception as e:  # noqa: BLE001
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
-            raise
+    """Register ``delta_feed`` on this session (see
+    :func:`~.source._register_source`)."""
+    _register_source(spark, _make_delta_feed_class(_split_conf(spark)))

@@ -50,48 +50,27 @@ from ..sources.hudi import (
     _LOG_RE,
     _completed_instants,
 )
-from .source import _pack_units, _split_conf
-
-_ARROW_DDL = {
-    "int8": "tinyint", "int16": "smallint", "int32": "int",
-    "int64": "bigint", "float": "float", "double": "double",
-    "string": "string", "large_string": "string", "bool": "boolean",
-    "date32[day]": "date", "binary": "binary",
-}
+from .source import (
+    _pack_units,
+    _register_source,
+    _scalar_schema,
+    _split_conf,
+)
 
 
-def _ddl_from_arrow(arrow_type) -> str:
-    s = str(arrow_type)
-    if s in _ARROW_DDL:
-        return _ARROW_DDL[s]
-    if s.startswith("timestamp[us, tz="):
-        return "timestamp"
-    if s.startswith("timestamp["):
-        return "timestamp_ntz"
-    if s.startswith("decimal128("):
-        return "decimal(" + s[11:]
-    raise HudiProtocolError(
-        f"hudi_feed: unsupported column type {s!r} (scalar columns "
-        "only)"
-    )
-
-
-def _stream_fields(table_dir: str) -> list[tuple[str, str]]:
-    """(name, ddl) from the arrow schema of one base file — the
-    session-less twin of the batch reader's schema inference."""
+def _stream_schema(table_dir: str):
+    """The Spark schema of one base file's arrow schema (scalar columns
+    only) — the session-less twin of the batch reader's schema
+    inference.  Zone-less timestamps read as TIMESTAMP_NTZ."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     for root, dirs, files in os.walk(table_dir):
         dirs[:] = [d for d in dirs if d != ".hoodie"]
         for name in sorted(files):
             if _BASE_RE.match(name) and name.endswith(".parquet"):
-                schema = pq.read_schema(os.path.join(root, name))
-                fields = [
-                    (f.name, _ddl_from_arrow(f.type)) for f in schema
-                ]
-                if "_hoodie_commit_time" not in {
-                    n for n, _ in fields
-                }:
+                arrow = pq.read_schema(os.path.join(root, name))
+                if "_hoodie_commit_time" not in arrow.names:
                     raise HudiProtocolError(
                         "hudi_feed needs the _hoodie_commit_time "
                         "meta column (table written with hoodie."
@@ -99,7 +78,15 @@ def _stream_fields(table_dir: str) -> list[tuple[str, str]]:
                         "per-row cursor, upsert rewrites would "
                         "re-emit"
                     )
-                return fields
+                try:
+                    schema = from_arrow_schema(
+                        arrow, prefer_timestamp_ntz=True
+                    )
+                except TypeError as e:  # an arrow type Spark lacks
+                    raise HudiProtocolError(
+                        f"hudi_feed: unsupported column type ({e})"
+                    ) from None
+                return _scalar_schema(schema, HudiProtocolError, "hudi_feed")
     raise HudiProtocolError(f"no base files under {table_dir}")
 
 
@@ -144,9 +131,11 @@ def _make_hudi_feed_class(split):
     from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 
     class _HudiFeedStreamReader(DataSourceStreamReader):
-        def __init__(self, table_dir, fields, options):
+        def __init__(self, table_dir, schema, options):
+            from pyspark.sql.pandas.types import to_arrow_schema
+
             self._dir = table_dir
-            self._fields = fields
+            self._pa_schema = to_arrow_schema(schema)
             self._starting = options.get("startingInstant")
             self._max_files = int(options.get("maxFilesPerTrigger", 0))
 
@@ -171,12 +160,12 @@ def _make_hudi_feed_class(split):
             log = self._timeline()
             latest = len(log) - 1
             if self._max_files:
-                # admission control pacing.  MEASURED (PySpark
-                # 4.1): the streaming runner NEVER invokes
-                # ``commit`` on python stream readers, so pacing
-                # off committed offsets pins the stream at the
-                # first capped offset forever.  Pace off the
-                # offsets THIS instance already emitted instead:
+                # admission control pacing.  Spark (PySpark 4.1)
+                # commits batch N to the reader only when it plans
+                # batch N+1 and never commits a run's last batch, so
+                # pacing off committed offsets lags a batch behind.
+                # Pace off the offsets THIS instance already emitted
+                # instead:
                 # Spark plans (checkpointed start, emitted end]
                 # batches, so every trigger advances one cap
                 # window; after a restart the counter resets and a
@@ -216,11 +205,8 @@ def _make_hudi_feed_class(split):
 
             from ..sources.hudi_log import log_records
 
-            names = [n for n, _ in self._fields]
-            target = pa.schema(
-                [pa.field(n, _arrow_type(t))
-                 for n, t in self._fields]
-            )
+            target = self._pa_schema
+            names = target.names
             for path, kind, instant in partition.value:
                 if kind == "base":
                     tbl = pq.read_table(path)
@@ -245,9 +231,6 @@ def _make_hudi_feed_class(split):
                     )
                 yield from tbl.to_batches()
 
-        def commit(self, end: dict) -> None:
-            self._committed = int(end["index"])
-
     class HudiFeedDataSource(DataSource):
         """``format("hudi_feed")``: stream a Hudi table's committed
         write tail by per-row commit time."""
@@ -264,46 +247,20 @@ def _make_hudi_feed_class(split):
                 )
             return d
 
-        def schema(self) -> str:
-            fields = _stream_fields(self._table_dir())
-            return ", ".join(f"`{n}` {t}" for n, t in fields)
+        def schema(self):
+            return _stream_schema(self._table_dir())
 
         def streamReader(self, schema):
             return _HudiFeedStreamReader(
                 self._table_dir(),
-                _stream_fields(self._table_dir()),
+                _stream_schema(self._table_dir()),
                 self.options,
             )
 
     return HudiFeedDataSource
 
 
-def _arrow_type(ddl: str):
-    import pyarrow as pa
-
-    table = {
-        "tinyint": pa.int8(), "smallint": pa.int16(),
-        "int": pa.int32(), "bigint": pa.int64(),
-        "float": pa.float32(), "double": pa.float64(),
-        "string": pa.string(), "boolean": pa.bool_(),
-        "date": pa.date32(), "binary": pa.binary(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-        "timestamp_ntz": pa.timestamp("us"),
-    }
-    if ddl in table:
-        return table[ddl]
-    if ddl.startswith("decimal("):
-        p, s = ddl[8:-1].split(",")
-        return pa.decimal128(int(p), int(s))
-    raise HudiProtocolError(f"no arrow mapping for {ddl!r}")
-
-
 def register_hudi_feed(spark) -> None:
-    """Register ``hudi_feed`` on this session (idempotent)."""
-    try:
-        spark.dataSource.register(
-            _make_hudi_feed_class(_split_conf(spark))
-        )
-    except Exception as e:  # noqa: BLE001
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
-            raise
+    """Register ``hudi_feed`` on this session (see
+    :func:`~.source._register_source`)."""
+    _register_source(spark, _make_hudi_feed_class(_split_conf(spark)))

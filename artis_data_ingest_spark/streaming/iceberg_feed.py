@@ -29,58 +29,30 @@ into byte-sized input partitions (``source._pack_units``).
 
 from __future__ import annotations
 
-import os
-
 from ..sources.iceberg import (
     IcebergProtocolError,
+    _current_schema,
     _load_table_metadata,
-    _norm_path,
     _snapshot_files,
 )
-from .source import _pack_units, _split_conf
-
-_DDL_SCALARS = {
-    "bigint", "int", "smallint", "tinyint", "string", "double",
-    "float", "boolean", "date", "timestamp", "timestamp_ntz",
-    "binary",
-}
-
-
-def _iceberg_stream_fields(meta) -> list[tuple[str, str]]:
-    from ..sources.iceberg import _current_schema
-
-    schema = _current_schema(meta)
-    out = []
-    for f in schema.fields:
-        simple = f.dataType.simpleString()
-        if simple in _DDL_SCALARS or simple.startswith("decimal("):
-            out.append((f.name, simple))
-        else:
-            raise IcebergProtocolError(
-                f"iceberg_feed: column {f.name!r} has unsupported "
-                f"type {simple!r} (scalar columns only)"
-            )
-    return out
+from .source import (
+    _pack_units,
+    _register_source,
+    _scalar_schema,
+    _split_conf,
+)
 
 
-def _arrow_type(ddl: str):
-    import pyarrow as pa
+def _iceberg_stream_schema(table_dir: str):
+    """The stream's declared schema: the table's current schema (scalar
+    columns only) plus ``_snapshot_id``."""
+    from pyspark.sql.types import LongType
 
-    table = {
-        "tinyint": pa.int8(), "smallint": pa.int16(),
-        "int": pa.int32(), "bigint": pa.int64(),
-        "float": pa.float32(), "double": pa.float64(),
-        "string": pa.string(), "boolean": pa.bool_(),
-        "date": pa.date32(), "binary": pa.binary(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-        "timestamp_ntz": pa.timestamp("us"),
-    }
-    if ddl in table:
-        return table[ddl]
-    if ddl.startswith("decimal("):
-        p, s = ddl[8:-1].split(",")
-        return pa.decimal128(int(p), int(s))
-    raise IcebergProtocolError(f"no arrow mapping for {ddl!r}")
+    return _scalar_schema(
+        _current_schema(_load_table_metadata(table_dir)),
+        IcebergProtocolError,
+        "iceberg_feed",
+    ).add("_snapshot_id", LongType())
 
 
 def _make_iceberg_feed_class(split):
@@ -89,9 +61,11 @@ def _make_iceberg_feed_class(split):
     from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 
     class _IcebergFeedStreamReader(DataSourceStreamReader):
-        def __init__(self, table_dir, fields, options):
+        def __init__(self, table_dir, schema, options):
+            from pyspark.sql.pandas.types import to_arrow_schema
+
             self._dir = table_dir
-            self._fields = fields
+            self._pa_schema = to_arrow_schema(schema)
             self._starting = options.get("startingSnapshotId")
             self._max_files = int(options.get("maxFilesPerTrigger", 0))
 
@@ -151,11 +125,10 @@ def _make_iceberg_feed_class(split):
             latest = len(log) - 1
             if self._max_files:
                 # paced off the offsets THIS instance already
-                # emitted — MEASURED (PySpark 4.1): the streaming
-                # runner never invokes ``commit`` on python stream
-                # readers, so committed-offset pacing pinned the
-                # stream at the first capped offset forever (r15
-                # fix; see delta_feed for the full note)
+                # emitted: Spark commits batch N to the reader only
+                # when it plans batch N+1 and never commits a run's
+                # last batch (r15 fix; see delta_feed for the full
+                # note)
                 cur = getattr(
                     self, "_paced", self._start_index(log)
                 )
@@ -186,11 +159,7 @@ def _make_iceberg_feed_class(split):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            target = pa.schema(
-                [pa.field(nm, _arrow_type(t))
-                 for nm, t in self._fields]
-                + [pa.field("_snapshot_id", pa.int64())]
-            )
+            target = self._pa_schema
             for path, snapshot_id in partition.value:
                 tbl = pq.read_table(path)
                 tbl = tbl.append_column(
@@ -199,9 +168,6 @@ def _make_iceberg_feed_class(split):
                 )
                 tbl = tbl.select(target.names).cast(target)
                 yield from tbl.to_batches()
-
-        def commit(self, end: dict) -> None:
-            self._committed = int(end["index"])
 
     class IcebergFeedDataSource(DataSource):
         """``format("iceberg_feed")``: stream an external Iceberg
@@ -219,17 +185,13 @@ def _make_iceberg_feed_class(split):
                 )
             return d
 
-        def schema(self) -> str:
-            meta = _load_table_metadata(self._table_dir())
-            fields = _iceberg_stream_fields(meta)
-            cols = ", ".join(f"`{n}` {t}" for n, t in fields)
-            return f"{cols}, `_snapshot_id` bigint"
+        def schema(self):
+            return _iceberg_stream_schema(self._table_dir())
 
         def streamReader(self, schema):
-            meta = _load_table_metadata(self._table_dir())
             return _IcebergFeedStreamReader(
                 self._table_dir(),
-                _iceberg_stream_fields(meta),
+                _iceberg_stream_schema(self._table_dir()),
                 self.options,
             )
 
@@ -237,11 +199,6 @@ def _make_iceberg_feed_class(split):
 
 
 def register_iceberg_feed(spark) -> None:
-    """Register ``iceberg_feed`` on this session (idempotent)."""
-    try:
-        spark.dataSource.register(
-            _make_iceberg_feed_class(_split_conf(spark))
-        )
-    except Exception as e:  # noqa: BLE001
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
-            raise
+    """Register ``iceberg_feed`` on this session (see
+    :func:`~.source._register_source`)."""
+    _register_source(spark, _make_iceberg_feed_class(_split_conf(spark)))

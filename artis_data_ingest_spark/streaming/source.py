@@ -192,6 +192,28 @@ def _pack_units(units, split):
     ]
 
 
+def _scalar_schema(schema, error, feed: str):
+    """``schema`` with every field nullable, as the lake feeds declare
+    it; a column whose type is not a scalar their Arrow cast
+    (``to_arrow_schema``) handles raises ``error``."""
+    from pyspark.sql import types as T
+
+    scalars = (
+        T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
+        T.DoubleType, T.DecimalType, T.StringType, T.BooleanType,
+        T.DateType, T.TimestampType, T.TimestampNTZType, T.BinaryType,
+    )
+    for f in schema.fields:
+        if not isinstance(f.dataType, scalars):
+            raise error(
+                f"{feed}: column {f.name!r} has unsupported type "
+                f"{f.dataType.simpleString()!r} (scalar columns only)"
+            )
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in schema.fields]
+    )
+
+
 def _read_units(units, pa_schema, phys_map):
     """Executor-side: the Arrow batches of one packed partition's
     ``(path, version, drop, take, kind)`` units, file by file."""
@@ -358,9 +380,7 @@ def _make_datasource_class(split=None):
         from staging into a fresh segment directory; returns the
         segment file list.  Per-file moves (not a dir rename) so
         stray files from failed task attempts never publish."""
-        import uuid as _uuid
-
-        from ..sinks.versioned import latest_version
+        from ..sinks.versioned import _segment_dir, latest_version
 
         files = sorted(
             m.path for m in messages if m is not None and m.path
@@ -369,12 +389,7 @@ def _make_datasource_class(split=None):
             return []  # caller decides: batch write refuses, a
             # stream micro-batch just publishes nothing
         cur = latest_version(table_dir)
-        seg = _os.path.join(
-            table_dir,
-            "data",
-            f"{(cur if cur is not None else -1) + 1:06d}"
-            f"-{_uuid.uuid4().hex[:8]}",
-        )
+        seg = _segment_dir(table_dir, (cur if cur is not None else -1) + 1)
         _os.makedirs(seg, exist_ok=True)
         out = []
         for f in files:
@@ -398,13 +413,11 @@ def _make_datasource_class(split=None):
         versioned modes.  Options: ``note``, ``timestamp``."""
 
         def __init__(self, table_dir: str, overwrite: bool, options):
-            import uuid as _uuid
+            from ..sinks.versioned import _segment_dir
 
             self._dir = table_dir
             self._overwrite = overwrite
-            self._staging = _os.path.join(
-                table_dir, "data", f"w-{_uuid.uuid4().hex[:8]}"
-            )
+            self._staging = _segment_dir(table_dir)
             self._note = options.get("note", "datasource write")
             ts = options.get("timestamp")
             self._ts = float(ts) if ts is not None else None
@@ -457,7 +470,8 @@ def _make_datasource_class(split=None):
         def __init__(self, table_dir: str, options,
                      overwrite: bool = False):
             import re
-            import uuid as _uuid
+
+            from ..sinks.versioned import _segment_dir
 
             self._dir = table_dir
             # Spark passes overwrite=True for outputMode('complete')/
@@ -466,9 +480,7 @@ def _make_datasource_class(split=None):
             # previously the flag was ignored and a complete-mode
             # stream silently accumulated rows (ADVICE r13 #4)
             self._overwrite = bool(overwrite)
-            self._staging = _os.path.join(
-                table_dir, "data", f"w-{_uuid.uuid4().hex[:8]}"
-            )
+            self._staging = _segment_dir(table_dir)
             wid = options.get("writerId", "stream")
             if not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", wid):
                 raise ValueError(
@@ -1090,10 +1102,11 @@ def _make_datasource_class(split=None):
     return VersionedFeedDataSource
 
 
-def register_versioned_feed(spark) -> None:
-    """Register the ``versioned_feed`` data source on this session.
-    Idempotent — re-registration on the same session replaces the
-    previous class.
+def _register_source(spark, source) -> None:
+    """Register the DataSource class ``source`` on this session — the
+    one registration path of ``versioned_feed``, ``delta_feed``,
+    ``iceberg_feed`` and ``hudi_feed``.  Idempotent: re-registration
+    on the same session replaces the previous class.
 
     ``newSession()`` caveat (observed on Spark 4.1): a sibling session
     created AFTER the first registration raises
@@ -1103,10 +1116,9 @@ def register_versioned_feed(spark) -> None:
     duplicate check and the lookup disagree about scope.  We detect
     that half-registered state and raise a clear error instead of
     leaving a session that claims the source but cannot read it."""
+    name = source.name()
     try:
-        spark.dataSource.register(
-            _make_datasource_class(_split_conf(spark))
-        )
+        spark.dataSource.register(source)
     except Exception as e:  # noqa: BLE001 — narrowed on the error code
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
             raise
@@ -1114,18 +1126,24 @@ def register_versioned_feed(spark) -> None:
         try:
             usable = bool(
                 spark._jsparkSession.sessionState()
-                .dataSourceManager().dataSourceExists("versioned_feed")
+                .dataSourceManager().dataSourceExists(name)
             )
         except Exception:
             pass  # connect-mode / API drift: trust the engine's check
         if not usable:
             raise RuntimeError(
-                "versioned_feed cannot be registered on this derived "
+                f"{name} cannot be registered on this derived "
                 "session (Spark 4.1 newSession() registry quirk: the "
                 "duplicate check sees the parent's registration but "
                 "lookup does not).  Register and read on the session "
                 "that first registered the source."
             ) from e
+
+
+def register_versioned_feed(spark) -> None:
+    """Register the ``versioned_feed`` data source on this session
+    (see :func:`_register_source`)."""
+    _register_source(spark, _make_datasource_class(_split_conf(spark)))
 
 
 __all__ = ["register_versioned_feed"]

@@ -3650,6 +3650,123 @@ def test_commit_staged_blind_append_retry(spark, tmp_path):
         commit_staged(tdir, extra, expect_version=2)
 
 
+def test_versioned_manifest_of_every_publishing_operation(spark, tmp_path):
+    """Every operation that publishes a version — overwrite, append,
+    the versioned_feed writer, merge, delete, update, replace, an
+    alter, compact, restore, clone and convert — records one manifest
+    shape: the common keys, only its own extras, its pinned ``ts``, no
+    empty optional key, and the parent's state carried where the
+    operation extends it (an append keeps the parent's deletion
+    vectors; compact materializes them)."""
+    import os
+
+    from artis_data_ingest_spark.sinks.versioned import (
+        _read_manifest,
+        add_constraint,
+        clone_table,
+        commit,
+        compact,
+        convert_to_versioned,
+        delete_where,
+        merge_commit,
+        replace_where,
+        restore,
+        update_where,
+    )
+    from artis_data_ingest_spark.streaming.source import (
+        register_versioned_feed,
+    )
+
+    register_versioned_feed(spark)
+    t, t2, t3 = (str(tmp_path / n) for n in ("t", "t2", "t3"))
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    commit(rows(0, 100), t, mode="overwrite", bloom_cols=["k"],
+           n_files=2, timestamp=100.0)
+    commit(rows(100, 150), t, bloom_cols=[], timestamp=101.0)
+    (rows(150, 170).write.format("versioned_feed").mode("append")
+     .option("path", t).option("timestamp", "102.0").save())
+    merge_commit(spark, t, rows(160, 180), ["k"], timestamp=103.0)
+    delete_where(spark, t, "k < 10", timestamp=104.0)
+    update_where(spark, t, {"v": "v + 1"}, "k between 20 and 29",
+                 timestamp=105.0)
+    replace_where(spark, t, rows(40, 45), "k between 40 and 49",
+                  timestamp=106.0)
+    add_constraint(spark, t, "v_pos", "v >= 0", timestamp=107.0)
+    commit(rows(200, 210), t, timestamp=108.0)
+    compact(spark, t, timestamp=109.0)
+    restore(spark, t, version=4, timestamp=110.0)
+    clone_table(t, t2, version=6, timestamp=120.0)
+    rows(0, 30).coalesce(2).write.parquet(str(tmp_path / "plain"))
+    convert_to_versioned(str(tmp_path / "plain"), t3, timestamp=130.0)
+
+    m = [_read_manifest(t, v) for v in range(11)]
+    clone, conv = _read_manifest(t2, 0), _read_manifest(t3, 0)
+    common = {
+        "version", "parent", "mode", "note", "ts", "files", "stats",
+        "schema",
+    }
+    data = common | {"blooms", "table_props"}
+    dv = data | {"dv_files"}
+    want = [
+        data, data, data, dv | {"delta_files"}, dv, dv | {"delta_files"},
+        dv | {"delta_files"}, dv, dv, common | {"table_props"},
+        dv | {"restored_from"},
+    ]
+    modes = [
+        "overwrite", "append", "append", "merge", "delete", "update",
+        "replace", "alter", "append", "compact", "restore",
+    ]
+    for v, (mf, keys, mode) in enumerate(zip(m, want, modes)):
+        assert set(mf) == keys, (v, sorted(mf))
+        assert (mf["version"], mf["parent"], mf["mode"], mf["ts"]) == (
+            v, v - 1 if v else None, mode, 100.0 + v
+        )
+    assert set(clone) == dv | {"cloned_from"}
+    assert set(conv) == common | {"converted_from"}
+    assert (clone["ts"], conv["ts"]) == (120.0, 130.0)
+    assert (clone["parent"], conv["parent"]) == (None, None)
+    optional = ("blooms", "dv_files", "schema", "table_props",
+                "delta_files")
+    for mf in m + [clone, conv]:
+        assert all(mf[k] for k in optional if k in mf), mf["version"]
+        assert set(mf["stats"]) <= {os.path.abspath(f) for f in mf["files"]}
+    # the appends and the alter extend their parent: files, stats,
+    # blooms, deletion vectors and schema all carry
+    for v in (1, 2, 7, 8):
+        parent, mf = m[v - 1], m[v]
+        assert mf["files"][: len(parent["files"])] == parent["files"]
+        assert parent.get("dv_files", []) == mf.get("dv_files", [])
+        assert parent["stats"].items() <= mf["stats"].items()
+        assert parent["blooms"].items() <= mf["blooms"].items()
+        assert parent["schema"].items() <= mf["schema"].items()
+    assert m[1]["table_props"] == {"bloom_cols": []}
+    assert m[7]["table_props"]["constraints"] == {"v_pos": "v >= 0"}
+    # each row operation adds one vector segment to its parent's
+    for v in (3, 4, 5, 6):
+        assert m[v]["dv_files"][: len(m[v - 1].get("dv_files", []))] == (
+            m[v - 1].get("dv_files", [])
+        )
+        assert len(m[v]["dv_files"]) > len(m[v - 1].get("dv_files", []))
+    assert m[5]["delta_files"] == m[5]["files"][len(m[4]["files"]):]
+    # compact rewrote every file and materialized the vectors
+    assert not set(m[9]["files"]) & set(m[8]["files"])
+    assert m[9]["schema"] == m[8]["schema"]
+    # restore and clone adopt another version's state
+    for key in ("files", "stats", "blooms", "dv_files", "schema"):
+        assert m[10][key] == m[4][key]
+    assert m[10]["restored_from"] == 4
+    assert m[10]["table_props"] == m[9]["table_props"]
+    assert clone["files"] == m[6]["files"]
+    assert clone["cloned_from"] == {"dir": os.path.abspath(t), "version": 6}
+    assert conv["converted_from"] == os.path.abspath(str(tmp_path / "plain"))
+    assert conv["schema"] == {"k": "int64", "v": "int64"}
+
+
 def test_versioned_feature_composition(spark, tmp_path):
     """Cross-feature composition on ONE table: clustered+bloom layout
     -> rename -> CHECK constraint -> replace_where on the renamed

@@ -2129,3 +2129,37 @@ def test_versioned_feed_cdc_stream_and_streaming_matview(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert view_state() == truth()
+
+
+def test_feed_sources_refuse_a_derived_session(spark):
+    """All four Python feed sources register through one helper.  On a
+    session derived with ``newSession()`` after the first
+    registration, Spark 4.1's duplicate check sees the source while
+    its lookup does not; each register call raises a clear
+    RuntimeError there instead of returning a session whose ``load()``
+    fails with DATA_SOURCE_NOT_FOUND."""
+    import pytest
+
+    from artis_data_ingest_spark.streaming.delta_feed import (
+        register_delta_feed,
+    )
+    from artis_data_ingest_spark.streaming.hudi_feed import (
+        register_hudi_feed,
+    )
+    from artis_data_ingest_spark.streaming.iceberg_feed import (
+        register_iceberg_feed,
+    )
+    from artis_data_ingest_spark.streaming.source import (
+        register_versioned_feed,
+    )
+
+    for register in (
+        register_versioned_feed,
+        register_delta_feed,
+        register_iceberg_feed,
+        register_hudi_feed,
+    ):
+        register(spark)
+        register(spark)  # idempotent on the registering session
+        with pytest.raises(RuntimeError, match="derived session"):
+            register(spark.newSession())
