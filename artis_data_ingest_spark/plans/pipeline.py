@@ -8,6 +8,7 @@ rows-only checks — the pytest suite pins their exact semantics instead.
 
 from __future__ import annotations
 
+import contextlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -874,6 +875,30 @@ def q_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def _fixture_build(table: str) -> Iterator[str]:
+    """Build a cached fixture table in place: start from an empty
+    ``table`` directory and yield its ``_build_tmp`` staging path.  On
+    success the staging directory goes and ``_SUCCESS`` is written
+    last; on any exception the partial table is removed, so the next
+    call rebuilds it.  The table is not built elsewhere and renamed
+    because Iceberg and Hudi metadata may hold absolute paths."""
+    import os
+    import shutil
+
+    shutil.rmtree(table, ignore_errors=True)
+    os.makedirs(table)
+    tmp = os.path.join(table, "_build_tmp")
+    try:
+        yield tmp
+    except BaseException:
+        shutil.rmtree(table, ignore_errors=True)
+        raise
+    shutil.rmtree(tmp, ignore_errors=True)
+    with open(os.path.join(table, "_SUCCESS"), "w"):
+        pass
+
+
 def _delta_cache_path(sf_dir: str) -> str:
     import hashlib
     import os
@@ -901,79 +926,74 @@ def _build_delta_fixture(spark: SparkSession, sf_dir: str) -> str:
     v2 adds bucket 3 — so latest = {0,2,3} and v0 = {0,1}."""
     import json
     import os
-    import shutil
 
     table = _delta_cache_path(sf_dir)
     if os.path.exists(os.path.join(table, "_SUCCESS")):
         return table
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(os.path.join(table, "_delta_log"), exist_ok=True)
+    with _fixture_build(table) as tmp:
+        os.makedirs(os.path.join(table, "_delta_log"), exist_ok=True)
 
-    orders = load_table(spark, sf_dir, "orders")
-    tmp = os.path.join(table, "_build_tmp")
+        orders = load_table(spark, sf_dir, "orders")
 
-    def _write_bucket(k: int) -> dict:
-        rel = f"bucket={k}/part-0.parquet"
-        out = os.path.join(table, rel)
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        stage = os.path.join(tmp, f"b{k}")
-        (
-            orders.where(F.col("o_orderkey") % 4 == k)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        os.replace(os.path.join(stage, part), out)
-        return {"add": {
-            "path": rel, "partitionValues": {"bucket": str(k)},
-            "size": os.path.getsize(out),
-            "modificationTime": 1700000000000, "dataChange": True,
+        def _write_bucket(k: int) -> dict:
+            rel = f"bucket={k}/part-0.parquet"
+            out = os.path.join(table, rel)
+            os.makedirs(os.path.dirname(out), exist_ok=True)
+            stage = os.path.join(tmp, f"b{k}")
+            (
+                orders.where(F.col("o_orderkey") % 4 == k)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(stage)
+            )
+            part = next(
+                f for f in os.listdir(stage) if f.endswith(".parquet")
+            )
+            os.replace(os.path.join(stage, part), out)
+            return {"add": {
+                "path": rel, "partitionValues": {"bucket": str(k)},
+                "size": os.path.getsize(out),
+                "modificationTime": 1700000000000, "dataChange": True,
+            }}
+
+        schema_json = json.dumps({
+            "type": "struct",
+            "fields": [
+                {"name": f.name, "type": f.dataType.jsonValue(),
+                 "nullable": True, "metadata": {}}
+                for f in orders.schema.fields
+            ] + [{"name": "bucket", "type": "long", "nullable": True,
+                  "metadata": {}}],
+        })
+        meta = {"metaData": {
+            "id": "orders-interop-fixture",
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema_json,
+            "partitionColumns": ["bucket"],
+            "configuration": {},
+            "createdTime": 1700000000000,
         }}
+        proto = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
 
-    schema_json = json.dumps({
-        "type": "struct",
-        "fields": [
-            {"name": f.name, "type": f.dataType.jsonValue(),
-             "nullable": True, "metadata": {}}
-            for f in orders.schema.fields
-        ] + [{"name": "bucket", "type": "long", "nullable": True,
-              "metadata": {}}],
-    })
-    meta = {"metaData": {
-        "id": "orders-interop-fixture",
-        "format": {"provider": "parquet", "options": {}},
-        "schemaString": schema_json,
-        "partitionColumns": ["bucket"],
-        "configuration": {},
-        "createdTime": 1700000000000,
-    }}
-    proto = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+        def _commit(v: int, actions: list[dict]) -> None:
+            path = os.path.join(table, "_delta_log", f"{v:020d}.json")
+            with open(path, "w") as fh:
+                for a in actions:
+                    fh.write(json.dumps(a) + "\n")
 
-    def _commit(v: int, actions: list[dict]) -> None:
-        path = os.path.join(table, "_delta_log", f"{v:020d}.json")
-        with open(path, "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
-
-    a0, a1 = _write_bucket(0), _write_bucket(1)
-    _commit(0, [proto, meta,
-                {"commitInfo": {"timestamp": 1, "operation": "WRITE"}},
-                a0, a1])
-    a2 = _write_bucket(2)
-    _commit(1, [{"commitInfo": {"timestamp": 2, "operation": "MERGE"}},
-                a2,
-                {"remove": {"path": a1["add"]["path"],
-                            "dataChange": True,
-                            "deletionTimestamp": 2}}])
-    a3 = _write_bucket(3)
-    _commit(2, [{"commitInfo": {"timestamp": 3, "operation": "WRITE"}},
-                a3])
-    shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(table, "_SUCCESS"), "w"):
-        pass
+        a0, a1 = _write_bucket(0), _write_bucket(1)
+        _commit(0, [proto, meta,
+                    {"commitInfo": {"timestamp": 1, "operation": "WRITE"}},
+                    a0, a1])
+        a2 = _write_bucket(2)
+        _commit(1, [{"commitInfo": {"timestamp": 2, "operation": "MERGE"}},
+                    a2,
+                    {"remove": {"path": a1["add"]["path"],
+                                "dataChange": True,
+                                "deletionTimestamp": 2}}])
+        a3 = _write_bucket(3)
+        _commit(2, [{"commitInfo": {"timestamp": 3, "operation": "WRITE"}},
+                    a3])
     return table
 
 
@@ -1088,7 +1108,6 @@ def _build_delta_dv_fixture(spark: SparkSession, sf_dir: str) -> str:
     modern Databricks writer leaves behind."""
     import json
     import os
-    import shutil
     import uuid as _uuid
 
     import pyarrow.parquet as pq
@@ -1102,101 +1121,97 @@ def _build_delta_dv_fixture(spark: SparkSession, sf_dir: str) -> str:
     table = _delta_dv_cache_path(sf_dir)
     if os.path.exists(os.path.join(table, "_SUCCESS")):
         return table
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(os.path.join(table, "_delta_log"), exist_ok=True)
-    orders = load_table(spark, sf_dir, "orders")
-    tmp = os.path.join(table, "_build_tmp")
+    with _fixture_build(table) as tmp:
+        os.makedirs(os.path.join(table, "_delta_log"), exist_ok=True)
+        orders = load_table(spark, sf_dir, "orders")
 
-    def _write_half(parity: int, rel: str) -> dict:
-        out = os.path.join(table, rel)
-        stage = os.path.join(tmp, f"h{parity}")
-        (
-            orders.where(F.col("o_orderkey") % 2 == parity)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
+        def _write_half(parity: int, rel: str) -> dict:
+            out = os.path.join(table, rel)
+            stage = os.path.join(tmp, f"h{parity}")
+            (
+                orders.where(F.col("o_orderkey") % 2 == parity)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(stage)
+            )
+            part = next(
+                f for f in os.listdir(stage) if f.endswith(".parquet")
+            )
+            os.replace(os.path.join(stage, part), out)
+            return {"add": {
+                "path": rel, "partitionValues": {},
+                "size": os.path.getsize(out),
+                "modificationTime": 1700000000000, "dataChange": True,
+                "stats": json.dumps(
+                    {"numRecords": pq.ParquetFile(out).metadata.num_rows}
+                ),
+            }}
+
+        def _positions(rel: str, modulus: int) -> list[int]:
+            # deleted row positions IN FILE ORDER — what a DV indexes
+            keys = pq.read_table(
+                os.path.join(table, rel), columns=["o_orderkey"]
+            ).column("o_orderkey").to_pylist()
+            return [i for i, k in enumerate(keys) if k % modulus == 0]
+
+        a = _write_half(0, "part-a.parquet")
+        b = _write_half(1, "part-b.parquet")
+        schema_json = json.dumps({
+            "type": "struct",
+            "fields": [
+                {"name": f.name, "type": f.dataType.jsonValue(),
+                 "nullable": True, "metadata": {}}
+                for f in orders.schema.fields
+            ],
+        })
+
+        def _commit(v: int, actions: list[dict]) -> None:
+            path = os.path.join(table, "_delta_log", f"{v:020d}.json")
+            with open(path, "w") as fh:
+                for act in actions:
+                    fh.write(json.dumps(act) + "\n")
+
+        _commit(0, [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {"metaData": {
+                "id": "orders-dv-fixture",
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": schema_json,
+                "partitionColumns": [],
+                "configuration": {},
+                "createdTime": 1700000000000,
+            }},
+            {"commitInfo": {"timestamp": 1, "operation": "WRITE"}},
+            a, b,
+        ])
+
+        pay_a = serialize_dv(_positions("part-a.parquet", 3))
+        dv_a = {"storageType": "i", "pathOrInlineDv": z85_encode(pay_a),
+                "sizeInBytes": len(pay_a),
+                "cardinality": len(_positions("part-a.parquet", 3))}
+        u = _uuid.uuid4()
+        pay_b = serialize_dv(_positions("part-b.parquet", 5))
+        off = append_dv_entry(
+            os.path.join(table, f"deletion_vector_{u}.bin"), pay_b
         )
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        os.replace(os.path.join(stage, part), out)
-        return {"add": {
-            "path": rel, "partitionValues": {},
-            "size": os.path.getsize(out),
-            "modificationTime": 1700000000000, "dataChange": True,
-            "stats": json.dumps(
-                {"numRecords": pq.ParquetFile(out).metadata.num_rows}
-            ),
-        }}
-
-    def _positions(rel: str, modulus: int) -> list[int]:
-        # deleted row positions IN FILE ORDER — what a DV indexes
-        keys = pq.read_table(
-            os.path.join(table, rel), columns=["o_orderkey"]
-        ).column("o_orderkey").to_pylist()
-        return [i for i, k in enumerate(keys) if k % modulus == 0]
-
-    a = _write_half(0, "part-a.parquet")
-    b = _write_half(1, "part-b.parquet")
-    shutil.rmtree(tmp, ignore_errors=True)
-    schema_json = json.dumps({
-        "type": "struct",
-        "fields": [
-            {"name": f.name, "type": f.dataType.jsonValue(),
-             "nullable": True, "metadata": {}}
-            for f in orders.schema.fields
-        ],
-    })
-
-    def _commit(v: int, actions: list[dict]) -> None:
-        path = os.path.join(table, "_delta_log", f"{v:020d}.json")
-        with open(path, "w") as fh:
-            for act in actions:
-                fh.write(json.dumps(act) + "\n")
-
-    _commit(0, [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {"metaData": {
-            "id": "orders-dv-fixture",
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": schema_json,
-            "partitionColumns": [],
-            "configuration": {},
-            "createdTime": 1700000000000,
-        }},
-        {"commitInfo": {"timestamp": 1, "operation": "WRITE"}},
-        a, b,
-    ])
-
-    pay_a = serialize_dv(_positions("part-a.parquet", 3))
-    dv_a = {"storageType": "i", "pathOrInlineDv": z85_encode(pay_a),
-            "sizeInBytes": len(pay_a),
-            "cardinality": len(_positions("part-a.parquet", 3))}
-    u = _uuid.uuid4()
-    pay_b = serialize_dv(_positions("part-b.parquet", 5))
-    off = append_dv_entry(
-        os.path.join(table, f"deletion_vector_{u}.bin"), pay_b
-    )
-    dv_b = {"storageType": "u", "pathOrInlineDv": z85_encode(u.bytes),
-            "offset": off, "sizeInBytes": len(pay_b),
-            "cardinality": len(_positions("part-b.parquet", 5))}
-    add_a2 = {"add": dict(a["add"], dataChange=True,
-                          deletionVector=dv_a)}
-    add_b2 = {"add": dict(b["add"], dataChange=True,
-                          deletionVector=dv_b)}
-    _commit(1, [
-        {"commitInfo": {"timestamp": 2, "operation": "DELETE"}},
-        {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
-                      "readerFeatures": ["deletionVectors"],
-                      "writerFeatures": ["deletionVectors"]}},
-        {"remove": {"path": a["add"]["path"], "dataChange": True,
-                    "deletionTimestamp": 2}},
-        {"remove": {"path": b["add"]["path"], "dataChange": True,
-                    "deletionTimestamp": 2}},
-        add_a2, add_b2,
-    ])
-    with open(os.path.join(table, "_SUCCESS"), "w"):
-        pass
+        dv_b = {"storageType": "u", "pathOrInlineDv": z85_encode(u.bytes),
+                "offset": off, "sizeInBytes": len(pay_b),
+                "cardinality": len(_positions("part-b.parquet", 5))}
+        add_a2 = {"add": dict(a["add"], dataChange=True,
+                              deletionVector=dv_a)}
+        add_b2 = {"add": dict(b["add"], dataChange=True,
+                              deletionVector=dv_b)}
+        _commit(1, [
+            {"commitInfo": {"timestamp": 2, "operation": "DELETE"}},
+            {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                          "readerFeatures": ["deletionVectors"],
+                          "writerFeatures": ["deletionVectors"]}},
+            {"remove": {"path": a["add"]["path"], "dataChange": True,
+                        "deletionTimestamp": 2}},
+            {"remove": {"path": b["add"]["path"], "dataChange": True,
+                        "deletionTimestamp": 2}},
+            add_a2, add_b2,
+        ])
     return table
 
 
@@ -1310,150 +1325,145 @@ def _build_iceberg_fixture(spark: SparkSession, sf_dir: str) -> str:
     Manifest list + manifests are real Avro OCFs (our codec)."""
     import json
     import os
-    import shutil
 
     from ..sources.avro_ocf import encode_ocf
 
     table = _iceberg_cache_path(sf_dir)
     if os.path.exists(os.path.join(table, "_SUCCESS")):
         return table
-    shutil.rmtree(table, ignore_errors=True)
-    meta_dir = os.path.join(table, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    os.makedirs(os.path.join(table, "data"), exist_ok=True)
+    with _fixture_build(table) as tmp:
+        meta_dir = os.path.join(table, "metadata")
+        os.makedirs(meta_dir, exist_ok=True)
+        os.makedirs(os.path.join(table, "data"), exist_ok=True)
 
-    orders = load_table(spark, sf_dir, "orders")
-    tmp = os.path.join(table, "_build_tmp")
+        orders = load_table(spark, sf_dir, "orders")
 
-    entry_t = T.StructType([
-        T.StructField("status", T.IntegerType(), False),
-        T.StructField("snapshot_id", T.LongType(), True),
-        T.StructField("data_file", T.StructType([
+        entry_t = T.StructType([
+            T.StructField("status", T.IntegerType(), False),
+            T.StructField("snapshot_id", T.LongType(), True),
+            T.StructField("data_file", T.StructType([
+                T.StructField("content", T.IntegerType(), True),
+                T.StructField("file_path", T.StringType(), False),
+                T.StructField("file_format", T.StringType(), False),
+                T.StructField("record_count", T.LongType(), False),
+                T.StructField("file_size_in_bytes", T.LongType(), False),
+            ]), False),
+        ])
+        list_t = T.StructType([
+            T.StructField("manifest_path", T.StringType(), False),
+            T.StructField("manifest_length", T.LongType(), False),
+            T.StructField("partition_spec_id", T.IntegerType(), False),
             T.StructField("content", T.IntegerType(), True),
-            T.StructField("file_path", T.StringType(), False),
-            T.StructField("file_format", T.StringType(), False),
-            T.StructField("record_count", T.LongType(), False),
-            T.StructField("file_size_in_bytes", T.LongType(), False),
-        ]), False),
-    ])
-    list_t = T.StructType([
-        T.StructField("manifest_path", T.StringType(), False),
-        T.StructField("manifest_length", T.LongType(), False),
-        T.StructField("partition_spec_id", T.IntegerType(), False),
-        T.StructField("content", T.IntegerType(), True),
-        T.StructField("added_snapshot_id", T.LongType(), True),
-    ])
+            T.StructField("added_snapshot_id", T.LongType(), True),
+        ])
 
-    def _write_bucket(k: int) -> dict:
-        out = os.path.join(table, "data", f"bucket-{k}.parquet")
-        stage = os.path.join(tmp, f"b{k}")
-        (
-            orders.where(F.col("o_orderkey") % 4 == k)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
+        def _write_bucket(k: int) -> dict:
+            out = os.path.join(table, "data", f"bucket-{k}.parquet")
+            stage = os.path.join(tmp, f"b{k}")
+            (
+                orders.where(F.col("o_orderkey") % 4 == k)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(stage)
+            )
+            part = next(
+                f for f in os.listdir(stage) if f.endswith(".parquet")
+            )
+            os.replace(os.path.join(stage, part), out)
+            return {"content": 0, "file_path": f"file://{out}",
+                    "file_format": "PARQUET", "record_count": 0,
+                    "file_size_in_bytes": os.path.getsize(out)}
+
+        def _avro(name: str, rows: list[dict], schema) -> str:
+            path = os.path.join(meta_dir, name)
+            with open(path, "wb") as fh:
+                fh.write(encode_ocf(rows, schema))
+            return path
+
+        def _manifest(name: str, entries: list[dict],
+                      content: int = 0) -> dict:
+            path = _avro(name, entries, entry_t)
+            return {"manifest_path": f"file://{path}",
+                    "manifest_length": os.path.getsize(path),
+                    "partition_spec_id": 0, "content": content,
+                    "added_snapshot_id": 1}
+
+        a, b = _write_bucket(0), _write_bucket(1)
+        m1 = _manifest("m-100.avro", [
+            {"status": 1, "snapshot_id": 100, "data_file": a},
+            {"status": 1, "snapshot_id": 100, "data_file": b},
+        ])
+        _avro("snap-100.avro", [m1], list_t)
+
+        c = _write_bucket(2)
+        # position-delete: mask A's rows with o_orderkey%3==0, positions
+        # taken from the FILE's own row order via _metadata.row_index
+        dels = (
+            spark.read.parquet(a["file_path"].removeprefix("file://"))
+            .where(F.col("o_orderkey") % 3 == 0)
+            .select(
+                F.lit(a["file_path"]).alias("file_path"),
+                F.col("_metadata.row_index").alias("pos"),
+            )
         )
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
+        dstage = os.path.join(tmp, "dels")
+        dels.coalesce(1).write.mode("overwrite").parquet(dstage)
+        dpart = next(
+            f for f in os.listdir(dstage) if f.endswith(".parquet")
         )
-        os.replace(os.path.join(stage, part), out)
-        return {"content": 0, "file_path": f"file://{out}",
-                "file_format": "PARQUET", "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(out)}
+        dpath = os.path.join(table, "data", "delete-1.parquet")
+        os.replace(os.path.join(dstage, dpart), dpath)
+        ddf = {"content": 1, "file_path": f"file://{dpath}",
+               "file_format": "PARQUET", "record_count": 0,
+               "file_size_in_bytes": os.path.getsize(dpath)}
+        m2 = _manifest("m-200.avro", [
+            {"status": 0, "snapshot_id": 100, "data_file": a},
+            {"status": 2, "snapshot_id": 200, "data_file": b},
+            {"status": 1, "snapshot_id": 200, "data_file": c},
+        ])
+        m3 = _manifest("m-200-del.avro", [
+            {"status": 1, "snapshot_id": 200, "data_file": ddf},
+        ], content=1)
+        _avro("snap-200.avro", [m2, m3], list_t)
 
-    def _avro(name: str, rows: list[dict], schema) -> str:
-        path = os.path.join(meta_dir, name)
-        with open(path, "wb") as fh:
-            fh.write(encode_ocf(rows, schema))
-        return path
+        d = _write_bucket(3)
+        m4 = _manifest("m-300.avro", [
+            {"status": 1, "snapshot_id": 300, "data_file": d},
+        ])
+        _avro("snap-300.avro", [m2, m3, m4], list_t)
 
-    def _manifest(name: str, entries: list[dict],
-                  content: int = 0) -> dict:
-        path = _avro(name, entries, entry_t)
-        return {"manifest_path": f"file://{path}",
-                "manifest_length": os.path.getsize(path),
-                "partition_spec_id": 0, "content": content,
-                "added_snapshot_id": 1}
-
-    a, b = _write_bucket(0), _write_bucket(1)
-    m1 = _manifest("m-100.avro", [
-        {"status": 1, "snapshot_id": 100, "data_file": a},
-        {"status": 1, "snapshot_id": 100, "data_file": b},
-    ])
-    _avro("snap-100.avro", [m1], list_t)
-
-    c = _write_bucket(2)
-    # position-delete: mask A's rows with o_orderkey%3==0, positions
-    # taken from the FILE's own row order via _metadata.row_index
-    dels = (
-        spark.read.parquet(a["file_path"].removeprefix("file://"))
-        .where(F.col("o_orderkey") % 3 == 0)
-        .select(
-            F.lit(a["file_path"]).alias("file_path"),
-            F.col("_metadata.row_index").alias("pos"),
-        )
-    )
-    dstage = os.path.join(tmp, "dels")
-    dels.coalesce(1).write.mode("overwrite").parquet(dstage)
-    dpart = next(
-        f for f in os.listdir(dstage) if f.endswith(".parquet")
-    )
-    dpath = os.path.join(table, "data", "delete-1.parquet")
-    os.replace(os.path.join(dstage, dpart), dpath)
-    ddf = {"content": 1, "file_path": f"file://{dpath}",
-           "file_format": "PARQUET", "record_count": 0,
-           "file_size_in_bytes": os.path.getsize(dpath)}
-    m2 = _manifest("m-200.avro", [
-        {"status": 0, "snapshot_id": 100, "data_file": a},
-        {"status": 2, "snapshot_id": 200, "data_file": b},
-        {"status": 1, "snapshot_id": 200, "data_file": c},
-    ])
-    m3 = _manifest("m-200-del.avro", [
-        {"status": 1, "snapshot_id": 200, "data_file": ddf},
-    ], content=1)
-    _avro("snap-200.avro", [m2, m3], list_t)
-
-    d = _write_bucket(3)
-    m4 = _manifest("m-300.avro", [
-        {"status": 1, "snapshot_id": 300, "data_file": d},
-    ])
-    _avro("snap-300.avro", [m2, m3, m4], list_t)
-
-    fields = [
-        {"id": i + 1, "name": f.name, "required": False,
-         "type": {"bigint": "long", "string": "string",
-                  "double": "double",
-                  "timestamp": "timestamptz"}[
-                      f.dataType.simpleString()]}
-        for i, f in enumerate(orders.schema.fields)
-    ]
-    meta = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-0000000000ib",
-        "location": f"file://{table}",
-        "current-snapshot-id": 300,
-        "schemas": [{"schema-id": 0, "type": "struct",
-                     "fields": fields}],
-        "current-schema-id": 0,
-        "snapshots": [
-            {"snapshot-id": 100, "timestamp-ms": 1,
-             "summary": {"operation": "append"},
-             "manifest-list": f"file://{meta_dir}/snap-100.avro"},
-            {"snapshot-id": 200, "timestamp-ms": 2,
-             "summary": {"operation": "overwrite"},
-             "manifest-list": f"file://{meta_dir}/snap-200.avro"},
-            {"snapshot-id": 300, "timestamp-ms": 3,
-             "summary": {"operation": "append"},
-             "manifest-list": f"file://{meta_dir}/snap-300.avro"},
-        ],
-    }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
-    shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(table, "_SUCCESS"), "w"):
-        pass
+        fields = [
+            {"id": i + 1, "name": f.name, "required": False,
+             "type": {"bigint": "long", "string": "string",
+                      "double": "double",
+                      "timestamp": "timestamptz"}[
+                          f.dataType.simpleString()]}
+            for i, f in enumerate(orders.schema.fields)
+        ]
+        meta = {
+            "format-version": 2,
+            "table-uuid": "00000000-0000-0000-0000-0000000000ib",
+            "location": f"file://{table}",
+            "current-snapshot-id": 300,
+            "schemas": [{"schema-id": 0, "type": "struct",
+                         "fields": fields}],
+            "current-schema-id": 0,
+            "snapshots": [
+                {"snapshot-id": 100, "timestamp-ms": 1,
+                 "summary": {"operation": "append"},
+                 "manifest-list": f"file://{meta_dir}/snap-100.avro"},
+                {"snapshot-id": 200, "timestamp-ms": 2,
+                 "summary": {"operation": "overwrite"},
+                 "manifest-list": f"file://{meta_dir}/snap-200.avro"},
+                {"snapshot-id": 300, "timestamp-ms": 3,
+                 "summary": {"operation": "append"},
+                 "manifest-list": f"file://{meta_dir}/snap-300.avro"},
+            ],
+        }
+        with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
+            json.dump(meta, fh)
+        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
+            fh.write("1")
     return table
 
 
@@ -1570,131 +1580,126 @@ def _build_iceberg_eq_fixture(spark: SparkSession, sf_dir: str) -> str:
     delete, not before it."""
     import json
     import os
-    import shutil
 
     from ..sources.avro_ocf import encode_ocf
 
     table = _iceberg_eq_cache_path(sf_dir)
     if os.path.exists(os.path.join(table, "_SUCCESS")):
         return table
-    shutil.rmtree(table, ignore_errors=True)
-    meta_dir = os.path.join(table, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    os.makedirs(os.path.join(table, "data"), exist_ok=True)
-    orders = load_table(spark, sf_dir, "orders")
-    tmp = os.path.join(table, "_build_tmp")
+    with _fixture_build(table) as tmp:
+        meta_dir = os.path.join(table, "metadata")
+        os.makedirs(meta_dir, exist_ok=True)
+        os.makedirs(os.path.join(table, "data"), exist_ok=True)
+        orders = load_table(spark, sf_dir, "orders")
 
-    entry_t = T.StructType([
-        T.StructField("status", T.IntegerType(), False),
-        T.StructField("snapshot_id", T.LongType(), True),
-        T.StructField("sequence_number", T.LongType(), True),
-        T.StructField("data_file", T.StructType([
+        entry_t = T.StructType([
+            T.StructField("status", T.IntegerType(), False),
+            T.StructField("snapshot_id", T.LongType(), True),
+            T.StructField("sequence_number", T.LongType(), True),
+            T.StructField("data_file", T.StructType([
+                T.StructField("content", T.IntegerType(), True),
+                T.StructField("file_path", T.StringType(), False),
+                T.StructField("file_format", T.StringType(), False),
+                T.StructField("record_count", T.LongType(), False),
+                T.StructField("file_size_in_bytes", T.LongType(), False),
+                T.StructField("equality_ids",
+                              T.ArrayType(T.IntegerType()), True),
+            ]), False),
+        ])
+        list_t = T.StructType([
+            T.StructField("manifest_path", T.StringType(), False),
+            T.StructField("manifest_length", T.LongType(), False),
+            T.StructField("partition_spec_id", T.IntegerType(), False),
             T.StructField("content", T.IntegerType(), True),
-            T.StructField("file_path", T.StringType(), False),
-            T.StructField("file_format", T.StringType(), False),
-            T.StructField("record_count", T.LongType(), False),
-            T.StructField("file_size_in_bytes", T.LongType(), False),
-            T.StructField("equality_ids",
-                          T.ArrayType(T.IntegerType()), True),
-        ]), False),
-    ])
-    list_t = T.StructType([
-        T.StructField("manifest_path", T.StringType(), False),
-        T.StructField("manifest_length", T.LongType(), False),
-        T.StructField("partition_spec_id", T.IntegerType(), False),
-        T.StructField("content", T.IntegerType(), True),
-        T.StructField("sequence_number", T.LongType(), True),
-        T.StructField("added_snapshot_id", T.LongType(), True),
-    ])
+            T.StructField("sequence_number", T.LongType(), True),
+            T.StructField("added_snapshot_id", T.LongType(), True),
+        ])
 
-    def _write_df(df, name: str, content: int = 0,
-                  equality_ids=None) -> dict:
-        out = os.path.join(table, "data", name)
-        stage = os.path.join(tmp, name)
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
+        def _write_df(df, name: str, content: int = 0,
+                      equality_ids=None) -> dict:
+            out = os.path.join(table, "data", name)
+            stage = os.path.join(tmp, name)
+            df.coalesce(1).write.mode("overwrite").parquet(stage)
+            part = next(
+                f for f in os.listdir(stage) if f.endswith(".parquet")
+            )
+            os.replace(os.path.join(stage, part), out)
+            return {"content": content, "file_path": f"file://{out}",
+                    "file_format": "PARQUET", "record_count": 0,
+                    "file_size_in_bytes": os.path.getsize(out),
+                    "equality_ids": equality_ids}
+
+        def _avro(name: str, rows: list[dict], schema) -> str:
+            path = os.path.join(meta_dir, name)
+            with open(path, "wb") as fh:
+                fh.write(encode_ocf(rows, schema))
+            return path
+
+        def _manifest(name: str, entries: list[dict], content: int,
+                      seq: int) -> dict:
+            path = _avro(name, entries, entry_t)
+            return {"manifest_path": f"file://{path}",
+                    "manifest_length": os.path.getsize(path),
+                    "partition_spec_id": 0, "content": content,
+                    "sequence_number": seq, "added_snapshot_id": 1}
+
+        a = _write_df(orders.where(F.col("o_orderkey") % 2 == 0),
+                      "even.parquet")
+        m1 = _manifest("m-100.avro", [
+            {"status": 1, "snapshot_id": 100, "sequence_number": 1,
+             "data_file": a},
+        ], 0, 1)
+        _avro("snap-100.avro", [m1], list_t)
+
+        b = _write_df(orders.where(F.col("o_orderkey") % 2 == 1),
+                      "odd.parquet")
+        e = _write_df(
+            orders.where(F.col("o_orderkey") % 7 == 0)
+            .select("o_orderkey"),
+            "eq-del.parquet", content=2, equality_ids=[1],
         )
-        os.replace(os.path.join(stage, part), out)
-        return {"content": content, "file_path": f"file://{out}",
-                "file_format": "PARQUET", "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(out),
-                "equality_ids": equality_ids}
+        m2 = _manifest("m-200.avro", [
+            {"status": 0, "snapshot_id": 100, "sequence_number": 1,
+             "data_file": a},
+            # B leaves sequence_number null → inherits the manifest's
+            {"status": 1, "snapshot_id": 200, "sequence_number": None,
+             "data_file": b},
+        ], 0, 2)
+        m3 = _manifest("m-200-eq.avro", [
+            {"status": 1, "snapshot_id": 200, "sequence_number": 2,
+             "data_file": e},
+        ], 1, 2)
+        _avro("snap-200.avro", [m2, m3], list_t)
 
-    def _avro(name: str, rows: list[dict], schema) -> str:
-        path = os.path.join(meta_dir, name)
-        with open(path, "wb") as fh:
-            fh.write(encode_ocf(rows, schema))
-        return path
-
-    def _manifest(name: str, entries: list[dict], content: int,
-                  seq: int) -> dict:
-        path = _avro(name, entries, entry_t)
-        return {"manifest_path": f"file://{path}",
-                "manifest_length": os.path.getsize(path),
-                "partition_spec_id": 0, "content": content,
-                "sequence_number": seq, "added_snapshot_id": 1}
-
-    a = _write_df(orders.where(F.col("o_orderkey") % 2 == 0),
-                  "even.parquet")
-    m1 = _manifest("m-100.avro", [
-        {"status": 1, "snapshot_id": 100, "sequence_number": 1,
-         "data_file": a},
-    ], 0, 1)
-    _avro("snap-100.avro", [m1], list_t)
-
-    b = _write_df(orders.where(F.col("o_orderkey") % 2 == 1),
-                  "odd.parquet")
-    e = _write_df(
-        orders.where(F.col("o_orderkey") % 7 == 0)
-        .select("o_orderkey"),
-        "eq-del.parquet", content=2, equality_ids=[1],
-    )
-    m2 = _manifest("m-200.avro", [
-        {"status": 0, "snapshot_id": 100, "sequence_number": 1,
-         "data_file": a},
-        # B leaves sequence_number null → inherits the manifest's
-        {"status": 1, "snapshot_id": 200, "sequence_number": None,
-         "data_file": b},
-    ], 0, 2)
-    m3 = _manifest("m-200-eq.avro", [
-        {"status": 1, "snapshot_id": 200, "sequence_number": 2,
-         "data_file": e},
-    ], 1, 2)
-    _avro("snap-200.avro", [m2, m3], list_t)
-
-    fields = [
-        {"id": i + 1, "name": f.name, "required": False,
-         "type": {"bigint": "long", "string": "string",
-                  "double": "double",
-                  "timestamp": "timestamptz"}[
-                      f.dataType.simpleString()]}
-        for i, f in enumerate(orders.schema.fields)
-    ]
-    meta = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-0000000000eq",
-        "location": f"file://{table}",
-        "current-snapshot-id": 200,
-        "schemas": [{"schema-id": 0, "type": "struct",
-                     "fields": fields}],
-        "current-schema-id": 0,
-        "snapshots": [
-            {"snapshot-id": 100, "timestamp-ms": 1,
-             "summary": {"operation": "append"},
-             "manifest-list": f"file://{meta_dir}/snap-100.avro"},
-            {"snapshot-id": 200, "timestamp-ms": 2,
-             "summary": {"operation": "overwrite"},
-             "manifest-list": f"file://{meta_dir}/snap-200.avro"},
-        ],
-    }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
-    shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(table, "_SUCCESS"), "w"):
-        pass
+        fields = [
+            {"id": i + 1, "name": f.name, "required": False,
+             "type": {"bigint": "long", "string": "string",
+                      "double": "double",
+                      "timestamp": "timestamptz"}[
+                          f.dataType.simpleString()]}
+            for i, f in enumerate(orders.schema.fields)
+        ]
+        meta = {
+            "format-version": 2,
+            "table-uuid": "00000000-0000-0000-0000-0000000000eq",
+            "location": f"file://{table}",
+            "current-snapshot-id": 200,
+            "schemas": [{"schema-id": 0, "type": "struct",
+                         "fields": fields}],
+            "current-schema-id": 0,
+            "snapshots": [
+                {"snapshot-id": 100, "timestamp-ms": 1,
+                 "summary": {"operation": "append"},
+                 "manifest-list": f"file://{meta_dir}/snap-100.avro"},
+                {"snapshot-id": 200, "timestamp-ms": 2,
+                 "summary": {"operation": "overwrite"},
+                 "manifest-list": f"file://{meta_dir}/snap-200.avro"},
+            ],
+        }
+        with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
+            json.dump(meta, fh)
+        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
+            fh.write("1")
     return table
 
 
@@ -2431,52 +2436,47 @@ def _build_hudi_fixture(spark: SparkSession, sf_dir: str) -> str:
     as-of 001 = (bucket0 ∧ %5≠0) ∪ bucket1 ∪ bucket2."""
     import json
     import os
-    import shutil
 
     table = _hudi_cache_path(sf_dir)
     if os.path.exists(os.path.join(table, "_SUCCESS")):
         return table
-    shutil.rmtree(table, ignore_errors=True)
-    hoodie = os.path.join(table, ".hoodie")
-    os.makedirs(hoodie, exist_ok=True)
-    orders = load_table(spark, sf_dir, "orders")
-    tmp = os.path.join(table, "_build_tmp")
+    with _fixture_build(table) as tmp:
+        hoodie = os.path.join(table, ".hoodie")
+        os.makedirs(hoodie, exist_ok=True)
+        orders = load_table(spark, sf_dir, "orders")
 
-    def _slice(pred, file_id: str, instant: str) -> None:
-        stage = os.path.join(tmp, f"{file_id}-{instant}")
-        orders.where(pred).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        os.replace(
-            os.path.join(stage, part),
-            os.path.join(table, f"{file_id}_1-0-1_{instant}.parquet"),
-        )
+        def _slice(pred, file_id: str, instant: str) -> None:
+            stage = os.path.join(tmp, f"{file_id}-{instant}")
+            orders.where(pred).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(stage)
+            part = next(
+                f for f in os.listdir(stage) if f.endswith(".parquet")
+            )
+            os.replace(
+                os.path.join(stage, part),
+                os.path.join(table, f"{file_id}_1-0-1_{instant}.parquet"),
+            )
 
-    def _commit(instant: str, kind: str = "commit",
-                body: dict | None = None) -> None:
-        with open(os.path.join(hoodie, f"{instant}.{kind}"),
-                  "w") as fh:
-            json.dump(body or {}, fh)
+        def _commit(instant: str, kind: str = "commit",
+                    body: dict | None = None) -> None:
+            with open(os.path.join(hoodie, f"{instant}.{kind}"),
+                      "w") as fh:
+                json.dump(body or {}, fh)
 
-    k = F.col("o_orderkey")
-    _slice((k % 3 == 0) & (k % 5 != 0), "fg0", "001")
-    _slice(k % 3 == 1, "fg1", "001")
-    _slice(k % 3 == 2, "fg2", "001")
-    _commit("001")
-    _slice(k % 3 == 0, "fg0", "002")
-    _commit("002")
-    _slice((k % 3 == 2) & (k % 2 == 0), "fg3", "003")
-    _commit("003", kind="replacecommit",
-            body={"partitionToReplaceFileIds": {"": ["fg2"]}})
-    _slice((k % 3 == 1) & (k % 7 == 0), "fg1", "004")
-    with open(os.path.join(hoodie, "004.commit.inflight"), "w"):
-        pass
-    shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(table, "_SUCCESS"), "w"):
-        pass
+        k = F.col("o_orderkey")
+        _slice((k % 3 == 0) & (k % 5 != 0), "fg0", "001")
+        _slice(k % 3 == 1, "fg1", "001")
+        _slice(k % 3 == 2, "fg2", "001")
+        _commit("001")
+        _slice(k % 3 == 0, "fg0", "002")
+        _commit("002")
+        _slice((k % 3 == 2) & (k % 2 == 0), "fg3", "003")
+        _commit("003", kind="replacecommit",
+                body={"partitionToReplaceFileIds": {"": ["fg2"]}})
+        _slice((k % 3 == 1) & (k % 7 == 0), "fg1", "004")
+        with open(os.path.join(hoodie, "004.commit.inflight"), "w"):
+            pass
     return table
 
 
@@ -2597,86 +2597,81 @@ def _build_hudi_mor_fixture(spark: SparkSession, sf_dir: str) -> str:
     as-of 002 = all rows with only the 002 override."""
     import json
     import os
-    import shutil
 
     from ..sources.hudi_log import write_log_file
 
     table = _hudi_mor_cache_path(sf_dir)
     if os.path.exists(os.path.join(table, "_SUCCESS")):
         return table
-    shutil.rmtree(table, ignore_errors=True)
-    hoodie = os.path.join(table, ".hoodie")
-    os.makedirs(hoodie, exist_ok=True)
-    tmp = os.path.join(table, "_build_tmp")
+    with _fixture_build(table) as tmp:
+        hoodie = os.path.join(table, ".hoodie")
+        os.makedirs(hoodie, exist_ok=True)
 
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("string").alias("_hoodie_record_key"),
-        F.lit("001").alias("_hoodie_commit_time"),
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-    )
-    mor_schema = base.schema
-    k = F.col("o_orderkey")
-
-    def _slice(pred, file_id: str, instant: str) -> None:
-        stage = os.path.join(tmp, f"{file_id}-{instant}")
-        base.where(pred).coalesce(1).write.mode("overwrite").parquet(
-            stage
+        base = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").cast("string").alias("_hoodie_record_key"),
+            F.lit("001").alias("_hoodie_commit_time"),
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         )
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        os.replace(
-            os.path.join(stage, part),
-            os.path.join(table, f"{file_id}_1-0-1_{instant}.parquet"),
-        )
+        mor_schema = base.schema
+        k = F.col("o_orderkey")
 
-    def _commit(instant: str, kind: str = "commit") -> None:
-        with open(os.path.join(hoodie, f"{instant}.{kind}"),
-                  "w") as fh:
-            json.dump({}, fh)
+        def _slice(pred, file_id: str, instant: str) -> None:
+            stage = os.path.join(tmp, f"{file_id}-{instant}")
+            base.where(pred).coalesce(1).write.mode("overwrite").parquet(
+                stage
+            )
+            part = next(
+                f for f in os.listdir(stage) if f.endswith(".parquet")
+            )
+            os.replace(
+                os.path.join(stage, part),
+                os.path.join(table, f"{file_id}_1-0-1_{instant}.parquet"),
+            )
 
-    _slice(k % 2 == 0, "fg0", "001")
-    _slice(k % 2 == 1, "fg1", "001")
-    _commit("001")
+        def _commit(instant: str, kind: str = "commit") -> None:
+            with open(os.path.join(hoodie, f"{instant}.{kind}"),
+                      "w") as fh:
+                json.dump({}, fh)
 
-    def _rows(pred, bump: int, instant: str) -> list[dict]:
-        out = [
-            r.asDict()
-            for r in base.where(pred).orderBy("o_orderkey").collect()
-        ]
-        for r in out:
-            r["o_custkey"] += bump
-            r["_hoodie_commit_time"] = instant
-        return out
+        _slice(k % 2 == 0, "fg0", "001")
+        _slice(k % 2 == 1, "fg1", "001")
+        _commit("001")
 
-    for grp in (0, 1):
-        g = k % 2 == grp
-        write_log_file(
-            os.path.join(table, f".fg{grp}_001.log.1_1-0-1"),
-            [("data", "002",
-              _rows(g & (k % 7 == 0), 1_000_000, "002"),
-              mor_schema)],
-        )
-    _commit("002", kind="deltacommit")
-    for grp in (0, 1):
-        g = k % 2 == grp
-        write_log_file(
-            os.path.join(table, f".fg{grp}_001.log.2_1-0-1"),
-            [
-                ("delete", "003", [
-                    r["_hoodie_record_key"]
-                    for r in _rows(g & (k % 5 == 0), 0, "003")
-                ]),
-                ("data", "003",
-                 _rows(g & (k % 21 == 0) & (k % 5 != 0),
-                       2_000_000, "003"),
-                 mor_schema),
-            ],
-        )
-    _commit("003", kind="deltacommit")
-    shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(table, "_SUCCESS"), "w"):
-        pass
+        def _rows(pred, bump: int, instant: str) -> list[dict]:
+            out = [
+                r.asDict()
+                for r in base.where(pred).orderBy("o_orderkey").collect()
+            ]
+            for r in out:
+                r["o_custkey"] += bump
+                r["_hoodie_commit_time"] = instant
+            return out
+
+        for grp in (0, 1):
+            g = k % 2 == grp
+            write_log_file(
+                os.path.join(table, f".fg{grp}_001.log.1_1-0-1"),
+                [("data", "002",
+                  _rows(g & (k % 7 == 0), 1_000_000, "002"),
+                  mor_schema)],
+            )
+        _commit("002", kind="deltacommit")
+        for grp in (0, 1):
+            g = k % 2 == grp
+            write_log_file(
+                os.path.join(table, f".fg{grp}_001.log.2_1-0-1"),
+                [
+                    ("delete", "003", [
+                        r["_hoodie_record_key"]
+                        for r in _rows(g & (k % 5 == 0), 0, "003")
+                    ]),
+                    ("data", "003",
+                     _rows(g & (k % 21 == 0) & (k % 5 != 0),
+                           2_000_000, "003"),
+                     mor_schema),
+                ],
+            )
+        _commit("003", kind="deltacommit")
     return table
 
 
@@ -3989,88 +3984,83 @@ def _build_delta_cdf_fixture(spark: SparkSession, sf_dir: str) -> str:
     carries the update_preimage/update_postimage rows."""
     import json
     import os
-    import shutil
 
     table = _delta_cdf_cache_path(sf_dir)
     if os.path.exists(os.path.join(table, "_SUCCESS")):
         return table
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(os.path.join(table, "_delta_log"), exist_ok=True)
-    os.makedirs(os.path.join(table, "_change_data"), exist_ok=True)
-    orders = load_table(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    base = orders.where(k % 4 == 1)
-    tmp = os.path.join(table, "_build_tmp")
+    with _fixture_build(table) as tmp:
+        os.makedirs(os.path.join(table, "_delta_log"), exist_ok=True)
+        os.makedirs(os.path.join(table, "_change_data"), exist_ok=True)
+        orders = load_table(spark, sf_dir, "orders")
+        k = F.col("o_orderkey")
+        base = orders.where(k % 4 == 1)
 
-    def _one_file(df: DataFrame, rel: str) -> dict:
-        stage = os.path.join(tmp, rel.replace("/", "_"))
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
+        def _one_file(df: DataFrame, rel: str) -> dict:
+            stage = os.path.join(tmp, rel.replace("/", "_"))
+            df.coalesce(1).write.mode("overwrite").parquet(stage)
+            part = next(
+                f for f in os.listdir(stage) if f.endswith(".parquet")
+            )
+            dst = os.path.join(table, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(os.path.join(stage, part), dst)
+            return {"path": rel, "partitionValues": {},
+                    "size": os.path.getsize(dst),
+                    "modificationTime": 1700000000000, "dataChange": True}
+
+        a0 = {"add": _one_file(base, "part-a.parquet")}
+        meta = {"metaData": {
+            "id": "cdf-fixture",
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": json.dumps({
+                "type": "struct",
+                "fields": [
+                    {"name": f.name, "type": f.dataType.jsonValue(),
+                     "nullable": True, "metadata": {}}
+                    for f in orders.schema.fields
+                ],
+            }),
+            "partitionColumns": [],
+            "configuration": {"delta.enableChangeDataFeed": "true"},
+        }}
+        proto = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}}
+
+        def _commit(v: int, actions: list[dict]) -> None:
+            with open(os.path.join(
+                table, "_delta_log", f"{v:020d}.json"
+            ), "w") as fh:
+                for a in actions:
+                    fh.write(json.dumps(a) + "\n")
+
+        _commit(0, [proto, meta,
+                    {"commitInfo": {"timestamp": 1, "operation": "WRITE"}},
+                    a0])
+
+        doubled = base.withColumn(
+            "o_totalprice",
+            F.when(k % 7 == 0, F.col("o_totalprice") * 2)
+            .otherwise(F.col("o_totalprice")),
         )
-        dst = os.path.join(table, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.replace(os.path.join(stage, part), dst)
-        return {"path": rel, "partitionValues": {},
-                "size": os.path.getsize(dst),
-                "modificationTime": 1700000000000, "dataChange": True}
-
-    a0 = {"add": _one_file(base, "part-a.parquet")}
-    meta = {"metaData": {
-        "id": "cdf-fixture",
-        "format": {"provider": "parquet", "options": {}},
-        "schemaString": json.dumps({
-            "type": "struct",
-            "fields": [
-                {"name": f.name, "type": f.dataType.jsonValue(),
-                 "nullable": True, "metadata": {}}
-                for f in orders.schema.fields
-            ],
-        }),
-        "partitionColumns": [],
-        "configuration": {"delta.enableChangeDataFeed": "true"},
-    }}
-    proto = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}}
-
-    def _commit(v: int, actions: list[dict]) -> None:
-        with open(os.path.join(
-            table, "_delta_log", f"{v:020d}.json"
-        ), "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
-
-    _commit(0, [proto, meta,
-                {"commitInfo": {"timestamp": 1, "operation": "WRITE"}},
-                a0])
-
-    doubled = base.withColumn(
-        "o_totalprice",
-        F.when(k % 7 == 0, F.col("o_totalprice") * 2)
-        .otherwise(F.col("o_totalprice")),
-    )
-    a1 = {"add": _one_file(doubled, "part-a1.parquet")}
-    pre = base.where(k % 7 == 0).withColumn(
-        "_change_type", F.lit("update_preimage")
-    )
-    post = (
-        base.where(k % 7 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-        .withColumn("_change_type", F.lit("update_postimage"))
-    )
-    cdc_file = _one_file(
-        pre.unionByName(post), "_change_data/cdc-1.parquet"
-    )
-    cdc_file["dataChange"] = False
-    _commit(1, [
-        {"commitInfo": {"timestamp": 2, "operation": "UPDATE"}},
-        {"remove": {"path": "part-a.parquet", "dataChange": True,
-                    "deletionTimestamp": 2}},
-        a1,
-        {"cdc": cdc_file},
-    ])
-    shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(table, "_SUCCESS"), "w"):
-        pass
+        a1 = {"add": _one_file(doubled, "part-a1.parquet")}
+        pre = base.where(k % 7 == 0).withColumn(
+            "_change_type", F.lit("update_preimage")
+        )
+        post = (
+            base.where(k % 7 == 0)
+            .withColumn("o_totalprice", F.col("o_totalprice") * 2)
+            .withColumn("_change_type", F.lit("update_postimage"))
+        )
+        cdc_file = _one_file(
+            pre.unionByName(post), "_change_data/cdc-1.parquet"
+        )
+        cdc_file["dataChange"] = False
+        _commit(1, [
+            {"commitInfo": {"timestamp": 2, "operation": "UPDATE"}},
+            {"remove": {"path": "part-a.parquet", "dataChange": True,
+                        "deletionTimestamp": 2}},
+            a1,
+            {"cdc": cdc_file},
+        ])
     return table
 
 

@@ -29,6 +29,15 @@ def get_spark(app_name: str = "artis-data-ingest-spark") -> SparkSession:
         boundary in columnar Arrow batches instead of pickled rows.
       * Session timezone pinned to UTC so event-time semantics are
         deterministic and match the DuckDB oracle's naive timestamps.
+      * ``spark.sql.codegen.cache.maxEntries`` = 1000 (Spark's default is
+        100): the least-recently-used cache of compiled generated classes
+        must hold a job's working set, or every repeat of the job
+        recompiles it.  One ``corpus_build`` job (quality gates,
+        boilerplate strip, exact, near and semantic dedup) needs 188
+        distinct classes, so at 100 each warm job recompiled 181–183 of
+        them; 1000 holds more than five such jobs, and a warm job then
+        compiles none.  A static conf: it is read when the context
+        starts, so it must be on the builder.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -54,5 +63,6 @@ def get_spark(app_name: str = "artis-data-ingest-spark") -> SparkSession:
         # versioned_feed snapshot reader prunes data files from the
         # manifest's stats/blooms when a query filters on it
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     return builder.getOrCreate()

@@ -1094,3 +1094,46 @@ def test_feed_max_files_per_trigger_advances(spark, tmp_path):
     got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
     assert got == [(0, 0), (1, 1), (2, 2)]
     assert len(_glob.glob(os.path.join(ckpt, "offsets", "*"))) >= 2
+
+
+def test_fixture_build_failure_leaves_no_table_and_next_call_rebuilds(
+    spark, tmp_path, monkeypatch
+):
+    """A fixture cache whose build raises part-way (here after its
+    first bucket file moved into the table) is removed whole, so no
+    half-built table or ``_build_tmp`` debris survives, and the next
+    call builds it from scratch and marks it ``_SUCCESS``."""
+    from conftest import SF_DIR
+
+    from artis_data_ingest_spark.plans import pipeline
+
+    table = str(tmp_path / "delta_interop")
+    monkeypatch.setattr(pipeline, "_delta_cache_path", lambda sf_dir: table)
+    real_replace = os.replace
+    moved = []
+
+    def replace_then_fail(src, dst):
+        if moved:
+            raise OSError("disk full")
+        moved.append(dst)
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace_then_fail)
+    with pytest.raises(OSError, match="disk full"):
+        pipeline._build_delta_fixture(spark, SF_DIR)
+    assert moved and moved[0].startswith(table)
+    assert not os.path.exists(table)
+
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert pipeline._build_delta_fixture(spark, SF_DIR) == table
+    assert sorted(os.listdir(table)) == [
+        "_SUCCESS", "_delta_log",
+        "bucket=0", "bucket=1", "bucket=2", "bucket=3",
+    ]
+    assert len(os.listdir(os.path.join(table, "_delta_log"))) == 3
+    # cached: a third call neither rebuilds nor touches the table
+    mtime = os.stat(os.path.join(table, "_SUCCESS")).st_mtime_ns
+    assert pipeline._build_delta_fixture(spark, SF_DIR) == table
+    assert os.stat(os.path.join(table, "_SUCCESS")).st_mtime_ns == mtime
+    buckets = read_delta(spark, table).select("bucket").distinct().collect()
+    assert sorted(r.bucket for r in buckets) == [0, 2, 3]
