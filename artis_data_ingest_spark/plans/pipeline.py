@@ -5819,7 +5819,7 @@ FROM v ORDER BY version
     "the full state of every version INCLUDING the restored one, "
     "the manifest's restored_from marker, and — as the synthetic "
     "'feed' row — that change_feed(since=2) emits exactly the "
-    "restored full state tagged v3 (the delta a CDC consumer must "
+    "restored live rows tagged v3 (the delta a CDC consumer must "
     "apply to converge after a rollback).  The oracle recomputes "
     "every state straight from orders.",
 )

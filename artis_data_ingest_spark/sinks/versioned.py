@@ -86,6 +86,16 @@ drop the sidecar rows with a broadcast anti-join; a version with no
 Appends carry the vectors forward and :func:`compact` materializes
 them.
 
+Change feeds.  What a version added and retracted is planned once, by
+:func:`_version_changes`: a list of parts, each a kind
+(insert/delete/update_preimage/update_postimage), its files and the
+deletion vectors that mask rows out of them or pick the masked rows,
+plus a flag for full-state rewrites.  :func:`change_feed`,
+:func:`cdc_feed`, :func:`deletion_feed`, :func:`deleted_rows`,
+:func:`updated_rows` and both ``versioned_feed`` streams read those
+parts, so a restored or cloned state reads as its live rows in every
+feed.
+
 Bloom bitmaps.  ``blooms`` maps data file → physical column → a
 base64 bitmap.  A value sets K = 4 bits, ``md5(f"{i}|{value}")`` (the
 first 15 hex digits) modulo the bit count for i in 0..3.  The bit
@@ -105,6 +115,7 @@ import os
 import time
 import uuid
 from collections.abc import Iterator, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -1550,8 +1561,9 @@ def restore(
     :func:`version_at`).  The restored version's stats/blooms carry
     over with its files, so pruning is immediately as good as it was
     at the target version; the change feed treats a restore like an
-    overwrite — the restored full state IS the delta a consumer must
-    apply to converge."""
+    overwrite — the restored *live* rows (its files under its deletion
+    vectors, see :func:`_version_changes`) ARE the delta a consumer
+    must apply to converge."""
     if as_of is not None:
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
@@ -1680,13 +1692,14 @@ def _dv_read(
     dv_files: Sequence[str] | None = None,
     how: str = "left_anti",
     keep_tags: bool = False,
+    props: dict | None = None,
 ) -> DataFrame:
     """Logical read of version manifest ``m``'s data ``files``
     (default: all it lists) under its schema (:func:`_spark_schema`)
-    and column mapping, joined against the deletion-vector sidecars
-    ``dv_files`` (default: ``m``'s) on (file path, row position): each
-    scanned row is tagged from Spark's ``_metadata`` column and the
-    small sidecar table broadcasts.  ``how="left_anti"`` serves the
+    and column mapping (``props``' when given), joined against the
+    deletion-vector sidecars ``dv_files`` (default: ``m``'s) on (file
+    path, row position): each scanned row is tagged from Spark's
+    ``_metadata`` column and the small sidecar table broadcasts.  ``how="left_anti"`` serves the
     live rows; ``how="inner"`` recovers exactly the rows the vectors
     mask.  ``keep_tags`` keeps the ``_dv_file``/``_dv_pos`` columns
     for callers that write a new vector from the result.  A live read
@@ -1696,7 +1709,7 @@ def _dv_read(
 
     files = m["files"] if files is None else files
     dv_files = m.get("dv_files", []) if dv_files is None else dv_files
-    props = m.get("table_props", {})
+    props = m.get("table_props", {}) if props is None else props
     df = _merged_read(spark, files, _spark_schema(m))
     join = bool(dv_files) or how != "left_anti"
     if not (join or keep_tags):
@@ -1730,16 +1743,6 @@ def _dv_positions(dv_files: list[str]) -> dict[str, list[int]]:
         ):
             out.setdefault(f, []).append(p)
     return out
-
-
-def _added_dv_files(table_dir: str, m: dict) -> tuple[dict, list[str]]:
-    """(parent manifest, the deletion-vector segments manifest ``m``
-    added beyond its parent's).  Raises FileNotFoundError when the
-    parent manifest was expired; each caller maps that to its own
-    error."""
-    parent = _read_manifest(table_dir, m["parent"])
-    parent_dv = set(parent.get("dv_files", []))
-    return parent, [f for f in m.get("dv_files", []) if f not in parent_dv]
 
 
 def _num_rows(files: list[str]) -> int:
@@ -2046,73 +2049,53 @@ def delete_where(
     )
 
 
+def _kind_read(spark: SparkSession, ch: _Changes, kind: str) -> DataFrame:
+    """The rows of version ``ch``'s ``kind`` parts under its own column
+    mapping; empty (with the version's columns) when it has none."""
+    props = ch.m.get("table_props", {})
+    frames = [_part_read(spark, p, props) for p in ch.parts if p.kind == kind]
+    if not frames:
+        return _dv_read(spark, ch.m, dv_files=[]).filter("1 = 0")
+    return _union(frames, "")
+
+
 def deleted_rows(
     spark: SparkSession, table_dir: str, version: int
 ) -> DataFrame:
-    """The rows version ``version``'s DELETE removed — the CDC
-    complement of :func:`change_feed` (which carries ADDED rows only):
+    """The rows version ``version``'s DELETE (or replace, or merge)
+    removed — the CDC complement of :func:`change_feed` (which carries
+    ADDED rows only): its ``delete`` part (:func:`_version_changes`),
     the version's NEW deletion-vector segments (its ``dv_files``
-    suffix beyond the parent's) join back against the data files on
-    (file path, row position), so the cost is O(deleted rows), never
-    a table diff.  Raises ValueError for non-delete versions and
-    RetentionError when the parent manifest needed to isolate the new
-    vectors was expired."""
+    suffix beyond the parent's) joined back against the data files
+    on (file path, row position), so the cost is O(deleted rows),
+    never a table diff.  Raises ValueError for other versions
+    and RetentionError when the parent manifest needed to isolate the
+    new vectors was expired."""
     m = _read_manifest(table_dir, version)
     if m["mode"] not in ("delete", "replace", "merge"):
         raise ValueError(
             f"v{version} is {m['mode']!r}, not a delete/replace/merge"
         )
-    try:
-        _, new_dv = _added_dv_files(table_dir, m)
-    except FileNotFoundError:
-        raise RetentionError(
-            f"v{version}'s parent manifest was expired; its deleted "
-            f"rows are no longer isolatable"
-        ) from None
-    props = m.get("table_props", {})
-    if not new_dv:
-        # a merge version from before merges used deletion vectors
-        # rewrote the full state and masks nothing; empty result
-        return _dv_read(spark, m, dv_files=[]).filter("1 = 0")
-    return _dv_read(spark, m, dv_files=new_dv, how="inner")
+    return _kind_read(spark, _row_changes(table_dir, version), "delete")
 
 
 def deletion_feed(
     spark: SparkSession, table_dir: str, since: int | None = None
 ) -> DataFrame:
-    """Incremental DELETE feed: for every delete version after
-    ``since``, the rows it removed, tagged ``_version`` — the other
-    half of the CDC contract (:func:`change_feed` carries adds; a
-    MERGE-style consumer applies both).  Raises FileNotFoundError
-    when no delete version in range removed rows."""
-    from pyspark.sql import functions as F
-
-    versions = list_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    lo = versions[0] if since is None else since + 1
-    summaries = _version_summaries(table_dir)
-    out = None
-    for v in sorted(summaries):
-        if v < lo or summaries[v]["mode"] not in (
-            "delete", "replace", "merge"
-        ):
-            continue
-        if summaries[v]["mode"] == "merge" and not _new_dv_files(
-            table_dir, v
-        ):
-            continue  # pre-DV full-rewrite merge: nothing masked
-        part = deleted_rows(spark, table_dir, v).withColumn(
-            "_version", F.lit(v).cast("bigint")
-        )
-        out = part if out is None else out.unionByName(
-            part, allowMissingColumns=True
-        )
-    if out is None:
-        raise FileNotFoundError(
-            f"no delete versions after v{since} in {table_dir}"
-        )
-    return out
+    """Incremental DELETE feed: for every version after ``since``, the
+    rows its ``delete`` part (:func:`_version_changes`) removed,
+    tagged ``_version`` — the other half of the CDC contract
+    (:func:`change_feed` carries adds; a MERGE-style consumer applies
+    both).  Full-state rewrites contribute nothing here (their removed
+    rows are :func:`cdc_feed`'s bag difference).  Raises
+    RetentionError like :func:`change_feed`, and FileNotFoundError
+    when no version in range removed rows."""
+    versions, props = _feed_range(table_dir, since, "deletion feed")
+    return _union([
+        _tag(_part_read(spark, p, props), v)
+        for v in versions for p in _row_changes(table_dir, v).parts
+        if p.kind == "delete"
+    ], f"no delete versions after v{since} in {table_dir}")
 
 
 def update_where(
@@ -2209,10 +2192,11 @@ def updated_rows(
     image: str = "post",
 ) -> DataFrame:
     """The rows version ``version``'s UPDATE touched: ``image="post"``
-    reads the recorded ``delta_files`` (the new images — O(1 manifest),
-    no join); ``image="pre"`` recovers the old images by joining the
-    version's NEW deletion-vector segments back against the PARENT's
-    files on (file path, row position), O(updated rows) like
+    reads its ``update_postimage`` part, the recorded ``delta_files``
+    (the new images — O(1 manifest), no join); ``image="pre"`` its
+    ``update_preimage`` part, the version's NEW deletion-vector
+    segments joined back against the PARENT's files on (file path,
+    row position), O(updated rows) like
     :func:`deleted_rows`.  Raises ValueError for non-update versions
     and RetentionError when the parent manifest needed to isolate the
     pre-images was expired."""
@@ -2221,32 +2205,14 @@ def updated_rows(
     m = _read_manifest(table_dir, version)
     if m["mode"] != "update":
         raise ValueError(f"v{version} is {m['mode']!r}, not an update")
-    props = m.get("table_props", {})
     if image == "post":
-        return _to_logical(
-            _merged_read(spark, m["delta_files"], _spark_schema(m)), props
+        return _part_read(
+            spark, _version_changes(table_dir, version).adds,
+            m.get("table_props", {}),
         )
-    try:
-        parent, new_dv = _added_dv_files(table_dir, m)
-    except FileNotFoundError:
-        raise RetentionError(
-            f"v{version}'s parent manifest was expired; its pre-update "
-            f"images are no longer isolatable"
-        ) from None
-    return _dv_read(spark, m, parent["files"], new_dv, how="inner")
-
-
-def _new_dv_files(table_dir: str, version: int) -> list[str]:
-    """The deletion-vector segments version ``version`` itself added
-    (its ``dv_files`` beyond the parent's) — empty when the parent is
-    expired or the version masked nothing."""
-    m = _read_manifest(table_dir, version)
-    if not m.get("dv_files"):
-        return []
-    try:
-        return _added_dv_files(table_dir, m)[1]
-    except FileNotFoundError:
-        return []
+    return _kind_read(
+        spark, _row_changes(table_dir, version), "update_preimage"
+    )
 
 
 def _align_columns(
@@ -2278,157 +2244,62 @@ def cdc_feed(
     """The UNIFIED change-data feed — Delta's ``table_changes``
     contract: one DataFrame tagging every row-level change after the
     ``since`` cursor with ``_change_type`` ∈ {insert, delete,
-    update_preimage, update_postimage} and ``_version``.  Composes the
-    per-mode recoveries (``version_delta_files`` for adds,
-    :func:`deleted_rows`, :func:`updated_rows`) so DV-backed versions
-    cost O(their changed rows): append deltas read as inserts, delete
-    versions join their new vectors back for the removed rows, update
-    versions emit both images, and a :func:`merge_commit` version
-    emits its masked old rows as deletes and its new segment as
-    inserts.  FULL-STATE REWRITES — a restore, an overwrite of a
-    non-empty table, or a merge version with no new vector (written
-    before merges used deletion vectors) — decompose EXACTLY (r14) as the bag difference between the
-    two adjacent states: parent ∖ child as deletes, child ∖ parent as
-    inserts, O(two versions); unchanged rows cancel and emit nothing.
-    A key-matched rewrite therefore surfaces as delete+insert (not an
+    update_preimage, update_postimage} and ``_version``.  Each
+    version's row changes are its parts as :func:`_version_changes`
+    plans them — the one statement of the per-mode semantics, shared
+    with the streaming ``readChangeFeed`` — so DV-backed versions cost
+    O(their changed rows): appends read as inserts, deletes join their
+    new vectors back for the removed rows, updates emit both images,
+    a :func:`merge_commit` version emits its masked old rows as
+    deletes and its new segment as inserts, and a clone's first
+    version inserts its LIVE rows.  FULL-STATE REWRITES — a restore,
+    an overwrite of a non-empty table, or a merge version with no new
+    vector (written before merges used deletion vectors) — decompose
+    EXACTLY (r14) as the bag difference between the two adjacent
+    states: parent ∖ child as deletes, child ∖ parent as inserts,
+    O(two versions); unchanged rows cancel and emit nothing.  A
+    key-matched rewrite therefore surfaces as delete+insert (not an
     update_pre/postimage pair) — identical under signed consumers
     like :func:`~artis_data_ingest_spark.operators.matview.
     apply_cdc_to_aggregate`.  Compact versions contribute nothing
     (bytes moved, no rows changed).  Raises :class:`RetentionError`
-    via the same guards as :func:`change_feed` — a CDC consumer must
-    never silently skip a lost delta."""
-    from pyspark.sql import functions as F
-
-    versions = list_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    first_ok = earliest_feed_version(table_dir)
-    lo = versions[0] if since is None else since + 1
-    if lo < first_ok:
-        raise RetentionError(
-            f"cdc feed from v{lo} is out of retention: versions before "
-            f"v{first_ok} were expired or their deltas are no longer "
-            f"resolvable; earliest valid since is {first_ok - 1}"
-        )
-    summaries = _version_summaries(table_dir)
-    feed_props = _read_manifest(table_dir, versions[-1]).get(
-        "table_props", {}
-    )
+    via the same range check as :func:`change_feed` — a CDC consumer
+    must never silently skip a lost delta."""
+    versions, props = _feed_range(table_dir, since, "cdc feed")
     parts: list[DataFrame] = []
-
-    def _tag(df: DataFrame, v: int, kind: str) -> DataFrame:
-        return df.withColumn(
-            "_change_type", F.lit(kind)
-        ).withColumn("_version", F.lit(v).cast("bigint"))
-
-    for v in sorted(summaries):
-        if v < lo:
+    for v in versions:
+        ch = _row_changes(table_dir, v)
+        if not ch.rewrite:
+            parts += [
+                _tag(_part_read(spark, p, props), v, p.kind)
+                for p in ch.parts
+            ]
             continue
-        mode = summaries[v]["mode"]
-        if mode == "compact":
-            continue
-        if mode == "delete":
-            parts.append(_tag(deleted_rows(spark, table_dir, v), v,
-                              "delete"))
-        elif (
-            # merge versions written before merge_commit used deletion
-            # vectors rewrote the full state; old tables still hold them
-            (mode == "merge" and not _new_dv_files(table_dir, v))
-            or mode == "restore"
-            or (
-                mode == "overwrite"
-                and summaries[v].get("parent") is not None
-            )
-        ):
-            # FULL-STATE REWRITES — a pre-DV merge, a restore, or an
-            # overwrite of an existing table — get an
-            # EXACT decomposition (r14, closes the r13 insert-only
-            # caveat): the row-level change set of a full rewrite IS
-            # the bag difference between the two adjacent states —
-            # parent ∖ child as deletes, child ∖ parent as inserts.
-            # O(two versions) — far below re-aggregating history —
-            # and rows the rewrite left untouched cancel and emit
-            # nothing, so a mostly-stable table still yields a small
-            # feed.  Key-matched rewrites surface as delete+insert
-            # rather than Delta's update_pre/postimage pair; under
-            # signed consumers (operators/matview.py) the two are
-            # identical, and the feed documents no pairing guarantee
-            # across rewrite versions.
-            m_v = _read_manifest(table_dir, v)
-            try:
-                p_m = _read_manifest(table_dir, m_v["parent"])
-            except FileNotFoundError:
-                raise RetentionError(
-                    f"v{v}'s parent manifest was expired; its CDC "
-                    f"decomposition is no longer recoverable"
-                ) from None
-            old = (
-                read_version(spark, table_dir, m_v["parent"])
-                if p_m["files"] else None
-            )
-            new = (
-                read_version(spark, table_dir, v)
-                if m_v["files"] else None
-            )
-            if old is None and new is not None:
-                parts.append(_tag(new, v, "insert"))
-            elif new is None and old is not None:
-                parts.append(_tag(old, v, "delete"))
-            elif old is not None and new is not None:
-                old_a, new_a = _align_columns(old, new)
-                parts.append(_tag(old_a.exceptAll(new_a), v,
-                                  "delete"))
-                parts.append(_tag(new_a.exceptAll(old_a), v,
-                                  "insert"))
-        elif mode == "merge":
-            # a merge decomposes exactly into its masked old images
-            # (deletes) + its POST-IMAGE segment (inserts — the
-            # file-set difference against the parent, NOT
-            # delta_files: those record the source verbatim, DELETE
-            # FLAGS INCLUDED, and a flagged row must never surface as
-            # an insert) — so retraction-aware consumers (matview)
-            # stay exact across merges.
-            parts.append(_tag(deleted_rows(spark, table_dir, v), v,
-                              "delete"))
-            m_v = _read_manifest(table_dir, v)
-            parent_files = set(
-                _read_manifest(table_dir, m_v["parent"])["files"]
-            )
-            post = [f for f in m_v["files"] if f not in parent_files]
-            if post:
-                parts.append(_tag(
-                    _to_logical(
-                        _merged_read(spark, post, _spark_schema(m_v)),
-                        feed_props,
-                    ),
-                    v, "insert"))
-        elif mode == "replace":
-            # a replace IS delete + insert in one atomic commit
-            parts.append(_tag(deleted_rows(spark, table_dir, v), v,
-                              "delete"))
-            parts.append(_tag(
-                _to_logical(_delta_read(spark, table_dir, v), feed_props),
-                v, "insert"))
-        elif mode == "update":
-            parts.append(_tag(
-                updated_rows(spark, table_dir, v, "pre"), v,
-                "update_preimage"))
-            parts.append(_tag(
-                updated_rows(spark, table_dir, v, "post"), v,
-                "update_postimage"))
-        else:  # append / overwrite / restore
-            delta = _delta_read(spark, table_dir, v)
-            if delta is not None:
-                parts.append(_tag(
-                    _to_logical(delta, feed_props), v, "insert"))
-    if not parts:
-        raise FileNotFoundError(
-            f"no row changes after v{since} in {table_dir}"
+        # the row-level change set of a full rewrite IS the bag
+        # difference between the two adjacent states (under the feed's
+        # column names, like every other part); rows the rewrite left
+        # untouched cancel, so a mostly-stable table still yields a
+        # small feed
+        try:
+            p_m = _read_manifest(table_dir, ch.m["parent"])
+        except FileNotFoundError:
+            raise RetentionError(
+                f"v{v}'s parent manifest was expired; its CDC "
+                f"decomposition is no longer recoverable"
+            ) from None
+        old, new = (
+            _dv_read(spark, mf, props=props) if mf["files"] else None
+            for mf in (p_m, ch.m)
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+        if old is not None and new is not None:
+            old, new = _align_columns(old, new)
+            parts.append(_tag(old.exceptAll(new), v, "delete"))
+            parts.append(_tag(new.exceptAll(old), v, "insert"))
+        elif old is not None:
+            parts.append(_tag(old, v, "delete"))
+        elif new is not None:
+            parts.append(_tag(new, v, "insert"))
+    return _union(parts, f"no row changes after v{since} in {table_dir}")
 
 
 def version_at(table_dir: str, as_of: float) -> int:
@@ -3036,46 +2907,186 @@ def earliest_feed_version(table_dir: str) -> int:
     return first_ok
 
 
+def _feed_range(
+    table_dir: str, since: int | None, feed: str
+) -> tuple[list[int], dict]:
+    """The one range check of every feed: (the retained versions after
+    the ``since`` cursor, all when None; the newest version's table
+    properties, whose logical names a feed serves, like Delta's CDF).
+    Raises :class:`RetentionError` naming the earliest valid cursor
+    when the range reaches before :func:`earliest_feed_version` — a
+    feed with silently-missing deltas would let a CDC consumer believe
+    it caught up after losing data."""
+    versions = list_versions(table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no versions in {table_dir}")
+    first_ok = earliest_feed_version(table_dir)
+    lo = versions[0] if since is None else since + 1
+    if lo < first_ok:
+        raise RetentionError(
+            f"{feed} from v{lo} is out of retention: versions before "
+            f"v{first_ok} were expired or their deltas are no longer "
+            f"resolvable; earliest valid since is {first_ok - 1}"
+        )
+    props = _read_manifest(table_dir, versions[-1]).get("table_props", {})
+    return [v for v in versions if v >= lo], props
+
+
+class _Part(NamedTuple):
+    """The ``kind`` rows (insert, delete, update_preimage or
+    update_postimage) of ``files`` that the deletion-vector sidecars
+    ``dv_files`` leave live (``pick`` False) or mask (``pick`` True),
+    read under manifest ``m``'s schema."""
+
+    kind: str
+    files: list[str]
+    dv_files: list[str]
+    pick: bool
+    m: dict
+
+
+class _Changes(NamedTuple):
+    """What version ``m`` changed: ``adds``, the part the adds feeds
+    read (None: no rows added); ``parts``, its row changes (None: the
+    parent manifest they need was expired); ``rewrite``, a full-state
+    rewrite, whose exact row changes are the bag difference of the
+    two adjacent states."""
+
+    m: dict
+    adds: _Part | None
+    parts: list[_Part] | None
+    rewrite: bool
+
+
+def _version_changes(table_dir: str, version: int) -> _Changes:
+    """THE per-mode change semantics of the versioned table — every
+    feed (:func:`change_feed`, :func:`cdc_feed`,
+    :func:`deletion_feed`, :func:`deleted_rows`, :func:`updated_rows`,
+    the ``versioned_feed`` streams) reads a version through this plan.
+
+      * overwrite, restore (and a clone's or convert's first version)
+        add their whole LIVE state: every file under every deletion
+        vector the version lists, so a restored or cloned state never
+        replays masked rows.  An overwrite of an existing table and a
+        restore are full-state rewrites;
+      * append adds the files its parent did not list;
+      * delete, update, replace and merge retract the rows their new
+        vectors (the ``dv_files`` beyond the parent's) mask in the
+        version's files — the parent's for an update, whose retraction
+        is its ``update_preimage``, a ``delete`` otherwise.  Their
+        adds are the recorded ``delta_files``: the post-image
+        (``update_postimage``) of an update, the replacement rows of a
+        replace, the source AS GIVEN (delete flags included) of a
+        merge.  A merge's row-change inserts are its post-image
+        segment instead, so a flagged row never surfaces as an insert;
+        a merge that added no vector (tables written before merges
+        used deletion vectors hold them) rewrote the full state;
+      * compact and alter change no rows.
+
+    A freshly written segment is never named by a deletion vector, so
+    only a part holding the version's whole state carries vectors;
+    every other add part is a bare scan.  Driver metadata only: the
+    planner reads manifests, never a sidecar or a data file."""
+    m = _read_manifest(table_dir, version)
+    mode, files = m["mode"], m["files"]
+    if mode in ("compact", "alter"):
+        return _Changes(m, None, [], False)
+    if mode in ("overwrite", "restore"):
+        adds = _Part(
+            "insert", list(files), m.get("dv_files", []), False, m
+        ) if files else None
+        return _Changes(
+            m, adds, [adds] if adds else [], m["parent"] is not None
+        )
+    if mode == "append":
+        parent_files = (
+            set(_read_manifest(table_dir, m["parent"])["files"])
+            if m["parent"] is not None else set()
+        )
+        new = [f for f in files if f not in parent_files]
+        adds = _Part("insert", new, [], False, m) if new else None
+        return _Changes(m, adds, [adds] if adds else [], False)
+    delta = list(m.get("delta_files", []))
+    adds = _Part(
+        "update_postimage" if mode == "update" else "insert", delta, [],
+        False, m if set(delta) <= set(files) else {"files": delta},
+    ) if delta else None
+    try:
+        parent = _read_manifest(table_dir, m["parent"])
+    except FileNotFoundError:
+        return _Changes(m, adds, None, False)
+    parent_dv = set(parent.get("dv_files", []))
+    new_dv = [f for f in m.get("dv_files", []) if f not in parent_dv]
+    if mode == "merge" and not new_dv:
+        return _Changes(m, adds, [adds], True)
+    parts = [_Part(
+        "update_preimage" if mode == "update" else "delete",
+        parent["files"] if mode == "update" else files, new_dv, True, m,
+    )] if new_dv else []
+    if mode == "merge":
+        parent_files = set(parent["files"])
+        post = [f for f in files if f not in parent_files]
+        parts.append(_Part("insert", post, [], False, m))
+    elif adds:
+        parts.append(adds)
+    return _Changes(m, adds, parts, False)
+
+
+def _row_changes(table_dir: str, version: int) -> _Changes:
+    """:func:`_version_changes` for a feed that reads the row changes:
+    raises :class:`RetentionError` when they need an expired parent
+    manifest."""
+    ch = _version_changes(table_dir, version)
+    if ch.parts is None:
+        raise RetentionError(
+            f"v{version}'s parent manifest was expired; its row changes "
+            f"are no longer recoverable"
+        )
+    return ch
+
+
+def _part_read(
+    spark: SparkSession, part: _Part, props: dict
+) -> DataFrame:
+    """Logical read of one change part under ``props``' column
+    mapping (see :func:`_dv_read`)."""
+    return _dv_read(
+        spark, part.m, part.files, part.dv_files,
+        "inner" if part.pick else "left_anti", props=props,
+    )
+
+
+def _tag(df: DataFrame, v: int, kind: str | None = None) -> DataFrame:
+    """A feed's rows of version ``v``: ``df`` with ``_change_type``
+    ``kind`` (when given) and ``_version`` columns."""
+    from pyspark.sql import functions as F
+
+    if kind is not None:
+        df = df.withColumn("_change_type", F.lit(kind))
+    return df.withColumn("_version", F.lit(v).cast("bigint"))
+
+
+def _union(frames: Sequence[DataFrame], missing: str) -> DataFrame:
+    """A feed's frames unioned by name (a column some version lacks
+    reads null); FileNotFoundError(``missing``) when there are
+    none."""
+    if not frames:
+        raise FileNotFoundError(missing)
+    out = frames[0]
+    for df in frames[1:]:
+        out = out.unionByName(df, allowMissingColumns=True)
+    return out
+
+
 def version_delta_files(table_dir: str, version: int) -> list[str]:
-    """The parquet files holding exactly the rows ``version``'s commit
-    ADDED — the unit both :func:`change_feed` and the streaming feed
-    source (streaming/source.py) consume.  Per mode: append → the
-    file-set difference against the parent manifest; overwrite and
-    restore → the full file set (the rewrite/rollback IS the delta a
-    consumer must apply); merge → the recorded ``delta_files``;
-    compact → empty (bytes moved, no rows changed)."""
-    m = _read_manifest(table_dir, version)
-    if m["mode"] in ("compact", "delete", "alter"):
-        return []  # bytes moved / rows masked / metadata — no adds
-    if m["mode"] in ("merge", "update", "replace"):
-        # update/replace record their post-image segment as
-        # delta_files, so the adds-feed (and the streaming source)
-        # surface the NEW images
-        return list(m["delta_files"])
-    parent_files = (
-        set(_read_manifest(table_dir, m["parent"])["files"])
-        if m["parent"] is not None and m["mode"] == "append"
-        else set()
-    )
-    return [f for f in m["files"] if f not in parent_files]
-
-
-def _delta_read(
-    spark: SparkSession, table_dir: str, version: int
-) -> DataFrame | None:
-    """Physical read of :func:`version_delta_files` (None when the
-    version added no rows).  Files the version lists read under its
-    schema; a merge's ``delta_files`` that are not its post-image
-    segment hold the source as given (delete flag included) and read
-    under their own footers'."""
-    delta = version_delta_files(table_dir, version)
-    if not delta:
-        return None
-    m = _read_manifest(table_dir, version)
-    listed = set(delta) <= set(m["files"])
-    return _merged_read(
-        spark, delta, _spark_schema(m if listed else {"files": delta})
-    )
+    """The parquet files holding the rows ``version``'s commit ADDED —
+    its adds part (:func:`_version_changes`), the unit
+    :func:`change_feed` and the streaming feed source
+    (streaming/source.py) read: an append's new files, an overwrite's
+    or restore's full file set, the recorded ``delta_files`` of a
+    merge, update or replace, nothing for compact, delete or alter."""
+    adds = _version_changes(table_dir, version).adds
+    return list(adds.files) if adds else []
 
 
 def change_feed(
@@ -3086,14 +3097,13 @@ def change_feed(
 ) -> "DataFrame":
     """Incremental change feed: for every version after ``since``, the
     rows its commit ADDED, tagged with the version — consumed by
-    reading only that version's delta files, so catching up on K new
-    commits costs O(changed data), never a table scan.  Per mode:
-    append → the file-set difference against the parent manifest;
-    overwrite → the full new file set (a rewrite IS its own delta);
-    merge → the manifest's recorded ``delta_files`` (exactly the
-    source rows, never the table state); compact → skipped (bytes
-    moved, no rows changed); restore → the restored full state (the
-    delta a consumer must apply to converge).
+    reading only that version's adds part, so catching up on K new
+    commits costs O(changed data), never a table scan.  What each mode
+    adds is stated once, in :func:`_version_changes`: an append's new
+    files; an overwrite's full new state; a merge's recorded
+    ``delta_files`` (exactly the source rows, never the table state);
+    nothing for compact; a restore's restored LIVE rows (the delta a
+    consumer must apply to converge).
 
     ``since_ts`` (r12) is the timestamp form of the cursor: changes
     committed strictly after the state as of that epoch-seconds time
@@ -3101,14 +3111,8 @@ def change_feed(
     means the full feed).  Mutually exclusive with ``since``.
 
     Raises :class:`RetentionError` when the requested range reaches
-    past retention — ``since`` predates the oldest retained version,
-    or ``since is None`` after an :func:`expire` left the oldest
-    retained version an append whose parent manifest is gone.  A feed
-    with silently-missing deltas would let a CDC consumer believe it
-    caught up after losing data; like Delta/Iceberg, we refuse and
-    name the earliest valid cursor instead."""
-    from pyspark.sql import functions as F
-
+    past retention (:func:`_feed_range`), and FileNotFoundError
+    when no version in range added rows."""
     if since_ts is not None:
         if since is not None:
             raise ValueError("pass either since or since_ts, not both")
@@ -3116,41 +3120,8 @@ def change_feed(
             since = version_at(table_dir, since_ts)
         except FileNotFoundError:
             since = None  # predates the table: full feed
-    versions = list_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    first_ok = earliest_feed_version(table_dir)
-    # since=None asks for the FULL feed (all retained versions); if
-    # retention made part of it unresolvable, serving a silently
-    # truncated feed would be the exact data-loss hazard — treat it as
-    # a request from before the boundary
-    lo = versions[0] if since is None else since + 1
-    if lo < first_ok:
-        raise RetentionError(
-            f"change feed from v{lo} is out of retention: versions "
-            f"before v{first_ok} were expired or their deltas are no "
-            f"longer resolvable; earliest valid since is "
-            f"{first_ok - 1}"
-        )
-    # deltas live under PHYSICAL column names; serve the feed in the
-    # CURRENT (end-of-range) logical schema, like Delta's CDF reading
-    # under the latest mapped names
-    feed_props = _read_manifest(table_dir, versions[-1]).get(
-        "table_props", {}
-    )
-    out = None
-    for v in versions:
-        if v < lo:
-            continue
-        delta = _delta_read(spark, table_dir, v)
-        if delta is None:
-            continue
-        part = _to_logical(delta, feed_props).withColumn(
-            "_version", F.lit(v).cast("bigint")
-        )
-        out = part if out is None else out.unionByName(
-            part, allowMissingColumns=True
-        )
-    if out is None:
-        raise FileNotFoundError(f"no changes after v{since}")
-    return out
+    versions, props = _feed_range(table_dir, since, "change feed")
+    adds = [(v, _version_changes(table_dir, v).adds) for v in versions]
+    return _union([
+        _tag(_part_read(spark, p, props), v) for v, p in adds if p
+    ], f"no changes after v{since}")

@@ -242,6 +242,23 @@ def _local_frame(
     return spark.createDataFrame(table, schema=schema)
 
 
+def _read_book(
+    spark: SparkSession, path: str, parse, skip_rows: int,
+    sheet: int | str,
+) -> DataFrame:
+    """One workbook file parsed by ``parse`` (:func:`parse_xlsx_bytes`
+    or ``xls.parse_xls_bytes``) into a local frame — the body of
+    :func:`read_excel` and ``xls.read_xls``.  Accepts plain paths or
+    the ``file:`` URIs the binaryFile listing yields."""
+    if path.startswith("file:"):
+        path = re.sub("^file:/+", "/", path)
+    with open(path, "rb") as f:
+        raw = f.read()
+    return _local_frame(
+        spark, *parse(raw, skip_rows=skip_rows, sheet=sheet)
+    )
+
+
 def read_excel(
     spark: SparkSession, path: str, skip_rows: int = 1,
     sheet: int | str = 0,
@@ -254,13 +271,68 @@ def read_excel(
     Accepts plain paths or the ``file:`` URIs the binaryFile listing
     yields (changelog stage 5 feeds those straight in).
     """
-    if path.startswith("file:"):
-        path = re.sub("^file:/+", "/", path)
-    with open(path, "rb") as f:
-        raw = f.read()
-    return _local_frame(
-        spark, *parse_xlsx_bytes(raw, skip_rows=skip_rows, sheet=sheet)
+    return _read_book(spark, path, parse_xlsx_bytes, skip_rows, sheet)
+
+
+def _read_fleet(
+    spark: SparkSession,
+    dir_path: str,
+    parse,
+    ext: str,
+    skip_rows: int,
+    sheet: int | str,
+    schema: T.StructType | None,
+    workbook_col: str,
+) -> DataFrame:
+    """Every ``*.<ext>`` workbook under ``dir_path`` parsed by
+    ``parse`` in one job — the body of :func:`read_excel_fleet` and
+    ``xls.read_xls_fleet``: binaryFile scan → one mapInPandas decode
+    task per workbook → union tagged with the workbook basename."""
+    bins = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", f"*.{ext}")
+        .load(dir_path)
+        .select("path", "content")
     )
+    if schema is None:
+        first = bins.orderBy("path").limit(1).collect()
+        if not first:
+            raise FileNotFoundError(f"no .{ext} workbooks under {dir_path}")
+        header, rows = parse(
+            bytes(first[0]["content"]), skip_rows=skip_rows, sheet=sheet
+        )
+        schema, _ = _typed_schema(header, rows)
+    fields = [f.name for f in schema.fields]
+    out_schema = T.StructType(
+        [T.StructField(workbook_col, T.StringType())] + list(schema.fields)
+    )
+
+    def _decode(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            for path, blob in zip(pdf["path"], pdf["content"]):
+                name = str(path).rstrip("/").rsplit("/", 1)[-1]
+                header, rows = parse(
+                    bytes(blob), skip_rows=skip_rows, sheet=sheet
+                )
+                missing = [c for c in fields if c not in header]
+                if missing:
+                    raise ValueError(
+                        f"workbook {name} is missing expected columns "
+                        f"{missing}; has {header}"
+                    )
+                pos = [header.index(c) for c in fields]
+                recs = [
+                    [name] + [
+                        _coerce(r[i], f.dataType)
+                        for i, f in zip(pos, schema.fields)
+                    ]
+                    for r in rows
+                ]
+                yield pd.DataFrame(recs, columns=[workbook_col] + fields)
+
+    return bins.mapInPandas(_decode, out_schema)
 
 
 def read_excel_fleet(
@@ -286,51 +358,10 @@ def read_excel_fleet(
     workbooks whose header set diverges raise loudly rather than
     silently misalign.
     """
-    bins = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xlsx")
-        .load(dir_path)
-        .select("path", "content")
+    return _read_fleet(
+        spark, dir_path, parse_xlsx_bytes, "xlsx", skip_rows, sheet,
+        schema, workbook_col,
     )
-    if schema is None:
-        first = bins.orderBy("path").limit(1).collect()
-        if not first:
-            raise FileNotFoundError(f"no .xlsx workbooks under {dir_path}")
-        header, rows = parse_xlsx_bytes(
-            bytes(first[0]["content"]), skip_rows=skip_rows, sheet=sheet
-        )
-        schema, _ = _typed_schema(header, rows)
-    fields = [f.name for f in schema.fields]
-    out_schema = T.StructType(
-        [T.StructField(workbook_col, T.StringType())] + list(schema.fields)
-    )
-
-    def _decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                name = str(path).rstrip("/").rsplit("/", 1)[-1]
-                header, rows = parse_xlsx_bytes(
-                    bytes(blob), skip_rows=skip_rows, sheet=sheet
-                )
-                missing = [c for c in fields if c not in header]
-                if missing:
-                    raise ValueError(
-                        f"workbook {name} is missing expected columns "
-                        f"{missing}; has {header}"
-                    )
-                pos = [header.index(c) for c in fields]
-                recs = [
-                    [name] + [
-                        _coerce(r[i], f.dataType)
-                        for i, f in zip(pos, schema.fields)
-                    ]
-                    for r in rows
-                ]
-                yield pd.DataFrame(recs, columns=[workbook_col] + fields)
-
-    return bins.mapInPandas(_decode, out_schema)
 
 
 def write_minimal_xlsx(target, rows) -> None:

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import io
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -419,18 +418,11 @@ def read_xls(
 ) -> DataFrame:
     """``read_xlsx(file, skip = 1)`` semantics for the binary format:
     skip, header, per-column long/double/boolean/string inference —
-    type logic and the local-frame build shared with the xlsx reader."""
-    import re
+    the xlsx reader's body (``excel._read_book``) with the BIFF8
+    parser."""
+    from .excel import _read_book
 
-    from .excel import _local_frame
-
-    if path.startswith("file:"):
-        path = re.sub("^file:/+", "/", path)
-    with open(path, "rb") as f:
-        raw = f.read()
-    return _local_frame(
-        spark, *parse_xls_bytes(raw, skip_rows=skip_rows, sheet=sheet)
-    )
+    return _read_book(spark, path, parse_xls_bytes, skip_rows, sheet)
 
 
 def read_xls_fleet(
@@ -443,54 +435,14 @@ def read_xls_fleet(
 ) -> DataFrame:
     """Directory of ``.xls`` workbooks in one job: binaryFile scan →
     one mapInPandas decode task per workbook → union tagged with the
-    workbook basename — byte-for-byte the read_excel_fleet shape."""
-    from .excel import _coerce, _typed_schema
+    workbook basename — the read_excel_fleet body
+    (``excel._read_fleet``) with the BIFF8 parser."""
+    from .excel import _read_fleet
 
-    bins = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xls")
-        .load(dir_path)
-        .select("path", "content")
+    return _read_fleet(
+        spark, dir_path, parse_xls_bytes, "xls", skip_rows, sheet,
+        schema, workbook_col,
     )
-    if schema is None:
-        first = bins.orderBy("path").limit(1).collect()
-        if not first:
-            raise FileNotFoundError(f"no .xls workbooks under {dir_path}")
-        header, rows = parse_xls_bytes(
-            bytes(first[0]["content"]), skip_rows=skip_rows, sheet=sheet
-        )
-        schema, _ = _typed_schema(header, rows)
-    fields = [f.name for f in schema.fields]
-    out_schema = T.StructType(
-        [T.StructField(workbook_col, T.StringType())] + list(schema.fields)
-    )
-
-    def _decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                name = str(path).rstrip("/").rsplit("/", 1)[-1]
-                header, rows = parse_xls_bytes(
-                    bytes(blob), skip_rows=skip_rows, sheet=sheet
-                )
-                missing = [c for c in fields if c not in header]
-                if missing:
-                    raise ValueError(
-                        f"workbook {name} is missing expected columns "
-                        f"{missing}; has {header}"
-                    )
-                pos = [header.index(c) for c in fields]
-                recs = [
-                    [name] + [
-                        _coerce(r[i], f.dataType)
-                        for i, f in zip(pos, schema.fields)
-                    ]
-                    for r in rows
-                ]
-                yield pd.DataFrame(recs, columns=[workbook_col] + fields)
-
-    return bins.mapInPandas(_decode, out_schema)
 
 
 # --------------------------------------------------------------------------

@@ -17,14 +17,16 @@ Design (scale-shaped, not driver-shaped):
     ``startingTimestamp`` (resolved via :func:`version_at` — the
     timestamp cursor, r12);
   * each micro-batch covers the versions committed since the last
-    offset; ``partitions(start, end)`` expands them into their delta
-    files (``version_delta_files`` — the same
-    append/overwrite/merge/restore/compact semantics as
-    ``change_feed``) and PACKS them into byte-sized input partitions
+    offset; ``partitions(start, end)`` expands them into per-file
+    units (:func:`_feed_units`) from the one per-version change plan
+    every feed reads, ``sinks.versioned._version_changes`` — the same
+    semantics as ``change_feed`` and ``cdc_feed``, deletion vectors
+    included, so a restored or cloned state streams its live rows —
+    and PACKS them into byte-sized input partitions
     (:func:`_pack_units`, Spark's own file-scan split size), so a
     small commit is one Python task and a large one splits like a
-    parquet scan: the driver touches manifests and file sizes only,
-    never data;
+    parquet scan: the driver touches manifests, file sizes and
+    KB-scale deletion-vector sidecars only, never data;
   * ``read(partition)`` runs executor-side and yields
     ``pyarrow.RecordBatch`` objects (r13): for each file of the
     partition, pyarrow reads the parquet file, every column is cast to
@@ -68,10 +70,11 @@ Spark's own pushed predicates).
 r13 additions beyond the reader:
 
   * ``readChangeFeed`` (stream): Delta's CDF as a streaming source —
-    ``_change_type``-tagged rows; deletes and update pre-images are
-    recovered from each version's new deletion-vector rows by one
-    Arrow ``take`` per data file (see :func:`_cdc_plan`); composes
-    with operators/matview.py for streaming materialized views;
+    ``_change_type``-tagged rows, the parts of the same plan as batch
+    ``cdc_feed``; deletes and update pre-images are recovered from
+    each version's new deletion-vector rows by one Arrow ``take`` per
+    data file (see :func:`_feed_units`); composes with
+    operators/matview.py for streaming materialized views;
   * the WRITE half: ``df.write.format("versioned_feed")`` stages one
     Arrow-native parquet file per task and publishes atomically via
     ``sinks.versioned.commit_staged`` (schema-enforced, blind-append
@@ -223,104 +226,68 @@ def _read_units(units, pa_schema, phys_map):
         )
 
 
-def _cdc_plan(
+def _feed_units(
     table_dir: str,
     after: int,
     upto: int,
+    cdc: bool = False,
     allow_full_rewrites: bool = False,
 ):
-    """Driver-side CDC work units for versions in ``(after, upto]``
-    (r13 ``readChangeFeed`` — Delta's CDF as a STREAM): per version,
-    the adds (delta files, tagged ``insert`` / ``update_postimage``)
-    plus the retractions (the version's NEW deletion-vector rows,
-    grouped per data file and tagged ``delete`` /
-    ``update_preimage``), each a (path, version, positions, kind)
-    tuple an executor recovers independently.  DV sidecars are
-    KB-scale, so resolving positions here is driver metadata work;
-    the row recovery is one Arrow ``take`` per file, executor-side.
-    Parity contract with the batch :func:`~artis_data_ingest_spark.
-    sinks.versioned.cdc_feed`: a MERGE (``merge_commit``) decomposes
-    into its masked old images (``delete``) plus its surviving source
-    rows (``insert``), so retraction-aware consumers stay exact across
-    merges.  FULL-STATE REWRITES (restore, overwrite of a non-empty
-    table, and the DV-less merge versions of tables written before
-    merges used deletion vectors) need a distributed bag-difference
-    the stream's per-file units cannot express — batch
-    ``cdc_feed`` decomposes them exactly; here they raise
-    :class:`CDCDecompositionError` (r14) unless
-    ``allowFullRewrites`` opts into surfacing the rewritten state as
-    insert-only events.  Raises RetentionError when a retraction's
-    parent manifest is expired, like the batch feed."""
+    """Driver-side ``(path, version, drop, take, kind)`` units, one
+    per file, of the parts ``sinks.versioned._version_changes`` plans
+    for the versions in ``(after, upto]``: their adds, or with ``cdc``
+    (``readChangeFeed``) their row changes.  A live part's
+    deletion-vector positions become its files' ``drop`` (as in the
+    snapshot reader); a retraction part yields one ``take`` unit per
+    file its vectors name.  The sidecars are
+    KB-scale, so this is driver metadata work and the rows come from
+    one Arrow ``filter``/``take`` per file, executor-side.  A
+    FULL-STATE REWRITE needs a distributed bag difference per-file
+    units cannot express — batch ``cdc_feed`` decomposes it exactly —
+    so the CDC stream raises :class:`CDCDecompositionError` (r14)
+    unless ``allow_full_rewrites`` accepts the rewritten live state as
+    insert-only events."""
     from ..sinks.versioned import (
         CDCDecompositionError,
-        RetentionError,
-        _added_dv_files,
         _dv_positions,
-        _read_manifest,
-        list_versions,
-        version_delta_files,
+        _feed_range,
+        _row_changes,
+        _version_changes,
     )
 
-    plan: list[tuple[str, int, list | None, str]] = []
-    for v in list_versions(table_dir):
-        if not (after < v <= upto):
-            continue
-        m = _read_manifest(table_dir, v)
-        mode = m["mode"]
-        if mode in ("compact", "alter"):
-            continue
-        has_dv = bool(m.get("dv_files"))
-        if not allow_full_rewrites and (
-            # merge versions written before merge_commit used deletion
-            # vectors rewrote the full state; old tables still hold them
-            (mode == "merge" and not has_dv)
-            or mode == "restore"
-            or (mode == "overwrite" and m["parent"] is not None)
-        ):
-            raise CDCDecompositionError(
-                f"v{v} is a full-state rewrite (mode={mode}); the "
-                f"stream cannot decompose it into exact "
-                f"delete+insert events.  Re-seed from batch "
-                f"cdc_feed()/a snapshot, or set "
-                f".option('allowFullRewrites','true') to accept it "
-                f"as insert-only (unsafe for retraction-aware "
-                f"consumers)."
-            )
-        kind_add = "update_postimage" if mode == "update" else "insert"
-        if mode == "merge" and has_dv:
-            # merge: inserts are the POST-IMAGE segment (file-set
-            # diff vs parent), never delta_files — those record the
-            # source verbatim, delete flags included (see cdc_feed)
-            try:
-                parent_files = set(
-                    _read_manifest(table_dir, m["parent"])["files"]
-                )
-            except FileNotFoundError:
-                raise RetentionError(
-                    f"v{v}'s parent manifest was expired; its CDC "
-                    f"decomposition is no longer recoverable"
-                ) from None
-            for f in m["files"]:
-                if f not in parent_files:
-                    plan.append((f, v, None, "insert"))
+    units = []
+    for v in _feed_range(table_dir, after, "stream")[0]:
+        if v > upto:
+            break
+        if not cdc:
+            adds = _version_changes(table_dir, v).adds
+            parts = [adds] if adds else []
         else:
-            for f in version_delta_files(table_dir, v):
-                plan.append((f, v, None, kind_add))
-        if mode not in ("delete", "update", "replace", "merge"):
-            continue
-        try:
-            _, new_dv = _added_dv_files(table_dir, m)
-        except FileNotFoundError:
-            raise RetentionError(
-                f"v{v}'s parent manifest was expired; its CDC "
-                f"retractions are no longer recoverable"
-            ) from None
-        kind_del = (
-            "update_preimage" if mode == "update" else "delete"
-        )
-        for f, plist in sorted(_dv_positions(new_dv).items()):
-            plan.append((f, v, plist, kind_del))
-    return plan
+            ch = _row_changes(table_dir, v)
+            if ch.rewrite and not allow_full_rewrites:
+                raise CDCDecompositionError(
+                    f"v{v} is a full-state rewrite "
+                    f"(mode={ch.m['mode']}); the stream cannot "
+                    f"decompose it into exact delete+insert events.  "
+                    f"Re-seed from batch cdc_feed()/a snapshot, or set "
+                    f".option('allowFullRewrites','true') to accept it "
+                    f"as insert-only (unsafe for retraction-aware "
+                    f"consumers)."
+                )
+            parts = ch.parts
+        for p in parts:
+            pos = _dv_positions(p.dv_files)
+            if p.pick:
+                units += [
+                    (f, v, None, take, p.kind)
+                    for f, take in sorted(pos.items())
+                ]
+            else:
+                units += [
+                    (f, v, pos.get(_os.path.abspath(f)), None, p.kind)
+                    for f in p.files
+                ]
+    return units
 
 
 def _make_datasource_class(split=None):
@@ -755,13 +722,6 @@ def _make_datasource_class(split=None):
             return {"version": cur}
 
         def partitions(self, start: dict, end: dict):
-            from ..sinks.versioned import (
-                RetentionError,
-                earliest_feed_version,
-                list_versions,
-                version_delta_files,
-            )
-
             lo = int(start["version"])
             hi = int(end["version"])
             if hi < lo:
@@ -776,31 +736,12 @@ def _make_datasource_class(split=None):
                 return []
             if self._floor is not None:
                 lo = max(lo, self._floor)
-            if lo + 1 < earliest_feed_version(self._dir):
-                raise RetentionError(
-                    f"stream cursor v{lo} is out of retention; "
-                    f"earliest valid startingVersion is "
-                    f"{earliest_feed_version(self._dir) - 1}"
-                )
+            units = _feed_units(
+                self._dir, lo, hi, self._cdc,
+                str(self._options.get("allowFullRewrites", "false"))
+                .lower() == "true",
+            )
             self._note_cursor(hi)
-            if self._cdc:
-                allow_rw = str(
-                    self._options.get("allowFullRewrites", "false")
-                ).lower() == "true"
-                units = [
-                    (path, v, None, take, kind)
-                    for path, v, take, kind in _cdc_plan(
-                        self._dir, lo, hi,
-                        allow_full_rewrites=allow_rw,
-                    )
-                ]
-            else:
-                units = [
-                    (f, v, None, None, None)
-                    for v in list_versions(self._dir)
-                    if lo < v <= hi
-                    for f in version_delta_files(self._dir, v)
-                ]
             return _pack_units(units, split)
 
         def read(self, partition):

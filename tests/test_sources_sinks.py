@@ -3672,6 +3672,7 @@ def test_versioned_manifest_of_every_publishing_operation(spark, tmp_path):
         replace_where,
         restore,
         update_where,
+        version_delta_files,
     )
     from artis_data_ingest_spark.streaming.source import (
         register_versioned_feed,
@@ -3765,6 +3766,20 @@ def test_versioned_manifest_of_every_publishing_operation(spark, tmp_path):
     assert clone["cloned_from"] == {"dir": os.path.abspath(t), "version": 6}
     assert conv["converted_from"] == os.path.abspath(str(tmp_path / "plain"))
     assert conv["schema"] == {"k": "int64", "v": "int64"}
+    # the files each version's adds feed reads: an append's new files,
+    # a row operation's delta_files, an overwrite's, restore's, clone's
+    # or convert's whole file set, and nothing for delete, alter and
+    # compact
+    def new_files(v):
+        return [f for f in m[v]["files"] if f not in m[v - 1]["files"]]
+
+    assert [version_delta_files(t, v) for v in range(11)] == [
+        m[0]["files"], new_files(1), new_files(2), m[3]["delta_files"],
+        [], m[5]["delta_files"], m[6]["delta_files"], [], new_files(8),
+        [], m[10]["files"],
+    ]
+    assert version_delta_files(t2, 0) == clone["files"]
+    assert version_delta_files(t3, 0) == conv["files"]
 
 
 def test_versioned_feature_composition(spark, tmp_path):
@@ -3978,6 +3993,7 @@ def test_cdc_exact_across_full_state_rewrites(spark, tmp_path):
         delete_where,
         merge_commit,
         read_version,
+        rename_column,
         restore,
     )
 
@@ -4047,6 +4063,12 @@ def test_cdc_exact_across_full_state_rewrites(spark, tmp_path):
         ).collect()
     }
     assert got == want and "e" not in got and "b" not in got
+    # a rename after the rewrites: every part of the feed, the
+    # rewrites' bag differences included, serves the newest names
+    rename_column(d, "v", "amount", timestamp=600.0)
+    renamed = cdc_feed(spark, d, since=0)
+    assert "v" not in renamed.columns
+    assert renamed.filter("amount is null").count() == 0
 
 
 def test_cdc_stream_refuses_full_rewrites(spark, tmp_path):
@@ -4068,7 +4090,7 @@ def test_cdc_stream_refuses_full_rewrites(spark, tmp_path):
         merge_commit,
         restore,
     )
-    from artis_data_ingest_spark.streaming.source import _cdc_plan
+    from artis_data_ingest_spark.streaming.source import _feed_units
 
     d = str(tmp_path / "tbl")
     commit(
@@ -4083,7 +4105,7 @@ def test_cdc_stream_refuses_full_rewrites(spark, tmp_path):
         timestamp=200.0,
     )
     units = []
-    for path, _, take, kind in _cdc_plan(d, 0, 1):
+    for path, _, _, take, kind in _feed_units(d, 0, 1, cdc=True):
         t = pq.read_table(path, columns=["k", "v"])
         t = t if take is None else t.take(take)
         units += [(kind, r["k"], r["v"]) for r in t.to_pylist()]
@@ -4097,10 +4119,10 @@ def test_cdc_stream_refuses_full_rewrites(spark, tmp_path):
     # a restore rewrites the full state: the stream refuses it
     restore(spark, d, 0, timestamp=300.0)
     with pytest.raises(CDCDecompositionError):
-        _cdc_plan(d, 1, 2)
+        _feed_units(d, 1, 2, cdc=True)
     # explicit opt-in: the rewrite surfaces as insert-only work units
-    plan = _cdc_plan(d, 1, 2, allow_full_rewrites=True)
-    assert plan and all(kind == "insert" for _, _, _, kind in plan)
+    plan = _feed_units(d, 1, 2, cdc=True, allow_full_rewrites=True)
+    assert plan and all(kind == "insert" for *_, kind in plan)
     # an overwrite of a NON-EMPTY table refuses too; the base
     # overwrite (v0, no parent) never does
     commit(
@@ -4108,7 +4130,7 @@ def test_cdc_stream_refuses_full_rewrites(spark, tmp_path):
         d, mode="overwrite", timestamp=400.0,
     )
     with pytest.raises(CDCDecompositionError):
-        _cdc_plan(d, 2, 3)
+        _feed_units(d, 2, 3, cdc=True)
 
 
 def test_cdc_reads_full_rewrite_merge_manifests(spark, tmp_path):
@@ -4129,7 +4151,7 @@ def test_cdc_reads_full_rewrite_merge_manifests(spark, tmp_path):
         commit,
         deletion_feed,
     )
-    from artis_data_ingest_spark.streaming.source import _cdc_plan
+    from artis_data_ingest_spark.streaming.source import _feed_units
 
     d = str(tmp_path / "tbl")
     commit(
@@ -4159,7 +4181,59 @@ def test_cdc_reads_full_rewrite_merge_manifests(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         deletion_feed(spark, d, since=0)
     with pytest.raises(CDCDecompositionError):
-        _cdc_plan(d, 0, 1)
+        _feed_units(d, 0, 1, cdc=True)
+
+
+def _restored_dv_table(spark, d):
+    """100 rows in 2 files; v1 deletes k < 40 through a deletion vector
+    (60 live rows), v2 appends 10 rows, v3 restores v1."""
+    from artis_data_ingest_spark.sinks.versioned import (
+        commit,
+        delete_where,
+        restore,
+    )
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    commit(rows(0, 100), d, mode="overwrite", n_files=2, timestamp=100.0)
+    delete_where(spark, d, "k < 40", timestamp=101.0)
+    commit(rows(100, 110), d, timestamp=102.0)
+    restore(spark, d, version=1, timestamp=103.0)
+
+
+def test_feeds_apply_deletion_vectors_of_restored_and_cloned_state(
+    spark, tmp_path
+):
+    """A restore or clone republishes a version's files together with
+    its deletion vectors, so every feed reads the restored or cloned
+    state's LIVE rows: change_feed across the restore returns the 60
+    live rows (never the 40 masked ones), and change_feed / cdc_feed
+    on a clone of the deleted version return its 60 live rows."""
+    from artis_data_ingest_spark.sinks.versioned import (
+        cdc_feed,
+        change_feed,
+        clone_table,
+        read_version,
+    )
+
+    d, c = str(tmp_path / "t"), str(tmp_path / "c")
+    _restored_dv_table(spark, d)
+    feed = change_feed(spark, d, since=2).collect()
+    assert len(feed) == 60
+    assert min(r.k for r in feed) >= 40
+    assert {r._version for r in feed} == {3}
+    clone_table(d, c, version=1, timestamp=110.0)
+    live = sorted(tuple(r) for r in read_version(spark, c).collect())
+    assert len(live) == 60
+    assert sorted(
+        (r.k, r.v) for r in change_feed(spark, c).collect()
+    ) == live
+    cdc = cdc_feed(spark, c).collect()
+    assert {r._change_type for r in cdc} == {"insert"}
+    assert sorted((r.k, r.v) for r in cdc) == live
 
 
 def test_sql_view_lifecycle(spark, tmp_path):

@@ -1648,16 +1648,19 @@ def test_versioned_feed_packed_deletion_vectors(spark, tmp_path):
 
 
 def test_versioned_feed_cdc_stream_packed_matches_batch(spark, tmp_path):
-    """The CDC stream over a delete, an update and a merge packs every
-    insert and retraction unit into one partition and returns batch
-    cdc_feed's rows, row for row."""
+    """The CDC stream over a delete, updates, a replace and merges
+    packs every insert and retraction unit into one partition and
+    returns batch cdc_feed's rows, row for row; so does the CDC stream
+    of a clone of a version with deletion vectors."""
     from pyspark.sql import functions as F
 
     from artis_data_ingest_spark.sinks.versioned import (
         cdc_feed,
+        clone_table,
         commit,
         delete_where,
         merge_commit,
+        replace_where,
         update_where,
     )
     from artis_data_ingest_spark.streaming import source as S
@@ -1689,28 +1692,125 @@ def test_versioned_feed_cdc_stream_packed_matches_batch(spark, tmp_path):
     assert {u[4] for u in parts[0].value} == {
         "delete", "update_preimage", "update_postimage", "insert",
     }
-    S.register_versioned_feed(spark)
-    rows = []
-    q = (
-        spark.readStream.format("versioned_feed")
-        .option("path", d).option("readChangeFeed", "true")
-        .option("startingVersion", "0").load()
-        .writeStream.foreachBatch(
-            lambda df, _: rows.extend(
-                tuple(r) for r in
-                df.select("k", "v", "_version", "_change_type").collect()
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
+    # an update of merged and updated rows, a replace, and a merge
+    # whose source flags deletes
+    update_where(spark, d, {"v": "v * 2"}, "k in (30, 31, 500)",
+                 timestamp=500.0)
+    replace_where(
+        spark, d,
+        spark.createDataFrame([(60, 1), (61, 2)], "k long, v long"),
+        "k between 60 and 69", timestamp=600.0,
     )
-    q.awaitTermination(120)
-    want = [
-        tuple(r) for r in cdc_feed(spark, d, since=0)
-        .select("k", "v", "_version", "_change_type").collect()
-    ]
-    assert len(want) > 0
-    assert sorted(rows) == sorted(want)
+    merge_commit(
+        spark, d,
+        spark.createDataFrame(
+            [(61, 7, False), (80, 0, True), (700, 7, False)],
+            "k long, v long, gone boolean",
+        ),
+        keys=["k"], delete_col="gone", timestamp=700.0,
+    )
+    c = str(tmp_path / "clone")
+    clone_table(d, c, version=6, timestamp=800.0)
+    S.register_versioned_feed(spark)
+
+    def stream_rows(path, start):
+        rows = []
+        q = (
+            spark.readStream.format("versioned_feed")
+            .option("path", path).option("readChangeFeed", "true")
+            .option("startingVersion", str(start)).load()
+            .writeStream.foreachBatch(
+                lambda df, _: rows.extend(
+                    tuple(r) for r in df.select(
+                        "k", "v", "_version", "_change_type"
+                    ).collect()
+                )
+            )
+            .option("checkpointLocation", path + "-ckpt")
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        return rows
+
+    for path, since in ((d, 0), (c, None)):
+        want = [
+            tuple(r) for r in cdc_feed(spark, path, since=since)
+            .select("k", "v", "_version", "_change_type").collect()
+        ]
+        assert len(want) > 0
+        rows = stream_rows(path, -1 if since is None else since)
+        assert sorted(rows) == sorted(want)
+    kinds = {
+        r["_change_type"] for r in cdc_feed(spark, d, since=3)
+        .select("_change_type").distinct().collect()
+    }
+    assert kinds == {
+        "delete", "update_preimage", "update_postimage", "insert",
+    }
+    clone_rows = cdc_feed(spark, c).collect()
+    assert {r._change_type for r in clone_rows} == {"insert"}
+    assert not {r.k for r in clone_rows} & {0, 7, 63, 80}
+
+
+def test_versioned_feed_streams_apply_deletion_vectors_of_restore_and_clone(
+    spark, tmp_path
+):
+    """The adds stream across a restore and the readChangeFeed stream
+    on a clone deliver the restored or cloned state's LIVE rows: the
+    deletion vectors republished with its files mask the deleted
+    rows, as in the batch feeds and the snapshot reader."""
+    from artis_data_ingest_spark.sinks.versioned import (
+        clone_table,
+        commit,
+        delete_where,
+        read_version,
+        restore,
+    )
+    from artis_data_ingest_spark.streaming.source import (
+        register_versioned_feed,
+    )
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    d, c = str(tmp_path / "t"), str(tmp_path / "c")
+    commit(rows(0, 100), d, mode="overwrite", n_files=2, timestamp=100.0)
+    delete_where(spark, d, "k < 40", timestamp=101.0)
+    commit(rows(100, 110), d, timestamp=102.0)
+    restore(spark, d, version=1, timestamp=103.0)
+    clone_table(d, c, version=1, timestamp=110.0)
+    register_versioned_feed(spark)
+
+    def drain(path, start, cdc):
+        got = []
+        reader = (
+            spark.readStream.format("versioned_feed")
+            .option("path", path).option("startingVersion", str(start))
+        )
+        if cdc:
+            reader = reader.option("readChangeFeed", "true")
+        q = (
+            reader.load().writeStream.foreachBatch(
+                lambda df, _: got.extend(df.collect())
+            )
+            .option("checkpointLocation", path + "-ckpt")
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        return got
+
+    live = sorted(
+        (r.k, r.v) for r in read_version(spark, d, 1).collect()
+    )
+    assert len(live) == 60
+    adds = drain(d, 2, cdc=False)
+    assert {r._version for r in adds} == {3}
+    assert sorted((r.k, r.v) for r in adds) == live
+    changes = drain(c, -1, cdc=True)
+    assert {r._change_type for r in changes} == {"insert"}
+    assert sorted((r.k, r.v) for r in changes) == live
 
 
 def test_stream_writer_complete_mode_overwrites(spark, tmp_path):
